@@ -171,7 +171,7 @@ object SparkEntry {
 
   /** Streaming events source for the §2.8 entries. The streaming file source
     * wants a directory: symlink the single parquet file into a STABLE
-    * per-sfDir temp dir (zero-copy; a fresh createTempDirectory per run would
+    * per-sfDir temp dir (zero-copy; a fresh temp dir per run would
     * accumulate dirs in /tmp for every bench/verify run — the disk twin of
     * the memory-sink leak handled in [[runAvailableNow]]). */
   private def streamingEvents(s: SparkSession, d: String): DataFrame = {
@@ -291,44 +291,56 @@ object SparkEntry {
       when(size(col("feature")) >= 7, element_at(col("feature"), 7))
         .as("mean_c4"))
 
+  /** Stable scratch directory of one write-then-read-back entry:
+    * `tmpdir/graft_<tag>/<sfDir>`, wiped at the start of every call. A rerun
+    * starts from an empty table and leaves at most one copy behind; a fresh
+    * temp dir per call would grow the temp dir with every bench/verify
+    * pass. Result frames read from this directory, so collect one before
+    * the same entry runs again. */
+  private def scratch(tag: String, d: String): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      "graft_" + tag, d.replaceAll("[^a-zA-Z0-9]", "_"))
+    Sink.delete(dir.toFile)
+    java.nio.file.Files.createDirectories(dir)
+  }
+
+  /** Run `body` with `spark.sql.shuffle.partitions` at the state width of
+    * every stream the engine starts, restoring the caller's value after.
+    * State-store partitioning is fixed at stream START from the session's
+    * shuffle partitions; 32 stores for these streams' few-KB state means
+    * 32× the per-batch commit/snapshot file churn, so the width is 4 — a
+    * per-stream knob on a real cluster. MEASURED r14: widening the
+    * stream-stream JOIN rigs to 16 (their eviction batches burn ~1-2.4 s
+    * of addBatch with 32 cores idle, so parallelism looked attractive)
+    * regressed 2.7x (q_stream_interval_join 4.5->10.3 s steady) — the
+    * HDFS-backed store pays per-store-per-batch snapshot/commit fsyncs
+    * that swamp the gained parallelism at local-disk latencies. `body`
+    * must await termination: the stream thread reads the conf when it
+    * plans batch 0, which happens after start() returns. */
+  private def atStateWidth[T](s: SparkSession)(body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** Run a streaming frame to completion under AvailableNow (append mode)
-    * through a memory sink, spill the result to a stable per-(tag, sfDir)
-    * parquet dir, DROP the sink table, and return the spilled frame.
-    * Memory sinks hold every output row on the driver for the session
-    * lifetime — a long-lived session (or the bench JVM) would accumulate one
-    * resident table per run; the result must outlive the sink, not pin it.
-    * The spill path is stable and OVERWRITTEN per run. */
-  private def runAvailableNow(s: SparkSession, out: DataFrame, tag: String,
-                              d: String,
-                              project: DataFrame => DataFrame,
-                              mode: org.apache.spark.sql.streaming.OutputMode =
-                                graft.streaming.Streams.hourlySumMode,
-                              statePartitions: Int = 4): DataFrame = {
+    * through a memory sink, keep the result, DROP the sink table, and
+    * return the kept frame. Memory sinks hold every output row on the
+    * driver for the session lifetime — a long-lived session (or the bench
+    * JVM) would accumulate one resident table per run; the result must
+    * outlive the sink, not pin it. */
+  private[graft] def runAvailableNow(
+      s: SparkSession, out: DataFrame, tag: String, d: String,
+      project: DataFrame => DataFrame,
+      mode: org.apache.spark.sql.streaming.OutputMode =
+        graft.streaming.Streams.hourlySumMode): DataFrame = {
     val qname = s"graft_stream_${tag}_${streamRunCounter.incrementAndGet()}"
-    // state-store partitioning is fixed at stream START from the session's
-    // shuffle partitions; 32 stores for these streams' few-KB state means
-    // 32× the per-batch commit/snapshot file churn. Size state partitions
-    // to STREAM STATE VOLUME (a per-stream knob on a real cluster) and
-    // restore the session default for the batch queries that follow.
-    // Default 4 fits every rig here — MEASURED r14: widening the
-    // stream-stream JOIN rigs to 16 (their eviction batches burn ~1-2.4 s
-    // of addBatch with 32 cores idle, so parallelism looked attractive)
-    // regressed 2.7x (q_stream_interval_join 4.5->10.3 s steady) — the
-    // HDFS-backed store pays per-store-per-batch snapshot/commit fsyncs
-    // that swamp the gained parallelism at local-disk latencies. The knob
-    // stays for cluster profiles where state volume, not commit latency,
-    // binds.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    // restore only after termination: the stream thread reads the conf
-    // when it plans batch 0, which happens after start() returns
-    try {
-      val q = out.writeStream.format("memory").queryName(qname)
+    atStateWidth(s) {
+      out.writeStream.format("memory").queryName(qname)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        .start().awaitTermination()
+    }
     // result must outlive the dropped sink table: an EAGER localCheckpoint
     // moves the rows into executor blocks in one job (r13 — the previous
     // parquet spill + re-read paid a write job, a directory listing and a
@@ -341,6 +353,48 @@ object SparkEntry {
     if (prev != null) graft.engine.NearDup.releaseCheckpoint(prev)
     result
   }
+
+  /** `ev` split at the start of its last day: (every earlier day, last day). */
+  private def splitLastDay(ev: DataFrame): (DataFrame, DataFrame) = {
+    val cut = ev.agg(date_trunc("day", max(col("ts")))).head.getTimestamp(0)
+    (ev.filter(col("ts") < lit(cut)), ev.filter(col("ts") >= lit(cut)))
+  }
+
+  /** Two cron ticks against one persisted checkpoint — the scaffold of
+    * every restart rig (daily_pv_automation.py:74-126: each run resumes
+    * from persisted state and processes only NEW data). In the rig's
+    * [[scratch]] dir, each tick appends its delivery as one parquet file to
+    * the `src` file source, then runs `tick(newStream, ckpt, out)` at
+    * [[atStateWidth]]: `newStream()` is a fresh stream over `src` (the
+    * schema of `first`), `ckpt` the shared checkpoint, `out` the rig's
+    * sink. Tick 2 resumes from tick 1's checkpoint and reads ONLY the new
+    * file. `betweenTicks(out)` runs after tick 1. Returns `out`. */
+  private def twoTicks(s: SparkSession, tag: String, d: String,
+                       first: DataFrame, second: DataFrame,
+                       betweenTicks: String => Unit = _ => ())(
+                       tick: (() => DataFrame, String, String) => Unit): String = {
+    val dir = scratch(tag, d)
+    def at(name: String): String = dir.resolve(name).toString
+    def run(delivery: DataFrame): Unit = {
+      delivery.coalesce(1).write.mode("append").parquet(at("src"))
+      atStateWidth(s)(tick(
+        () => s.readStream.schema(first.schema).parquet(at("src")),
+        at("ckpt"), at("out")))
+    }
+    run(first)
+    betweenTicks(at("out"))
+    run(second)
+    at("out")
+  }
+
+  /** Drain a restart rig's stream into the parquet sink `path` (append
+    * mode) under checkpoint `ckpt`. */
+  private def drainToParquet(out: DataFrame, ckpt: String, path: String): Unit =
+    out.writeStream.format("parquet")
+      .option("path", path).option("checkpointLocation", ckpt)
+      .outputMode(graft.streaming.Streams.hourlySumMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
 
   /** Two-run checkpointed streaming restart — the reference's actual
     * cron-incremental contract (daily_pv_automation.py:74-126: each run
@@ -358,53 +412,24 @@ object SparkEntry {
     * hourly rollup over ALL events restricted to windows with
     * `end ∈ (max_ts_before_cut − 2h, max_ts − 2h]`. */
   private def runRestart(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Path, Paths}
-    val base = Paths.get(sys.props("java.io.tmpdir"), "graft_stream_restart",
-      d.replaceAll("[^a-zA-Z0-9]", "_"))
-    def wipe(p: Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    wipe(base) // deterministic per invocation: both runs happen fresh here
-    val src = base.resolve("src")
-    Files.createDirectories(src)
-    val ckpt = base.resolve("ckpt").toString
-    val sink = base.resolve("sink").toString
-    val snap = base.resolve("snap").toString
     val ev = Tables.events(s, d)
       .select(col("ts"), col("event_type"), col("value"))
-    val cut = ev.agg(date_trunc("day", max(col("ts")))).head.getTimestamp(0)
-    def appendDays(f: DataFrame): Unit =
-      f.coalesce(1).write.mode("append").parquet(src.toString)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    def runOnce(): Unit = {
-      // small state-store partition count, as in [[runAvailableNow]]; the
-      // checkpoint pins it after run 1 anyway
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val stream = s.readStream.schema(ev.schema).parquet(src.toString)
-        val out = graft.streaming.Streams.hourlySumStream(stream, "ts",
-            col("event_type"), col("value"))
-          .select(col("bucket"), col("grp"), round(col("total"), 2).as("total"))
-        val q = out.writeStream.format("parquet")
-          .option("path", sink).option("checkpointLocation", ckpt)
-          .outputMode(graft.streaming.Streams.hourlySumMode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    appendDays(ev.filter(col("ts") < lit(cut))) // day 1 .. N-1
-    runOnce()
+    val (before, lastDay) = splitLastDay(ev)
     // snapshot of run-1 emissions (empty-safe: a <2-day corpus emits none)
-    scala.util.Try(s.read.parquet(sink).select("bucket", "grp")).toOption
-      .getOrElse(ev.select(col("ts").as("bucket"),
-        col("event_type").as("grp")).limit(0))
-      .write.mode("overwrite").parquet(snap)
-    appendDays(ev.filter(col("ts") >= lit(cut))) // the new day arrives
-    runOnce() // same checkpoint: resumes state, reads ONLY the new file
-    s.read.parquet(sink)
-      .join(s.read.parquet(snap), Seq("bucket", "grp"), "left_anti")
+    def snapshot(sink: String): Unit =
+      scala.util.Try(s.read.parquet(sink).select("bucket", "grp")).toOption
+        .getOrElse(ev.select(col("ts").as("bucket"),
+          col("event_type").as("grp")).limit(0))
+        .write.mode("overwrite").parquet(sink + "._snap")
+    val out = twoTicks(s, "stream_restart", d, before, lastDay, snapshot) {
+      (stream, ckpt, sink) => drainToParquet(
+        graft.streaming.Streams.hourlySumStream(stream(), "ts",
+            col("event_type"), col("value"))
+          .select(col("bucket"), col("grp"), round(col("total"), 2).as("total")),
+        ckpt, sink)
+    }
+    s.read.parquet(out)
+      .join(s.read.parquet(out + "._snap"), Seq("bucket", "grp"), "left_anti")
   }
 
   /** Two-run checkpointed LEFT OUTER stream-stream interval join — outer
@@ -428,51 +453,21 @@ object SparkEntry {
     * state-watermark adjustment cannot flip a row. Cross-run matches (run-2 left ⋈ run-1 right state) are
     * covered: right state above run-1's watermark survives run 1. */
   private def runLeftJoinRestart(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Path, Paths}
-    val base = Paths.get(sys.props("java.io.tmpdir"), "graft_stream_loj",
-      d.replaceAll("[^a-zA-Z0-9]", "_"))
-    def wipe(p: Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    wipe(base)
-    val src = base.resolve("src")
-    Files.createDirectories(src)
-    val ckpt = base.resolve("ckpt").toString
-    val sink = base.resolve("sink").toString
     val ev = Tables.events(s, d)
       .select(col("ts"), col("event_type"), col("user_id"), col("event_id"))
-    val cut = ev.agg(date_trunc("day", max(col("ts")))).head.getTimestamp(0)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    def runOnce(): Unit = {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val stream = s.readStream.schema(ev.schema).parquet(src.toString)
-        val left = stream.filter(col("event_type") === "click")
+    val (before, lastDay) = splitLastDay(ev)
+    s.read.parquet(twoTicks(s, "stream_loj", d, before, lastDay) {
+      (stream, ckpt, sink) =>
+        val left = stream().filter(col("event_type") === "click")
           .select(col("user_id").as("l_user"), col("ts").as("l_ts"),
             col("event_id").as("l_id"))
-        val right = s.readStream.schema(ev.schema).parquet(src.toString)
-          .filter(col("event_type") === "view")
+        val right = stream().filter(col("event_type") === "view")
           .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
             col("event_id").as("r_id"))
-        val out = graft.streaming.Streams.leftOuterIntervalJoinStreams(
-          left, "l_user", "l_ts", right, "r_user", "r_ts")
-          .select(col("l_id"), col("r_id"))
-        val q = out.writeStream.format("parquet")
-          .option("path", sink).option("checkpointLocation", ckpt)
-          .outputMode(graft.streaming.Streams.hourlySumMode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    def appendDays(f: DataFrame): Unit =
-      f.coalesce(1).write.mode("append").parquet(src.toString)
-    appendDays(ev.filter(col("ts") < lit(cut)))
-    runOnce()
-    appendDays(ev.filter(col("ts") >= lit(cut)))
-    runOnce()
-    s.read.parquet(sink)
+        drainToParquet(graft.streaming.Streams.leftOuterIntervalJoinStreams(
+            left, "l_user", "l_ts", right, "r_user", "r_ts")
+          .select(col("l_id"), col("r_id")), ckpt, sink)
+    })
   }
 
   /** Two-tick cron rig for the foreachBatch upsert sink
@@ -481,36 +476,13 @@ object SparkEntry {
     * only the final day. Day-split ordering makes the fold equal the
     * global keep-last per key under (ts, event_id) — the closed form. */
   private def runStreamUpsert(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Path, Paths}
-    val base = Paths.get(sys.props("java.io.tmpdir"), "graft_stream_upsert",
-      d.replaceAll("[^a-zA-Z0-9]", "_"))
-    def wipe(p: Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    wipe(base)
-    val src = base.resolve("src")
-    Files.createDirectories(src)
-    val ckpt = base.resolve("ckpt").toString
-    val tbl = base.resolve("tbl").toString
     val ev = Tables.events(s, d).select(col("user_id").as("k"), col("ts"),
       col("event_id"), round(col("value"), 2).as("v"))
-    val cut = ev.agg(date_trunc("day", max(col("ts")))).head.getTimestamp(0)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    def runOnce(): Unit = {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.upsertSink(
-        s.readStream.schema(ev.schema).parquet(src.toString),
-        tbl, ckpt, Seq("k"), Seq("ts", "event_id"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    def appendDays(f: DataFrame): Unit =
-      f.coalesce(1).write.mode("append").parquet(src.toString)
-    appendDays(ev.filter(col("ts") < lit(cut)))
-    runOnce()
-    appendDays(ev.filter(col("ts") >= lit(cut)))
-    runOnce()
-    s.read.parquet(tbl).select(col("k"), col("event_id"), col("v"))
+    val (before, lastDay) = splitLastDay(ev)
+    s.read.parquet(twoTicks(s, "stream_upsert", d, before, lastDay) {
+      (stream, ckpt, tbl) => graft.streaming.Streams.upsertSink(
+        stream(), tbl, ckpt, Seq("k"), Seq("ts", "event_id"))
+    }).select(col("k"), col("event_id"), col("v"))
   }
 
   /** E1 streaming ingestion rig (VERDICT r9 missing #3): two cron ticks of
@@ -524,43 +496,22 @@ object SparkEntry {
     * equals the batch closed form: per-hour sums, doubled from Jan 15 on —
     * the oracle. */
   private def runStreamMeltIngest(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Path, Paths}
-    val base = Paths.get(sys.props("java.io.tmpdir"), "graft_stream_melt",
-      d.replaceAll("[^a-zA-Z0-9]", "_"))
-    def wipe(p: Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    wipe(base)
-    val src = base.resolve("src")
-    Files.createDirectories(src)
-    val ckpt = base.resolve("ckpt").toString
-    val tbl = base.resolve("tbl").toString
     val ev = Tables.events(s, d)
     def wide(f: DataFrame): DataFrame =
       Unpivot.pivotByHour(f, col("ts"), col("event_type"), col("value"))
-    def deliver(f: DataFrame): Unit =
-      f.coalesce(1).write.mode("append").parquet(src.toString)
-    deliver(wide(ev.filter(to_date(col("ts")) < lit("2024-01-20"))))
-    val schema = s.read.parquet(src.toString).schema
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    def runOnce(): Unit = {
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try graft.streaming.Streams.meltIngestSink(
-        s.readStream.schema(schema).parquet(src.toString),
+    val out = twoTicks(s, "stream_melt", d,
+      wide(ev.filter(to_date(col("ts")) < lit("2024-01-20"))),
+      wide(ev.filter(to_date(col("ts")) >= lit("2024-01-15"))
+        .withColumn("value", col("value") * 2))) {
+      (stream, ckpt, tbl) => graft.streaming.Streams.meltIngestSink(stream(),
         b => Unpivot.meltHours(b, Seq("ymd", "grp"), Unpivot.hourNames)
           .filter(col("generation").isNotNull) // P5 dropna, as the reference
           .select(col("grp"),
             Unpivot.tsZeroBased(col("ymd"), col("hour_col")).as("ts"),
             round(col("generation"), 2).as("total")),
         "ts", tbl, ckpt)
-      finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
-    runOnce()
-    deliver(wide(ev.filter(to_date(col("ts")) >= lit("2024-01-15"))
-      .withColumn("value", col("value") * 2)))
-    runOnce()
-    s.read.parquet(tbl).select(col("grp"), col("ts"), col("total"))
+    s.read.parquet(out).select(col("grp"), col("ts"), col("total"))
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -2597,8 +2548,7 @@ object SparkEntry {
     // corrected re-delivery of days >=15 (doubled) — only those partitions
     // are replaced; the final table state is the oracle.
     "q_sink_partition_overwrite" -> ((s, d) => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sink_s13_").toString + "/tbl"
+      val path = scratch("sink_s13", d).resolve("tbl").toString
       val ev = events(s, d).select(col("event_id"), col("ts"),
         round(col("value"), 2).as("v"))
       Sink.overwriteDatePartitions(
@@ -2610,8 +2560,7 @@ object SparkEntry {
     }),
     // S14 keyed upsert writer: create, then merge a corrected batch
     "q_sink_upsert" -> ((s, d) => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sink_s14_").toString + "/tbl"
+      val path = scratch("sink_s14", d).resolve("tbl").toString
       val ev = events(s, d).select(col("event_id"), col("ts"),
         round(col("value"), 2).as("v"))
       Sink.upsertParquet(s, ev.filter(col("ts") < lit("2024-01-20")), path,
@@ -2628,8 +2577,7 @@ object SparkEntry {
     // Only partitions containing a victim are rewritten (spec asserts the
     // untouched partitions' files are bit-identical by mtime+name).
     "q_delete_keys" -> ((s, d) => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sink_del_").toString + "/tbl"
+      val path = scratch("sink_del", d).resolve("tbl").toString
       val ev = events(s, d).select(col("event_id"), col("ts"),
         col("user_id"), round(col("value"), 2).as("v"))
       Sink.overwriteDatePartitions(ev, col("ts"), path)
@@ -2644,8 +2592,7 @@ object SparkEntry {
     // instead of dropping or crashing — one scan, nothing lost.
     "q_quarantine" -> ((s, d) => {
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_quar_").toString + "/in"
+      val dir = scratch("quar", d).resolve("in").toString
       Sink.writeCsv(
         events(s, d).select(col("event_id"),
           when(col("event_id") % 10 === 0, lit("bad"))
@@ -2663,8 +2610,7 @@ object SparkEntry {
     // invariants are deterministic because the hash partitioning is).
     // Cap/total/manifest laws spec'd in SinkIngestSpec.
     "q_write_shards" -> ((s, d) => {
-      val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_shards_" + d.replaceAll("[^a-zA-Z0-9]", "_")).toString
+      val path = scratch("shards", d).resolve("tbl").toString
       val m = Sink.writeShards(
         documents(s, d).repartition(4, col("doc_id")), path, 100,
         TextOps.tokenCount(col("text")))

@@ -36,10 +36,14 @@ object Sink {
     * ONLY the partitions the frame contains — the delete+insert-range
     * equivalent. Re-running the same day is a no-op-identical rewrite
     * (idempotent); other days are untouched. */
-  def overwriteDatePartitions(df: DataFrame, ts: Column, path: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  def overwriteDatePartitions(df: DataFrame, ts: Column, path: String): Unit =
+    dynamicOverwrite(df.withColumn("p_date", to_date(ts)), path)
+
+  /** Write `df` partitioned by `p_date`, replacing only the partitions it
+    * contains. Dynamic mode is a per-write option, which the file writer
+    * reads before the session's `partitionOverwriteMode`, so the session
+    * conf is never touched. */
+  private def dynamicOverwrite(df: DataFrame, path: String): Unit =
     // repartition by the partition column first, at EXPLICIT shuffle width:
     // each date lands wholly in one task → one file per partition dir, not
     // (tasks × dates) small files. The width must be explicit — a bare
@@ -48,15 +52,11 @@ object Sink {
     // FunnelScan: 97% of q_sink_partition_overwrite's stage wall in 1-task
     // stages). At scale date volumes exceed the advisory size and the
     // explicit width equals what AQE would pick anyway.
-    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    try df.withColumn("p_date", to_date(ts))
-      .repartition(width, col("p_date"))
-      .write.partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+    df.repartition(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("p_date"))
+      .write.partitionBy("p_date").mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
 
   /** Surgical keyed delete from a date-partitioned parquet table (written
     * by [[overwriteDatePartitions]]): the right-to-be-forgotten / retention
@@ -92,15 +92,8 @@ object Sink {
         .filter(col("p_date").isin(affected: _*)) // partition-pruned re-read
         .join(broadcast(keyed), Seq(keyCol), "left_anti")
         .localCheckpoint()
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try {
-        // explicit width for the same AQE-collapse reason as
-        // [[overwriteDatePartitions]]
-        survivors
-          .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-            col("p_date"))
-          .write.partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
+        dynamicOverwrite(survivors, path)
         // Dynamic overwrite only replaces partitions PRESENT in the written
         // frame — a partition whose every row was deleted would silently
         // keep its old files. Drop those directories explicitly.
@@ -109,15 +102,7 @@ object Sink {
         affected.filterNot(d => survived(d.toString)).foreach { d =>
           delete(new java.io.File(s"$path/p_date=$d"))
         }
-      } finally {
-        survivors.unpersist(blocking = false)
-        prev match {
-          case Some(v) =>
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None =>
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
+      } finally survivors.unpersist(blocking = false)
     }
     affected
   }
@@ -405,8 +390,11 @@ object Sink {
     df.write.option("header", "true")
       .mode(if (append) SaveMode.Append else SaveMode.Overwrite).csv(path)
 
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
+  /** Recursive delete; a no-op on a missing path. Symlinks are removed,
+    * never followed. */
+  private[graft] def delete(f: java.io.File): Unit = {
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
+      f.listFiles().foreach(delete)
     f.delete(): Unit
   }
 }

@@ -279,6 +279,51 @@ class SinkIngestSpec extends SparkSpec {
     Sink.deleteKeys(spark, path, "uid", victims) shouldBe empty
   }
 
+  for (mode <- Seq(None, Some("static")))
+    test("overwriteDatePartitions + deleteKeys leave the session's " +
+      s"partitionOverwriteMode as found (${mode.getOrElse("unset")})") {
+      val key = "spark.sql.sources.partitionOverwriteMode"
+      val saved = spark.conf.getAll.get(key)
+      mode.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      // getOption reports the default of an unset key; getAll holds only
+      // the explicitly set ones, so together they tell unset from static
+      def conf = (spark.conf.getOption(key), spark.conf.getAll.get(key))
+      val asFound = conf
+      try {
+        asFound._2 shouldBe mode
+        val path = tmpDir() + "/conf"
+        def t(s: String) = Timestamp.valueOf(s)
+        def days(): Map[String, Set[Long]] =
+          spark.read.parquet(path)
+            .select(col("p_date").cast("string"), col("id")).as[(String, Long)]
+            .collect().groupBy(_._1).map { case (d, rs) => d -> rs.map(_._2).toSet }
+        Sink.overwriteDatePartitions(Seq(
+          (1L, t("2024-01-01 05:00:00"), 10), (2L, t("2024-01-02 06:00:00"), 20),
+          (3L, t("2024-01-03 07:00:00"), 30)).toDF("id", "ts", "v"),
+          col("ts"), path)
+        conf shouldBe asFound
+        // the redo carries days 2 and 4 only: day 2 is replaced, day 4
+        // added, days 1 and 3 untouched (a static overwrite would drop them)
+        Sink.overwriteDatePartitions(Seq(
+          (4L, t("2024-01-02 08:00:00"), 40), (5L, t("2024-01-04 09:00:00"), 50),
+          (6L, t("2024-01-04 10:00:00"), 60)).toDF("id", "ts", "v"),
+          col("ts"), path)
+        conf shouldBe asFound
+        days() shouldBe Map(
+          "2024-01-01" -> Set(1L), "2024-01-02" -> Set(4L),
+          "2024-01-03" -> Set(3L), "2024-01-04" -> Set(5L, 6L))
+        // deleting day 3's only key removes day 3's directory and rewrites
+        // day 4 without key 5; days 1 and 2 stay
+        Sink.deleteKeys(spark, path, "id", Seq(3L, 5L).toDF("id"))
+          .map(_.toString) shouldBe Seq("2024-01-03", "2024-01-04")
+        conf shouldBe asFound
+        new java.io.File(s"$path/p_date=2024-01-03").exists() shouldBe false
+        days() shouldBe Map(
+          "2024-01-01" -> Set(1L), "2024-01-02" -> Set(4L),
+          "2024-01-04" -> Set(6L))
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
   test("csvFlagQuarantine: bad rows keep raw text, good rows parse typed") {
     val dir = tmpDir()
     val f = Paths.get(dir, "q.csv")
