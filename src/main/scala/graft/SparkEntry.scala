@@ -193,7 +193,7 @@ object SparkEntry {
       catch { // concurrent Bench/Verify both saw it absent — loser is fine
         case _: java.nio.file.FileAlreadyExistsException => ()
       }
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.parquet(s, s"$d/events.parquet").schema
     // same ts normalization as Tables.events: legacy nanos-as-long files
     // floor-divide to micros; micros files cast NTZ → session-zone TIMESTAMP
     graft.engine.Tables.normalizeTs(

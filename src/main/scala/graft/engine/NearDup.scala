@@ -971,8 +971,10 @@ object NearDup {
   }
 
   /** SimHash 64-bit signature per doc: for each bit, sum +1/-1 over token
-    * hashes (weighted by occurrence) and take the sign. Expressed as one
-    * aggregation over exploded tokens — no UDF, no driver loop.
+    * hashes (weighted by occurrence) and take the sign, in one native
+    * per-row kernel — no UDF, no driver loop. A doc with NULL text gets no
+    * row, as under the explode + aggregate form the kernel replaced (which
+    * had no tokens to group); every other doc gets exactly one.
     * Output: (doc_id, simhash: long). */
   def simhashSignatures(docs: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -985,7 +987,7 @@ object NearDup {
     // Still deliberately NO spreadForCpu (the r13 measured non-change):
     // the text shuffle costs more than the lost width at this
     // work-per-byte ratio.
-    docs.select(id.as("doc_id"),
+    docs.filter(text.isNotNull).select(id.as("doc_id"),
       ColumnBridge.column(expressions.SimhashSignature(
         ColumnBridge.expression(TextOps.tokens(text)), md5Family = false))
         .as("simhash"))
@@ -997,14 +999,15 @@ object NearDup {
     * DuckDB `('0x'||substr(md5(tok),1,8))::UBIGINT`), bit sums / sign /
     * packing / banding / Hamming verify are the identical integer pipeline
     * as production, shrunk to 32 bits so the whole signature replays in
-    * SQL. xxhash64's 64-bit signature stays the scale path. */
+    * SQL. xxhash64's 64-bit signature stays the scale path. NULL text:
+    * no row, as in [[simhashSignatures]]. */
   def simhashSignaturesMd5(docs: DataFrame, id: Column,
                            text: Column): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     // same native kernel as [[simhashSignatures]], md5-32 family (the
     // first 4 digest bytes == conv(substring(md5(tok),1,8),16,10));
     // parity with the aggregate formulation pinned in NearDupSpec
-    docs.select(id.as("doc_id"),
+    docs.filter(text.isNotNull).select(id.as("doc_id"),
       ColumnBridge.column(expressions.SimhashSignature(
         ColumnBridge.expression(TextOps.tokens(text)), md5Family = true))
         .as("simhash"))

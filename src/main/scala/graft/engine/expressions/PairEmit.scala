@@ -31,7 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
   *
   * Generic over the id type (any type with an interpreted ordering — the
   * engine functions are id-type-generic); null arrays propagate null,
-  * null ELEMENTS cannot occur (collect_list never emits them).
+  * null ELEMENTS cannot occur (collect_list never emits them). A posting
+  * list whose pair count passes `Int.MaxValue` fails with a `[graft]`
+  * error naming `maxDf`, the knob that caps posting-list length.
   */
 case class PairEmit(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -63,7 +65,12 @@ case class PairEmit(left: Expression, right: Expression)
     val n = l.numElements()
     val o = r.numElements()
     val total = n.toLong * (n - 1) / 2 + n.toLong * o
-    require(total <= Int.MaxValue, s"pair blowup: $n self + $o cross ids")
+    // checked before any allocation: past Int.MaxValue pairs the output
+    // array cannot exist (total.toInt below would wrap)
+    if (total > Int.MaxValue) throw new IllegalArgumentException(
+      s"[graft] graft_pair_emit: one posting list emits $total pairs " +
+        s"(n=$n new ids, o=$o old ids), past the ${Int.MaxValue} array " +
+        "limit; lower maxDf so no key's posting list gets this long")
     val nv = l.toObjectArray(et)
     val ov = r.toObjectArray(et)
     val out = new Array[Any](total.toInt)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.engine.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -52,7 +53,7 @@ object ScaleCurve {
 
   def synthesize(spark: SparkSession, baseDir: String, outDir: String,
                  factor: Int): Unit = {
-    val docs = spark.read.parquet(s"$baseDir/documents.parquet")
+    val docs = Tables.documents(spark, baseDir)
     val idSpan = docs.agg(max("doc_id")).head().getLong(0) + 1
     (0 until factor).map { k =>
       val shifted = docs.withColumn("doc_id",
@@ -69,7 +70,7 @@ object ScaleCurve {
             greatest(lit(1), length(w)))), " "))
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    val emb = spark.read.parquet(s"$baseDir/embeddings.parquet")
+    val emb = Tables.embeddings(spark, baseDir)
     val vecSpan = emb.agg(max("vec_id")).head().getLong(0) + 1
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     (0 until factor).map { k =>
@@ -85,7 +86,7 @@ object ScaleCurve {
     // timestamps — ingest-rate growth, the realistic regime (watermarks,
     // windows and state sizes see x-factor denser hours, not a longer
     // history). ts is already normalized micros via Tables.events.
-    val ev = graft.engine.Tables.events(spark, baseDir)
+    val ev = Tables.events(spark, baseDir)
     val evSpan = ev.agg(max("event_id")).head().getLong(0) + 1
     val userSpan = ev.agg(max("user_id")).head().getLong(0) + 1
     // a SINGLE FILE like the driver's testdata (the streaming file source
@@ -113,26 +114,26 @@ object ScaleCurve {
     // suppliers and nations stay shared — hub degree grows with the
     // corpus, the realistic regime for a supplier-customer graph).
     // Remaining small dims copy verbatim.
-    val cust = spark.read.parquet(s"$baseDir/customer.parquet")
+    val cust = Tables.customer(spark, baseDir)
     val custSpan = cust.agg(max("c_custkey")).head().getLong(0) + 1
     (0 until factor).map(k =>
       cust.withColumn("c_custkey", col("c_custkey") + lit(k.toLong * custSpan)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-    val ord = spark.read.parquet(s"$baseDir/orders.parquet")
+    val ord = Tables.orders(spark, baseDir)
     val ordSpan = ord.agg(max("o_orderkey")).head().getLong(0) + 1
     (0 until factor).map(k =>
       ord.withColumn("o_orderkey", col("o_orderkey") + lit(k.toLong * ordSpan))
         .withColumn("o_custkey", col("o_custkey") + lit(k.toLong * custSpan)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-    val li = spark.read.parquet(s"$baseDir/lineitem.parquet")
+    val li = Tables.lineitem(spark, baseDir)
     (0 until factor).map(k =>
       li.withColumn("l_orderkey", col("l_orderkey") + lit(k.toLong * ordSpan)))
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
     Seq("region", "nation", "supplier", "part").foreach { t =>
-      spark.read.parquet(s"$baseDir/$t.parquet")
+      Tables.table(spark, baseDir, t)
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
   }
@@ -193,7 +194,7 @@ object ScaleCurve {
     // now fails loudly on).
     def lshOnce(dir: String, run: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): Double = {
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.embeddings(spark, dir)
       def once(): Double = {
         val t0 = System.nanoTime()
         run(emb).write.format("noop").mode("overwrite").save()
@@ -202,7 +203,7 @@ object ScaleCurve {
       once()
       Seq(once(), once(), once()).sorted.apply(1)
     }
-    val nSf1 = spark.read.parquet(s"$synthDir/embeddings.parquet").count()
+    val nSf1 = Tables.embeddings(spark, synthDir).count()
     val g = graft.engine.Similarity.srpGeometry(nSf1, 0.4)
     val fixed = lshOnce(synthDir, emb =>
       graft.engine.Similarity.lshCosinePairs(emb, col("vec_id"),

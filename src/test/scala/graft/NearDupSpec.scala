@@ -600,6 +600,42 @@ class NearDupSpec extends SparkSpec {
     }
   }
 
+  test("simhash signatures (both families) drop a NULL-text doc, as the " +
+    "explode + aggregate form did, and sign the other docs unchanged") {
+    val withNull = Seq((1L, Some("the quick brown fox jumps")), (2L, None))
+      .toDF("doc_id", "text")
+    val alone = withNull.filter(col("doc_id") === 1L)
+    for (md5fam <- Seq(false, true)) withClue(s"md5fam=$md5fam: ") {
+      def sigs(df: org.apache.spark.sql.DataFrame) =
+        (if (md5fam) NearDup.simhashSignaturesMd5(df, col("doc_id"),
+          col("text"))
+        else NearDup.simhashSignatures(df, col("doc_id"), col("text")))
+          .collect().map(r => r.getLong(0) -> r.getAs[java.lang.Long](1)).toMap
+      val got = sigs(withNull)
+      got.keySet shouldBe Set(1L)
+      got(1L) should not be null
+      got shouldBe sigs(alone)
+    }
+  }
+
+  test("PairEmit: a posting list past Int.MaxValue pairs fails with a " +
+    "[graft] error naming n, o and maxDf, before allocating") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val ids = new GenericArrayData(Array.tabulate[Any](65600)(_.toLong))
+    val none = new GenericArrayData(Array.empty[Any])
+    val t = ArrayType(LongType, containsNull = false)
+    val pe = graft.engine.expressions.PairEmit(Literal(ids, t),
+      Literal(none, t))
+    // 65600 * 65599 / 2 = 2,151,647,200 self pairs > Int.MaxValue
+    val e = intercept[IllegalArgumentException](pe.compute(ids, none))
+    e.getMessage should startWith("[graft] graft_pair_emit")
+    e.getMessage should include("n=65600")
+    e.getMessage should include("o=0")
+    e.getMessage should include("maxDf")
+  }
+
   test("PairEmit kernel == the HOF concat-of-transforms emission " +
     "bit-for-bit (r14 native replacement; self, cross, empty, string ids)") {
     import org.apache.spark.sql.graftbridge.ColumnBridge
