@@ -1,25 +1,18 @@
 #!/usr/bin/env python3
 """Dev helper: compare a SUBSET of queries (dumped by graft.tools.VerifyOne)
-against their oracleSql extracted straight from SparkEntry.scala — the same
-canonicalization + dtype guards as check_correctness.py, without needing a
-full graft.Verify run. Usage:
+against the oracle SQL VerifyOne wrote to <outDir>/oracle_sql.json — the
+same canonicalization + dtype guards as check_correctness.py, without needing
+a full graft.Verify run. Usage:
   python3 scripts/check_some.py <sfDir> <outDir> <name> [<name>…]
 """
-import re, sys
+import json, sys
 import duckdb
 from check_correctness import canon, dtype_violations, duck_type_violations, TABLES
 
 def main():
     sf_dir, out_dir, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    src = open(__file__.replace("scripts/check_some.py",
-               "src/main/scala/graft/SparkEntry.scala")).read()
-    src = src[src.index("def oracleSql"):]
-    def oracle(name):
-        m = re.search(r'"%s" ->\s+"""(.*?)"""' % name, src, re.S)
-        if m is None:
-            m2 = re.search(r'"%s" ->\s+"([^"]+)"' % name, src)
-            return m2.group(1) if m2 else None
-        return m.group(1)
+    with open(f"{out_dir}/oracle_sql.json") as f:
+        oracles = json.load(f)
     con = duckdb.connect()
     import os
     for t in TABLES:
@@ -28,7 +21,7 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     bad = 0
     for name in names:
-        sql = oracle(name)
+        sql = oracles.get(name)
         spark_df = duckdb.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
         if sql is None:
             print(f"{name}: NO-ORACLE rows-only ({len(spark_df)} rows)")

@@ -24,26 +24,35 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     // full expected-query manifest: lets the local gate fail loudly on a
     // query that crashed above (no output dir) instead of silently
     // dropping it from the comparison
     Files.writeString(Paths.get(s"$outDir/query_names.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      SparkEntry.queries.keys.toSeq.sorted.map(jsonString)
+        .mkString("[", ",", "]"))
     spark.stop()
   }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** `<outDir>/oracle_sql.json`: the name → DuckDB SQL map the oracle
+    * compare reads (`scripts/check_correctness.py`, and
+    * `scripts/check_some.py` for a [[graft.tools.VerifyOne]] subset). */
+  private[graft] def writeOracleSql(outDir: String,
+                                    oracles: Map[String, String]): Unit =
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracles.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+        .mkString("{", ",", "}"))
 }

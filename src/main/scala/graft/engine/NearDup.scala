@@ -440,18 +440,101 @@ object NearDup {
       .select(col("corpus_id"), col("bench_id"), col("containment"))
   }
 
+  /** The hash family a near-dup operator signs, bands and fingerprints
+    * with — one value per family instead of one twin function per operator.
+    *
+    *  - [[HashFamily.Production]] is the scale path: xxhash64 minhash
+    *    signatures and band hashes, a 64-bit simhash, and winnowing's
+    *    rolling polynomial gram hash.
+    *  - [[HashFamily.Md5]] is the cross-engine ORACLE family: minhash entry
+    *    i is `min over shingles of md5(shingle || ":" || i)` (lexicographic
+    *    min of the hex digest), a band hashes as `md5(minhash_i || "|" ||
+    *    ...)`, the simhash token hash is the first 32 bits of md5
+    *    (`conv(substring(md5(tok),1,8),16,10)` == DuckDB
+    *    `('0x'||substr(md5(tok),1,8))::UBIGINT`) and winnow grams hash by
+    *    md5 — identical in any engine with md5, so the whole mechanism
+    *    (signing, banding, candidate formation, verify) replays in SQL.
+    *    md5 is ~4× the per-shingle hash cost of xxhash64 and its 32-char
+    *    hex signatures shuffle 4× the bytes of a long: it proves the
+    *    mechanism, it is not the scale path.
+    *
+    * The families select different candidates and fingerprints — separate
+    * detectors with the same guarantees, not bit twins. */
+  sealed abstract class HashFamily {
+    /** `k`-entry minhash signature over the doc's `n`-shingle set. */
+    private[engine] def minhash(text: Column, n: Int, k: Int): Column
+    /** One LSH band's bucket key over its signature entries. */
+    private[engine] def bandHash(entries: Seq[Column]): Column
+    /** Simhash signature width; candidates band it in 4 chunks. */
+    private[engine] def simhashBits: Int
+    private[engine] def simhash(tokens: Column): Column
+    /** (doc_id, fp) winnowing fingerprints, framed for the fp self-join. */
+    private[engine] def winnowFingerprints(docs: DataFrame, id: Column,
+                                           text: Column, k: Int,
+                                           w: Int): DataFrame
+  }
+
+  object HashFamily {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+
+    case object Production extends HashFamily {
+      private[engine] def minhash(text: Column, n: Int, k: Int): Column =
+        ColumnBridge.column(expressions.MinHashSignature(
+          ColumnBridge.expression(transform(TextOps.shingleArray(text, n),
+            s => xxhash64(s))), k))
+      private[engine] def bandHash(entries: Seq[Column]): Column =
+        xxhash64(entries: _*)
+      private[engine] def simhashBits: Int = 64
+      private[engine] def simhash(tokens: Column): Column =
+        ColumnBridge.column(expressions.SimhashSignature(
+          ColumnBridge.expression(tokens), md5Family = false))
+      // no fp pre-partition: the rolling-hash kernel is cheap per char, and
+      // the exchange a shared fp-keyed frame adds cost more than it saved
+      // (the measured non-change in TextOps.winnowFingerprints)
+      private[engine] def winnowFingerprints(docs: DataFrame, id: Column,
+                                             text: Column, k: Int,
+                                             w: Int): DataFrame =
+        TextOps.winnowFingerprints(docs, id, text, k, w)
+    }
+
+    case object Md5 extends HashFamily {
+      // the native [[expressions.Md5MinHashSignature]] kernel (r14; parity
+      // with the per-seed `array_min(transform(...))` columns pinned in
+      // NearDupSpec): the declarative form paid k INTERPRETED higher-order
+      // `transform` passes per row, each allocating a full md5-hex array
+      private[engine] def minhash(text: Column, n: Int, k: Int): Column =
+        ColumnBridge.column(expressions.Md5MinHashSignature(
+          ColumnBridge.expression(TextOps.shingleArray(text, n)), k))
+      private[engine] def bandHash(entries: Seq[Column]): Column =
+        md5(concat_ws("|", entries: _*))
+      private[engine] def simhashBits: Int = 32
+      private[engine] def simhash(tokens: Column): Column =
+        ColumnBridge.column(expressions.SimhashSignature(
+          ColumnBridge.expression(tokens), md5Family = true))
+      // pre-partition on the join key so both self-join sides are the SAME
+      // exchange (ReuseExchange — the fingerprint kernel runs once, and the
+      // join adds no further shuffle; the lshVerifiedPairs pattern)
+      private[engine] def winnowFingerprints(docs: DataFrame, id: Column,
+                                             text: Column, k: Int,
+                                             w: Int): DataFrame =
+        winnowFingerprintsMd5(docs, id, text, k, w).repartition(col("fp"))
+    }
+  }
+
   /** MinHash signatures: k independent min-hashes per doc over its shingle
-    * set, computed row-at-a-time by the native codegen'd
-    * [[graft.engine.expressions.MinHashSignature]] expression over the
-    * per-doc shingle-hash array — ZERO shuffles (the signature is a pure
+    * set, computed row-at-a-time by the family's native codegen'd kernel
+    * ([[graft.engine.expressions.MinHashSignature]] over the per-doc
+    * shingle-hash array, or [[graft.engine.expressions.Md5MinHashSignature]]
+    * over the shingle strings) — ZERO shuffles (the signature is a pure
     * function of the document row). Replaces the round-1 long-format
     * posexplode + double-groupBy shape, which shuffled |shingles|×k rows
-    * (32M at sf0.1) and dominated every minhash-based query's runtime. */
+    * (32M at sf0.1) and dominated every minhash-based query's runtime.
+    * `sig` is array<bigint> ([[HashFamily.Production]]) or array<string>
+    * ([[HashFamily.Md5]], hex digests). */
   def minhashSignatures(docs: DataFrame, id: Column, text: Column,
-                        k: Int = 32, n: Int = 3): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val shingleHashes = transform(TextOps.shingleArray(text, n),
-      s => xxhash64(s))
+                        k: Int = 32, n: Int = 3,
+                        family: HashFamily = HashFamily.Production)
+      : DataFrame =
     // docs too short to shingle are dropped by the CHEAP token-count
     // predicate BEFORE the spread, never by `sig IS NOT NULL` after it:
     // Catalyst pushes a post-repartition filter down through the exchange,
@@ -460,43 +543,22 @@ object NearDup {
     // exactly the serialization the spread exists to avoid. With the
     // token-count guard the signature expression can't return null.
     TextOps.spreadForCpu(docs.filter(size(TextOps.tokens(text)) >= n))
-      .select(id.as("doc_id"),
-        ColumnBridge.column(expressions.MinHashSignature(
-          ColumnBridge.expression(shingleHashes), k)).as("sig"))
-  }
+      .select(id.as("doc_id"), family.minhash(text, n, k).as("sig"))
 
   /** MinHash+LSH candidate pairs, verified by exact shingle Jaccard.
     * bands × rowsPerBand must equal the signature length. Docs landing in the
     * same (band, hash-of-band-slice) bucket become candidates; candidates are
     * then verified exactly, so the output has no false positives — only
-    * (tunable) false negatives, the standard LSH trade.
+    * (tunable) false negatives, the standard LSH trade. Under either
+    * [[HashFamily]] the output is a subset of [[jaccardPairs]] by
+    * construction; [[HashFamily.Md5]] makes the whole pipeline
+    * DuckDB-replayable (the `q_minhash_fixed` oracle).
     * Output: (id1, id2, jaccard) with jaccard >= tau. */
   def minhashLshPairs(docs: DataFrame, id: Column, text: Column, tau: Double,
-                      bands: Int = 8, rowsPerBand: Int = 4,
-                      n: Int = 3): DataFrame =
-    lshVerifiedPairs(bandedMinhash(docs, id, text, bands, rowsPerBand, n),
-      docs, id, text, tau, n)
-
-  /** MinHash+LSH over a FIXED md5 hash family — the cross-engine-provable
-    * twin of [[minhashLshPairs]]: signature entry i is
-    * `min over shingles of md5(shingle || ":" || i)` (lexicographic min of
-    * the hex digest — identical in any engine with md5), bands hash as
-    * `md5(minhash_i || "|" || ... )` over the band's entries. Candidates
-    * are exact-verified exactly like the production path, so output is a
-    * subset of [[jaccardPairs]] by construction.
-    *
-    * This is the ORACLE twin, not the scale path: md5 is ~4× the per-
-    * shingle hash cost of xxhash64 and its 32-char hex signatures shuffle
-    * 4× the bytes of a long — the production kernel stays
-    * [[minhashSignatures]]'s codegen'd xxhash64. What this buys is a
-    * DuckDB-replayable proof of the MECHANISM (banding, candidate
-    * formation, exact verify) with a SQL-expressible hash family — the
-    * `q_semdedup_fixed` pattern applied to the flagship near-dup tier. */
-  def minhashLshPairsMd5(docs: DataFrame, id: Column, text: Column,
-                         tau: Double, bands: Int = 8, rowsPerBand: Int = 4,
-                         n: Int = 3): DataFrame =
-    lshVerifiedPairs(bandedMinhashMd5(docs, id, text, bands, rowsPerBand, n),
-      docs, id, text, tau, n)
+                      bands: Int = 8, rowsPerBand: Int = 4, n: Int = 3,
+                      family: HashFamily = HashFamily.Production): DataFrame =
+    lshVerifiedPairs(bandedMinhash(docs, id, text, bands, rowsPerBand, n,
+      family), docs, id, text, tau, n)
 
   /** Shared LSH tail: bucket self-join on (band, band_hash) + exact shingle
     * verification. The explicit exchange on the join keys matters: the
@@ -537,44 +599,18 @@ object NearDup {
 
   /** Banded minhash signatures: (doc_id, band, band_hash) — the LSH bucket
     * keys. Factored out so the incremental path can bucket a batch against
-    * a (persisted, in production) existing-signature table. */
+    * a (persisted, in production) existing-signature table. The signature
+    * alias is multi-use (one element_at per band entry), so it stays bound
+    * and signs once per row. */
   private def bandedMinhash(docs: DataFrame, id: Column, text: Column,
-                            bands: Int, rowsPerBand: Int, n: Int): DataFrame =
-    minhashSignatures(docs, id, text, bands * rowsPerBand, n)
+                            bands: Int, rowsPerBand: Int, n: Int,
+                            family: HashFamily): DataFrame =
+    minhashSignatures(docs, id, text, bands * rowsPerBand, n, family)
       .select(col("doc_id"), posexplode(array(
         (0 until bands).map { j =>
-          xxhash64((j * rowsPerBand until (j + 1) * rowsPerBand)
-            .map(i => element_at(col("sig"), i + 1)): _*)
+          family.bandHash((j * rowsPerBand until (j + 1) * rowsPerBand)
+            .map(i => element_at(col("sig"), i + 1)))
         }: _*)).as(Seq("band", "band_hash")))
-
-  /** Fixed-md5-family banded signatures for [[minhashLshPairsMd5]]:
-    * (doc_id, band, band_hash: string). The signing pass is the native
-    * [[expressions.Md5MinHashSignature]] kernel (r14; parity with the
-    * per-seed `array_min(transform(...))` columns pinned in NearDupSpec):
-    * the declarative form paid h=32 INTERPRETED higher-order `transform`
-    * passes per row (HOFs are CodegenFallback), each allocating a full
-    * md5-hex array to take its min. The signature alias (`_sig`) is
-    * multi-use (one element_at per band entry) so it stays bound — the
-    * same shape as the production [[bandedMinhash]]. */
-  private def bandedMinhashMd5(docs: DataFrame, id: Column, text: Column,
-                               bands: Int, rowsPerBand: Int,
-                               n: Int): DataFrame = {
-    val h = bands * rowsPerBand
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // short docs drop on the cheap token-count predicate BEFORE the spread
-    // (the minhashSignatures rule: a pushed-down null-check on the computed
-    // signature would serialize the whole computation onto the scan side)
-    val sigs = TextOps.spreadForCpu(docs.filter(size(TextOps.tokens(text)) >= n))
-      .select(id.as("doc_id"),
-        ColumnBridge.column(expressions.Md5MinHashSignature(
-          ColumnBridge.expression(TextOps.shingleArray(text, n)), h))
-          .as("_sig"))
-    sigs.select(col("doc_id"), posexplode(array(
-      (0 until bands).map { j =>
-        md5(concat_ws("|", (j * rowsPerBand until (j + 1) * rowsPerBand)
-          .map(i => element_at(col("_sig"), i + 1)): _*))
-      }: _*)).as(Seq("band", "band_hash")))
-  }
 
   /** Incremental MinHash+LSH pairs — the SCALE twin of
     * [[jaccardPairsIncremental]] (which is its exact verifier/oracle): the
@@ -586,42 +622,26 @@ object NearDup {
     * appends as the corpus grows). Exact shingle verification runs over the
     * candidate ids only (semi-joined before any shingling — the verify cost
     * scales with collisions, not the corpus). Identical output to the full
-    * [[minhashLshPairs]] run restricted to pairs touching the batch
-    * (signatures don't depend on the split; spec'd). Id spaces must be
+    * [[minhashLshPairs]] run (same `family`) restricted to pairs touching
+    * the batch (signatures don't depend on the split; spec'd) — which is
+    * what lets the DuckDB oracle replay the [[HashFamily.Md5]] run as the
+    * full-run SQL plus a batch-membership predicate. Id spaces must be
     * disjoint. */
   def minhashLshPairsIncremental(existing: DataFrame, incoming: DataFrame,
                                  id: Column, text: Column, tau: Double,
                                  bands: Int = 8, rowsPerBand: Int = 4,
-                                 n: Int = 3): DataFrame =
-    lshPairsIncrementalWith(d => bandedMinhash(d, id, text, bands,
-      rowsPerBand, n), existing, incoming, id, text, tau, n)
-
-  /** Incremental twin of [[minhashLshPairsMd5]] — the fixed md5 family
-    * through the same batch-probes-union bucketing as
-    * [[minhashLshPairsIncremental]]. Because signatures are a pure function
-    * of the row and verification is exact, the result equals the full
-    * [[minhashLshPairsMd5]] run restricted to pairs touching the batch —
-    * which is what lets the DuckDB oracle replay it as the full-twin SQL
-    * plus a batch-membership predicate. */
-  def minhashLshPairsMd5Incremental(existing: DataFrame, incoming: DataFrame,
-                                    id: Column, text: Column, tau: Double,
-                                    bands: Int = 8, rowsPerBand: Int = 4,
-                                    n: Int = 3): DataFrame =
-    lshPairsIncrementalWith(d => bandedMinhashMd5(d, id, text, bands,
-      rowsPerBand, n), existing, incoming, id, text, tau, n)
-
-  /** Shared incremental-LSH body, parameterized by the banding family. */
-  private def lshPairsIncrementalWith(bander: DataFrame => DataFrame,
-                                      existing: DataFrame, incoming: DataFrame,
-                                      id: Column, text: Column, tau: Double,
-                                      n: Int): DataFrame = {
-    val exB = bander(existing).withColumn("_new", lit(false))
-    val inB = bander(incoming).withColumn("_new", lit(true))
+                                 n: Int = 3,
+                                 family: HashFamily = HashFamily.Production)
+      : DataFrame = {
+    val exB = bandedMinhash(existing, id, text, bands, rowsPerBand, n,
+      family).withColumn("_new", lit(false))
+    val inB = bandedMinhash(incoming, id, text, bands, rowsPerBand, n,
+      family).withColumn("_new", lit(true))
     val all = exB.unionByName(inB)
       .repartition(col("band"), col("band_hash"))
     // the probe is the batch's slice OF THE SAME EXCHANGE (filter on the
     // rider flag) — before (r13), probe derived from inB directly, so the
-    // batch's whole banding pass (md5 on the fixed-family twin) planned
+    // batch's whole banding pass (md5 under the Md5 family) planned
     // and ran a second time; now ReuseExchange computes the union banding
     // once and both join sides arrive co-partitioned. Build side = the
     // batch-sized probe (shuffle_hash — the asymmetric-join rule: never
@@ -956,12 +976,17 @@ object NearDup {
     clusters.filter(col("doc_id") === col("cluster")).select(col("doc_id"))
 
   /** Winnowing-fingerprint near-dup pairs: docs sharing >= minShared
-    * fingerprints (see [[TextOps.winnowFingerprints]]). Substring-overlap
-    * detection — complementary to set-based Jaccard: it fires on long shared
-    * passages even when overall token sets differ. One shuffle on fp. */
+    * fingerprints (see [[TextOps.winnowFingerprints]], or
+    * [[winnowFingerprintsMd5]] under [[HashFamily.Md5]] — the
+    * DuckDB-replayable family; the hash family and therefore the selected
+    * fingerprints differ, so the two are separate detectors with the same
+    * guarantee, not bit twins). Substring-overlap detection — complementary
+    * to set-based Jaccard: it fires on long shared passages even when
+    * overall token sets differ. One shuffle on fp. */
   def winnowPairs(docs: DataFrame, id: Column, text: Column,
-                  minShared: Int = 3, k: Int = 8, w: Int = 4): DataFrame = {
-    val fps = TextOps.winnowFingerprints(docs, id, text, k, w)
+                  minShared: Int = 3, k: Int = 8, w: Int = 4,
+                  family: HashFamily = HashFamily.Production): DataFrame = {
+    val fps = family.winnowFingerprints(docs, id, text, k, w)
     val a = fps.as("a")
     val b = fps.as("b")
     a.join(b, col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
@@ -970,72 +995,28 @@ object NearDup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** SimHash 64-bit signature per doc: for each bit, sum +1/-1 over token
-    * hashes (weighted by occurrence) and take the sign, in one native
-    * per-row kernel — no UDF, no driver loop. A doc with NULL text gets no
-    * row, as under the explode + aggregate form the kernel replaced (which
-    * had no tokens to group); every other doc gets exactly one.
+  /** SimHash signature per doc — 64 bits under [[HashFamily.Production]],
+    * 32 under [[HashFamily.Md5]] (whose bit sums, sign and packing replay
+    * in SQL): for each bit, sum +1/-1 over token hashes (weighted by
+    * occurrence) and take the sign, in one native per-row kernel — no UDF,
+    * no driver loop. A doc with NULL text gets no row, as under the
+    * explode + aggregate form the kernel replaced (which had no tokens to
+    * group); every other doc gets exactly one.
     * Output: (doc_id, simhash: long). */
-  def simhashSignatures(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+  def simhashSignatures(docs: DataFrame, id: Column, text: Column,
+                        family: HashFamily = HashFamily.Production)
+      : DataFrame =
     // Native per-row kernel (r14; bit-parity with the previous explode +
-    // 64-column aggregate pinned in NearDupSpec): the signature is a pure
-    // function of the token array, so signing needs no explode and no
-    // aggregate at all — and the banded self-join downstream no longer
-    // re-optimizes two copies of a 64-aggregate plan (r14 StageProfile:
-    // q_simhash_pairs spent 0.76 s of 1.31 s wall in driver planning).
-    // Still deliberately NO spreadForCpu (the r13 measured non-change):
-    // the text shuffle costs more than the lost width at this
+    // bit-sum aggregate pinned in NearDupSpec for both families): the
+    // signature is a pure function of the token array, so signing needs no
+    // explode and no aggregate at all — and the banded self-join downstream
+    // no longer re-optimizes two copies of a 64-aggregate plan (r14
+    // StageProfile: q_simhash_pairs spent 0.76 s of 1.31 s wall in driver
+    // planning). Still deliberately NO spreadForCpu (the r13 measured
+    // non-change): the text shuffle costs more than the lost width at this
     // work-per-byte ratio.
     docs.filter(text.isNotNull).select(id.as("doc_id"),
-      ColumnBridge.column(expressions.SimhashSignature(
-        ColumnBridge.expression(TextOps.tokens(text)), md5Family = false))
-        .as("simhash"))
-  }
-
-  /** SimHash over a FIXED md5 bit family — the cross-engine ORACLE twin of
-    * [[simhashPairs]] (the `q_minhash_fixed` pattern): the per-token hash is
-    * the first 32 bits of md5 (`conv(substring(md5(tok),1,8),16,10)` ==
-    * DuckDB `('0x'||substr(md5(tok),1,8))::UBIGINT`), bit sums / sign /
-    * packing / banding / Hamming verify are the identical integer pipeline
-    * as production, shrunk to 32 bits so the whole signature replays in
-    * SQL. xxhash64's 64-bit signature stays the scale path. NULL text:
-    * no row, as in [[simhashSignatures]]. */
-  def simhashSignaturesMd5(docs: DataFrame, id: Column,
-                           text: Column): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // same native kernel as [[simhashSignatures]], md5-32 family (the
-    // first 4 digest bytes == conv(substring(md5(tok),1,8),16,10));
-    // parity with the aggregate formulation pinned in NearDupSpec
-    docs.filter(text.isNotNull).select(id.as("doc_id"),
-      ColumnBridge.column(expressions.SimhashSignature(
-        ColumnBridge.expression(TextOps.tokens(text)), md5Family = true))
-        .as("simhash"))
-  }
-
-  /** Banded-candidate Hamming pairs over the fixed 32-bit md5 signature
-    * ([[simhashSignaturesMd5]]): 4 bands of 8 bits, Hamming <= maxHamming.
-    * Output: (id1, id2, hamming BIGINT) — fully DuckDB-replayable. */
-  def simhashPairsMd5(docs: DataFrame, id: Column, text: Column,
-                      maxHamming: Int = 10): DataFrame = {
-    val sigs = simhashSignaturesMd5(docs, id, text)
-    val banded = sigs.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(j =>
-        shiftright(col("simhash"), j * 8).bitwiseAND(0xffL)): _*))
-        .as(Seq("band", "chunk")))
-    val l = banded.as("l")
-    val r = banded.as("r")
-    l.join(r, col("l.band") === col("r.band") &&
-        col("l.chunk") === col("r.chunk") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id1"), col("r.doc_id").as("id2"),
-        col("l.simhash").as("s1"), col("r.simhash").as("s2"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("s1").bitwiseXOR(col("s2"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id1"), col("id2"), col("hamming"))
-  }
+      family.simhash(TextOps.tokens(text)).as("simhash"))
 
   /** Winnowing fingerprints over a FIXED md5 gram hash — the cross-engine
     * ORACLE twin of [[TextOps.winnowFingerprints]]: character `k`-grams
@@ -1065,33 +1046,20 @@ object NearDup {
           ColumnBridge.expression(text), k, w))).as("fp"))
   }
 
-  /** Fingerprint-sharing pairs over [[winnowFingerprintsMd5]] — the
-    * DuckDB-replayable twin of [[winnowPairs]] (same join shape; the
-    * hash family and therefore the selected fingerprints differ, so the
-    * two are separate detectors with the same guarantee, not bit twins). */
-  def winnowPairsMd5(docs: DataFrame, id: Column, text: Column,
-                     minShared: Int = 5, k: Int = 24, w: Int = 8): DataFrame = {
-    // pre-partition on the join key so both self-join sides are the SAME
-    // exchange (ReuseExchange — the fingerprint kernel runs once, and the
-    // join adds no further shuffle; the lshVerifiedPairs pattern)
-    val fps = winnowFingerprintsMd5(docs, id, text, k, w)
-      .repartition(col("fp"))
-    val a = fps.as("a")
-    val b = fps.as("b")
-    a.join(b, col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-  }
-
-  /** SimHash near-dup pairs: candidates via 16-bit signature bands (docs equal
-    * in >= 1 of 4 chunks), verified by Hamming distance <= maxHamming. */
+  /** SimHash near-dup pairs: candidates via signature bands (docs equal
+    * in >= 1 of 4 chunks of width/4 bits — 16 under
+    * [[HashFamily.Production]], 8 under [[HashFamily.Md5]]), verified by
+    * Hamming distance <= maxHamming.
+    * Output: (id1, id2, hamming BIGINT). */
   def simhashPairs(docs: DataFrame, id: Column, text: Column,
-                   maxHamming: Int = 8): DataFrame = {
-    val sigs = simhashSignatures(docs, id, text)
+                   maxHamming: Int = 8,
+                   family: HashFamily = HashFamily.Production): DataFrame = {
+    val chunkBits = family.simhashBits / 4
+    val sigs = simhashSignatures(docs, id, text, family)
     val banded = sigs.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(j =>
-        shiftright(col("simhash"), j * 16).bitwiseAND(0xffffL)): _*))
+        shiftright(col("simhash"), j * chunkBits)
+          .bitwiseAND((1L << chunkBits) - 1)): _*))
         .as(Seq("band", "chunk")))
     val l = banded.as("l")
     val r = banded.as("r")
@@ -1101,7 +1069,8 @@ object NearDup {
       .select(col("l.doc_id").as("id1"), col("r.doc_id").as("id2"),
         col("l.simhash").as("s1"), col("r.simhash").as("s2"))
       .distinct()
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
+      .withColumn("hamming",
+        bit_count(col("s1").bitwiseXOR(col("s2"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id1"), col("id2"), col("hamming"))
   }

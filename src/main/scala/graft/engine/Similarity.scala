@@ -143,6 +143,17 @@ object Similarity {
     * [[srpGeometry]]. */
   final case class SrpGeometry(bits: Int, bands: Int, rowsPerBand: Int)
 
+  object SrpGeometry {
+    /** The fixed default geometry: 256 bits, 24 bands × 4 rows — tuned
+      * for recall >= 0.9 at tau=0.4, a HARD threshold for SRP (pairs at
+      * 66°, background at 90°): band-OR recall ≈ 0.98, Hamming-cut recall
+      * ≈ 0.99 at the threshold — AND for corpora up to ~10^4 vectors only:
+      * its bucket count is fixed (2^4 per band), so occupancy grows with n
+      * and candidate pairs with n² (ScaleCurve measured exp 1.21 at a 10×
+      * step). Past that, derive the geometry with [[srpGeometry]]. */
+    val Fixed: SrpGeometry = SrpGeometry(256, 24, 4)
+  }
+
   /** Derive SRP-LSH geometry from corpus size — the measured scale rule
     * (SCALE.md "ScaleCurve"): a FIXED geometry has a fixed bucket count per
     * band (2^rowsPerBand), so per-bucket occupancy grows with n and
@@ -256,6 +267,25 @@ object Similarity {
       posexplode(chunks).as(Seq("band", "chunk")))
   }
 
+  /** The rows-per-bucket guard every SRP-LSH entry runs before planning
+    * (stats-estimated corpus size — the theilSenSlopeByKey maxDays
+    * pattern): a geometry has 2^rowsPerBand buckets per band, and past
+    * `maxRowsPerBucket` expected rows per bucket the banded join goes
+    * quadratic (measured, SCALE.md). A geometry from [[srpGeometry]] has
+    * at least n/128 buckets per band, so at the default cap of 1024 it
+    * admits at least 8n rows: the guard fires on a derived geometry only
+    * when the n it was derived from understated the corpus. */
+  private def requireBucketOccupancy(op: String, nEst: Long, g: SrpGeometry,
+                                     maxRowsPerBucket: Int): Unit =
+    require(BigInt(nEst) <=
+        (BigInt(1) << g.rowsPerBand) * maxRowsPerBucket,
+      s"$op: ~$nEst corpus rows over ${BigInt(1) << g.rowsPerBand} " +
+        s"buckets/band (rowsPerBand=${g.rowsPerBand}) exceeds " +
+        s"$maxRowsPerBucket rows/bucket — this geometry goes quadratic " +
+        "here (measured, SCALE.md). Pass geometry = srpGeometry(corpusSize, " +
+        "tau) with the true corpus size, or raise maxRowsPerBucket " +
+        "deliberately.")
+
   /** Embedding-cosine near-dup pairs at scale — three stages, none quadratic
     * in materialized rows:
     *  1. BLOCK: candidates share >= 1 LSH band chunk (shuffle on
@@ -268,49 +298,21 @@ object Similarity {
     *  3. RERANK: exact cosine on the deduped survivors (vectors re-attached;
     *     at this corpus size Catalyst picks broadcast joins), threshold tau.
     *
-    * Defaults (bits=256, 24 bands × 4 rows) are tuned for recall >= 0.9 at
-    * tau=0.4 — a HARD threshold for SRP (pairs at 66°, background at 90°):
-    * band-OR recall ≈ 0.98, Hamming-cut recall ≈ 0.99 at the threshold —
-    * AND for corpora up to ~10^4 vectors only: a fixed geometry has a fixed
-    * bucket count (2^rowsPerBand per band), so occupancy grows with n and
-    * candidate pairs with n² (ScaleCurve measured exp 1.21 at a 10× step).
-    * Beyond `maxRowsPerBucket` expected rows per bucket the call fails
-    * loudly (stats-estimated corpus size — the theilSenSlopeByKey maxDays
-    * pattern): switch to [[lshCosinePairsAuto]], which derives the geometry
-    * from the corpus size via [[srpGeometry]], or raise `maxRowsPerBucket`
-    * deliberately. Recall < 1 by design; floor asserted against
-    * [[cosinePairs]] in SimilaritySpec. */
+    * `geometry` defaults to [[SrpGeometry.Fixed]] (corpora up to ~10^4
+    * vectors); at scale pass `srpGeometry(corpusSize, tau)`, which grows
+    * rows-per-band with log n so bucket occupancy (and with it the
+    * candidate-pair mass) stays ~linear at `targetRecall` for pairs at the
+    * threshold. Either way the [[requireBucketOccupancy]] guard refuses a
+    * corpus the geometry is too narrow for. Recall < 1 by design; floor
+    * asserted against [[cosinePairs]] in SimilaritySpec. */
   def lshCosinePairs(emb: DataFrame, id: Column, vec: Column, tau: Double,
-                     bits: Int = 256, bands: Int = 24, rowsPerBand: Int = 4,
+                     geometry: SrpGeometry = SrpGeometry.Fixed,
                      dim: Int = 64, maxRowsPerBucket: Int = 1024): DataFrame = {
-    val nEst = estimatedRows(emb, dim)
-    require(nEst <= (1L << rowsPerBand) * maxRowsPerBucket,
-      s"lshCosinePairs: ~$nEst corpus rows over ${1 << rowsPerBand} " +
-        s"buckets/band (rowsPerBand=$rowsPerBand) exceeds " +
-        s"$maxRowsPerBucket rows/bucket — a fixed geometry goes quadratic " +
-        "here (measured, SCALE.md). Use lshCosinePairsAuto(corpusSize) to " +
-        "derive the geometry, or raise maxRowsPerBucket deliberately.")
-    lshCosinePairsCore(emb, id, vec, tau, bits, bands, rowsPerBand, dim)
-  }
-
-  /** [[lshCosinePairs]] with geometry DERIVED from the (caller-known)
-    * corpus size via [[srpGeometry]] — the default entry point at scale:
-    * rows-per-band grows with log n so bucket occupancy (and with it the
-    * candidate-pair mass) stays ~linear, at `targetRecall` for pairs at the
-    * threshold. */
-  def lshCosinePairsAuto(emb: DataFrame, id: Column, vec: Column, tau: Double,
-                         corpusSize: Long, dim: Int = 64,
-                         targetRecall: Double = 0.92): DataFrame = {
-    val g = srpGeometry(corpusSize, tau, targetRecall)
-    lshCosinePairsCore(emb, id, vec, tau, g.bits, g.bands, g.rowsPerBand, dim)
-  }
-
-  private def lshCosinePairsCore(emb: DataFrame, id: Column, vec: Column,
-                                 tau: Double, bits: Int, bands: Int,
-                                 rowsPerBand: Int, dim: Int): DataFrame = {
-    val (vecs, banded) = bandedSignatures(emb, id, vec, bits, bands,
-      rowsPerBand, dim)
-    val maxHam = hammingCut(tau, prefilterBits(bits))
+    requireBucketOccupancy("lshCosinePairs", estimatedRows(emb, dim),
+      geometry, maxRowsPerBucket)
+    val (vecs, banded) = bandedSignatures(emb, id, vec, geometry.bits,
+      geometry.bands, geometry.rowsPerBand, dim)
+    val maxHam = hammingCut(tau, prefilterBits(geometry.bits))
     val l = banded.select(col("band"), col("chunk"), col("cid").as("id1"),
       col("sig").as("sig1"))
     val r = banded.select(col("band"), col("chunk"), col("cid").as("id2"),
@@ -339,44 +341,27 @@ object Similarity {
     * banded SRP join). Because the SRP signature, the Hamming prefilter,
     * and the exact-cosine rerank are all pure per-row / per-pair
     * functions, the result EQUALS the full [[lshCosinePairs]] run over
-    * (existing ∪ incoming) restricted to pairs touching the batch —
-    * SimilaritySpec asserts that law at both geometries, and the
-    * fixed-geometry oracle twin (`q_srp_incr_fixed`) replays it in SQL as
-    * the full-twin query plus a batch-membership predicate. Same loud
-    * fixed-geometry guard as the full run, fed by the UNION's estimated
-    * size; at real scale prefer [[lshCosinePairsIncrementalAuto]]. */
+    * (existing ∪ incoming) at the same `geometry`, restricted to pairs
+    * touching the batch — SimilaritySpec asserts that law at both
+    * geometries, and the fixed-geometry oracle twin (`q_srp_incr_fixed`)
+    * replays it in SQL as the full-twin query plus a batch-membership
+    * predicate. The occupancy guard reads the UNION's estimated size, and
+    * a derived geometry must come from the union size too: a growing
+    * corpus eventually crosses a rows-per-band step, and when it does the
+    * existing side simply re-bands under the new chunk width (signatures
+    * themselves are geometry-independent up to `bits`, so nothing is
+    * invalidated). */
   def lshCosinePairsIncremental(existing: DataFrame, incoming: DataFrame,
                                 id: Column, vec: Column, tau: Double,
-                                bits: Int = 256, bands: Int = 24,
-                                rowsPerBand: Int = 4, dim: Int = 64,
+                                geometry: SrpGeometry = SrpGeometry.Fixed,
+                                dim: Int = 64,
                                 maxRowsPerBucket: Int = 1024): DataFrame = {
-    val nEst = estimatedRows(existing, dim) + estimatedRows(incoming, dim)
-    require(nEst <= (1L << rowsPerBand) * maxRowsPerBucket,
-      s"lshCosinePairsIncremental: ~$nEst union rows over " +
-        s"${1 << rowsPerBand} buckets/band (rowsPerBand=$rowsPerBand) " +
-        s"exceeds $maxRowsPerBucket rows/bucket — a fixed geometry goes " +
-        "quadratic here (measured, SCALE.md). Use " +
-        "lshCosinePairsIncrementalAuto(corpusSize) to derive the " +
-        "geometry, or raise maxRowsPerBucket deliberately.")
-    lshCosinePairsIncrementalCore(existing, incoming, id, vec, tau, bits,
-      bands, rowsPerBand, dim)
-  }
-
-  /** [[lshCosinePairsIncremental]] with geometry DERIVED from the
-    * caller-known (existing + incoming) corpus size via [[srpGeometry]] —
-    * the default daily-batch entry point at scale. The geometry must come
-    * from the UNION size: a growing corpus eventually crosses a
-    * rows-per-band step, and when it does the existing side simply
-    * re-bands under the new chunk width (signatures themselves are
-    * geometry-independent up to `bits`, so nothing is invalidated). */
-  def lshCosinePairsIncrementalAuto(existing: DataFrame, incoming: DataFrame,
-                                    id: Column, vec: Column, tau: Double,
-                                    corpusSize: Long, dim: Int = 64,
-                                    targetRecall: Double = 0.92)
-      : DataFrame = {
-    val g = srpGeometry(corpusSize, tau, targetRecall)
-    lshCosinePairsIncrementalCore(existing, incoming, id, vec, tau, g.bits,
-      g.bands, g.rowsPerBand, dim)
+    requireBucketOccupancy("lshCosinePairsIncremental",
+      estimatedRows(existing, dim) + estimatedRows(incoming, dim), geometry,
+      maxRowsPerBucket)
+    val (exVecs, exBanded) = bandedSignatures(existing, id, vec,
+      geometry.bits, geometry.bands, geometry.rowsPerBand, dim)
+    incrementalProbe(exVecs, exBanded, incoming, id, vec, tau, geometry, dim)
   }
 
   /** Map-side bucket pruning for the incremental probe join: condense the
@@ -413,17 +398,75 @@ object Similarity {
     }
   }
 
-  private def lshCosinePairsIncrementalCore(existing: DataFrame,
-                                            incoming: DataFrame, id: Column,
-                                            vec: Column, tau: Double,
-                                            bits: Int, bands: Int,
-                                            rowsPerBand: Int,
-                                            dim: Int): DataFrame = {
-    val (exVecs, exBanded) = bandedSignatures(existing, id, vec, bits,
-      bands, rowsPerBand, dim)
-    val (inVecs, inBanded) = bandedSignatures(incoming, id, vec, bits,
-      bands, rowsPerBand, dim)
-    val maxHam = hammingCut(tau, prefilterBits(bits))
+  /** SRP signature table (cid, sig) — the PERSIST point of the daily-batch
+    * pattern. Signatures are pure per-row functions and prefix-stable
+    * across widths (bit j never changes when `bits` grows — hyperplanes
+    * are generated per bit index), so: compute once for the corpus at a
+    * width with headroom over the current geometry, store next to the
+    * embeddings, and append each day's batch. The measured motivation
+    * (SCALE.md): recomputing corpus signatures dominated the fixed-batch
+    * incremental run ~3.4 s of 4.9 s at the 10× step — persisting them
+    * makes the daily marginal batch-sized.
+    */
+  def srpSignatureTable(emb: DataFrame, id: Column, vec: Column,
+                        bits: Int = 832, dim: Int = 64): DataFrame =
+    emb.select(id.as("cid"), asDouble(vec).as("cv"))
+      .select(col("cid"), srpSignature(col("cv"), bits, dim).as("sig"))
+
+  /** [[lshCosinePairsIncremental]] against a PERSISTED corpus
+    * signature table ([[srpSignatureTable]]) — the production daily run:
+    * only the incoming batch is signed today; the existing side's
+    * signatures are read back and re-banded as a bit-slicing view (free
+    * on geometry steps while the geometry fits `sigBits`, the width the
+    * table was signed at — a too-narrow table fails loudly DRIVER-SIDE,
+    * naming the re-sign width; no job runs). `existing` supplies the
+    * vectors for the exact rerank (only candidate ids are ever joined back
+    * to it). Bit-identical to [[lshCosinePairsIncremental]] at the same
+    * `geometry` because signatures are prefix-stable across widths —
+    * spec-asserted. */
+  def lshCosinePairsIncrementalPresigned(existingSigs: DataFrame,
+                                         sigBits: Int, existing: DataFrame,
+                                         incoming: DataFrame, id: Column,
+                                         vec: Column, tau: Double,
+                                         geometry: SrpGeometry =
+                                           SrpGeometry.Fixed,
+                                         dim: Int = 64): DataFrame = {
+    require(sigBits % 64 == 0 && sigBits > 0,
+      s"sigBits must be a positive multiple of 64: $sigBits")
+    // the banding reads word indices up to ceil(bands*rowsPerBand/64) and
+    // the Hamming prefilter up to ceil(min(bits, 512)/64); both are
+    // <= ceil(bits/64), so requiring the stored width to cover the
+    // geometry's bits is the whole contract
+    require(geometry.bits <= sigBits,
+      s"persisted signature table too narrow: $geometry needs " +
+        s"${geometry.bits} bits, table was signed at $sigBits — re-sign " +
+        s"with srpSignatureTable(bits >= ${geometry.bits}) (grow with " +
+        "headroom; prefix bits never change)")
+    requireBucketOccupancy("lshCosinePairsIncrementalPresigned",
+      estimatedRows(existing, dim) + estimatedRows(incoming, dim), geometry,
+      1024)
+    // band the STORED prefix exactly as a freshly-signed geometry.bits-wide
+    // signature would band: pass geometry.bits (not sigBits) so the sliced
+    // Hamming-prefix width matches the incoming side's word for word
+    val exBanded = bandSignatureFrame(
+      existingSigs.select(col("cid"), col("sig")), geometry.bits,
+      geometry.bands, geometry.rowsPerBand)
+    val exVecs = existing.select(id.as("cid"), asDouble(vec).as("cv"))
+    incrementalProbe(exVecs, exBanded, incoming, id, vec, tau, geometry, dim)
+  }
+
+  /** The incremental tail shared by [[lshCosinePairsIncremental]] and
+    * [[lshCosinePairsIncrementalPresigned]]: sign and band the batch,
+    * probe the union's buckets with it, Hamming-cut and exact-rerank.
+    * `exVecs` is (cid, cv); `exBanded` is the existing side's banded rows
+    * under `geometry`, freshly signed or re-banded from a stored table. */
+  private def incrementalProbe(exVecs: DataFrame, exBanded: DataFrame,
+                               incoming: DataFrame, id: Column, vec: Column,
+                               tau: Double, geometry: SrpGeometry,
+                               dim: Int): DataFrame = {
+    val (inVecs, inBanded) = bandedSignatures(incoming, id, vec,
+      geometry.bits, geometry.bands, geometry.rowsPerBand, dim)
+    val maxHam = hammingCut(tau, prefilterBits(geometry.bits))
     val all = pruneToProbedBuckets(exBanded, inBanded)
       .withColumn("_new", lit(false))
       .unionByName(inBanded.withColumn("_new", lit(true)))
@@ -446,89 +489,6 @@ object Similarity {
     // side here must be the BATCH-sized probe: building the corpus side's
     // banded rows OOMs the per-partition hash map exactly when the
     // incremental path matters (measured r13 at the 100× step).
-    probe.hint("shuffle_hash").join(all, Seq("band", "chunk"))
-      .filter(col("in_id") =!= col("cid") &&
-        (!col("_new") || col("in_id") < col("cid")) &&
-        hamming(col("in_sig"), col("sig")) <= maxHam)
-      .select(least(col("in_id"), col("cid")).as("id1"),
-        greatest(col("in_id"), col("cid")).as("id2"))
-      .dropDuplicates("id1", "id2")
-      .join(vecs.select(col("cid").as("id1"), col("cv").as("v1")), "id1")
-      .join(vecs.select(col("cid").as("id2"), col("cv").as("v2")), "id2")
-      .select(col("id1"), col("id2"),
-        round(cosine(col("v1"), col("v2")), 6).as("cos"))
-      .filter(col("cos") >= tau)
-  }
-
-  /** SRP signature table (cid, sig) — the PERSIST point of the daily-batch
-    * pattern. Signatures are pure per-row functions and prefix-stable
-    * across widths (bit j never changes when `bits` grows — hyperplanes
-    * are generated per bit index), so: compute once for the corpus at a
-    * width with headroom over the current geometry, store next to the
-    * embeddings, and append each day's batch. The measured motivation
-    * (SCALE.md): recomputing corpus signatures dominated the fixed-batch
-    * incremental run ~3.4 s of 4.9 s at the 10× step — persisting them
-    * makes the daily marginal batch-sized.
-    */
-  def srpSignatureTable(emb: DataFrame, id: Column, vec: Column,
-                        bits: Int = 832, dim: Int = 64): DataFrame =
-    emb.select(id.as("cid"), asDouble(vec).as("cv"))
-      .select(col("cid"), srpSignature(col("cv"), bits, dim).as("sig"))
-
-  /** [[lshCosinePairsIncrementalAuto]] against a PERSISTED corpus
-    * signature table ([[srpSignatureTable]]) — the production daily run:
-    * only the incoming batch is signed today; the existing side's
-    * signatures are read back and re-banded as a bit-slicing view (free
-    * on geometry steps while the derived geometry fits `sigBits`, the
-    * width the table was signed at — a too-narrow table fails loudly
-    * DRIVER-SIDE, naming the re-sign width; no job runs). `existing`
-    * supplies the vectors for the exact rerank (only candidate ids are
-    * ever joined back to it). Bit-identical to
-    * [[lshCosinePairsIncrementalAuto]] on the same inputs because
-    * signatures are prefix-stable across widths — spec-asserted. */
-  def lshCosinePairsIncrementalPresigned(existingSigs: DataFrame,
-                                         sigBits: Int, existing: DataFrame,
-                                         incoming: DataFrame, id: Column,
-                                         vec: Column, tau: Double,
-                                         corpusSize: Long, dim: Int = 64,
-                                         targetRecall: Double = 0.92)
-      : DataFrame = {
-    val g = srpGeometry(corpusSize, tau, targetRecall)
-    require(sigBits % 64 == 0 && sigBits > 0,
-      s"sigBits must be a positive multiple of 64: $sigBits")
-    // the banding reads word indices up to ceil(bands*rowsPerBand/64) and
-    // the Hamming prefilter up to ceil(min(g.bits, 512)/64); both are
-    // <= ceil(g.bits/64), so requiring the stored width to cover g.bits
-    // is the whole contract
-    require(g.bits <= sigBits,
-      s"persisted signature table too narrow: geometry for n=$corpusSize " +
-        s"needs ${g.bits} bits, table was signed at $sigBits — re-sign " +
-        s"with srpSignatureTable(bits >= ${g.bits}) (grow with headroom; " +
-        "prefix bits never change)")
-    // band the STORED prefix exactly as a freshly-signed g.bits-wide
-    // signature would band: pass g.bits (not sigBits) so the sliced
-    // Hamming-prefix width matches the incoming side's word for word
-    val exBanded = bandSignatureFrame(
-      existingSigs.select(col("cid"), col("sig")), g.bits,
-      g.bands, g.rowsPerBand)
-    val (inVecs, inBanded) = bandedSignatures(incoming, id, vec, g.bits,
-      g.bands, g.rowsPerBand, dim)
-    val exVecs = existing.select(id.as("cid"), asDouble(vec).as("cv"))
-    val maxHam = hammingCut(tau, prefilterBits(g.bits))
-    val all = pruneToProbedBuckets(exBanded, inBanded)
-      .withColumn("_new", lit(false))
-      .unionByName(inBanded.withColumn("_new", lit(true)))
-      .repartition(col("band"), col("chunk"))
-    // the probe is the batch's slice OF THE SAME EXCHANGE (filter on the
-    // rider flag) — deriving it from inBanded directly planned and ran
-    // the batch's signing/banding pass a second time inside the join
-    // (r13); ReuseExchange now computes the union banding once and both
-    // join sides arrive co-partitioned (the bloom-pruning jobs still
-    // sign the batch separately — that gate must run before the union
-    // exists). Build side stays the batch-sized probe (hint below).
-    val probe = all.filter(col("_new")).select(col("band"), col("chunk"),
-      col("cid").as("in_id"), col("sig").as("in_sig"))
-    val vecs = exVecs.unionByName(inVecs)
     probe.hint("shuffle_hash").join(all, Seq("band", "chunk"))
       .filter(col("in_id") =!= col("cid") &&
         (!col("_new") || col("in_id") < col("cid")) &&
@@ -831,7 +791,8 @@ object Similarity {
     * (ADVICE r12). Bias by an assumed ~2x parquet compression ratio for
     * double columns; the estimate stays order-of-magnitude only, and the
     * guards it feeds err loud (refuse) rather than silent. Callers at real
-    * scale should prefer the *Auto entry points, which take a true count. */
+    * scale should pass a geometry derived from a true count
+    * ([[srpGeometry]]). */
   private def estimatedRows(emb: DataFrame, dim: Int): Long = {
     val stats = emb.queryExecution.optimizedPlan.stats
     stats.rowCount.map(_.toLong).getOrElse {
@@ -866,49 +827,25 @@ object Similarity {
     * corpus scale (10^8+, where a linear pass per query batch is a full-table
     * scan). Below that, call [[cosineTopK]].
     *
+    * `geometry` and the occupancy guard work as in [[lshCosinePairs]]. For
+    * a derived geometry pass `srpGeometry(corpusSize, 0.4)`: top-k has no
+    * tau, and 0.4 is the weakest — hence most conservative — threshold the
+    * engine tunes for.
+    *
     * Returns (qid, cid, cos, rn) like [[cosineTopK]] — recall < 1 by design;
     * see SimilaritySpec for the measured recall floor. */
   def lshCosineTopK(emb: DataFrame, id: Column, vec: Column,
-                    queryIds: Seq[Long], k: Int, bits: Int = 256,
-                    bands: Int = 24, rowsPerBand: Int = 4, dim: Int = 64,
-                    candidatesPerQuery: Int = 0,
+                    queryIds: Seq[Long], k: Int,
+                    geometry: SrpGeometry = SrpGeometry.Fixed,
+                    dim: Int = 64, candidatesPerQuery: Int = 0,
                     maxRowsPerBucket: Int = 1024): DataFrame = {
     val nEst = estimatedRows(emb, dim)
-    require(nEst <= (1L << rowsPerBand) * maxRowsPerBucket,
-      s"lshCosineTopK: ~$nEst corpus rows over ${1 << rowsPerBand} " +
-        s"buckets/band (rowsPerBand=$rowsPerBand) exceeds " +
-        s"$maxRowsPerBucket rows/bucket — a fixed geometry goes quadratic " +
-        "here (measured, SCALE.md). Use lshCosineTopKAuto(corpusSize) to " +
-        "derive the geometry, or raise maxRowsPerBucket deliberately.")
-    lshCosineTopKCore(emb, id, vec, queryIds, k, bits, bands, rowsPerBand,
-      dim, candidatesPerQuery)
-  }
-
-  /** [[lshCosineTopK]] with geometry DERIVED from the (caller-known) corpus
-    * size via [[srpGeometry]] — the default entry point at scale. The
-    * geometry threshold defaults to the tau-0.4 near-dup regime (top-k has
-    * no tau; 0.4 is the weakest — hence most conservative — threshold the
-    * engine tunes for). */
-  def lshCosineTopKAuto(emb: DataFrame, id: Column, vec: Column,
-                        queryIds: Seq[Long], k: Int, corpusSize: Long,
-                        dim: Int = 64, candidatesPerQuery: Int = 0,
-                        geometryTau: Double = 0.4,
-                        targetRecall: Double = 0.92): DataFrame = {
-    val g = srpGeometry(corpusSize, geometryTau, targetRecall)
-    lshCosineTopKCore(emb, id, vec, queryIds, k, g.bits, g.bands,
-      g.rowsPerBand, dim, candidatesPerQuery)
-  }
-
-  private def lshCosineTopKCore(emb: DataFrame, id: Column, vec: Column,
-                                queryIds: Seq[Long], k: Int, bits: Int,
-                                bands: Int, rowsPerBand: Int, dim: Int,
-                                candidatesPerQuery: Int): DataFrame = {
+    requireBucketOccupancy("lshCosineTopK", nEst, geometry, maxRowsPerBucket)
     val cpq =
       if (candidatesPerQuery > 0) candidatesPerQuery
-      else math.min(
-        math.max(40L * k, estimatedRows(emb, dim) / 5L), 10000L).toInt
-    val (vecs, banded) = bandedSignatures(emb, id, vec, bits, bands,
-      rowsPerBand, dim)
+      else math.min(math.max(40L * k, nEst / 5L), 10000L).toInt
+    val (vecs, banded) = bandedSignatures(emb, id, vec, geometry.bits,
+      geometry.bands, geometry.rowsPerBand, dim)
     val queries = banded.filter(col("cid").isin(queryIds: _*))
       .select(col("cid").as("qid"), col("sig").as("qsig"),
         col("band"), col("chunk"))

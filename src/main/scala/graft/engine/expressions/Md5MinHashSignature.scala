@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fixed-md5-family MinHash signature — the native kernel behind
-  * [[graft.engine.NearDup.minhashLshPairsMd5]]'s signing pass: entry i is
+  * [[graft.engine.NearDup.minhashSignatures]] under
+  * [[graft.engine.NearDup.HashFamily.Md5]]: entry i is
   * `min over shingles s of md5(s || ":" || i)` (lexicographic min of the
   * lowercase hex digest), for i in 0 until k. Bit-identical to the
   * declarative `array_min(transform(_sh, s => md5(concat(s, ":i"))))`

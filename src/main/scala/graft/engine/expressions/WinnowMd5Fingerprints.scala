@@ -8,7 +8,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct winnowing fingerprints over FIXED md5 gram hashes — the native
-  * kernel behind [[graft.engine.NearDup.winnowFingerprintsMd5]]: for every
+  * kernel behind [[graft.engine.NearDup.winnowFingerprintsMd5]] (the
+  * fingerprints [[graft.engine.NearDup.winnowPairs]] joins under
+  * [[graft.engine.NearDup.HashFamily.Md5]]): for every
   * char position p in 1..len−k+1, g(p) = md5 hex of the k-char substring;
   * the fingerprint set is the distinct minima over every FULL window of `w`
   * consecutive gram hashes (windows 1..len−(k+w−2); docs with no full
@@ -78,38 +80,33 @@ case class WinnowMd5Fingerprints(child: Expression, k: Int, w: Int)
   }
 
   def compute(t: UTF8String): ArrayData = {
-    val nChars = t.numChars()
+    // md5(substr(t, p, k)) hashes the substring's UTF-8 bytes: index every
+    // code point's first byte in ONE pass over the lead bytes (a
+    // continuation byte is 10xxxxxx), then digest byte slices of the one
+    // array — no String round trip, O(bytes) for any text. ASCII is the
+    // identity table of the same loop.
+    val bytes = t.getBytes
+    val off = new Array[Int](bytes.length + 1)
+    var nChars = 0
+    var b = 0
+    while (b < bytes.length) {
+      if ((bytes(b) & 0xc0) != 0x80) { off(nChars) = b; nChars += 1 }
+      b += 1
+    }
+    off(nChars) = bytes.length
     val m = nChars - k + 1
     if (m < w) return new GenericArrayData(new Array[Any](0))
     val md = mdLocal.get()
     val digests = new Array[Array[Byte]](m)
     val prefixes = new Array[Long](m)
-    val bytes = t.getBytes
-    if (bytes.length == nChars) {
-      // ASCII fast path: char positions == byte positions, digest slices
-      // of the one byte array — no per-position String/encode allocation
-      var i = 0
-      while (i < m) {
-        md.reset()
-        md.update(bytes, i, k)
-        val d = md.digest()
-        digests(i) = d
-        prefixes(i) = prefix(d)
-        i += 1
-      }
-    } else {
-      // md5(substr(t, p, k)) hashes the substring's UTF-8 bytes — match
-      // exactly for multi-byte text via the codepoint-aware substring
-      val s = t.toString
-      var i = 0
-      while (i < m) {
-        val d = md.digest(s.substring(s.offsetByCodePoints(0, i),
-          s.offsetByCodePoints(0, i + k)).getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        digests(i) = d
-        prefixes(i) = prefix(d)
-        i += 1
-      }
+    var i = 0
+    while (i < m) {
+      md.reset()
+      md.update(bytes, off(i), off(i + k) - off(i))
+      val d = md.digest()
+      digests(i) = d
+      prefixes(i) = prefix(d)
+      i += 1
     }
     def le(i: Int, j: Int): Boolean = {
       val c = java.lang.Long.compareUnsigned(prefixes(i), prefixes(j))

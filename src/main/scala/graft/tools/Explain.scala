@@ -1,18 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for the named queries (or all)
   * at the given sfDir — the "is this the plan I'd want at 100 TB" check. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

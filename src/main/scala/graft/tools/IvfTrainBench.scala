@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.engine.Similarity
 
@@ -13,10 +12,8 @@ object IvfTrainBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nlist = if (args.nonEmpty) args(0).toInt else 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (round <- 1 to 3) {
       val emb = graft.engine.Tables.embeddings(spark, sfDir)

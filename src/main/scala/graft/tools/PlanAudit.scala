@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: scan every query's physical plan for scale red flags —
   * non-broadcast cartesian products, single-partition exchanges (a global
   * sort/window funnel), and windows without partitioning. Sink/stream
@@ -15,11 +13,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0

@@ -188,10 +188,10 @@ object ScaleCurve {
     // with a fixed band/row geometry, per-bucket occupancy grows with n and
     // candidate pairs with n². Since r12 the engine closes this itself:
     // srpGeometry(n, tau) derives the banding (rows-per-band ~ log n) and
-    // lshCosinePairsAuto threads it — the q_embed_dedup_lsh_auto row above
-    // measures that path across scales. Keep the fixed-geometry A/B here
-    // (maxRowsPerBucket raised DELIBERATELY to measure the cliff the guard
-    // now fails loudly on).
+    // lshCosinePairs takes it as its geometry — the q_embed_dedup_lsh_auto
+    // row above measures that path across scales. Keep the fixed-geometry
+    // A/B here (maxRowsPerBucket raised DELIBERATELY to measure the cliff
+    // the guard now fails loudly on).
     def lshOnce(dir: String, run: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): Double = {
       val emb = Tables.embeddings(spark, dir)
@@ -209,8 +209,8 @@ object ScaleCurve {
       graft.engine.Similarity.lshCosinePairs(emb, col("vec_id"),
         col("embedding"), 0.4, maxRowsPerBucket = Int.MaxValue))
     val derived = lshOnce(synthDir, emb =>
-      graft.engine.Similarity.lshCosinePairsAuto(emb, col("vec_id"),
-        col("embedding"), 0.4, corpusSize = nSf1))
+      graft.engine.Similarity.lshCosinePairs(emb, col("vec_id"),
+        col("embedding"), 0.4, g))
     println(f"[scale] q_embed_dedup_lsh at sf1 (n=$nSf1): fixed geometry " +
       f"(24x4/256) $fixed%.3f s vs derived (${g.bands}x${g.rowsPerBand}/" +
       f"${g.bits}) $derived%.3f s")
@@ -220,15 +220,16 @@ object ScaleCurve {
     // axes; this A/B isolates corpus growth at fixed batch, the claim the
     // incremental path exists for
     val incrFixedBatch = lshOnce(synthDir, emb =>
-      graft.engine.Similarity.lshCosinePairsIncrementalAuto(
+      graft.engine.Similarity.lshCosinePairsIncremental(
         emb.filter(col("vec_id") % (5L * factor) =!= 0),
         emb.filter(col("vec_id") % (5L * factor) === 0),
-        col("vec_id"), col("embedding"), 0.4, corpusSize = nSf1))
+        col("vec_id"), col("embedding"), 0.4, g))
     val incrBaseBatch = lshOnce("/root/testdata/sf0.1", emb =>
-      graft.engine.Similarity.lshCosinePairsIncrementalAuto(
+      graft.engine.Similarity.lshCosinePairsIncremental(
         emb.filter(col("vec_id") % 5 =!= 0),
         emb.filter(col("vec_id") % 5 === 0),
-        col("vec_id"), col("embedding"), 0.4, corpusSize = nSf1 / factor))
+        col("vec_id"), col("embedding"), 0.4,
+        graft.engine.Similarity.srpGeometry(nSf1 / factor, 0.4)))
     println(f"[scale] incremental SRP, SAME-SIZED batch: sf0.1 corpus " +
       f"$incrBaseBatch%.3f s vs 10x corpus $incrFixedBatch%.3f s " +
       "(exponent of corpus growth at fixed batch: " +

@@ -1,16 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's t1 check: `SparkEntry.entry` on
   * sf0.001 must return >0 rows. Prints the row count and the first rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = graft.SparkEntry.entry(spark)

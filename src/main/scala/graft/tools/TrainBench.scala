@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.engine.{Classifier, Similarity, TextOps}
 
@@ -12,10 +11,8 @@ import graft.engine.{Classifier, Similarity, TextOps}
 object TrainBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val en = TextOps.langMarkers.toMap.apply("en")
     for (round <- 1 to 3) {

@@ -280,8 +280,8 @@ class NearDupSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val exact = pairs(NearDup.jaccardPairs(d, col("doc_id"), col("text"), 0.1))
-    val md5Twin = pairs(NearDup.minhashLshPairsMd5(d, col("doc_id"),
-      col("text"), 0.1))
+    val md5Twin = pairs(NearDup.minhashLshPairs(d, col("doc_id"),
+      col("text"), 0.1, family = NearDup.HashFamily.Md5))
     val prod = pairs(NearDup.minhashLshPairs(d, col("doc_id"), col("text"),
       0.1))
     exact should not be empty
@@ -296,13 +296,13 @@ class NearDupSpec extends SparkSpec {
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val full = asMap(NearDup.minhashLshPairsMd5(d, col("doc_id"),
-      col("text"), 0.1))
+    val full = asMap(NearDup.minhashLshPairs(d, col("doc_id"),
+      col("text"), 0.1, family = NearDup.HashFamily.Md5))
     full.keySet.subsetOf(exact) shouldBe true // precision == 1.0
     full.size.toDouble / exact.size should be >= 0.95
-    val inc = asMap(NearDup.minhashLshPairsMd5Incremental(
+    val inc = asMap(NearDup.minhashLshPairsIncremental(
       d.filter(col("doc_id") % 10 =!= 0), d.filter(col("doc_id") % 10 === 0),
-      col("doc_id"), col("text"), 0.1))
+      col("doc_id"), col("text"), 0.1, family = NearDup.HashFamily.Md5))
     inc shouldBe full.filter { case ((a, b), _) =>
       a % 10 == 0 || b % 10 == 0 }
   }
@@ -465,13 +465,15 @@ class NearDupSpec extends SparkSpec {
 
   test("md5 simhash twin: identical texts -> hamming 0; near-dup small, " +
     "disjoint large; 32-bit signature") {
-    val sigs = NearDup.simhashSignaturesMd5(docs, col("doc_id"), col("text"))
+    val sigs = NearDup.simhashSignatures(docs, col("doc_id"), col("text"),
+        NearDup.HashFamily.Md5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     sigs.values.foreach(s => (s >= 0L && s < (1L << 32)) shouldBe true)
     sigs(1L) shouldBe sigs(3L)
     java.lang.Long.bitCount(sigs(1L) ^ sigs(2L)) should be <= 8
     java.lang.Long.bitCount(sigs(1L) ^ sigs(4L)) should be > 8
-    val pairs = NearDup.simhashPairsMd5(docs, col("doc_id"), col("text"), 8)
+    val pairs = NearDup.simhashPairs(docs, col("doc_id"), col("text"), 8,
+        NearDup.HashFamily.Md5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     // identical signatures always collide in every band; candidacy for
     // merely-close pairs needs an EXACT 8-bit chunk match (the LSH
@@ -501,8 +503,8 @@ class NearDupSpec extends SparkSpec {
     (fps(1L) intersect fps(2L)).nonEmpty shouldBe true // shared passage
     fps(1L) shouldBe fps(3L)                           // exact dup
     (fps(1L) intersect fps(4L)).isEmpty shouldBe true
-    val pairs = NearDup.winnowPairsMd5(wdocs, col("doc_id"), col("text"),
-        minShared = 1, k, w)
+    val pairs = NearDup.winnowPairs(wdocs, col("doc_id"), col("text"),
+        minShared = 1, k, w, NearDup.HashFamily.Md5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     pairs((1L, 3L)) shouldBe fps(1L).size.toLong
     pairs.keySet should contain((1L, 2L))
@@ -522,7 +524,16 @@ class NearDupSpec extends SparkSpec {
       (5L, "short doc"), // < k + w - 1: emits nothing
       (6L, "exactly thirty-one characters!!"), // == k + w - 1: one window
       (7L, "répétition über naïve — multi-byte chars pad this doc out " +
-        "to a comfortable length")
+        "to a comfortable length"),
+      // a long CJK doc (3-byte code points throughout) and an emoji doc
+      // (4-byte code points: UTF-16 surrogate pairs) — grams must cut at
+      // code points, as Spark's substr does
+      (8L, (0 until 600).map(i => (0x4e00 + (i * 7919) % 2000).toChar)
+        .mkString),
+      (9L, (0 until 80).map(i =>
+          new String(Character.toChars(0x1f600 + (i * 13) % 40)) +
+            (if (i % 3 == 0) " ok " else ""))
+        .mkString)
     ).toDF("doc_id", "text")
     // the SQL-window reference the kernel replaced (evaluation cost only —
     // outputs must stay identical)
@@ -549,6 +560,8 @@ class NearDupSpec extends SparkSpec {
     got shouldBe ref
     ref.map(_._1) should contain(6L) // the single-window doc emitted
     ref.map(_._1) should contain(7L) // the multi-byte doc emitted
+    ref.map(_._1) should contain(8L)
+    ref.map(_._1) should contain(9L)
   }
 
   test("Md5MinHashSignature kernel == the per-seed array_min(transform) " +
@@ -591,10 +604,9 @@ class NearDupSpec extends SparkSpec {
         .reduce((x, y) => x.bitwiseOR(y))
       val ref = agg.select(col("doc_id"), sig.as("simhash"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val gotDf =
-        if (md5fam) NearDup.simhashSignaturesMd5(df, col("doc_id"),
-          col("text"))
-        else NearDup.simhashSignatures(df, col("doc_id"), col("text"))
+      val gotDf = NearDup.simhashSignatures(df, col("doc_id"), col("text"),
+        if (md5fam) NearDup.HashFamily.Md5
+        else NearDup.HashFamily.Production)
       val got = gotDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       withClue(s"md5fam=$md5fam: ") { got shouldBe ref }
     }
@@ -607,9 +619,9 @@ class NearDupSpec extends SparkSpec {
     val alone = withNull.filter(col("doc_id") === 1L)
     for (md5fam <- Seq(false, true)) withClue(s"md5fam=$md5fam: ") {
       def sigs(df: org.apache.spark.sql.DataFrame) =
-        (if (md5fam) NearDup.simhashSignaturesMd5(df, col("doc_id"),
-          col("text"))
-        else NearDup.simhashSignatures(df, col("doc_id"), col("text")))
+        NearDup.simhashSignatures(df, col("doc_id"), col("text"),
+          if (md5fam) NearDup.HashFamily.Md5
+          else NearDup.HashFamily.Production)
           .collect().map(r => r.getLong(0) -> r.getAs[java.lang.Long](1)).toMap
       val got = sigs(withNull)
       got.keySet shouldBe Set(1L)

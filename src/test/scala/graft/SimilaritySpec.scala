@@ -637,16 +637,40 @@ class SimilaritySpec extends SparkSpec {
       Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"), 0.4,
         dim = 1)
     }
-    e.getMessage should include("lshCosinePairsAuto")
+    e.getMessage should include("srpGeometry")
     val e2 = intercept[IllegalArgumentException] {
       Similarity.lshCosineTopK(emb, col("vec_id"), col("embedding"),
         Seq(0L), 5, dim = 1)
     }
-    e2.getMessage should include("lshCosineTopKAuto")
+    e2.getMessage should include("srpGeometry")
     // raising the cap deliberately (the maxDays pattern) is the escape
     noException should be thrownBy Similarity.lshCosinePairs(emb,
       col("vec_id"), col("embedding"), 0.4, dim = 1,
       maxRowsPerBucket = Int.MaxValue)
+    // the same guard runs for a DERIVED geometry: every SRP entry refuses
+    // an understated corpus size (srpGeometry(2000): 16 buckets/band, cap
+    // 16k rows) and accepts the true one (2048 buckets/band, cap 2M)
+    val sigs = Similarity.srpSignatureTable(emb, col("vec_id"),
+      col("embedding"), bits = 256, dim = 1)
+    def entries(g: Similarity.SrpGeometry): Seq[() => Any] = Seq(
+      () => Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"),
+        0.4, g, dim = 1),
+      () => Similarity.lshCosinePairsIncremental(emb, emb.limit(1),
+        col("vec_id"), col("embedding"), 0.4, g, dim = 1),
+      () => Similarity.lshCosineTopK(emb, col("vec_id"), col("embedding"),
+        Seq(0L), 5, g, dim = 1),
+      () => Similarity.lshCosinePairsIncrementalPresigned(sigs, 256, emb,
+        emb.limit(1), col("vec_id"), col("embedding"), 0.4, g, dim = 1))
+    entries(Similarity.srpGeometry(2000, 0.4)).foreach { run =>
+      val e3 = intercept[IllegalArgumentException](run())
+      e3.getMessage should include("rows/bucket")
+      e3.getMessage should include("srpGeometry")
+    }
+    // the true geometry is wider than the 256-bit table, so only the three
+    // freshly-signing entries run it
+    val truth = Similarity.srpGeometry(200000, 0.4)
+    truth.bits should be > 256
+    entries(truth).take(3).foreach(run => noException should be thrownBy run())
   }
 
   test("band chunks straddling word boundaries match a driver-side " +
@@ -678,8 +702,8 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(
       Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.4))
-    val auto = pairs(Similarity.lshCosinePairsAuto(emb, col("vec_id"),
-      col("embedding"), 0.4, corpusSize = 2000))
+    val auto = pairs(Similarity.lshCosinePairs(emb, col("vec_id"),
+      col("embedding"), 0.4, Similarity.srpGeometry(2000, 0.4)))
     val recall = (exact intersect auto).size.toDouble / exact.size
     recall should be >= 0.9
     (auto diff exact) shouldBe empty // exact rerank: no false positives
@@ -695,25 +719,25 @@ class SimilaritySpec extends SparkSpec {
         r.getDouble(2))).toSet
     // fixed 64-bit geometry — the oracle twin's exact layout
     val full64 = rows(Similarity.lshCosinePairs(emb, col("vec_id"),
-        col("embedding"), 0.4, bits = 64, bands = 8, rowsPerBand = 8))
+        col("embedding"), 0.4, Similarity.SrpGeometry(64, 8, 8)))
       .filter(p => p._1 % 5 == 0 || p._2 % 5 == 0)
     val incr64 = rows(Similarity.lshCosinePairsIncremental(existing,
       incoming, col("vec_id"), col("embedding"), 0.4,
-      bits = 64, bands = 8, rowsPerBand = 8))
+      Similarity.SrpGeometry(64, 8, 8)))
     incr64 shouldBe full64
     full64 should not be empty // the law must not hold vacuously
     // derived geometry — the at-scale daily-batch entry point
-    val n = emb.count()
-    val fullAuto = rows(Similarity.lshCosinePairsAuto(emb, col("vec_id"),
-        col("embedding"), 0.4, corpusSize = n))
+    val g = Similarity.srpGeometry(emb.count(), 0.4)
+    val fullAuto = rows(Similarity.lshCosinePairs(emb, col("vec_id"),
+        col("embedding"), 0.4, g))
       .filter(p => p._1 % 5 == 0 || p._2 % 5 == 0)
-    val incrAuto = rows(Similarity.lshCosinePairsIncrementalAuto(existing,
-      incoming, col("vec_id"), col("embedding"), 0.4, corpusSize = n))
+    val incrAuto = rows(Similarity.lshCosinePairsIncremental(existing,
+      incoming, col("vec_id"), col("embedding"), 0.4, g))
     incrAuto shouldBe fullAuto
     // an empty batch probes nothing and yields nothing
-    Similarity.lshCosinePairsIncrementalAuto(existing,
+    Similarity.lshCosinePairsIncremental(existing,
       incoming.limit(0), col("vec_id"), col("embedding"), 0.4,
-      corpusSize = n).count() shouldBe 0L
+      g).count() shouldBe 0L
   }
 
   test("presigned incremental SRP == direct incremental bit-identical " +
@@ -722,19 +746,18 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val incoming = emb.filter(col("vec_id") % 5 === 0)
     val existing = emb.filter(col("vec_id") % 5 =!= 0)
-    val n = emb.count()
+    val g = Similarity.srpGeometry(emb.count(), 0.4)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2))).toSet
-    val direct = rows(Similarity.lshCosinePairsIncrementalAuto(existing,
-      incoming, col("vec_id"), col("embedding"), 0.4, corpusSize = n))
+    val direct = rows(Similarity.lshCosinePairsIncremental(existing,
+      incoming, col("vec_id"), col("embedding"), 0.4, g))
     // sign the corpus WIDER than the geometry needs — the headroom
     // pattern; signatures are prefix-stable so results must not move
     val sigs = Similarity.srpSignatureTable(existing, col("vec_id"),
       col("embedding"), bits = 832)
     val pres = rows(Similarity.lshCosinePairsIncrementalPresigned(sigs, 832,
-      existing, incoming, col("vec_id"), col("embedding"), 0.4,
-      corpusSize = n))
+      existing, incoming, col("vec_id"), col("embedding"), 0.4, g))
     pres shouldBe direct
     direct should not be empty
     // a table signed too narrow for the (larger-corpus) geometry refuses
@@ -742,7 +765,7 @@ class SimilaritySpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Similarity.lshCosinePairsIncrementalPresigned(sigs, 64, existing,
         incoming, col("vec_id"), col("embedding"), 0.4,
-        corpusSize = 1000000L)
+        Similarity.srpGeometry(1000000L, 0.4))
     }
     e.getMessage should include("re-sign")
   }
@@ -784,6 +807,6 @@ class SimilaritySpec extends SparkSpec {
         emb.filter(col("vec_id") % 5 === 0),
         col("vec_id"), col("embedding"), 0.4, maxRowsPerBucket = 0)
     }
-    e.getMessage should include("lshCosinePairsIncrementalAuto")
+    e.getMessage should include("srpGeometry")
   }
 }
