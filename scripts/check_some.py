@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Dev helper: compare a SUBSET of queries (dumped by graft.tools.VerifyOne)
-against the oracle SQL VerifyOne wrote to <outDir>/oracle_sql.json — the
-same canonicalization + dtype guards as check_correctness.py, without needing
-a full graft.Verify run. Usage:
+"""Dev helper: compare a SUBSET of queries (dumped by
+`graft.Verify <sfDir> <outDir> <name> [<name>…]`) against the oracle SQL that
+run wrote to <outDir>/oracle_sql.json — the same canonicalization + dtype
+guards as check_correctness.py, without needing a full graft.Verify run.
+Usage:
   python3 scripts/check_some.py <sfDir> <outDir> <name> [<name>…]
 """
 import json, sys

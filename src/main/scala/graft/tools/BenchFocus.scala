@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time selected queries repeatedly in one JVM.
   *
@@ -11,6 +10,11 @@ import org.apache.spark.sql.SparkSession
   * compare against the committed envelope (VERDICT r9 wrong #3: 3 fixed
   * reps made adjudications compare a cold-ish number against full-suite
   * steady state).
+  *
+  * SPARK_GRAFT_CONF ("k=v,k=v"), when set, applies session-conf overrides
+  * on top of the shared [[graft.SessionProfile]] — for A/B-ing config
+  * hypotheses (e.g. AQE coalescing floors) before touching the engine
+  * session.
   */
 object BenchFocus {
   def main(args: Array[String]): Unit = {
@@ -18,8 +22,14 @@ object BenchFocus {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt.max(2)
     // shared engine profile: focus medians must be taken under the same
     // session configs the committed bench runs with, or A/Bs lie
-    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
-      .getOrCreate()
+    val builder = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
+    val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
+    overrides.split(",").filter(_.contains("=")).foreach { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      builder.config(k, v)
+    }
+    if (overrides.nonEmpty) println(s"[focus] conf overrides: $overrides")
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names =
       if (args.nonEmpty) args.toSeq else Seq("q_jaccard_pairs", "q_minhash_pairs")

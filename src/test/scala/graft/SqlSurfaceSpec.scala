@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.registry.QueryDef
+import graft.registry.QueryDef.SameAs
 
 /** The SQL entry path must track the DataFrame path bit-for-bit: each
   * q_sql_* mirror in [[SparkEntry.queries]] is asserted row-identical to
-  * its DataFrame twin on the same session and data (sf0.001). Column order
+  * its DataFrame twin — the query its `SameAs` check names — on the same
+  * session and data (sf0.001). Column order
   * is part of the contract (the driver hashes by sorted column NAME, but
   * within a column the values must agree exactly), so rows compare as full
   * sorted multisets of stringified cells.
@@ -32,36 +35,21 @@ class SqlSurfaceSpec extends SparkSpec {
       s"$sqlName (SQL path) diverges from $dfName (DataFrame path)")
   }
 
-  test("q_sql_hourly == q_hourly_by_type") {
-    assertParity("q_sql_hourly", "q_hourly_by_type")
+  /** (mirror, DataFrame twin) pairs: the registry's `q_sql_*` `SameAs`
+    * links. */
+  private val mirrors: Seq[(String, String)] = SparkEntry.defs.collect {
+    case QueryDef(name, _, SameAs(twin)) if name.startsWith("q_sql_") =>
+      name -> twin
+  }.sortBy(_._1)
+
+  mirrors.foreach { case (sqlName, dfName) =>
+    test(s"$sqlName == $dfName") { assertParity(sqlName, dfName) }
   }
 
-  test("q_sql_dedup_last == q_dedup_keep_last") {
-    assertParity("q_sql_dedup_last", "q_dedup_keep_last")
-  }
-
-  test("q_sql_cosine_topk == q_ann_cosine_topk") {
-    assertParity("q_sql_cosine_topk", "q_ann_cosine_topk")
-  }
-
-  test("q_sql_sum_range == q_sum_over_range") {
-    assertParity("q_sql_sum_range", "q_sum_over_range")
-  }
-
-  test("q_sql_dim_activity == q_dim_activity_range") {
-    assertParity("q_sql_dim_activity", "q_dim_activity_range")
-  }
-
-  test("q_sql_watermark == q_watermark") {
-    assertParity("q_sql_watermark", "q_watermark")
-  }
-
-  test("q_sql_incomplete_days == q_incomplete_days") {
-    assertParity("q_sql_incomplete_days", "q_incomplete_days")
-  }
-
-  test("q_sql_rolling == q_rolling_window") {
-    assertParity("q_sql_rolling", "q_rolling_window")
+  test("every q_sql_* mirror but q_sql_embed_norm is a SameAs link") {
+    val sqlQueries = SparkEntry.queries.keySet.filter(_.startsWith("q_sql_"))
+    assert(mirrors.map(_._1).toSet == sqlQueries - "q_sql_embed_norm")
+    assert(mirrors.size == 9)
   }
 
   test("q_sql_embed_norm: registered graft_norm_sq == HOF sum of squares") {
