@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.tools.Measure
 
 /** Benchmark main — driver runs this per-round with SPARK_GRAFT_SF_DIR set
   * (sf0.1). Prints exactly one JSON line. Each query is forced through the
@@ -404,12 +405,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionProfile.toolCpus
     // engine session configs live in SessionProfile, shared with Verify and
     // the measurement tools (VERDICT r13 #1: a config only Bench carries is
     // a bench-only win; these are engine settings, not bench tuning)
-    val spark = SessionProfile.local(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     // attach only now — Spark's log4j2 defaults are loaded and the root
     // level is WARN, so fallback events reach the appender (see the
     // ordering note on installFallbackCounter)
@@ -441,23 +441,13 @@ object Bench {
     // number that scales to a long-lived cluster.
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     sorted.foreach { case (name, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-      }
+      Measure.time(fn(spark, sfDir), e =>
+        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}"))
     }
     def medianOf3(name: String,
-                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      Seq(once(), once(), once()).sorted.apply(1)
-    }
+                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Measure.median(Seq.fill(3)(Measure.time(fn(spark, sfDir), e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"))))
     // Median of 3 for EVERY entry. History of this policy: r4 showed
     // single streaming samples reading ~10× steady-state under disk
     // load; r5 extended median-of-3 to batch entries whose warm-up ran

@@ -52,8 +52,8 @@ object SessionProfile {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus))
 
-  /** Core count for Verify and the dev tools: SPARK_GRAFT_CPUS, default 32
-    * (the bench width, so tool steady-state medians compare against the
-    * envelope). */
+  /** Core count for every graft main (`tools.Measure.session`):
+    * SPARK_GRAFT_CPUS, default 32 (the bench width, so tool steady-state
+    * medians compare against the envelope). */
   def toolCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 }

@@ -36,7 +36,7 @@ object SparkEntry {
     * persisted assignment is model-scale for this table (corpus rows × (id,
     * vec, cl)); at 100 TB you sink it `partitionBy("cl")` instead
     * (Similarity.ivfAssign docs) and probing becomes partition pruning.
-    * Training cost is measured separately by `tools.IvfTrainBench`. */
+    * Training cost is measured separately by `tools.TrainBench`. */
   private val ivfIndexes = new java.util.concurrent.ConcurrentHashMap[
     String, (Array[Array[Double]], DataFrame)]()
 
@@ -178,7 +178,6 @@ object SparkEntry {
     * accumulate dirs in /tmp for every bench/verify run — the disk twin of
     * the memory-sink leak handled in [[runAvailableNow]]). */
   private[graft] def streamingEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       "graft_stream_src_" + d.replaceAll("[^a-zA-Z0-9]", "_"))
     java.nio.file.Files.createDirectories(dir)
@@ -196,9 +195,10 @@ object SparkEntry {
       catch { // concurrent Bench/Verify both saw it absent — loser is fine
         case _: java.nio.file.FileAlreadyExistsException => ()
       }
-    val schema = Tables.parquet(s, s"$d/events.parquet").schema
-    // same ts normalization as Tables.events: legacy nanos-as-long files
-    // floor-divide to micros; micros files cast NTZ → session-zone TIMESTAMP
+    // the batch reader's schema, conf and UTC check; same ts normalization
+    // as Tables.events: legacy nanos-as-long files floor-divide to micros,
+    // micros files cast NTZ → session-zone TIMESTAMP
+    val schema = Tables.eventsRawTyped(s, d).schema
     graft.engine.Tables.normalizeTs(
       s.readStream.schema(schema).parquet(dir.toString))
   }

@@ -27,8 +27,7 @@ object Verify {
     // same engine session profile as Bench (VERDICT r13 #1: the AQE floor
     // and codegen-cache sizing are engine settings — a Verify/production
     // session must hit the same plans the bench measures)
-    val spark = SessionProfile.local(SessionProfile.toolCpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Measure.session()
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -63,7 +63,7 @@ object Tables {
     * UTC, so the NTZ→LTZ cast is value-preserving. DuckDB truncates nanos →
     * micros identically and reads micros natively, so oracles agree either
     * way. */
-  private def eventsRawTyped(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def eventsRawTyped(spark: SparkSession, sfDir: String): DataFrame = {
     // The NTZ→LTZ cast in normalizeTs and the NTZ-literal compare in
     // eventsRange are value-preserving ONLY under a UTC session zone; a
     // session built without it would silently shift every timestamp, so

@@ -15,45 +15,38 @@ package graft.tools
   * on top of the shared [[graft.SessionProfile]] — for A/B-ing config
   * hypotheses (e.g. AQE coalescing floors) before touching the engine
   * session.
+  *
+  * Usage: sbt "runMain graft.tools.BenchFocus [sfDir] [name…]"
+  * (sfDir defaults to SPARK_GRAFT_SF_DIR, then sf0.1)
   */
 object BenchFocus {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val (sfDir, named) = Measure.sfAndNames(args.toSeq,
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt.max(2)
-    // shared engine profile: focus medians must be taken under the same
-    // session configs the committed bench runs with, or A/Bs lie
-    val builder = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
     val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-    overrides.split(",").filter(_.contains("=")).foreach { kv =>
+    val conf = overrides.split(",").toSeq.filter(_.contains("=")).map { kv =>
       val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
+      k -> v
     }
     if (overrides.nonEmpty) println(s"[focus] conf overrides: $overrides")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shared engine profile: focus medians must be taken under the same
+    // session configs the committed bench runs with, or A/Bs lie
+    val spark = Measure.session(conf)
     val names =
-      if (args.nonEmpty) args.toSeq else Seq("q_jaccard_pairs", "q_minhash_pairs")
+      if (named.nonEmpty) named else Seq("q_jaccard_pairs", "q_minhash_pairs")
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
     for (round <- 1 to reps; n <- names) {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = Measure.time(graft.SparkEntry.queries(n)(spark, sfDir))
       times(n) = times(n) :+ sec
       val tag = if (round == 1) " (warm-up, discarded)" else ""
       println(f"[focus] r$round $n $sec%.2f s$tag")
     }
     for (n <- names) {
-      val steady = times(n).drop(1).sorted
-      // true median: even-sized steady sets average the two middle
-      // elements — taking the upper-middle alone biases the adjudication
-      // number high by up to the upper-half spread
-      val med =
-        if (steady.size % 2 == 1) steady(steady.size / 2)
-        else (steady(steady.size / 2 - 1) + steady(steady.size / 2)) / 2
-      println(f"[focus] MEDIAN $n $med%.3f s (over ${steady.size} steady reps, " +
-        f"load ${graft.Bench.systemLoad()}%.2f)")
+      val steady = times(n).drop(1)
+      println(f"[focus] MEDIAN $n ${Measure.median(steady)}%.3f s (over " +
+        f"${steady.size} steady reps, load ${graft.Bench.systemLoad()}%.2f)")
     }
     spark.stop()
   }

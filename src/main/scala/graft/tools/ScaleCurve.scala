@@ -140,27 +140,22 @@ object ScaleCurve {
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
-    // shared engine profile, like the other measurement tools
-    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     val synthDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       s"graft_scale_sf1_x$factor").toString
     println(s"[scale] synthesizing ${factor}x of sf0.1 into $synthDir")
     synthesize(spark, "/root/testdata/sf0.1", synthDir, factor)
     val scales = Seq("sf0.01" -> "/root/testdata/sf0.01",
       "sf0.1" -> "/root/testdata/sf0.1", s"sf1(x$factor)" -> synthDir)
+    // one codegen/JIT warm-up rep, discarded, then the median of 3
+    def steady(build: => org.apache.spark.sql.DataFrame): Double = {
+      Measure.time(build)
+      Measure.median(Seq.fill(3)(Measure.time(build)))
+    }
     def run(name: String, dir: String): Double = {
       val fn = graft.SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      try {
-        once() // codegen/JIT warm-up, discarded
-        Seq(once(), once(), once()).sorted.apply(1)
-      } catch {
+      try steady(fn(spark, dir))
+      catch {
         // a fixed-geometry query refused by the rows/bucket guard at a
         // scale beyond its declared regime is the guard WORKING — record
         // it as such rather than aborting the curve
@@ -195,13 +190,7 @@ object ScaleCurve {
     def lshOnce(dir: String, run: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): Double = {
       val emb = Tables.embeddings(spark, dir)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        run(emb).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once()
-      Seq(once(), once(), once()).sorted.apply(1)
+      steady(run(emb))
     }
     val nSf1 = Tables.embeddings(spark, synthDir).count()
     val g = graft.engine.Similarity.srpGeometry(nSf1, 0.4)

@@ -4,9 +4,7 @@ package graft.tools
   * sf0.001 must return >0 rows. Prints the row count and the first rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = graft.SessionProfile.local(graft.SessionProfile.toolCpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     val df = graft.SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"[smoke] entry rows=${rows.length}")
