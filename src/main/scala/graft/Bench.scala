@@ -27,6 +27,18 @@ import graft.tools.Measure
   */
 object Bench {
 
+  /** The detail file's path when SPARK_GRAFT_BENCH_OUT is unset. */
+  val DefaultBenchOut = "/tmp/graft_bench.json"
+
+  /** The full outlier sidecar of round `round`: BENCH_OUTLIERS_r<round>.json
+    * in the directory of the detail file `benchOut`, never the working
+    * directory — from the repo root, an ad-hoc run would overwrite the
+    * committed sidecar of the round. An envelope refresh copies it into
+    * the repo root. */
+  def outlierSidecarPath(round: Int, benchOut: String): java.nio.file.Path =
+    java.nio.file.Paths.get(benchOut).toAbsolutePath
+      .resolveSibling(f"BENCH_OUTLIERS_r$round%02d.json")
+
   /** Pure adjudication: entries whose fresh time exceeds `factor` × the
     * committed envelope max. Entries without an envelope (new this round)
     * pass — they have no history to dispute. */
@@ -477,6 +489,7 @@ object Bench {
     val cooldownSec =
       sys.env.getOrElse("SPARK_GRAFT_RETEST_COOLDOWN_SEC", "20").toLong
     val round = currentRound()
+    val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", DefaultBenchOut)
     val priors = loadPriorVerdicts(before = round)
     val outlierRows = retestOutliers(
       adjudicate(results, loadEnvelopeMax()),
@@ -498,8 +511,7 @@ object Bench {
     // FULL outlier sidecar for this round (VERDICT r11 #5): committed as
     // BENCH_OUTLIERS_r<n>.json so loadPriorVerdicts reconstructs streaks
     // for EVERY flagged query, not just the headline's 3 worst
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(f"BENCH_OUTLIERS_r$round%02d.json"),
+    try java.nio.file.Files.write(outlierSidecarPath(round, benchOut),
       (f"""{"round":$round,"outliers":$outliers}""" + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception =>
@@ -525,15 +537,14 @@ object Bench {
     // array lives in the detail line and the SPARK_GRAFT_BENCH_OUT file.
     val headOutliers = outlierJson(
       outlierRows.sortBy(r => -(r.got / r.envelopeMax)).take(3))
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"max":{"$maxName":$maxT%.3f},"n_outliers":${outlierRows.size},"outliers":$headOutliers,"load_start":$loadStart%.2f,"load_sample":$loadSample%.2f,"cpu_external":$cpuExternal%.3f,"calib_1t":$calib1t%.3f,"calib_${cpus}%st":$calibWide%.3f,"calib_vs_anchor":$calibRatio%.3f,"calib_suspect":$calibSuspect,"interp_fallbacks":$nFallbacks,"detail":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")}","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"max":{"$maxName":$maxT%.3f},"n_outliers":${outlierRows.size},"outliers":$headOutliers,"load_start":$loadStart%.2f,"load_sample":$loadSample%.2f,"cpu_external":$cpuExternal%.3f,"calib_1t":$calib1t%.3f,"calib_${cpus}%st":$calibWide%.3f,"calib_vs_anchor":$calibRatio%.3f,"calib_suspect":$calibSuspect,"interp_fallbacks":$nFallbacks,"detail":"$benchOut","sf":"$sfDir"}""")
     // belt-and-braces for the driver's parser: also drop the JSON in a known
     // file, immune to any logger prefixes on stdout. Overridable so
     // back-to-back runs over different SF dirs don't clobber each other.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+    try java.nio.file.Files.write(java.nio.file.Paths.get(benchOut),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+      System.err.println(s"[bench] could not write $benchOut: ${e.getMessage}")
     }
     spark.stop()
   }

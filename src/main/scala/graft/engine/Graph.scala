@@ -98,13 +98,8 @@ object Graph {
                dampPct: Int = 85, redistributeDangling: Boolean = false,
                checkpointEvery: Int = 3,
                deltaL1Out: scala.collection.mutable.Buffer[Long] = null,
-               maxNodes: Long = Long.MaxValue / (100L * RankUnit),
-               planOut: scala.collection.mutable.Buffer[(String, String)] = null)
+               maxNodes: Long = Long.MaxValue / (100L * RankUnit))
       : DataFrame = {
-    def capture(tag: String, df: DataFrame): Unit =
-      if (planOut != null) planOut += tag ->
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct in [0,100], got $dampPct")
     require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
@@ -133,8 +128,7 @@ object Graph {
       .select(src.cast("string").as("src"), dst.cast("string").as("dst"))
       .na.drop().repartition(col("src")).distinct()
     val outdeg = eP.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eoPre = eP.join(outdeg.hint("shuffle_hash"), "src")
-    val eo = checkpointPartitioned(eoPre)
+    val eo = checkpointPartitioned(eP.join(outdeg.hint("shuffle_hash"), "src"))
     // node set derives from the MATERIALIZED edge table (not the lazy edge
     // plan — that re-ran the whole scan+join+dedup a second time), and is
     // itself eagerly checkpointed so its hash(node) partitioning survives
@@ -168,7 +162,6 @@ object Graph {
             "Shrink the rank unit (the iteration is scale-free) or raise " +
             "maxNodes deliberately after checking the bound (SCALE.md).")
       val nDangling = danglingNodes.map(_.count()).getOrElse(0L)
-      capture("edge_prep_eo", eoPre)
 
       // contribs is node-sized and arrives hash(node)-partitioned from its
       // aggregate, co-partitioned with the checkpointed `nodes` — the
@@ -214,7 +207,6 @@ object Graph {
         .select(col("dst").as("node"),
           expr(s"$RankUnit div outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("contrib")), None)
-      val round1Pre = ranks
       var lastCkpt: DataFrame = null
       def ckptAndDiag(it: Int, prev: Option[DataFrame]): Unit = {
         // under redistribution every following round reads this round's
@@ -245,7 +237,6 @@ object Graph {
         }
       }
       ckptAndDiag(1, None)
-      capture("round1_ranks", round1Pre)
       for (it <- 2 to iters) {
         val prev = ranks
         // rank side hinted shuffle_hash: ranks are node-sized and arrive
@@ -260,7 +251,6 @@ object Graph {
             expr("rank_ppb div outdeg").as("c"))
           .groupBy("node").agg(sum("c").as("contrib"))
         ranks = damped(contribs, Some(prev))
-        if (it == iters) capture(s"round${it}_ranks", ranks)
         ckptAndDiag(it, Some(prev))
       }
       // Materialize before releasing the loop invariants (the session-hygiene
@@ -315,13 +305,7 @@ object Graph {
     */
   def hits(edges: DataFrame, src: org.apache.spark.sql.Column,
            dst: org.apache.spark.sql.Column, iters: Int = 2,
-           maxDegree: Long = Long.MaxValue / (4L * RankUnit),
-           planOut: scala.collection.mutable.Buffer[(String, String)] = null)
-      : DataFrame = {
-    def capture(tag: String, df: DataFrame): Unit =
-      if (planOut != null) planOut += tag ->
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+           maxDegree: Long = Long.MaxValue / (4L * RankUnit)): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(maxDegree >= 1, s"maxDegree >= 1, got $maxDegree")
     // eByDst is the ONE always-materialized copy (it serves every hub
@@ -377,7 +361,6 @@ object Graph {
           "bound (SCALE.md).")
       def rescale(raw0: DataFrame): DataFrame = {
         val raw = checkpointPartitioned(raw0)
-        capture(s"halfstep${halfSteps.length + 1}_raw", raw0)
         halfSteps += raw
         // rescale so the argmax lands at ~R: raw div (max div R), floor at
         // every step (both engines; all values non-negative)

@@ -1,5 +1,7 @@
 package graft.engine
 
+import Multimodal.Decoders.Image
+
 /** Dependency-free JPEG codec (ITU-T T.81): baseline sequential (SOF0) AND
   * progressive (SOF2, Huffman) decode.
   *
@@ -41,11 +43,6 @@ package graft.engine
   * the output allocation is Long-checked including the channel factor.
   */
 object Jpeg {
-
-  /** One decoded image: interleaved samples, `channels` ∈ {1 (gray),
-    * 3 (RGB)}. */
-  final case class JpegImage(width: Int, height: Int, channels: Int,
-                             pixels: Array[Byte])
 
   /** Decode cap on header-declared pixel count (64 Mpx ≈ 192 MB RGB out +
     * ~256 MB coefficient state): large enough for any sane corpus image,
@@ -189,12 +186,13 @@ object Jpeg {
     var nbH = 0
   }
 
-  /** Full decode — baseline sequential (SOF0) or progressive (SOF2).
+  /** Full decode — baseline sequential (SOF0) or progressive (SOF2) — to
+    * an [[Image]] with `channels` 1 (gray) or 3 (RGB).
     * Same loud-failure contract as [[Multimodal.Decoders.pngImage]].
     * `maxPixels` bounds header-declared width×height before any
     * allocation (decompression-bomb guard, ADVICE r10). */
   def jpegImage(payload: Array[Byte],
-                maxPixels: Long = DefaultMaxPixels): JpegImage = {
+                maxPixels: Long = DefaultMaxPixels): Image = {
     require(isJpeg(payload), "not a JPEG payload (bad SOI)")
     var pos = 2
     val qt = new Array[Array[Int]](4)
@@ -221,7 +219,7 @@ object Jpeg {
       r
     }
 
-    var out: JpegImage = null
+    var out: Image = null
     while (out == null) {
       require(pos + 2 <= payload.length, "truncated JPEG (no SOS)")
       require((payload(pos) & 0xff) == 0xff,
@@ -632,7 +630,7 @@ object Jpeg {
     * replication) + color-convert. */
   private def render(width: Int, height: Int, comps: Array[Component],
                      qt: Array[Array[Int]], hmax: Int,
-                     vmax: Int): JpegImage = {
+                     vmax: Int): Image = {
     val coef = new Array[Int](64)
     val tmp = new Array[Double](64)
     val planes = comps.map { c =>
@@ -698,7 +696,7 @@ object Jpeg {
         System.arraycopy(planes(0), y * planeW, pix, y * width, width)
         y += 1
       }
-      JpegImage(width, height, 1, pix)
+      Image(width, height, 1, pix)
     } else {
       val cy = comps(0); val cb = comps(1); val cr = comps(2)
       val wY = cy.blocksW * 8; val wB = cb.blocksW * 8; val wR = cr.blocksW * 8
@@ -725,31 +723,12 @@ object Jpeg {
         }
         y += 1
       }
-      JpegImage(width, height, 3, pix)
+      Image(width, height, 3, pix)
     }
   }
 
   private def clamp8(v: Int): Byte =
     (if (v < 0) 0 else if (v > 255) 255 else v).toByte
-
-  private def round6(v: Double): Double =
-    BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** JPEG → [width, height, channels, per-channel means…] — the
-    * [[Multimodal.Decoders.png]]-shaped feature vector for the JPEG
-    * container. */
-  def features(payload: Array[Byte]): Array[Double] = {
-    val img = jpegImage(payload)
-    val sums = new Array[Double](img.channels)
-    var i = 0
-    while (i < img.pixels.length) {
-      sums(i % img.channels) += (img.pixels(i) & 0xff)
-      i += 1
-    }
-    val n = img.width.toDouble * img.height
-    Array(img.width.toDouble, img.height.toDouble, img.channels.toDouble) ++
-      sums.map(s => round6(s / n))
-  }
 
   // ------------------------------------------------------------------
   // Encoder — the valid-payload generator (real FDCT + quantization +

@@ -6,11 +6,16 @@ import org.apache.spark.sql.functions._
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` payloads
   * with typed metadata, decoded/featurized per partition.
   *
-  * All three kinds decode REAL containers, dependency-free: 24-bit BMP
-  * (images, including an NN resize stage), 16-bit PCM WAV (audio), and
-  * multi-frame GIF87a with full LZW decompression (video — feeds
-  * [[sampleFrames]]). [[decodeStub]] (byte histogram) remains only as the
-  * default of [[extractFeatures]] for payloads with no container at all.
+  * All three kinds decode REAL containers, dependency-free: PNG, JPEG
+  * ([[Jpeg]]) and 24-bit BMP for images, 16-bit PCM WAV for audio, and
+  * multi-frame GIF87a/89a with full LZW decompression for video (feeds
+  * [[sampleFrames]]). Every image container decodes to the one
+  * [[Decoders.Image]] raster, and the image operators are written once
+  * over it: [[Decoders.imageFeatures]] / [[Decoders.channelMeans]] (the
+  * feature vectors and per-frame statistics) and [[Decoders.resample]]
+  * (nearest-neighbour resize, re-encoded by the PNG and BMP assemblers).
+  * [[decodeStub]] (byte histogram) remains only as the default of
+  * [[extractFeatures]] for payloads with no container at all.
   * The surrounding plumbing is the load-bearing part at scale: the schema,
   * the typed Dataset boundary, `mapPartitions` batching (one decoder init
   * per partition, not per row — the same shape a JNI/FFI decoder needs), and
@@ -38,6 +43,9 @@ object Multimodal {
     * mapPartitions body. */
   type Decoder = (String, Array[Byte]) => Array[Double]
 
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** STUB — deterministic fake decoder: normalized 8-bin byte histogram.
     * The DEFAULT `decode` argument of [[extractFeatures]], not the
     * architecture: production swaps in a real `Decoder` (e.g. JPEG → pixels
@@ -51,7 +59,7 @@ object Multimodal {
       i += 1
     }
     val n = math.max(payload.length, 1).toDouble
-    hist.map(h => BigDecimal(h / n).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    hist.map(h => round6(h / n))
   }
 
   /** Decode + featurize, one partition at a time. `mapPartitions` (not `map`)
@@ -81,12 +89,14 @@ object Multimodal {
     }.toDF()
   }
 
-  /** REAL decoders for two simple container formats, dependency-free (pure
-    * JVM byte parsing — no media libs needed): 24-bit uncompressed BMP and
-    * 16-bit PCM WAV. These prove [[extractFeatures]] end-to-end on actual
-    * pixel/sample data; production swaps in richer codecs with the same
-    * [[Decoder]] signature. Malformed payloads fail loudly
-    * (IllegalArgumentException) rather than degrade silently. */
+  /** REAL container decoders, dependency-free (pure JVM byte parsing — no
+    * media libs needed): PNG, 24-bit uncompressed BMP and (via [[Jpeg]])
+    * JPEG to one [[Image]], GIF to one [[Image]] per frame, and 16-bit PCM
+    * WAV; plus the valid-payload assemblers the fixed-model oracles use.
+    * These prove [[extractFeatures]] end-to-end on actual pixel/sample
+    * data; production swaps in richer codecs with the same [[Decoder]]
+    * signature. Malformed payloads fail loudly (IllegalArgumentException)
+    * rather than degrade silently. */
   object Decoders {
 
     private def u16(b: Array[Byte], off: Int): Int =
@@ -94,17 +104,63 @@ object Multimodal {
     private def i32(b: Array[Byte], off: Int): Int =
       (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
         ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-    private def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    /** One decoded raster: `width` × `height` pixels, rows top-down, each
+      * pixel `channels` interleaved 8-bit samples (1 gray, 2 gray+alpha,
+      * 3 RGB, 4 RGBA). Every image container decodes to it —
+      * [[pngImage]], [[Jpeg.jpegImage]], [[bmpImage]], and the GIF frames
+      * of [[gif87Frames]] / [[gifCanvasFrames]]. */
+    final case class Image(width: Int, height: Int, channels: Int,
+                           pixels: Array[Byte])
 
-    /** 24-bit uncompressed bottom-up BMP → [width, height, channels=3,
-      * meanR, meanG, meanB] (means over all pixels, 0-255, rounded to
-      * 6 dp). Rows are padded to 4-byte boundaries per the format. The
-      * vector shape matches [[png]] position for position — [w, h,
-      * channels, per-channel means…] — so a MIXED image column decoded
-      * through [[media]] unions coherently (element 4 is always the first
-      * channel mean, never sometimes a channel count). */
-    def bmp24(payload: Array[Byte]): Array[Double] = {
+    /** Per-channel means over all pixels (0-255, rounded to 6 dp). */
+    def channelMeans(img: Image): Array[Double] = {
+      val sums = new Array[Double](img.channels)
+      var i = 0
+      while (i < img.pixels.length) {
+        sums(i % img.channels) += (img.pixels(i) & 0xff)
+        i += 1
+      }
+      val n = img.width.toDouble * img.height
+      sums.map(s => round6(s / n))
+    }
+
+    /** The image feature vector, the same for every container: [width,
+      * height, channels, per-channel means…] — so a MIXED image column
+      * decoded through [[media]] unions coherently (element 4 is always
+      * the first channel mean, never sometimes a channel count). */
+    def imageFeatures(img: Image): Array[Double] =
+      Array(img.width.toDouble, img.height.toDouble, img.channels.toDouble) ++
+        channelMeans(img)
+
+    /** Nearest-neighbour resample to w × h: output pixel (x, y) is source
+      * pixel (x·width/w, y·height/h) in top-down image coordinates. The
+      * callers check w, h and the size of their container first. */
+    def resample(img: Image, w: Int, h: Int): Image = {
+      val ch = img.channels
+      val px = new Array[Byte](w * h * ch)
+      var y = 0
+      while (y < h) {
+        val sy = (y.toLong * img.height / h).toInt
+        var x = 0
+        while (x < w) {
+          val sx = (x.toLong * img.width / w).toInt
+          System.arraycopy(img.pixels, (sy * img.width + sx) * ch, px,
+            (y * w + x) * ch, ch)
+          x += 1
+        }
+        y += 1
+      }
+      Image(w, h, ch, px)
+    }
+
+    /** Bytes per stored 24-bit BMP row: 3 per pixel, padded to 4. Long,
+      * so a corrupt header's huge width cannot wrap through Int. */
+    private def bmpRowSize(width: Int): Long = ((24L * width + 31) / 32) * 4
+
+    /** 24-bit uncompressed bottom-up BMP → RGB [[Image]]. Rows are padded
+      * to 4-byte boundaries per the format and stored BGR, bottom row
+      * first. */
+    def bmpImage(payload: Array[Byte]): Image = {
       require(payload.length >= 54 &&
         payload(0) == 'B'.toByte && payload(1) == 'M'.toByte,
         "not a BMP payload")
@@ -116,28 +172,32 @@ object Multimodal {
       require(bpp == 24 && compression == 0,
         s"only 24-bit uncompressed BMP supported (bpp=$bpp comp=$compression)")
       require(width > 0 && height > 0, s"bad dimensions ${width}x$height")
-      val rowSize = ((24L * width + 31) / 32) * 4
+      val rowSize = bmpRowSize(width)
       // Long arithmetic: a corrupt header with huge dims must fail THIS
       // check, not wrap through Int and pass it (fail-loudly contract)
       require(pixelOff >= 0 &&
         payload.length >= pixelOff + rowSize * height, "truncated pixels")
-      var (sumB, sumG, sumR) = (0.0, 0.0, 0.0)
+      val px = new Array[Byte](width * height * 3)
       var y = 0
       while (y < height) {
+        var p = pixelOff + (height - 1 - y) * rowSize.toInt
+        var o = y * width * 3
         var x = 0
-        var p = pixelOff + y * rowSize.toInt
         while (x < width) {
-          sumB += (payload(p) & 0xff)
-          sumG += (payload(p + 1) & 0xff)
-          sumR += (payload(p + 2) & 0xff)
-          x += 1; p += 3
+          px(o) = payload(p + 2)
+          px(o + 1) = payload(p + 1)
+          px(o + 2) = payload(p)
+          x += 1; p += 3; o += 3
         }
         y += 1
       }
-      val n = width.toDouble * height
-      Array(width.toDouble, height.toDouble, 3.0,
-        round6(sumR / n), round6(sumG / n), round6(sumB / n))
+      Image(width, height, 3, px)
     }
+
+    /** 24-bit uncompressed BMP → [width, height, channels=3, meanR, meanG,
+      * meanB]: [[imageFeatures]] of [[bmpImage]]. */
+    def bmp24(payload: Array[Byte]): Array[Double] =
+      imageFeatures(bmpImage(payload))
 
     /** RIFF walk for a 16-bit PCM WAV: (sampleRate, channels, data byte
       * offset, interleaved sample count). Shared by [[wavPcm16]] and
@@ -310,7 +370,7 @@ object Multimodal {
         // corpus's "image" column holds mixed containers
         sniffContainer(bytes) match {
           case "png"  => png(bytes)
-          case "jpeg" => Jpeg.features(bytes)
+          case "jpeg" => imageFeatures(Jpeg.jpegImage(bytes))
           case "bmp"  => bmp24(bytes)
           case other  => refuseContainer("image", other)
         }
@@ -326,18 +386,8 @@ object Multimodal {
         }
         val frames = gif87Frames(bytes)
         val f = frames.head
-        var (sr, sg, sb, sa) = (0.0, 0.0, 0.0, 0.0)
-        var i = 0
-        while (i < f.rgb.length) {
-          sr += (f.rgb(i) & 0xff); sg += (f.rgb(i + 1) & 0xff)
-          sb += (f.rgb(i + 2) & 0xff)
-          if (f.channels == 4) sa += (f.rgb(i + 3) & 0xff)
-          i += f.channels
-        }
-        val n = f.width.toDouble * f.height
-        Array(frames.length.toDouble, f.width.toDouble, f.height.toDouble,
-          round6(sr / n), round6(sg / n), round6(sb / n)) ++
-          (if (f.channels == 4) Array(round6(sa / n)) else Array.empty[Double])
+        Array(frames.length.toDouble, f.width.toDouble, f.height.toDouble) ++
+          channelMeans(f)
       case (kind, _) => throw new IllegalArgumentException(
         s"unknown media kind '$kind' (expected image/audio/video)")
     }
@@ -369,7 +419,7 @@ object Multimodal {
       require(w > 0 && h > 0, s"bad dimensions ${w}x$h")
       require(rgb.length == w * h * 3,
         s"${rgb.length} samples, expected ${w * h * 3}")
-      val rowSize = ((24 * w + 31) / 32) * 4
+      val rowSize = bmpRowSize(w).toInt
       val data = new Array[Byte](rowSize * h)
       var y = 0
       while (y < h) {
@@ -390,18 +440,11 @@ object Multimodal {
         le32(0) ++ data
     }
 
-    /** One decoded GIF frame: dimensions + interleaved samples — RGB
-      * (`channels` = 3), or RGBA (`channels` = 4) when the frame's Graphic
-      * Control Extension declares a transparent index (the `rgb` field
-      * then holds 4 bytes per pixel). */
-    case class GifFrame(width: Int, height: Int, rgb: Array[Byte],
-                        channels: Int = 3)
-
     /** REAL dependency-free GIF87a/89a decoder: logical screen descriptor,
       * global/local color tables, per-frame LZW decompression (variable-width
       * codes, clear/end codes, 4096-entry dictionary with the KwKwK case),
       * palette lookup to interleaved RGB. Multi-image streams decode to one
-      * [[GifFrame]] per image descriptor — the real substrate for
+      * [[Image]] per image descriptor — the real substrate for
       * [[Multimodal.sampleFrames]]. GIF89a semantics honored since r12
       * (VERDICT r11 missing #3): a Graphic Control Extension with the
       * transparency flag makes its frame decode as RGBA — transparent-index
@@ -419,11 +462,11 @@ object Multimodal {
       * size — the per-patch view. Real GIF ANIMATIONS ship frame 2+ as
       * sub-screen patches at (left, top) offsets with disposal semantics;
       * [[gifCanvasFrames]] is the composed full-screen view. */
-    def gif87Frames(payload: Array[Byte]): Seq[GifFrame] =
+    def gif87Frames(payload: Array[Byte]): Seq[Image] =
       gifParse(payload)._3.map { f =>
         val ch = if (f.transparent >= 0) 4 else 3
-        GifFrame(f.width, f.height,
-          expandIndices(f.indices, f.palette, f.transparent, ch), ch)
+        Image(f.width, f.height, ch,
+          expandIndices(f.indices, f.palette, f.transparent, ch))
       }
 
     /** One parsed (not yet color-expanded) GIF image: its placement on
@@ -592,7 +635,7 @@ object Multimodal {
       * Output frames are always RGBA at screen size. Patches must fit
       * the screen (loud — a malformed descriptor never writes out of
       * bounds). */
-    def gifCanvasFrames(payload: Array[Byte]): Seq[GifFrame] = {
+    def gifCanvasFrames(payload: Array[Byte]): Seq[Image] = {
       val (sw, sh, raw) = gifParse(payload)
       require(sw > 0 && sh > 0, s"bad logical screen ${sw}x$sh")
       val canvas = new Array[Byte](4 * sw * sh) // starts transparent
@@ -633,7 +676,7 @@ object Multimodal {
           case 3 => System.arraycopy(before, 0, canvas, 0, canvas.length)
           case _ => ()
         }
-        GifFrame(sw, sh, snapshot, 4)
+        Image(sw, sh, 4, snapshot)
       }
     }
 
@@ -885,11 +928,6 @@ object Multimodal {
       })
     }
 
-    /** One decoded PNG image: dimensions, channel count, interleaved 8-bit
-      * samples (grayscale=1, gray+alpha=2, RGB=3, RGBA=4 channels). */
-    case class PngImage(width: Int, height: Int, channels: Int,
-                        pixels: Array[Byte])
-
     private val pngSig =
       Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
 
@@ -944,7 +982,7 @@ object Multimodal {
       * as [[bmp24]]: sub-8 truecolor, 16-bit palette, bad CRCs,
       * out-of-palette indices, truncated or over-long pixel streams all
       * throw, never degrade. */
-    def pngImage(payload: Array[Byte]): PngImage = {
+    def pngImage(payload: Array[Byte]): Image = {
       require(isPng(payload), "not a PNG payload (bad signature)")
       var off = 8
       var width = -1; var height = -1
@@ -1187,7 +1225,7 @@ object Multimodal {
             px(o + 3) = if (idx < trns.length) trns(idx) else -1 // opaque
           i += 1
         }
-        PngImage(width, height, outCh, px)
+        Image(width, height, outCh, px)
       } else if (bitDepth < 8) {
         // sub-8 grayscale: left-bit-replicated scaling to the 8-bit
         // sample domain (v·255/(2^d−1) — exact integer for d ∈ {1,2,4})
@@ -1197,24 +1235,14 @@ object Multimodal {
           vals(i) = ((vals(i) & 0xff) * 255 / maxV).toByte
           i += 1
         }
-        PngImage(width, height, 1, vals)
-      } else PngImage(width, height, channels, vals)
+        Image(width, height, 1, vals)
+      } else Image(width, height, channels, vals)
     }
 
-    /** PNG → [width, height, channels, per-channel means…] (0-255, 6 dp) —
-      * the [[bmp24]]-shaped feature vector for the PNG container. */
-    def png(payload: Array[Byte]): Array[Double] = {
-      val img = pngImage(payload)
-      val sums = new Array[Double](img.channels)
-      var i = 0
-      while (i < img.pixels.length) {
-        sums(i % img.channels) += (img.pixels(i) & 0xff)
-        i += 1
-      }
-      val n = img.width.toDouble * img.height
-      Array(img.width.toDouble, img.height.toDouble,
-        img.channels.toDouble) ++ sums.map(s => round6(s / n))
-    }
+    /** PNG → [width, height, channels, per-channel means…]:
+      * [[imageFeatures]] of [[pngImage]]. */
+    def png(payload: Array[Byte]): Array[Double] =
+      imageFeatures(pngImage(payload))
 
     private def be32Bytes(v: Int): Array[Byte] =
       Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
@@ -1296,10 +1324,6 @@ object Multimodal {
         interlace = if (interlaced) 1 else 0)
     }
 
-    /** Assemble a VALID 8-bit PNG from already-filtered scanlines (real
-      * zlib framing + chunk CRCs) — shared by [[syntheticPng]] and
-      * [[resizePng]]. `filtered` is (stride+1)·h bytes: each row a filter
-      * byte then width·channels samples. */
     private def deflateBytes(raw: Array[Byte]): Array[Byte] = {
       val defl = new java.util.zip.Deflater()
       defl.setInput(raw)
@@ -1311,6 +1335,11 @@ object Multimodal {
       buf.toByteArray
     }
 
+    /** Assemble a VALID PNG from already-filtered scanlines (real zlib
+      * framing + chunk CRCs) — shared by [[syntheticPng]],
+      * [[pngFromPixels]] and [[png16FromSamples]]. `filtered` is
+      * (stride+1)·h bytes per pass: each row a filter byte then
+      * width·channels samples. */
     private def encodePng(w: Int, h: Int, channels: Int,
                           filtered: Array[Byte], bitDepth: Int = 8,
                           interlace: Int = 0): Array[Byte] = {
@@ -1339,13 +1368,8 @@ object Multimodal {
     private def passFiltered(w: Int, h: Int, channels: Int,
                              bytesPerSample: Int, interlace: Int,
                              sampleByte: (Int, Int, Int, Int) => Byte): Array[Byte] = {
-      val geoms = pngPasses(interlace).map { case (x0, y0, dx, dy) =>
-        val pw = if (w > x0) (w - x0 + dx - 1) / dx else 0
-        val ph = if (h > y0) (h - y0 + dy - 1) / dy else 0
-        (x0, y0, dx, dy, pw, ph)
-      }.filter(g => g._5 > 0 && g._6 > 0)
       val buf = new java.io.ByteArrayOutputStream()
-      geoms.foreach { case (x0, y0, dx, dy, pw, ph) =>
+      passGeometry(w, h, interlace).foreach { case (x0, y0, dx, dy, pw, ph) =>
         var j = 0
         while (j < ph) {
           buf.write(0) // filter byte 0 (None)
@@ -1423,10 +1447,8 @@ object Multimodal {
       // packed MSB-first within each PASS row (sub-8 tail bits per row)
       val buf = new java.io.ByteArrayOutputStream()
       val ppb = 8 / bitDepth
-      pngPasses(if (interlaced) 1 else 0).foreach { case (x0, y0, dx, dy) =>
-        val pw = if (w > x0) (w - x0 + dx - 1) / dx else 0
-        val ph = if (h > y0) (h - y0 + dy - 1) / dy else 0
-        if (pw > 0 && ph > 0) {
+      passGeometry(w, h, if (interlaced) 1 else 0).foreach {
+        case (x0, y0, dx, dy, pw, ph) =>
           val stride = (pw * bitDepth + 7) / 8
           var j = 0
           while (j < ph) {
@@ -1443,7 +1465,6 @@ object Multimodal {
             buf.write(row)
             j += 1
           }
-        }
       }
       val ihdr = be32Bytes(w) ++ be32Bytes(h) ++
         Array[Byte](bitDepth.toByte, 3, 0, 0,
@@ -1455,39 +1476,19 @@ object Multimodal {
         pngChunk("IEND", Array.empty[Byte])
     }
 
-    /** REAL nearest-neighbor resize of an 8-bit PNG to newW × newH — the
-      * [[resizeBmp24]] NN mapping (source pixel for output (x, y) is
-      * (x·srcW/newW, y·srcH/newH)) applied to the [[pngImage]] decode and
-      * re-encoded as a VALID PNG (filter-0 scanlines, real zlib + chunk
-      * CRCs), so the result feeds straight back into [[png]] or another
-      * resize — payload transforms compose. Channel count (and so color
-      * type) is preserved; same loud-failure contract as the decoder. */
+    /** REAL nearest-neighbor resize of an 8-bit PNG to newW × newH:
+      * [[resample]] of the [[pngImage]] decode, re-encoded by
+      * [[pngFromPixels]] (filter-0 scanlines, real zlib + chunk CRCs), so
+      * the result feeds straight back into [[png]] or another resize —
+      * payload transforms compose. Channel count (and so color type) is
+      * preserved; same loud-failure contract as the decoder. */
     def resizePng(payload: Array[Byte], newW: Int, newH: Int): Array[Byte] = {
       require(newW > 0 && newH > 0, s"bad target dimensions ${newW}x$newH")
       val img = pngImage(payload)
-      val ch = img.channels
-      val stride = newW * ch
-      require((stride + 1L) * newH <= Int.MaxValue,
+      require((newW.toLong * img.channels + 1) * newH <= Int.MaxValue,
         s"target too large: ${newW}x$newH")
-      val raw = new Array[Byte]((stride + 1) * newH)
-      var y = 0
-      while (y < newH) {
-        val sy = (y.toLong * img.height / newH).toInt
-        var x = 0
-        while (x < newW) {
-          val sx = (x.toLong * img.width / newW).toInt
-          val sp = (sy * img.width + sx) * ch
-          val dp = y * (stride + 1) + 1 + x * ch
-          var c = 0
-          while (c < ch) {
-            raw(dp + c) = img.pixels(sp + c)
-            c += 1
-          }
-          x += 1
-        }
-        y += 1
-      }
-      encodePng(newW, newH, ch, raw)
+      pngFromPixels(newW, newH, img.channels,
+        resample(img, newW, newH).pixels)
     }
 
     /** Container-sniffing image resize: PNG payloads through [[resizePng]],
@@ -1508,69 +1509,18 @@ object Multimodal {
       }
 
     /** REAL nearest-neighbor resize of a 24-bit uncompressed BMP to
-      * newW × newH — source pixel for output (x, y) is
-      * (x·srcW/newW, y·srcH/newH) in TOP-DOWN image coordinates, the
-      * standard NN mapping and the same anchor as [[resizePng]] (the
-      * container's rows are stored bottom-up, so the row loop maps file
-      * row → image row → source image row → source file row; through r10
-      * this mapped raw FILE rows directly, which bottom-anchored the
-      * vertical axis in image space — caught by the ADVICE-r10
-      * position-sensitive row-order spec). Emits a VALID BMP payload
-      * (54-byte headers, rows padded to 4 bytes), so the result feeds
-      * straight back into [[bmp24]] or another resize — payload
-      * transforms compose. Same loud-failure contract as the decoders. */
+      * newW × newH: [[resample]] of the [[bmpImage]] decode (top-down
+      * image coordinates, the same anchor as [[resizePng]]), re-encoded by
+      * [[bmpFromPixels]] (54-byte headers, bottom-up rows padded to 4
+      * bytes), so the result feeds straight back into [[bmp24]] or another
+      * resize — payload transforms compose. Same loud-failure contract as
+      * the decoders. */
     def resizeBmp24(payload: Array[Byte], newW: Int, newH: Int): Array[Byte] = {
       require(newW > 0 && newH > 0, s"bad target dimensions ${newW}x$newH")
-      require(payload.length >= 54 &&
-        payload(0) == 'B'.toByte && payload(1) == 'M'.toByte,
-        "not a BMP payload")
-      val pixelOff = i32(payload, 10)
-      val srcW = i32(payload, 18)
-      val srcH = i32(payload, 22)
-      val bpp = u16(payload, 28)
-      val compression = i32(payload, 30)
-      require(bpp == 24 && compression == 0,
-        s"only 24-bit uncompressed BMP supported (bpp=$bpp comp=$compression)")
-      require(srcW > 0 && srcH > 0, s"bad dimensions ${srcW}x$srcH")
-      val srcRow = (((24L * srcW + 31) / 32) * 4).toInt
-      require(pixelOff >= 0 &&
-        payload.length >= pixelOff + ((24L * srcW + 31) / 32) * 4 * srcH,
-        "truncated pixels")
-      val dstRowL = ((24L * newW + 31) / 32) * 4
-      require(54 + dstRowL * newH <= Int.MaxValue,
+      val img = bmpImage(payload)
+      require(54 + bmpRowSize(newW) * newH <= Int.MaxValue,
         s"target too large: ${newW}x$newH")
-      val dstRow = dstRowL.toInt
-      val out = new Array[Byte](54 + dstRow * newH)
-      // file header + 40-byte DIB header
-      System.arraycopy("BM".getBytes("US-ASCII"), 0, out, 0, 2)
-      System.arraycopy(le32(out.length), 0, out, 2, 4)
-      System.arraycopy(le32(54), 0, out, 10, 4)
-      System.arraycopy(le32(40), 0, out, 14, 4)
-      System.arraycopy(le32(newW), 0, out, 18, 4)
-      System.arraycopy(le32(newH), 0, out, 22, 4)
-      System.arraycopy(le16(1), 0, out, 26, 2)
-      System.arraycopy(le16(24), 0, out, 28, 2)
-      System.arraycopy(le32(dstRow * newH), 0, out, 34, 4)
-      var y = 0
-      while (y < newH) {
-        // y is an OUTPUT FILE row (bottom-up) → top-down image row →
-        // NN source image row → back to the source FILE row
-        val yImg = newH - 1 - y
-        val syImg = (yImg.toLong * srcH / newH).toInt
-        val sy = srcH - 1 - syImg
-        var x = 0
-        while (x < newW) {
-          val sx = (x.toLong * srcW / newW).toInt
-          val sp = pixelOff + sy * srcRow + sx * 3
-          val dp = 54 + y * dstRow + x * 3
-          out(dp) = payload(sp)
-          out(dp + 1) = payload(sp + 1)
-          out(dp + 2) = payload(sp + 2)
-          x += 1
-        }
-        y += 1
-      }
-      out
+      bmpFromPixels(newW, newH, resample(img, newW, newH).pixels)
     }
   }
 
@@ -1623,20 +1573,9 @@ object Multimodal {
     val frames = Decoders.gif87Frames(r.payload)
     frames.indices.by(everyN).map { ix =>
       val f = frames(ix)
-      var (sr, sg, sb, sa) = (0.0, 0.0, 0.0, 0.0)
-      var i = 0
-      while (i < f.rgb.length) {
-        sr += (f.rgb(i) & 0xff); sg += (f.rgb(i + 1) & 0xff)
-        sb += (f.rgb(i + 2) & 0xff)
-        if (f.channels == 4) sa += (f.rgb(i + 3) & 0xff)
-        i += f.channels
-      }
-      val n = (f.width.toDouble * f.height).max(1)
-      def r6(x: Double) = BigDecimal(x / n)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      (r.media_id, r.kind, ix.toLong, f.width, f.height,
-        r6(sr), r6(sg), r6(sb),
-        if (f.channels == 4) Some(r6(sa)) else None)
+      val m = Decoders.channelMeans(f)
+      (r.media_id, r.kind, ix.toLong, f.width, f.height, m(0), m(1), m(2),
+        m.lift(3))
     }
   }
 
@@ -1656,18 +1595,9 @@ object Multimodal {
       val frames = Decoders.gifCanvasFrames(r.payload)
       frames.indices.by(everyN).map { ix =>
         val f = frames(ix)
-        var (sr, sg, sb, sa) = (0.0, 0.0, 0.0, 0.0)
-        var i = 0
-        while (i < f.rgb.length) {
-          sr += (f.rgb(i) & 0xff); sg += (f.rgb(i + 1) & 0xff)
-          sb += (f.rgb(i + 2) & 0xff); sa += (f.rgb(i + 3) & 0xff)
-          i += 4
-        }
-        val n = (f.width.toDouble * f.height).max(1)
-        def r6(x: Double) = BigDecimal(x / n)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        (r.media_id, r.kind, ix.toLong, f.width, f.height,
-          r6(sr), r6(sg), r6(sb), r6(sa))
+        val m = Decoders.channelMeans(f)
+        (r.media_id, r.kind, ix.toLong, f.width, f.height, m(0), m(1), m(2),
+          m(3))
       }
     }.toDF("media_id", "kind", "frame_ix", "width", "height",
       "mean_r", "mean_g", "mean_b", "mean_a")

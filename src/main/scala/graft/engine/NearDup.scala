@@ -731,16 +731,7 @@ object NearDup {
   def dedupClusters(pairs: DataFrame, allDocs: DataFrame, id: Column,
                     maxIters: Int = 20,
                     reliableCheckpoint: Boolean = false,
-                    strict: Boolean = true,
-                    planOut: scala.collection.mutable.Buffer[(String, String)] = null)
-      : DataFrame = {
-    // debug-only plan capture; call AFTER the frame was materialized by
-    // checkpointPartitioned (forcing queryExecution earlier would pin an
-    // adaptive plan and defeat the partition-preserving checkpoint)
-    def capture(tag: String, df: DataFrame): Unit =
-      if (planOut != null) planOut += tag ->
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+                    strict: Boolean = true): DataFrame = {
     def ckptEager(df: DataFrame): DataFrame =
       if (reliableCheckpoint) df.checkpoint(true) else checkpointPartitioned(df)
     // materialize the edge list ONCE — its lineage is typically a whole
@@ -750,11 +741,9 @@ object NearDup {
     // then reuses it with no exchange and no sort — the former plain
     // checkpoint reported UnknownPartitioning, so each round re-shuffled
     // the full edge list.
-    val edgesPre = pairs.select(col("id1"), col("id2"))
+    val edges = ckptEager(pairs.select(col("id1"), col("id2"))
       .unionByName(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
-      .repartition(col("id2"))
-    val edges = ckptEager(edgesPre)
-    capture("edges_prep", edgesPre)
+      .repartition(col("id2")))
     // labels partitioned by doc_id: co-partitioned with each round's
     // neighbor-min aggregate, so the left join below never re-shuffles the
     // corpus-sized label table
@@ -771,13 +760,11 @@ object NearDup {
           edges("id2") === labels("doc_id"))
         .groupBy(col("id1").as("doc_id"))
         .agg(min(col("label")).as("_nl"))
-      val updatedPre =
+      val updated = ckptEager(
         labels.join(neighborMin.hint("shuffle_hash"), Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("label"), coalesce(col("_nl"), col("label"))).as("label"),
-          coalesce(col("_nl") < col("label"), lit(false)).as("_changed"))
-      val updated = ckptEager(updatedPre)
-      if (iter == 0) capture("round1_propagation", updatedPre)
+          coalesce(col("_nl") < col("label"), lit(false)).as("_changed")))
       // the count action reads the just-materialized checkpoint blocks
       val nChanged = updated
         .agg(coalesce(sum(when(col("_changed"), 1L).otherwise(0L)), lit(0L)))
@@ -837,13 +824,7 @@ object NearDup {
   def dedupClustersStar(pairs: DataFrame, allDocs: DataFrame, id: Column,
                         maxIters: Int = 40,
                         reliableCheckpoint: Boolean = false,
-                        strict: Boolean = true,
-                        planOut: scala.collection.mutable.Buffer[(String, String)] = null)
-      : DataFrame = {
-    def capture(tag: String, df: DataFrame): Unit =
-      if (planOut != null) planOut += tag ->
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+                        strict: Boolean = true): DataFrame = {
     // plain (AQE-on) eager checkpoints here, NOT checkpointPartitioned:
     // the star rounds re-key on a different column each step (sym by n,
     // then by hi), so a recorded partitioning never survives to the next
@@ -889,9 +870,7 @@ object NearDup {
     var converged = edges.isEmpty // an edgeless corpus is all singletons
     var iter = 0
     while (!converged && iter < maxIters) {
-      val nextPre = smallStar(largeStar(edges))
-      val next = ckptEager(nextPre)
-      if (iter == 0) capture("round1_star", nextPre)
+      val next = ckptEager(smallStar(largeStar(edges)))
       // exact set-equality convergence: same cardinality and nothing new
       // (anti-join one way suffices given distinct edge sets + count match;
       // the tiny per-round frames coalesce under AQE — build-small hint)

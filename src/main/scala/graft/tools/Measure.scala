@@ -61,11 +61,14 @@ object Measure {
     if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
   }
 
-  /** One completed stage. `jobId` is the job that submitted it. */
+  /** One completed stage. `jobId` is the job that submitted it. `taskMs`
+    * is the summed executorRunTime; `deserMs` and `resultSerMs` are the
+    * summed task time spent deserializing the task and serializing its
+    * result, which executorRunTime leaves out. */
   final case class StageRow(jobId: Int, stageId: Int, name: String,
                             wallMs: Long, taskMs: Long, gcMs: Long, tasks: Int,
                             shufReadMB: Double, shufWriteMB: Double,
-                            inputMB: Double)
+                            inputMB: Double, deserMs: Long, resultSerMs: Long)
 
   /** One stream micro-batch's progress; `durationMs` largest first. */
   final case class BatchRow(stream: String, batchId: Long, rows: Long,
@@ -122,7 +125,8 @@ object Measure {
             m.executorRunTime, m.jvmGCTime, si.numTasks,
             m.shuffleReadMetrics.totalBytesRead / 1e6,
             m.shuffleWriteMetrics.bytesWritten / 1e6,
-            m.inputMetrics.bytesRead / 1e6))
+            m.inputMetrics.bytesRead / 1e6, m.executorDeserializeTime,
+            m.resultSerializationTime))
         }
     }
 

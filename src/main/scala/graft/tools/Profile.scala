@@ -7,7 +7,8 @@ package graft.tools
   * SPARK_GRAFT_REPS−1 warm-ups (default 3 reps), then one rep under
   * [[Measure.capture]], printed as
   *  - a header: rep wall, summed stage wall, completed vs submitted stages;
-  *  - the stage table: job, stage, wall, task time, GC, tasks, shuffle
+  *  - the stage table: job, stage, wall, task time (executorRunTime), GC,
+  *    task deserialize and result serialization time, tasks, shuffle
   *    read/write and input MB;
   *  - a line per stream micro-batch with its `durationMs` map (addBatch,
   *    triggerExecution, walCommit, …) and the rep wall spent outside the
@@ -53,10 +54,12 @@ object Profile {
       f"${st.size} stages completed / ${c.submitted} submitted / " +
       f"${st.map(_.jobId).distinct.size} jobs")
     println(f"${"job"}%4s ${"stage"}%5s ${"wall_ms"}%8s ${"task_ms"}%8s " +
-      f"${"gc_ms"}%6s ${"tasks"}%5s ${"shR_MB"}%7s ${"shW_MB"}%7s ${"in_MB"}%7s  name")
+      f"${"gc_ms"}%6s ${"deser_ms"}%8s ${"resser_ms"}%9s ${"tasks"}%5s " +
+      f"${"shR_MB"}%7s ${"shW_MB"}%7s ${"in_MB"}%7s  name")
     st.foreach { r =>
       println(f"${r.jobId}%4d ${r.stageId}%5d ${r.wallMs}%8d ${r.taskMs}%8d " +
-        f"${r.gcMs}%6d ${r.tasks}%5d ${r.shufReadMB}%7.2f ${r.shufWriteMB}%7.2f " +
+        f"${r.gcMs}%6d ${r.deserMs}%8d ${r.resultSerMs}%9d ${r.tasks}%5d " +
+        f"${r.shufReadMB}%7.2f ${r.shufWriteMB}%7.2f " +
         f"${r.inputMB}%7.2f  ${r.name}")
     }
     c.batches.foreach { b =>

@@ -273,6 +273,14 @@ class BenchSpec extends AnyFunSuite with Matchers {
       not include "WARNING"
   }
 
+  test("outlierSidecarPath: the sidecar goes next to the detail file, " +
+    "never into the working directory") {
+    Bench.outlierSidecarPath(15, Bench.DefaultBenchOut).toString shouldBe
+      "/tmp/BENCH_OUTLIERS_r15.json"
+    Bench.outlierSidecarPath(7, "/data/bench/sf01.json").toString shouldBe
+      "/data/bench/BENCH_OUTLIERS_r07.json"
+  }
+
   test("calibrate: fixed splitmix64 anchor — positive, scales with " +
     "iteration count, runs at suite width") {
     val t1 = Bench.calibrate(1, 20_000_000L)

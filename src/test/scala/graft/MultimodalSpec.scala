@@ -105,8 +105,8 @@ class MultimodalSpec extends SparkSpec {
     vf.take(3) shouldBe Seq(3.0, 4.0, 4.0)
     val f0 = Multimodal.Decoders.gif87Frames(gif).head
     val means = Seq(0, 1, 2).map(c =>
-      BigDecimal(f0.rgb.indices.filter(_ % 3 == c)
-          .map(i => (f0.rgb(i) & 0xff).toDouble).sum / 16)
+      BigDecimal(f0.pixels.indices.filter(_ % 3 == c)
+          .map(i => (f0.pixels(i) & 0xff).toDouble).sum / 16)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     vf.drop(3) shouldBe means
     out.map(_.getLong(2)) shouldBe
@@ -131,6 +131,27 @@ class MultimodalSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Multimodal.Decoders.resizeBmp24("junk".getBytes, 2, 2)
     }
+  }
+
+  test("Decoders.resizeBmp24: the 54 header bytes of a 3x2 output — file " +
+    "size, pixel offset, DIB size, dims, planes, bpp, image size") {
+    val out = Multimodal.Decoders.resizeBmp24(bmpBytes, 3, 2)
+    // a 3-pixel row is 9 bytes, padded to 12
+    out.length shouldBe 54 + 12 * 2
+    out.take(54).toSeq shouldBe ("BM".getBytes ++
+      le32(78) ++          // file size
+      le32(0) ++           // reserved
+      le32(54) ++          // pixel offset
+      le32(40) ++          // DIB header size
+      le32(3) ++ le32(2) ++ // width, height
+      le16(1) ++           // planes
+      le16(24) ++          // bits per pixel
+      le32(0) ++           // compression: none
+      le32(24) ++          // image size: padded rows x height
+      new Array[Byte](16)).toSeq // resolution + palette counts: zero
+    // the 3 padding bytes of each row are zero
+    Seq(54 + 9, 54 + 10, 54 + 11, 66 + 9, 66 + 10, 66 + 11)
+      .map(out(_)) shouldBe Seq.fill(6)(0.toByte)
   }
 
   test("syntheticBmp: valid, deterministic, survives resize+decode") {
@@ -195,8 +216,8 @@ class MultimodalSpec extends SparkSpec {
         palette((java.lang.Long.rotateLeft(
           42L * 0x9e3779b97f4a7c15L + f, i) & 3).toInt)
       }
-      val got = (0 until 16).map(i => ((fr.rgb(3 * i) & 0xff),
-        (fr.rgb(3 * i + 1) & 0xff), (fr.rgb(3 * i + 2) & 0xff)))
+      val got = (0 until 16).map(i => ((fr.pixels(3 * i) & 0xff),
+        (fr.pixels(3 * i + 1) & 0xff), (fr.pixels(3 * i + 2) & 0xff)))
       got shouldBe want
     }
     intercept[IllegalArgumentException] {
@@ -231,8 +252,8 @@ class MultimodalSpec extends SparkSpec {
     val f = Multimodal.Decoders.gif87Frames(gif).head
     (f.width, f.height) shouldBe ((2, 2))
     // all four pixels are palette index 1 = red
-    (0 until 4).map(i => ((f.rgb(3 * i) & 0xff), (f.rgb(3 * i + 1) & 0xff),
-      (f.rgb(3 * i + 2) & 0xff))) shouldBe Seq.fill(4)((255, 0, 0))
+    (0 until 4).map(i => ((f.pixels(3 * i) & 0xff), (f.pixels(3 * i + 1) & 0xff),
+      (f.pixels(3 * i + 2) & 0xff))) shouldBe Seq.fill(4)((255, 0, 0))
   }
 
   // spec-side PNG assembler, INDEPENDENT of the production generator:
@@ -494,8 +515,8 @@ class MultimodalSpec extends SparkSpec {
     rows.foreach { r => r.getInt(3) shouldBe 4; r.getInt(4) shouldBe 4 }
     // frame-2 means match a direct decode
     val f2 = Multimodal.Decoders.gif87Frames(gif)(2)
-    val meanR = BigDecimal(f2.rgb.indices.filter(_ % 3 == 0)
-        .map(i => (f2.rgb(i) & 0xff).toDouble).sum / 16)
+    val meanR = BigDecimal(f2.pixels.indices.filter(_ % 3 == 0)
+        .map(i => (f2.pixels(i) & 0xff).toDouble).sum / 16)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     rows(1).getDouble(5) shouldBe meanR
     // non-GIF payloads fail loudly — no silent byte-stride fallback
@@ -1091,9 +1112,9 @@ class MultimodalSpec extends SparkSpec {
     val f0 = frames.head
     for (i <- 0 until 16) withClue(s"pixel $i (index ${idx(i)}): ") {
       val (r, g, b) = palette(idx(i))
-      (f0.rgb(4 * i) & 0xff, f0.rgb(4 * i + 1) & 0xff,
-        f0.rgb(4 * i + 2) & 0xff) shouldBe ((r, g, b))
-      (f0.rgb(4 * i + 3) & 0xff) shouldBe (if (idx(i) == 1) 0 else 255)
+      (f0.pixels(4 * i) & 0xff, f0.pixels(4 * i + 1) & 0xff,
+        f0.pixels(4 * i + 2) & 0xff) shouldBe ((r, g, b))
+      (f0.pixels(4 * i + 3) & 0xff) shouldBe (if (idx(i) == 1) 0 else 255)
     }
     // transparent index beyond the 4-color table: legal per the spec —
     // no pixel matches it, so everything is opaque (and nothing throws)
@@ -1101,7 +1122,7 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.Decoders.gif89FromIndices(4, 4, Seq(idx), Seq(Some(7))))
     outside.head.channels shouldBe 4
     (0 until 16).foreach(i =>
-      (outside.head.rgb(4 * i + 3) & 0xff) shouldBe 255)
+      (outside.head.pixels(4 * i + 3) & 0xff) shouldBe 255)
   }
 
   test("interlaced GIF (NEW r12): four-pass row permutation is POSITION-" +
@@ -1116,13 +1137,13 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.Decoders.gif89FromIndices(4, 8, Seq(idx), Seq(None),
         interlaced = true)).head
     (intF.width, intF.height, intF.channels) shouldBe ((4, 8, 3))
-    intF.rgb.toSeq shouldBe seqF.rgb.toSeq
+    intF.pixels.toSeq shouldBe seqF.pixels.toSeq
     // and the sequential decode really is the index law (not just equal
     // to another wrong layout)
     val palette = Seq((0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255))
     for (i <- 0 until 32)
-      (seqF.rgb(3 * i) & 0xff, seqF.rgb(3 * i + 1) & 0xff,
-        seqF.rgb(3 * i + 2) & 0xff) shouldBe palette(idx(i))
+      (seqF.pixels(3 * i) & 0xff, seqF.pixels(3 * i + 1) & 0xff,
+        seqF.pixels(3 * i + 2) & 0xff) shouldBe palette(idx(i))
   }
 
   test("GIF fuzz vs ImageIO, both directions: transparency and interlace") {
@@ -1189,11 +1210,11 @@ class MultimodalSpec extends SparkSpec {
     for (y <- 0 until 8; x <- 0 until 4) {
       val i = y * 4 + x
       withClue(s"($x,$y) index ${idx(i)}: ") {
-        (ours.rgb(4 * i + 3) & 0xff) shouldBe (if (idx(i) == 2) 0 else 255)
+        (ours.pixels(4 * i + 3) & 0xff) shouldBe (if (idx(i) == 2) 0 else 255)
         if (idx(i) != 2) {
           val (r, g, b) = palette(idx(i))
-          (ours.rgb(4 * i) & 0xff, ours.rgb(4 * i + 1) & 0xff,
-            ours.rgb(4 * i + 2) & 0xff) shouldBe ((r, g, b))
+          (ours.pixels(4 * i) & 0xff, ours.pixels(4 * i + 1) & 0xff,
+            ours.pixels(4 * i + 2) & 0xff) shouldBe ((r, g, b))
         }
       }
     }
@@ -1216,10 +1237,10 @@ class MultimodalSpec extends SparkSpec {
     val fs = gifCanvasFrames(gif)
     fs.length shouldBe 4
     fs.foreach { f => (f.width, f.height, f.channels) shouldBe ((3, 3, 4)) }
-    def px(f: Multimodal.Decoders.GifFrame, x: Int, y: Int) = {
+    def px(f: Multimodal.Decoders.Image, x: Int, y: Int) = {
       val o = 4 * (y * 3 + x)
-      ((f.rgb(o) & 0xff, f.rgb(o + 1) & 0xff, f.rgb(o + 2) & 0xff),
-        f.rgb(o + 3) & 0xff)
+      ((f.pixels(o) & 0xff, f.pixels(o + 1) & 0xff, f.pixels(o + 2) & 0xff),
+        f.pixels(o + 3) & 0xff)
     }
     val red = (255, 0, 0); val green = (0, 255, 0); val blue = (0, 0, 255)
     // f0: all red, opaque

@@ -475,7 +475,7 @@ class PropertySpec extends SparkSpec {
       frames.length shouldBe fs.length
       frames.zip(fs).foreach { case (fr, idx) =>
         (fr.width, fr.height) shouldBe ((w, h))
-        fr.rgb.toSeq shouldBe idx.flatMap { c =>
+        fr.pixels.toSeq shouldBe idx.flatMap { c =>
           val (r, g, b) = pal(c)
           Seq(r.toByte, g.toByte, b.toByte)
         }.toSeq
@@ -491,8 +491,8 @@ class PropertySpec extends SparkSpec {
     (fr.width, fr.height) shouldBe ((96, 96))
     (0 until 96 * 96).foreach { i =>
       val (r, g, b) = bigPal(big(i))
-      ((fr.rgb(3 * i) & 0xff, fr.rgb(3 * i + 1) & 0xff,
-        fr.rgb(3 * i + 2) & 0xff)) shouldBe ((r, g, b))
+      ((fr.pixels(3 * i) & 0xff, fr.pixels(3 * i + 1) & 0xff,
+        fr.pixels(3 * i + 2) & 0xff)) shouldBe ((r, g, b))
     }
   }
 
