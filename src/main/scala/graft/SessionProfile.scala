@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * in one comparable in the others and keeps the driver's bench honest:
   * these are engine session settings, not bench tuning.
   *
-  * The two non-default configs, with their scale arguments:
+  * The four non-default configs, with their scale arguments:
   *
   *  - `spark.sql.codegen.cache.maxEntries=2000` — a session running a wide
   *    mix of distinct plans needs the generated-class cache sized to that
@@ -32,6 +32,23 @@ import org.apache.spark.sql.SparkSession
   *    sub-64k partitions, which at production shuffle sizes never happens
   *    (partitions land at parallelism/advisory size); override via
   *    SPARK_GRAFT_AQE_MIN_PARTITION for cluster profiles.
+  *  - `spark.hadoop.fs.file.impl` = [[graft.engine.NoForkLocalFileSystem]]
+  *    — without libhadoop, Hadoop's local FS forks a `chmod` for every file
+  *    and directory it creates (part files, `.crc` sidecars, partition
+  *    dirs, state-store deltas, checkpoint logs): 1,017 of the 1,988
+  *    processes one perfbench `daily_ingest` run started. The replacement
+  *    sets the same mode bits in-process and is still a checksummed FS.
+  *  - `spark.sql.streaming.checkpointFileManagerClass` =
+  *    [[graft.engine.LocalCheckpointFileManager]] — Spark's default
+  *    FileContext manager forks `readlink` twice per checkpoint rename
+  *    (960 of those 1,988); on `file:` this delegates to Spark's
+  *    FileSystem-based manager, whose rename is one `File.renameTo`.
+  *
+  * Both only change the `file:` scheme: HDFS, S3 and ABFS paths resolve
+  * to their own FileSystems and keep Spark's FileContext checkpoint
+  * manager, so a cluster profile built from this one behaves as stock
+  * Spark on shared storage. With both, that `daily_ingest` run started 11
+  * processes (Spark's own `rm`, `setsid`, `getconf`).
   */
 object SessionProfile {
 
@@ -42,6 +59,10 @@ object SessionProfile {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.engine.NoForkLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.engine.LocalCheckpointFileManager].getName)
 
   /** Standard local session at `cpus` cores: master + shuffle parallelism
     * from the ONE knob (the driver also benches at a lower core count to

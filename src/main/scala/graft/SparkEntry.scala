@@ -315,11 +315,15 @@ object SparkEntry {
     * per-stream knob on a real cluster. MEASURED r14: widening the
     * stream-stream JOIN rigs to 16 (their eviction batches burn ~1-2.4 s
     * of addBatch with 32 cores idle, so parallelism looked attractive)
-    * regressed 2.7x (q_stream_interval_join 4.5->10.3 s steady) — the
-    * HDFS-backed store pays per-store-per-batch snapshot/commit fsyncs
-    * that swamp the gained parallelism at local-disk latencies. `body`
-    * must await termination: the stream thread reads the conf when it
-    * plans batch 0, which happens after start() returns. */
+    * regressed 2.7x (q_stream_interval_join 4.5->10.3 s steady). The cost
+    * was per FILE, not per fsync: each store writes a delta (and now and
+    * then a snapshot) with its `.crc` per batch, and the stock local FS
+    * forked a `chmod` for every one (and the FileContext checkpoint
+    * manager two `readlink`s per rename). [[SessionProfile]]'s no-fork
+    * `file:` FS removed those forks; the width stays 4 until 4→16 is
+    * re-measured without them. `body` must await termination: the stream
+    * thread reads the conf when it plans batch 0, which happens after
+    * start() returns. */
   private[graft] def atStateWidth[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "4")

@@ -20,9 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * so the declarative form pays k=32 interpreted lambda passes per row,
   * each allocating a full md5-hex array just to take its min, and each
   * re-dispatching Concat/Md5 expression trees per element. Here one tight
-  * loop hashes each shingle k ways against precomputed ":i" suffixes,
-  * keeps the running min as raw 16-byte digests (unsigned byte order ==
-  * hex lexicographic order), and hex-encodes only the k winners.
+  * loop feeds each shingle to MD5 once, finishes a clone of that state
+  * with each of the precomputed ":i" suffixes, keeps the running min as
+  * raw 16-byte digests (unsigned byte order == hex lexicographic order),
+  * and hex-encodes only the k winners.
   *
   * Empty/too-short input never reaches this expression (callers filter on
   * token count first — the minhashSignatures rule); an empty array yields
@@ -76,13 +77,13 @@ case class Md5MinHashSignature(child: Expression, k: Int)
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return null
-      val sb = a.getUTF8String(i).getBytes
+      md.reset()
+      md.update(a.getUTF8String(i).getBytes)
       var j = 0
       while (j < k) {
-        md.reset()
-        md.update(sb)
-        md.update(suffixes(j))
-        val d = md.digest()
+        val seeded = md.clone().asInstanceOf[java.security.MessageDigest]
+        seeded.update(suffixes(j))
+        val d = seeded.digest()
         if (mins(j) == null ||
             java.util.Arrays.compareUnsigned(d, mins(j)) < 0) mins(j) = d
         j += 1

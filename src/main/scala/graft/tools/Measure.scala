@@ -64,20 +64,25 @@ object Measure {
   /** One completed stage. `jobId` is the job that submitted it. `taskMs`
     * is the summed executorRunTime; `deserMs` and `resultSerMs` are the
     * summed task time spent deserializing the task and serializing its
-    * result, which executorRunTime leaves out. */
+    * result, which executorRunTime leaves out. `fetchMs` sums, over the
+    * tasks whose result the driver fetched from a block, the time from the
+    * start of that fetch to the task's finish. */
   final case class StageRow(jobId: Int, stageId: Int, name: String,
                             wallMs: Long, taskMs: Long, gcMs: Long, tasks: Int,
                             shufReadMB: Double, shufWriteMB: Double,
-                            inputMB: Double, deserMs: Long, resultSerMs: Long)
+                            inputMB: Double, deserMs: Long, resultSerMs: Long,
+                            fetchMs: Long)
 
   /** One stream micro-batch's progress; `durationMs` largest first. */
   final case class BatchRow(stream: String, batchId: Long, rows: Long,
                             sink: String, durationMs: Seq[(String, Long)])
 
   /** What `body` did: its result, a row per completed stage, the number of
-    * stages submitted, and a row per stream batch. */
+    * stages submitted, a row per stream batch, and the command of every OS
+    * process the JVM started meanwhile ([[processStarts]]). */
   final case class Capture[T](result: T, stages: Seq[StageRow],
-                              submitted: Int, batches: Seq[BatchRow])
+                              submitted: Int, batches: Seq[BatchRow],
+                              processes: Seq[String])
 
   private val SentinelKey = "graft.measure.sentinel"
   private val FlushTimeoutSec = 60L
@@ -96,6 +101,7 @@ object Measure {
     // read and written on the listener thread only
     private var openJob = -1
     private var recording = false
+    private val fetchMs = scala.collection.mutable.HashMap.empty[Int, Long]
 
     val jobs: SparkListener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -114,6 +120,14 @@ object Measure {
       override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
         if (recording) submitted.incrementAndGet()
 
+      // a stage's task-end events all precede its stage-completed event
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        val ti = te.taskInfo
+        if (recording && ti != null && ti.gettingResultTime > 0)
+          fetchMs(te.stageId) = fetchMs.getOrElse(te.stageId, 0L) +
+            (ti.finishTime - ti.gettingResultTime)
+      }
+
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         if (recording) {
           val si = sc.stageInfo
@@ -126,7 +140,7 @@ object Measure {
             m.shuffleReadMetrics.totalBytesRead / 1e6,
             m.shuffleWriteMetrics.bytesWritten / 1e6,
             m.inputMetrics.bytesRead / 1e6, m.executorDeserializeTime,
-            m.resultSerializationTime))
+            m.resultSerializationTime, fetchMs.remove(si.stageId).getOrElse(0L)))
         }
     }
 
@@ -175,7 +189,7 @@ object Measure {
     spark.streams.addListener(rec.streams)
     try {
       sentinel(sc, "open")
-      val result = body
+      val (result, _, processes) = processStarts(body)
       sentinel(sc, "close")
       val flushed = rec.closed.await(FlushTimeoutSec, TimeUnit.SECONDS) &&
         rec.terminated.values.asScala.forall(
@@ -185,10 +199,51 @@ object Measure {
           s"${FlushTimeoutSec}s (a stream still running after the body?)")
       Capture(result,
         rec.stages.asScala.toSeq.sortBy(r => (r.jobId, r.stageId)),
-        rec.submitted.get, rec.batches.asScala.toSeq)
+        rec.submitted.get, rec.batches.asScala.toSeq, processes)
     } finally {
       sc.removeSparkListener(rec.jobs)
       spark.streams.removeListener(rec.streams)
     }
+  }
+
+  /** Committed after the body of [[processStarts]]: the stream delivers a
+    * flush's events in commit order, so once it delivers this fence every
+    * process start before it has been delivered too. */
+  @jdk.jfr.Name("graft.ProcessStartsFence")
+  @jdk.jfr.Label("graft process-start fence")
+  private[tools] final class ProcessStartsFence extends jdk.jfr.Event {
+    @jdk.jfr.Label("id") var id: Long = 0L
+  }
+
+  private val fenceIds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Run `body` under a JFR stream of `jdk.ProcessStart` events and return
+    * its result with the number and commands of the OS processes the JVM
+    * started meanwhile, from any thread. A stock Hadoop local FS without
+    * libhadoop forks a `chmod` per file it creates, which this makes
+    * countable. Nothing waits on a timer: the body is closed by a fence
+    * event the stream must deliver (within JFR's ~1 s flush period). */
+  def processStarts[T](body: => T): (T, Int, Seq[String]) = {
+    val commands = new ConcurrentLinkedQueue[String]()
+    val id = fenceIds.incrementAndGet()
+    val fenced = new CountDownLatch(1)
+    val rs = new jdk.jfr.consumer.RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart")
+      rs.enable(classOf[ProcessStartsFence])
+      rs.onEvent("jdk.ProcessStart", e => commands.add(e.getString("command")))
+      rs.onEvent("graft.ProcessStartsFence",
+        e => if (e.getLong("id") == id) fenced.countDown())
+      rs.startAsync()
+      val result = body
+      val fence = new ProcessStartsFence
+      fence.id = id
+      fence.commit()
+      if (!fenced.await(FlushTimeoutSec, TimeUnit.SECONDS))
+        throw new IllegalStateException(
+          s"[graft] Measure.processStarts: JFR fence not delivered within " +
+            s"${FlushTimeoutSec}s")
+      (result, commands.size, commands.asScala.toSeq)
+    } finally rs.close()
   }
 }

@@ -6,10 +6,12 @@ package graft.tools
   * For each named query (every registry query when none is named):
   * SPARK_GRAFT_REPS−1 warm-ups (default 3 reps), then one rep under
   * [[Measure.capture]], printed as
-  *  - a header: rep wall, summed stage wall, completed vs submitted stages;
+  *  - a header: rep wall, summed stage wall, completed vs submitted stages,
+  *    and `procs=N`, the OS processes the JVM started during the rep (a
+  *    per-file fork, like a stock local FS's `chmod`, shows up here);
   *  - the stage table: job, stage, wall, task time (executorRunTime), GC,
-  *    task deserialize and result serialization time, tasks, shuffle
-  *    read/write and input MB;
+  *    task deserialize, result serialization and driver result-fetch time,
+  *    tasks, shuffle read/write and input MB;
   *  - a line per stream micro-batch with its `durationMs` map (addBatch,
   *    triggerExecution, walCommit, …) and the rep wall spent outside the
   *    batches (start/stop, handoff, the result checkpoint).
@@ -29,6 +31,10 @@ object Profile {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val warmups = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(2) - 1
     val spark = Measure.session()
+    // JFR's first recording in a JVM re-instruments java.io classes, which
+    // drops their compiled code: start it before any warm-up, so no
+    // measured rep pays the recompilation
+    Measure.processStarts(())
     val names =
       if (named.nonEmpty) named else graft.SparkEntry.queries.keys.toSeq.sorted
     val funnel = names.map { name =>
@@ -52,13 +58,15 @@ object Profile {
     println(f"\n[profile] $name measured rep: ${c.result}%.3f s wall, " +
       f"${st.map(_.wallMs.max(0L)).sum / 1e3}%.3f s summed stage wall, " +
       f"${st.size} stages completed / ${c.submitted} submitted / " +
-      f"${st.map(_.jobId).distinct.size} jobs")
+      f"${st.map(_.jobId).distinct.size} jobs, procs=${c.processes.size}")
     println(f"${"job"}%4s ${"stage"}%5s ${"wall_ms"}%8s ${"task_ms"}%8s " +
-      f"${"gc_ms"}%6s ${"deser_ms"}%8s ${"resser_ms"}%9s ${"tasks"}%5s " +
+      f"${"gc_ms"}%6s ${"deser_ms"}%8s ${"resser_ms"}%9s ${"fetch_ms"}%8s " +
+      f"${"tasks"}%5s " +
       f"${"shR_MB"}%7s ${"shW_MB"}%7s ${"in_MB"}%7s  name")
     st.foreach { r =>
       println(f"${r.jobId}%4d ${r.stageId}%5d ${r.wallMs}%8d ${r.taskMs}%8d " +
-        f"${r.gcMs}%6d ${r.deserMs}%8d ${r.resultSerMs}%9d ${r.tasks}%5d " +
+        f"${r.gcMs}%6d ${r.deserMs}%8d ${r.resultSerMs}%9d ${r.fetchMs}%8d " +
+        f"${r.tasks}%5d " +
         f"${r.shufReadMB}%7.2f ${r.shufWriteMB}%7.2f " +
         f"${r.inputMB}%7.2f  ${r.name}")
     }
