@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.engine.expressions.{ArrayDot, ArrayNormSq, CosineSimilarity, HammingDistance, MinHashSignature, SrpSignature}
 
 /** SparkSessionExtensions entry point: registers the engine's native
@@ -14,8 +13,7 @@ import graft.engine.expressions.{ArrayDot, ArrayNormSq, CosineSimilarity, Hammin
   */
 object GraftExtensions {
 
-  private def litInt(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                     what: String): Int = {
+  private def litInt(e: Expression, what: String): Int = {
     require(e.foldable, s"$what must be a literal integer")
     e.eval() match {
       case i: Int => i
@@ -25,51 +23,45 @@ object GraftExtensions {
     }
   }
 
-  private[graft] def buildSrp(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): SrpSignature = {
-    require(exprs.length == 3, "graft_srp_signature(vec, bits, dim)")
-    SrpSignature(exprs.head, litInt(exprs(1), "bits"), litInt(exprs(2), "dim"))
-  }
-
-  private[graft] def buildMinhash(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): MinHashSignature = {
-    require(exprs.length == 2, "graft_minhash(shingle_hashes, k)")
-    MinHashSignature(exprs.head, litInt(exprs(1), "k"))
-  }
-
-  private[graft] def buildCosine(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): CosineSimilarity = {
-    require(exprs.length == 2, "graft_cosine(a, b) takes two double arrays")
-    CosineSimilarity(exprs.head, exprs(1))
-  }
-
-  private[graft] def buildHamming(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): HammingDistance = {
-    require(exprs.length == 2, "graft_hamming(a, b) takes two long arrays")
-    HammingDistance(exprs.head, exprs(1))
-  }
-
-  private[graft] def buildDot(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): ArrayDot = {
-    require(exprs.length == 2, "graft_dot(a, b) takes two double arrays")
-    ArrayDot(exprs.head, exprs(1))
-  }
-
-  private[graft] def buildNormSq(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): ArrayNormSq = {
-    require(exprs.length == 1, "graft_norm_sq(a) takes one double array")
-    ArrayNormSq(exprs.head)
-  }
+  /** The one table of native SQL functions: (name, expression class,
+    * builder). [[registerOn]] and the extension class both iterate it, so
+    * the two registration paths cannot diverge in names, validation or
+    * messages. */
+  private[graft] val functions
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("graft_cosine", classOf[CosineSimilarity], args => {
+        require(args.length == 2, "graft_cosine(a, b) takes two double arrays")
+        CosineSimilarity(args.head, args(1))
+      }),
+      ("graft_hamming", classOf[HammingDistance], args => {
+        require(args.length == 2, "graft_hamming(a, b) takes two long arrays")
+        HammingDistance(args.head, args(1))
+      }),
+      ("graft_srp_signature", classOf[SrpSignature], args => {
+        require(args.length == 3, "graft_srp_signature(vec, bits, dim)")
+        SrpSignature(args.head, litInt(args(1), "bits"),
+          litInt(args(2), "dim"))
+      }),
+      ("graft_minhash", classOf[MinHashSignature], args => {
+        require(args.length == 2, "graft_minhash(shingle_hashes, k)")
+        MinHashSignature(args.head, litInt(args(1), "k"))
+      }),
+      ("graft_dot", classOf[ArrayDot], args => {
+        require(args.length == 2, "graft_dot(a, b) takes two double arrays")
+        ArrayDot(args.head, args(1))
+      }),
+      ("graft_norm_sq", classOf[ArrayNormSq], args => {
+        require(args.length == 1, "graft_norm_sq(a) takes one double array")
+        ArrayNormSq(args.head)
+      }))
 
   /** Runtime registration for sessions built without the extension. */
   def registerOn(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    bridge.registerFunction(spark, "graft_cosine", buildCosine)
-    bridge.registerFunction(spark, "graft_hamming", buildHamming)
-    bridge.registerFunction(spark, "graft_srp_signature", buildSrp)
-    bridge.registerFunction(spark, "graft_minhash", buildMinhash)
-    bridge.registerFunction(spark, "graft_dot", buildDot)
-    bridge.registerFunction(spark, "graft_norm_sq", buildNormSq)
+    functions.foreach { case (name, _, build) =>
+      org.apache.spark.sql.graftbridge.ColumnBridge
+        .registerFunction(spark, name, build)
+    }
     if (!spark.experimental.extraOptimizations
         .contains(graft.engine.rules.RewriteHofCosine))
       spark.experimental.extraOptimizations ++=
@@ -79,32 +71,10 @@ object GraftExtensions {
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // one builder per function, shared with registerOn — the two
-    // registration paths must not diverge in validation or messages
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      GraftExtensions.buildCosine _))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hamming"),
-      new ExpressionInfo(classOf[HammingDistance].getName, "graft_hamming"),
-      GraftExtensions.buildHamming _))
-    ext.injectFunction((
-      FunctionIdentifier("graft_srp_signature"),
-      new ExpressionInfo(classOf[SrpSignature].getName, "graft_srp_signature"),
-      GraftExtensions.buildSrp _))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      GraftExtensions.buildMinhash _))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[ArrayDot].getName, "graft_dot"),
-      GraftExtensions.buildDot _))
-    ext.injectFunction((
-      FunctionIdentifier("graft_norm_sq"),
-      new ExpressionInfo(classOf[ArrayNormSq].getName, "graft_norm_sq"),
-      GraftExtensions.buildNormSq _))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
     // declarative HOF cosine → native codegen'd expression (see the rule's
     // Scaladoc for the exact pattern and the semantics-preservation guard)
     ext.injectOptimizerRule(_ => graft.engine.rules.RewriteHofCosine)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * in one comparable in the others and keeps the driver's bench honest:
   * these are engine session settings, not bench tuning.
   *
-  * The four non-default configs, with their scale arguments:
+  * The non-default configs, with their scale arguments:
   *
   *  - `spark.sql.codegen.cache.maxEntries=2000` — a session running a wide
   *    mix of distinct plans needs the generated-class cache sized to that
@@ -43,8 +43,13 @@ import org.apache.spark.sql.SparkSession
   *    FileContext manager forks `readlink` twice per checkpoint rename
   *    (960 of those 1,988); on `file:` this delegates to Spark's
   *    FileSystem-based manager, whose rename is one `File.renameTo`.
+  *  - `spark.sql.legacy.parquet.nanosAsLong=true` — legacy `events` files
+  *    store `ts` as TIMESTAMP(NANOS), which Spark's reader otherwise
+  *    rejects; read as a long, `graft.engine.Tables` truncates it to micros.
+  *    Set once here rather than by a `conf.set` on every `events` read; it
+  *    changes nothing for files without NANOS columns.
   *
-  * Both only change the `file:` scheme: HDFS, S3 and ABFS paths resolve
+  * The two FS settings only change the `file:` scheme: HDFS, S3 and ABFS paths resolve
   * to their own FileSystems and keep Spark's FileContext checkpoint
   * manager, so a cluster profile built from this one behaves as stock
   * Spark on shared storage. With both, that `daily_ingest` run started 11
@@ -63,6 +68,7 @@ object SessionProfile {
         classOf[graft.engine.NoForkLocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.engine.LocalCheckpointFileManager].getName)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Standard local session at `cpus` cores: master + shuffle parallelism
     * from the ONE knob (the driver also benches at a lower core count to

@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
+import scala.util.control.NonFatal
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` payloads
   * with typed metadata, decoded/featurized per partition.
@@ -62,12 +64,13 @@ object Multimodal {
     hist.map(h => round6(h / n))
   }
 
-  /** Decode + featurize, one partition at a time. `mapPartitions` (not `map`)
-    * so a real decoder initializes once per task. The decode step is
+  /** Decode + featurize, one partition at a time (a real decoder
+    * initializes once per task — see [[perPayload]]). The decode step is
     * pluggable: pass any serializable [[Decoder]]; the stub is only the
-    * default. */
-  def extractFeatures(media: DataFrame,
-                      decode: Decoder = decodeStub _): DataFrame = {
+    * default. Under [[BadPayload.Quarantine]] a payload the decoder refuses
+    * keeps its `n_bytes` and gets a NULL `feature`. */
+  def extractFeatures(media: DataFrame, decode: Decoder = decodeStub _,
+                      bad: BadPayload = BadPayload.Fail): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     // Deliberately NO spreadForCpu at these kernel boundaries (r13
@@ -80,13 +83,12 @@ object Multimodal {
     // The guide §8 rule in reverse: don't move heavy opaque payloads to
     // parallelize light work. At real corpus scale the scan has many
     // splits and the question disappears.
-    media.as[MediaRecord].mapPartitions { it =>
-      // real pipelines: per-task decoder/session init goes here, once
-      it.map { r =>
-        MediaFeatures(r.media_id, r.kind, r.payload.length.toLong,
-          decode(r.kind, r.payload))
-      }
-    }.toDF()
+    perPayload(media, bad, Seq("media_id", "kind", "n_bytes", "feature"),
+      statusAt = 3,
+      kept = r => Seq(r.media_id, r.kind, r.payload.length.toLong)) { r =>
+      Seq(MediaFeatures(r.media_id, r.kind, r.payload.length.toLong,
+        decode(r.kind, r.payload)))
+    }
   }
 
   /** REAL container decoders, dependency-free (pure JVM byte parsing — no
@@ -96,8 +98,10 @@ object Multimodal {
     * These prove [[extractFeatures]] end-to-end on actual pixel/sample
     * data; production swaps in richer codecs with the same [[Decoder]]
     * signature. Malformed payloads fail loudly (IllegalArgumentException)
-    * rather than degrade silently. */
-  object Decoders {
+    * rather than degrade silently. Serializable, so a method passed as an
+    * operator argument through an alias (`D.gifCanvasFrames` after
+    * `val D = Decoders`) still ships to executors. */
+  object Decoders extends Serializable {
 
     private def u16(b: Array[Byte], off: Int): Int =
       (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
@@ -1529,78 +1533,57 @@ object Multimodal {
     * step of an image pipeline, with the same `mapPartitions` batch shape as
     * [[extractFeatures]] so a real resampler initializes once per task.
     * Output schema == input schema, so stages chain:
-    * `extractFeatures(resizeImages(media, 64, 64))`. */
+    * `extractFeatures(resizeImages(media, 64, 64))`. Under
+    * [[BadPayload.Quarantine]] a failed resize keeps its ORIGINAL payload,
+    * flagged, so the caller can route it out and still chain the healthy
+    * rows. */
   def resizeImages(media: DataFrame, w: Int, h: Int,
                    resize: (Array[Byte], Int, Int) => Array[Byte] =
-                     Decoders.resizeImage): DataFrame = {
+                     Decoders.resizeImage,
+                   bad: BadPayload = BadPayload.Fail): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        if (r.kind == "image") MediaRecord(r.media_id, r.kind,
-          resize(r.payload, w, h))
-        else r
-      }
-    }.toDF()
-  }
-
-  /** REAL frame sampling: decode a multi-frame GIF payload
-    * ([[Decoders.gif87Frames]]) and keep every `everyN`th frame, emitting one
-    * row per sampled frame with per-frame pixel statistics — the unpivot-like
-    * row multiplier a video pipeline needs, now fed by an actual container
-    * decode (round-3 byte-stride stub retired). Same `flatMap` batch shape;
-    * non-GIF payloads fail loudly per the decoder contract.
-    * Output: (media_id, kind, frame_ix, width, height, mean_r, mean_g,
-    * mean_b, mean_a) — means over the frame's pixels, 0-255, 6 dp;
-    * `mean_a` is NULL for frames without a transparency declaration
-    * (plain RGB) and the alpha mean (255·opaque-fraction) for frames
-    * whose GCE set one — the r12 GIF89a surface. */
-  def sampleFrames(media: DataFrame, everyN: Int = 1): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    require(everyN >= 1, s"everyN must be >= 1: $everyN")
-    media.as[MediaRecord].flatMap(gifFrameStats(_, everyN))
-      .toDF("media_id", "kind", "frame_ix", "width", "height",
-        "mean_r", "mean_g", "mean_b", "mean_a")
-  }
-
-  /** Per-frame stat rows of one GIF payload — the shared kernel of
-    * [[sampleFrames]] and [[sampleFramesQuarantine]] (identical rows on a
-    * healthy payload by construction). */
-  private def gifFrameStats(r: MediaRecord, everyN: Int)
-      : Seq[(Long, String, Long, Int, Int, Double, Double, Double,
-             Option[Double])] = {
-    val frames = Decoders.gif87Frames(r.payload)
-    frames.indices.by(everyN).map { ix =>
-      val f = frames(ix)
-      val m = Decoders.channelMeans(f)
-      (r.media_id, r.kind, ix.toLong, f.width, f.height, m(0), m(1), m(2),
-        m.lift(3))
+    perPayload(media, bad, Seq("media_id", "kind", "payload"),
+      kept = r => Seq(r.media_id, r.kind, r.payload)) { r =>
+      Seq(if (r.kind == "image") MediaRecord(r.media_id, r.kind,
+        resize(r.payload, w, h)) else r)
     }
   }
 
-  /** [[sampleFrames]] over the COMPOSED animation view
-    * ([[Decoders.gifCanvasFrames]]): one row per sampled frame of the
-    * logical-screen canvas — what the viewer saw at frame k, with patch
-    * placement, frame-over-frame transparency and disposal all applied.
-    * Frames are always RGBA at screen size, so `mean_a` is always
-    * populated (255·opaque-fraction; pixels never drawn, or cleared by
-    * disposal 2, count 0 toward every channel). Transparent canvas pixels
-    * contribute 0 to the RGB means too — the declared convention. */
-  def sampleCanvasFrames(media: DataFrame, everyN: Int = 1): DataFrame = {
+  /** REAL frame sampling: decode a multi-frame GIF payload with `frames`
+    * and keep every `everyN`th frame, emitting one row per sampled frame
+    * with per-frame pixel statistics — the unpivot-like row multiplier a
+    * video pipeline needs, fed by an actual container decode. Non-GIF
+    * payloads fail loudly per the decoder contract.
+    *
+    * `frames` picks the view: [[Decoders.gif87Frames]] (default) yields
+    * each frame's own patch; [[Decoders.gifCanvasFrames]] yields the
+    * COMPOSED logical-screen canvas — what the viewer saw at frame k, with
+    * patch placement, frame-over-frame transparency and disposal applied,
+    * always RGBA at screen size (pixels never drawn, or cleared by disposal
+    * 2, count 0 toward every channel).
+    * Output: (media_id, kind, frame_ix, width, height, mean_r, mean_g,
+    * mean_b, mean_a) — means over the frame's pixels, 0-255, 6 dp;
+    * `mean_a` is NULL for frames without alpha (plain RGB) and the alpha
+    * mean (255·opaque-fraction) otherwise. */
+  def sampleFrames(media: DataFrame, everyN: Int = 1,
+                   frames: Array[Byte] => Seq[Decoders.Image] =
+                     Decoders.gif87Frames,
+                   bad: BadPayload = BadPayload.Fail): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     require(everyN >= 1, s"everyN must be >= 1: $everyN")
-    media.as[MediaRecord].flatMap { r =>
-      val frames = Decoders.gifCanvasFrames(r.payload)
-      frames.indices.by(everyN).map { ix =>
-        val f = frames(ix)
+    perPayload(media, bad, Seq("media_id", "kind", "frame_ix", "width",
+        "height", "mean_r", "mean_g", "mean_b", "mean_a"),
+      needs = Some("video" -> "gif")) { r =>
+      val fs = frames(r.payload)
+      fs.indices.by(everyN).map { ix =>
+        val f = fs(ix)
         val m = Decoders.channelMeans(f)
         (r.media_id, r.kind, ix.toLong, f.width, f.height, m(0), m(1), m(2),
-          m(3))
+          m.lift(3))
       }
-    }.toDF("media_id", "kind", "frame_ix", "width", "height",
-      "mean_r", "mean_g", "mean_b", "mean_a")
+    }
   }
 
   /** REAL audio frame features: decode a 16-bit PCM WAV
@@ -1617,19 +1600,19 @@ object Multimodal {
     * [[sampleFrames]]; non-WAV payloads fail loudly.
     * Output: (media_id, kind, frame_ix, n_samples, abs_sum, sq_sum,
     * zero_crossings). */
-  def sampleAudioFrames(media: DataFrame, frameLen: Int,
-                        everyN: Int = 1): DataFrame = {
+  def sampleAudioFrames(media: DataFrame, frameLen: Int, everyN: Int = 1,
+                        bad: BadPayload = BadPayload.Fail): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     require(frameLen >= 1, s"frameLen must be >= 1: $frameLen")
     require(everyN >= 1, s"everyN must be >= 1: $everyN")
-    media.as[MediaRecord].flatMap(wavFrameStats(_, frameLen, everyN))
-      .toDF("media_id", "kind", "frame_ix", "n_samples", "abs_sum",
-        "sq_sum", "zero_crossings")
+    perPayload(media, bad, Seq("media_id", "kind", "frame_ix", "n_samples",
+        "abs_sum", "sq_sum", "zero_crossings"),
+      needs = Some("audio" -> "wav"))(wavFrameStats(_, frameLen, everyN))
   }
 
-  /** Per-frame integer stat rows of one WAV payload — the shared kernel of
-    * [[sampleAudioFrames]] and [[sampleAudioFramesQuarantine]]. */
+  /** Per-frame integer stat rows of one WAV payload — the kernel of
+    * [[sampleAudioFrames]]. */
   private def wavFrameStats(r: MediaRecord, frameLen: Int, everyN: Int)
       : Seq[(Long, String, Long, Long, Long, Long, Long)] = {
     val clip = Decoders.wavClip(r.payload)
@@ -1663,35 +1646,28 @@ object Multimodal {
     }
   }
 
-  // ------------------------------------------------------------------
-  // Permissive / quarantine decode twins (round 13).
-  //
-  // Every decoder above fails LOUDLY on malformed, truncated, or
-  // unsupported payloads — the right default for fixtures and for any
-  // pipeline whose inputs are supposed to be clean. But a real scraped
-  // corpus is full of truncated downloads, mislabeled containers, and
-  // WebP/AVIF payloads in an "image" column, and on a 100 TB decode job
-  // one such row must not kill the task (and with it, after retries, the
-  // job). These twins wrap each per-row decode in a catch: a healthy row
-  // yields EXACTLY the rows the loud twin yields (shared kernels above);
-  // a failing row yields ONE quarantine row carrying the sniffed
-  // container class and a stable error taxonomy — so the quarantine rate
-  // per (container, error_class) is itself a corpus-quality metric, the
-  // `Ingest.csvFlagQuarantine` pattern applied to binary columns.
-  // Map-side only: no new shuffles, no driver state, no change to the
-  // loud twins' plans.
-  // ------------------------------------------------------------------
+  /** What a per-payload media operator does with a payload its decoder
+    * refuses (malformed, truncated, or an unsupported container).
+    *
+    * [[BadPayload.Fail]] (the default) lets the refusal fail the task — the
+    * right rule for fixtures and for pipelines whose inputs are supposed to
+    * be clean. [[BadPayload.Quarantine]] is for a real scraped corpus, full
+    * of truncated downloads, mislabeled containers and WebP/AVIF payloads
+    * in an "image" column, where on a 100 TB decode job one such row must
+    * not kill the task (and, after retries, the job): a healthy payload
+    * yields EXACTLY the rows `Fail` yields, and a refused one yields ONE
+    * row carrying the sniffed container and a stable error class
+    * ([[errorClassOf]]) — so the quarantine rate per (container,
+    * error_class) is itself a corpus-quality metric, the
+    * `Ingest.csvFlagQuarantine` pattern applied to binary columns.
+    * Map-side only: no new shuffles and no driver state. */
+  sealed trait BadPayload
+  object BadPayload {
+    case object Fail extends BadPayload
+    case object Quarantine extends BadPayload
+  }
 
-  /** [[extractFeatures]] row with decode status: `ok` rows carry the
-    * feature vector, quarantined rows carry the error class instead. The
-    * sniffed `container` is populated on every row — per-container counts
-    * of unsupported payloads (webp/avif/tiff) come for free. */
-  case class MediaDecodeStatus(media_id: Long, kind: String, n_bytes: Long,
-                               container: String, ok: Boolean,
-                               error_class: Option[String],
-                               feature: Option[Array[Double]])
-
-  /** Stable error taxonomy for the quarantine twins. Classes:
+  /** Stable error taxonomy for [[BadPayload.Quarantine]]. Classes:
     * `unsupported_container` (valid WebP/AVIF/TIFF magic, decode out of
     * scope), `mismatched_container` (a container this engine CAN decode,
     * under a kind that doesn't — e.g. GIF bytes in an "image" column),
@@ -1726,128 +1702,54 @@ object Multimodal {
     }
   }
 
-  /** Permissive twin of [[extractFeatures]]: decode → ok row | quarantine
-    * row, never a task failure. Same `mapPartitions` batch shape; the
-    * loud twin remains the default surface for trusted inputs. */
-  def extractFeaturesQuarantine(media: DataFrame,
-                                decode: Decoder = Decoders.media)
-      : DataFrame = {
+  /** The one runner of every per-payload media operator: `kernel` maps a
+    * record to its output rows, named `names`, batched per partition
+    * (`flatMap` is `mapPartitions` underneath — one decoder init per task,
+    * the shape a JNI/FFI decoder needs).
+    *
+    * Under [[BadPayload.Fail]] that is the whole plan. Under
+    * [[BadPayload.Quarantine]] the output gains `(container, ok,
+    * error_class)` after the first `statusAt` columns, every later column
+    * turns nullable, and a payload whose kernel throws a `NonFatal` yields
+    * one `ok = false` row instead: `kept(r)`'s values, then NULLs. `needs`
+    * = (kind, container) refuses any other sniffed container first, so a
+    * WebP payload in a frame column counts as `unsupported_container`
+    * rather than as a generic parse failure; it runs under `Quarantine`
+    * only, which keeps `Fail`'s error messages the decoder's own. */
+  private def perPayload[T <: Product : Encoder](media: DataFrame,
+      bad: BadPayload, names: Seq[String], statusAt: Int = 2,
+      needs: Option[(String, String)] = None,
+      kept: MediaRecord => Seq[Any] = r => Seq(r.media_id, r.kind))
+      (kernel: MediaRecord => Seq[T]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        val container = Decoders.sniffContainer(r.payload)
-        try MediaDecodeStatus(r.media_id, r.kind, r.payload.length.toLong,
-          container, ok = true, None, Some(decode(r.kind, r.payload)))
-        catch { case scala.util.control.NonFatal(t) =>
-          MediaDecodeStatus(r.media_id, r.kind, r.payload.length.toLong,
-            container, ok = false, Some(errorClassOf(t)), None)
-        }
-      }
-    }.toDF()
-  }
-
-  /** [[sampleFrames]] row with decode status (quarantined payloads emit
-    * ONE row with null frame fields). */
-  case class FrameDecodeStatus(media_id: Long, kind: String,
-                               container: String, ok: Boolean,
-                               error_class: Option[String],
-                               frame_ix: Option[Long], width: Option[Int],
-                               height: Option[Int], mean_r: Option[Double],
-                               mean_g: Option[Double],
-                               mean_b: Option[Double],
-                               mean_a: Option[Double])
-
-  /** Permissive twin of [[sampleFrames]]: a healthy payload emits exactly
-    * the loud twin's frame rows (shared kernel); a failing one emits one
-    * quarantine row instead of killing the task. */
-  def sampleFramesQuarantine(media: DataFrame, everyN: Int = 1)
-      : DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    require(everyN >= 1, s"everyN must be >= 1: $everyN")
-    media.as[MediaRecord].flatMap { r =>
-      val container = Decoders.sniffContainer(r.payload)
-      try {
-        // same classified refusal as the media dispatcher: a WebP payload
-        // in the frame column counts as unsupported_container, not as a
-        // generic GIF parse failure
-        if (container != "gif") Decoders.refuseContainer("video", container)
-        gifFrameStats(r, everyN).map { case (id, kind, ix, w, h, mr, mg,
-                                             mb, ma) =>
-          FrameDecodeStatus(id, kind, container, ok = true, None, Some(ix),
-            Some(w), Some(h), Some(mr), Some(mg), Some(mb), ma)
-        }
-      }
-      catch { case scala.util.control.NonFatal(t) =>
-        Seq(FrameDecodeStatus(r.media_id, r.kind, container, ok = false,
-          Some(errorClassOf(t)), None, None, None, None, None, None, None))
-      }
-    }.toDF()
-  }
-
-  /** [[sampleAudioFrames]] row with decode status. */
-  case class AudioFrameStatus(media_id: Long, kind: String,
-                              container: String, ok: Boolean,
-                              error_class: Option[String],
-                              frame_ix: Option[Long],
-                              n_samples: Option[Long], abs_sum: Option[Long],
-                              sq_sum: Option[Long],
-                              zero_crossings: Option[Long])
-
-  /** Permissive twin of [[sampleAudioFrames]]. */
-  def sampleAudioFramesQuarantine(media: DataFrame, frameLen: Int,
-                                  everyN: Int = 1): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    require(frameLen >= 1, s"frameLen must be >= 1: $frameLen")
-    require(everyN >= 1, s"everyN must be >= 1: $everyN")
-    media.as[MediaRecord].flatMap { r =>
-      val container = Decoders.sniffContainer(r.payload)
-      try {
-        if (container != "wav") Decoders.refuseContainer("audio", container)
-        wavFrameStats(r, frameLen, everyN).map { case (id, kind, ix, n,
-                                                       a, sq, zc) =>
-          AudioFrameStatus(id, kind, container, ok = true, None, Some(ix),
-            Some(n), Some(a), Some(sq), Some(zc))
-        }
-      }
-      catch { case scala.util.control.NonFatal(t) =>
-        Seq(AudioFrameStatus(r.media_id, r.kind, container, ok = false,
-          Some(errorClassOf(t)), None, None, None, None, None))
-      }
-    }.toDF()
-  }
-
-  /** [[resizeImages]] output row with transform status: a failed resize
-    * keeps the ORIGINAL payload and flags it, so the caller can route the
-    * quarantined rows out and still chain the healthy ones. */
-  case class MediaResizeStatus(media_id: Long, kind: String,
-                               container: String, ok: Boolean,
-                               error_class: Option[String],
-                               payload: Array[Byte])
-
-  /** Permissive twin of [[resizeImages]]. Non-image kinds pass through
-    * untouched (ok, like the loud twin); image payloads that fail to
-    * decode-resize-reencode are flagged with their error class. */
-  def resizeImagesQuarantine(media: DataFrame, w: Int, h: Int,
-                             resize: (Array[Byte], Int, Int) => Array[Byte] =
-                               Decoders.resizeImage): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.map { r =>
-        val container = Decoders.sniffContainer(r.payload)
-        if (r.kind != "image")
-          MediaResizeStatus(r.media_id, r.kind, container, ok = true, None,
-            r.payload)
-        else try MediaResizeStatus(r.media_id, r.kind, container, ok = true,
-          None, resize(r.payload, w, h))
-        catch { case scala.util.control.NonFatal(t) =>
-          MediaResizeStatus(r.media_id, r.kind, container, ok = false,
-            Some(errorClassOf(t)), r.payload)
-        }
-      }
-    }.toDF()
+    val records = media.as[MediaRecord]
+    val loud = records.flatMap(kernel).toDF(names: _*)
+    bad match {
+      case BadPayload.Fail => loud
+      case BadPayload.Quarantine =>
+        val schema = StructType(loud.schema.take(statusAt) ++ Seq(
+          StructField("container", StringType),
+          StructField("ok", BooleanType, nullable = false),
+          StructField("error_class", StringType)) ++
+          loud.schema.drop(statusAt).map(_.copy(nullable = true)))
+        val width = names.length
+        records.flatMap { r =>
+          val container = Decoders.sniffContainer(r.payload)
+          def row(values: Seq[Any], error: String): Row = {
+            val (head, tail) = values.padTo(width, null).splitAt(statusAt)
+            Row.fromSeq(head ++ Seq(container, error == null, error) ++ tail)
+          }
+          try {
+            needs.foreach { case (kind, c) =>
+              if (container != c) Decoders.refuseContainer(kind, container)
+            }
+            kernel(r).map(t => row(t.productIterator.map {
+              case o: Option[_] => o.getOrElse(null)
+              case v => v
+            }.toSeq, null))
+          } catch { case NonFatal(t) => Seq(row(kept(r), errorClassOf(t))) }
+        }(Encoders.row(schema))
+    }
   }
 }

@@ -56,7 +56,8 @@ object Tables {
 
   /** `events.parquet` has shipped with two physical `ts` types across data
     * generations: TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
-    * read nanos as long, truncate to micros with INTEGER division; a double
+    * the session reads nanos as long under `SessionProfile`'s
+    * `nanosAsLong`, truncated here to micros with INTEGER division; a double
     * division would lose precision above 2^53 ns) and plain TIMESTAMP(MICROS)
     * (arrives as TIMESTAMP_NTZ). Both normalize to a session-zone TIMESTAMP
     * so every downstream operator and verify dump sees one type; sessions run
@@ -71,7 +72,6 @@ object Tables {
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "events access requires spark.sql.session.timeZone=UTC — the " +
         "NTZ→LTZ normalization is only value-preserving in UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     parquet(spark, s"$sfDir/events.parquet")
   }
 

@@ -170,7 +170,8 @@ private[graft] object MediaQueries {
         }
         Multimodal.MediaRecord(id, kind, payload)
       }.toDF()
-      Multimodal.extractFeaturesQuarantine(media, Multimodal.Decoders.media)
+      Multimodal.extractFeatures(media, Multimodal.Decoders.media,
+        Multimodal.BadPayload.Quarantine)
         .groupBy(col("kind"), col("container"), col("ok"), col("error_class"))
         .agg(count(lit(1)).as("n"), sum(col("media_id")).as("id_sum"))
     },
@@ -195,7 +196,7 @@ private[graft] object MediaQueries {
                 ELSE NULL END AS error_class,
            count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum
          FROM documents GROUP BY 1, 2, 3, 4""")),
-    // Permissive FRAME sampling (the flatMap quarantine twin): healthy
+    // Permissive FRAME sampling (`sampleFrames` under Quarantine): healthy
     // GIFs emit their per-frame rows, a truncated GIF or a WebP payload
     // emits one quarantine row — counts, id sums, and frame-index sums
     // all replay in SQL by the id law (4 frames per healthy id via a
@@ -211,7 +212,8 @@ private[graft] object MediaQueries {
         }
         Multimodal.MediaRecord(id, "video", payload)
       }.toDF()
-      Multimodal.sampleFramesQuarantine(media, everyN = 1)
+      Multimodal.sampleFrames(media, everyN = 1,
+        bad = Multimodal.BadPayload.Quarantine)
         .groupBy(col("ok"), col("error_class"), col("container"))
         .agg(count(lit(1)).as("n"), sum(col("media_id")).as("id_sum"),
           sum(coalesce(col("frame_ix"), lit(-1L))).as("ix_sum"))
@@ -591,7 +593,8 @@ private[graft] object MediaQueries {
             Multimodal.Decoders.GifPatch(2, 2, 2, 2,
               Array.tabulate(4)(lawC)))))
       }.toDF()
-      Multimodal.sampleCanvasFrames(media, everyN = 1)
+      Multimodal.sampleFrames(media, everyN = 1,
+        frames = Multimodal.Decoders.gifCanvasFrames)
         .select(col("media_id"), col("frame_ix"), col("width"),
           col("height"), col("mean_r"), col("mean_g"), col("mean_b"),
           col("mean_a"))

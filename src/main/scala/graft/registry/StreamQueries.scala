@@ -420,7 +420,8 @@ private[graft] object StreamQueries {
         graft.streaming.Streams.alertStreamMode)
     },
       Oracle("""WITH p AS (SELECT event_type AS grp, epoch_ns(ts) // 1000 AS us,
-             CAST(floor(value * 100) AS BIGINT) AS vc FROM events),
+             CAST(floor(value * 100) AS BIGINT) AS vc FROM events
+           WHERE value IS NOT NULL),
          w AS (SELECT grp, us, vc,
              CAST(COALESCE(SUM(vc) OVER (PARTITION BY grp ORDER BY us, vc
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)

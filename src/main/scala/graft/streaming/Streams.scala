@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
@@ -351,6 +351,33 @@ object Streams {
     q.awaitTermination()
   }
 
+  /** The one input of the four alarm streams: readings `(k, us, vc)` —
+    * key as a string, event time in epoch micros, value floored to cents —
+    * grouped by key. NULL readings are dropped: a null is a gap, not a
+    * reading (and the typed `Long` projection cannot hold one — it would
+    * fail the query with NOT_NULL_ASSERT_VIOLATION). */
+  private def readings(events: DataFrame, ts: String, key: String,
+                       value: String)
+      : KeyValueGroupedDataset[String, (String, Long, Long)] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.where(s"$value IS NOT NULL")
+      .selectExpr(s"CAST($key AS STRING) AS k",
+        s"unix_micros(CAST($ts AS TIMESTAMP)) AS us",
+        s"CAST(floor($value * 100) AS LONG) AS vc")
+      .as[(String, Long, Long)]
+      .groupByKey(_._1)
+  }
+
+  /** One key's batch rows in fold order, (ts, cents). Rows that tie on
+    * both are identical to every alarm rule (same value, same instant), so
+    * the order between them cannot change any stream's output multiset —
+    * which is what lets each single-batch AvailableNow run equal its SQL
+    * closed form, whose window frames order by the same pair. */
+  private def inFoldOrder(rows: Iterator[(String, Long, Long)])
+      : Array[(String, Long, Long)] =
+    rows.toArray.sortBy(r => (r._2, r._3))
+
   case class Alert(grp: String, tsUs: Long, vCents: Long, nPrior: Long,
                    sumPriorCents: Long)
   // running (count, centSum) per key — flat tuple, codegen-friendly encoder
@@ -361,16 +388,14 @@ object Streams {
     * map variant): a group emits ZERO OR MORE alert rows per batch, one for
     * each reading that deviates from the key's RUNNING mean by more than
     * `thresholdCents`, judged against state accumulated across every prior
-    * batch (and prior rows of this batch, in (ts, value) order) — the
+    * batch (and prior rows of this batch, in [[inFoldOrder]]) — the
     * streaming twin of the batch `Analytics.robustAnomalies` family, for
     * the reference's "flag a stuck/spiking plant while ingesting" need.
     *
     * Integer contract: values floor to cents; the deviation test
     * cross-multiplies (`|v·n − Σ| > thr·n`) so no division ever happens —
     * deterministic and exactly replayable as a cumulative-window SQL
-    * closed form. Rows that tie on (ts, cents) are indistinguishable to
-    * the test, so intra-batch sort order between them cannot change the
-    * output multiset.
+    * closed form. NULL readings are dropped ([[readings]]).
     *
     * State is two longs per key. The per-batch, per-key row buffer is
     * sorted in the task (a micro-batch holds minutes of one key's data —
@@ -382,18 +407,14 @@ object Streams {
                   thresholdCents: Long, minHistory: Int = 5): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.selectExpr(s"CAST($key AS STRING) AS k",
-        s"unix_micros(CAST($ts AS TIMESTAMP)) AS us",
-        s"CAST(floor($value * 100) AS LONG) AS vc")
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
+    readings(events, ts, key, value)
       .flatMapGroupsWithState[AlertState, Alert](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (k: String, rows: Iterator[(String, Long, Long)],
          state: GroupState[AlertState]) =>
           var (n, sum) = state.getOption.getOrElse((0L, 0L))
           val out = Seq.newBuilder[Alert]
-          rows.toArray.sortBy(r => (r._2, r._3)).foreach { case (_, us, vc) =>
+          inFoldOrder(rows).foreach { case (_, us, vc) =>
             if (n >= minHistory &&
                 math.abs(vc * n - sum) > thresholdCents * n)
               out += Alert(k, us, vc, n, sum)
@@ -416,9 +437,7 @@ object Streams {
     * and stays silent until the register moves again — the VEE
     * stale-register check in real time.
     *
-    * Readings fold in (ts, cents) order per batch (the [[alertStream]]
-    * tie rule: tied rows are identical — same bucket — so order between
-    * them cannot change the alarm multiset), NULL readings are dropped
+    * Readings fold in [[inFoldOrder]] per batch, NULL readings are dropped
     * (a null is a gap, not a stuck reading), and the single-batch
     * AvailableNow run equals the batch gaps-and-islands closed form with
     * `rank-within-island == minLen` exactly (the oracle). State never
@@ -431,12 +450,7 @@ object Streams {
     require(minLen >= 2, s"minLen >= 2 (a single tick is never stuck): $minLen")
     val spark = events.sparkSession
     import spark.implicits._
-    events.where(s"$value IS NOT NULL")
-      .selectExpr(s"CAST($key AS STRING) AS k",
-        s"unix_micros(CAST($ts AS TIMESTAMP)) AS us",
-        s"CAST(floor($value * 100) AS LONG) AS vc")
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
+    readings(events, ts, key, value)
       .flatMapGroupsWithState[(Long, Long), FlatlineAlarm](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (k: String, rows: Iterator[(String, Long, Long)],
@@ -444,7 +458,7 @@ object Streams {
           // (lastBucket, runLen); Long.MinValue = "no prior reading"
           var (last, n) = state.getOption.getOrElse((Long.MinValue, 0L))
           val out = Seq.newBuilder[FlatlineAlarm]
-          rows.toArray.sortBy(r => (r._2, r._3)).foreach { case (_, us, vc) =>
+          inFoldOrder(rows).foreach { case (_, us, vc) =>
             val q = Math.floorDiv(vc, quantCents)
             if (q == last && n > 0) n += 1 else { last = q; n = 1L }
             if (n == minLen) out += FlatlineAlarm(k, us, q, n)
@@ -473,8 +487,8 @@ object Streams {
     * the crossing reading closes the previous month's last hour into its
     * own cycle. Peaks are STRICT improvements over max(0, closed hours
     * so far): a cycle of net-export (negative) hours never alarms.
-    * Readings fold in (ts, cents) order per batch (the [[alertStream]]
-    * tie rule); NULL readings are dropped; a cross-batch reading OLDER
+    * Readings fold in [[inFoldOrder]] per batch; NULL readings are
+    * dropped; a cross-batch reading OLDER
     * than the open hour is dropped too (watermark-free stream — zero
     * declared late-data tolerance; folding it would close the open hour
     * on a partial sum and corrupt the ratchet); hour/month boundaries are
@@ -492,12 +506,7 @@ object Streams {
     def monthOf(hourUs: Long): java.time.LocalDate =
       java.time.Instant.ofEpochSecond(Math.floorDiv(hourUs, 1000000L))
         .atOffset(java.time.ZoneOffset.UTC).toLocalDate.withDayOfMonth(1)
-    events.where(s"$value IS NOT NULL")
-      .selectExpr(s"CAST($key AS STRING) AS k",
-        s"unix_micros(CAST($ts AS TIMESTAMP)) AS us",
-        s"CAST(floor($value * 100) AS LONG) AS vc")
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
+    readings(events, ts, key, value)
       .flatMapGroupsWithState[(Long, Long, Long), DemandPeak](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (k: String, rows: Iterator[(String, Long, Long)],
@@ -506,7 +515,7 @@ object Streams {
           var (curHour, curSum, maxSoFar) =
             state.getOption.getOrElse((Long.MinValue, 0L, 0L))
           val out = Seq.newBuilder[DemandPeak]
-          rows.toArray.sortBy(r => (r._2, r._3)).foreach { case (_, us, vc) =>
+          inFoldOrder(rows).foreach { case (_, us, vc) =>
             val h = us - Math.floorMod(us, HourUs)
             if (curHour == Long.MinValue) { curHour = h; curSum = vc }
             else if (h == curHour) curSum += vc
@@ -556,11 +565,11 @@ object Streams {
     * is a downstream dedup concern, not state semantics. Keys without
     * calibration pass silently (no baseline — no alarm; the quarantine
     * convention). Slack is the batch operator's k = mad div 2. Readings
-    * fold in (ts, cents) order per batch (the [[alertStream]] tie rule:
-    * tied rows are identical, so order between them can't change the
-    * output multiset). State never ages: su drifts by ±(reading − mu ∓ k)
-    * per event — restart the accumulation window (new checkpoint) when a
-    * shift is acted on, which CUSUM practice wants anyway. */
+    * fold in [[inFoldOrder]] per batch; NULL readings are dropped, as the
+    * batch operator drops them. State never ages: su drifts by
+    * ±(reading − mu ∓ k) per event — restart the accumulation window (new
+    * checkpoint) when a shift is acted on, which CUSUM practice wants
+    * anyway. */
   def cusumStream(events: DataFrame, ts: String, key: String, value: String,
                   calibration: Map[String, (Long, Long)],
                   hMult: Int = 3): DataFrame = {
@@ -568,11 +577,7 @@ object Streams {
     val spark = events.sparkSession
     import spark.implicits._
     val cal = calibration // stable reference for the closure
-    events.selectExpr(s"CAST($key AS STRING) AS k",
-        s"unix_micros(CAST($ts AS TIMESTAMP)) AS us",
-        s"CAST(floor($value * 100) AS LONG) AS vc")
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
+    readings(events, ts, key, value)
       .flatMapGroupsWithState[CusumState, CusumAlarm](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (k: String, rows: Iterator[(String, Long, Long)],
@@ -585,7 +590,7 @@ object Streams {
               var (su, minSu, sd, maxSd) =
                 state.getOption.getOrElse((0L, 0L, 0L, 0L))
               val out = Seq.newBuilder[CusumAlarm]
-              rows.toArray.sortBy(r => (r._2, r._3)).foreach {
+              inFoldOrder(rows).foreach {
                 case (_, us, vc) =>
                   su += vc - mu - slack
                   sd += vc - mu + slack

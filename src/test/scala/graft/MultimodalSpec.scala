@@ -1395,7 +1395,8 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.MediaRecord(9L, "image", D.syntheticGif87(9L)),
       Multimodal.MediaRecord(10L, "weird", D.syntheticPng(10L)))
     val media = records.toDF()
-    val out = Multimodal.extractFeaturesQuarantine(media)
+    val out = Multimodal.extractFeatures(media, D.media,
+        Multimodal.BadPayload.Quarantine)
       .orderBy("media_id").collect()
     out.length shouldBe 11
     def at(i: Int) = (out(i).getString(3), out(i).getBoolean(4),
@@ -1433,7 +1434,8 @@ class MultimodalSpec extends SparkSpec {
     val mixed = healthy ++ Seq(
       Multimodal.MediaRecord(2L, "video", D.syntheticGif87(2L).take(24)),
       Multimodal.MediaRecord(3L, "video", webpBytes))
-    val out = Multimodal.sampleFramesQuarantine(mixed.toDF(), everyN = 2)
+    val out = Multimodal.sampleFrames(mixed.toDF(), everyN = 2,
+        bad = Multimodal.BadPayload.Quarantine)
       .orderBy("media_id", "frame_ix").collect()
     out.length shouldBe 6 // 2 healthy x 2 sampled frames + 2 quarantine
     val loud = Multimodal.sampleFrames(healthy.toDF(), everyN = 2)
@@ -1458,8 +1460,8 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.MediaRecord(1L, "audio", D.syntheticWav(1L, channels = 2)))
     val mixed = healthy :+
       Multimodal.MediaRecord(2L, "audio", D.syntheticWav(2L).take(20))
-    val out = Multimodal.sampleAudioFramesQuarantine(
-        mixed.toDF(), frameLen = 16)
+    val out = Multimodal.sampleAudioFrames(
+        mixed.toDF(), frameLen = 16, bad = Multimodal.BadPayload.Quarantine)
       .orderBy("media_id", "frame_ix").collect()
     val loud = Multimodal.sampleAudioFrames(healthy.toDF(), frameLen = 16)
       .orderBy("media_id", "frame_ix").collect()
@@ -1482,7 +1484,8 @@ class MultimodalSpec extends SparkSpec {
       Multimodal.MediaRecord(0L, "image", D.syntheticPng(0L, channels = 3)),
       Multimodal.MediaRecord(1L, "image", webpBytes),
       Multimodal.MediaRecord(2L, "audio", D.syntheticWav(2L)))
-    val out = Multimodal.resizeImagesQuarantine(mixed.toDF(), 3, 3)
+    val out = Multimodal.resizeImages(mixed.toDF(), 3, 3,
+        bad = Multimodal.BadPayload.Quarantine)
       .orderBy("media_id").collect()
     out(0).getBoolean(3) shouldBe true
     val resized = out(0).getAs[Array[Byte]](5)
@@ -1493,5 +1496,41 @@ class MultimodalSpec extends SparkSpec {
     out(1).getAs[Array[Byte]](5).toSeq shouldBe webpBytes.toSeq // kept
     out(2).getBoolean(3) shouldBe true // non-image passthrough
     out(2).getAs[Array[Byte]](5).toSeq shouldBe mixed(2).payload.toSeq
+  }
+
+  test("sampleFrames: the canvas view under Quarantine — healthy rows " +
+    "equal Fail's canvas rows; a truncated GIF and a WebP quarantine") {
+    val D = Multimodal.Decoders
+    def anim(id: Long) = D.gif89Anim(4, 4, Seq(
+      D.GifPatch(0, 0, 4, 4, Array.tabulate(16)(i => ((id + i) % 4).toInt)),
+      D.GifPatch(1, 1, 2, 2, Array.tabulate(4)(i => ((id * 3 + i) % 4).toInt),
+        transparent = Some(1), disposal = 2),
+      D.GifPatch(2, 2, 2, 2, Array.tabulate(4)(i => ((id + 2 * i) % 4).toInt))))
+    val healthy = Seq(0L, 1L).map(id =>
+      Multimodal.MediaRecord(id, "video", anim(id)))
+    val mixed = healthy ++ Seq(
+      Multimodal.MediaRecord(2L, "video", anim(2L).take(24)),
+      Multimodal.MediaRecord(3L, "video", webpBytes))
+    val out = Multimodal.sampleFrames(mixed.toDF(),
+        frames = D.gifCanvasFrames, bad = Multimodal.BadPayload.Quarantine)
+      .orderBy("media_id", "frame_ix").collect()
+    val loud = Multimodal.sampleFrames(healthy.toDF(),
+        frames = D.gifCanvasFrames)
+      .orderBy("media_id", "frame_ix").collect()
+    loud.length shouldBe 6 // 2 healthy x 3 canvas frames
+    out.length shouldBe 8  // + 2 quarantine rows
+    // canvas frames are RGBA, so every healthy row carries mean_a
+    out.take(6).map(r => (r.getLong(0), r.getBoolean(3), r.getLong(5),
+      r.getInt(6), r.getInt(7), r.getDouble(8), r.getDouble(9),
+      r.getDouble(10), r.getDouble(11))) shouldBe
+      loud.map(r => (r.getLong(0), true, r.getLong(2), r.getInt(3),
+        r.getInt(4), r.getDouble(5), r.getDouble(6), r.getDouble(7),
+        r.getDouble(8)))
+    (out(6).getLong(0), out(6).getString(2), out(6).getBoolean(3),
+      out(6).getString(4)) shouldBe ((2L, "gif", false, "truncated"))
+    (out(7).getLong(0), out(7).getString(2), out(7).getBoolean(3),
+      out(7).getString(4)) shouldBe ((3L, "webp", false,
+      "unsupported_container"))
+    (5 until 12).foreach(i => out(6).isNullAt(i) shouldBe true)
   }
 }

@@ -737,6 +737,51 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** One MemoryStream batch of (ts, k, v) readings through `stream`: the
+    * memory sink's rows, sorted. */
+  private def oneBatch(name: String,
+                       rows: Seq[(Timestamp, String, Option[Double])])(
+      stream: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Seq[String] = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Timestamp, String, Option[Double])]
+    val q = stream(mem.toDF().toDF("ts", "k", "v")).writeStream
+      .format("memory").queryName(name)
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
+    try {
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+      spark.sql(s"SELECT * FROM $name").collect().map(_.toString).toSeq.sorted
+    } finally q.stop()
+  }
+
+  private val withNull = Seq(
+    (t("2024-01-01 10:00:00"), "a", Some(10.0)),
+    (t("2024-01-01 10:01:00"), "a", Some(10.0)),
+    (t("2024-01-01 10:01:30"), "a", None), // the gap
+    (t("2024-01-01 10:02:00"), "a", Some(10.0)),
+    (t("2024-01-01 10:03:00"), "a", Some(25.0)))
+
+  test("alertStream: a NULL reading is a gap — the batch emits exactly " +
+    "what it emits without it") {
+    def run(name: String, rows: Seq[(Timestamp, String, Option[Double])]) =
+      oneBatch(name, rows)(Streams.alertStream(_, "ts", "k", "v",
+        thresholdCents = 1000L, minHistory = 3))
+    val clean = run("alerts_clean", withNull.filter(_._3.isDefined))
+    clean should not be empty
+    run("alerts_null", withNull) shouldBe clean
+  }
+
+  test("cusumStream: a NULL reading is a gap — the batch emits exactly " +
+    "what it emits without it") {
+    def run(name: String, rows: Seq[(Timestamp, String, Option[Double])]) =
+      oneBatch(name, rows)(Streams.cusumStream(_, "ts", "k", "v",
+        Map("a" -> ((1000L, 200L))), hMult = 2))
+    val clean = run("cusum_clean", withNull.filter(_._3.isDefined))
+    clean should not be empty
+    run("cusum_null", withNull) shouldBe clean
+  }
+
   test("resumeTracker: per-key watermark + hour coverage, day rollover resets") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, Timestamp)]
