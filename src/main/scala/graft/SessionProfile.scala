@@ -48,6 +48,13 @@ import org.apache.spark.sql.SparkSession
   *    rejects; read as a long, `graft.engine.Tables` truncates it to micros.
   *    Set once here rather than by a `conf.set` on every `events` read; it
   *    changes nothing for files without NANOS columns.
+  *  - `spark.sql.legacy.javaCharsets=true` — Spark 4 reads CSV only in a
+  *    short charset allowlist (UTF-8/16/32, ISO-8859-1, US-ASCII) unless
+  *    this is on, and the S1 charset fallback
+  *    ([[graft.engine.Ingest.csvWithCharsetFallback]]) reads cp949/euc-kr
+  *    collector files. Set once here rather than by a session-global
+  *    `conf.set` on the first such read; the flag only re-allows JVM
+  *    charsets, so allowlist reads are unchanged.
   *
   * The two FS settings only change the `file:` scheme: HDFS, S3 and ABFS paths resolve
   * to their own FileSystems and keep Spark's FileContext checkpoint
@@ -69,6 +76,7 @@ object SessionProfile {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.engine.LocalCheckpointFileManager].getName)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.legacy.javaCharsets", "true")
 
   /** Standard local session at `cpus` cores: master + shuffle parallelism
     * from the ONE knob (the driver also benches at a lower core count to

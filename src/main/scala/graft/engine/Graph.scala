@@ -43,12 +43,6 @@ object Graph {
   /** Unit rank mass: 1e9 ppb. */
   val RankUnit: Long = 1000000000L
 
-  /** See [[NearDup.checkpointPartitioned]] — eager localCheckpoint whose
-    * LogicalRDD reports its real hash partitioning (AQE-off
-    * materialization), so the iterative loops reuse it exchange-free. */
-  private def checkpointPartitioned(df: DataFrame): DataFrame =
-    NearDup.checkpointPartitioned(df)
-
   /** Fixed-iteration damped PageRank. Default is the sink-leak variant:
     * mass flowing into dangling nodes is not redistributed — the standard
     * simplification when ranks are used as a relative quality signal, and
@@ -128,18 +122,20 @@ object Graph {
       .select(src.cast("string").as("src"), dst.cast("string").as("dst"))
       .na.drop().repartition(col("src")).distinct()
     val outdeg = eP.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eo = checkpointPartitioned(eP.join(outdeg.hint("shuffle_hash"), "src"))
+    val eo = NearDup.checkpointPartitioned(
+      eP.join(outdeg.hint("shuffle_hash"), "src"))
     // node set derives from the MATERIALIZED edge table (not the lazy edge
     // plan — that re-ran the whole scan+join+dedup a second time), and is
     // itself eagerly checkpointed so its hash(node) partitioning survives
     // into every round's damped join.
-    val nodes = checkpointPartitioned(eo.select(col("src").as("node"))
-      .union(eo.select(col("dst").as("node"))).distinct())
+    val nodes = NearDup.checkpointPartitioned(
+      eo.select(col("src").as("node"))
+        .union(eo.select(col("dst").as("node"))).distinct())
     // dangling = appears only as dst (node-sized; materialized only when
     // used; the right side reads the checkpointed edge blocks)
     val danglingNodes =
       if (redistributeDangling)
-        Some(checkpointPartitioned(
+        Some(NearDup.checkpointPartitioned(
           nodes.join(eo.select(col("src").as("node")),
             Seq("node"), "left_anti")))
       else None
@@ -218,7 +214,7 @@ object Graph {
         val wantCkpt = deltaL1Out != null ||
           (redistributeDangling && it < iters) ||
           (iters > 3 && it < iters && it % checkpointEvery == 0)
-        if (wantCkpt) ranks = checkpointPartitioned(ranks)
+        if (wantCkpt) ranks = NearDup.checkpointPartitioned(ranks)
         if (deltaL1Out != null) {
           val delta = prev match {
             case None => ranks
@@ -321,15 +317,15 @@ object Graph {
     // partitioning only earns its own materialized copy when reused (auth
     // rounds 2..iters, i.e. iters > 2); at iters <= 2 the single auth join
     // just reshuffles the checkpointed blocks.
-    val eByDst = checkpointPartitioned(edges
+    val eByDst = NearDup.checkpointPartitioned(edges
       .select(src.cast("string").as("src"), dst.cast("string").as("dst"))
       .na.drop().repartition(col("dst")).distinct())
     val reuseSrc = iters > 2
     val eBySrc =
       if (reuseSrc)
-        checkpointPartitioned(eByDst.repartition(col("src")))
+        NearDup.checkpointPartitioned(eByDst.repartition(col("src")))
       else eByDst
-    val nodes = checkpointPartitioned(
+    val nodes = NearDup.checkpointPartitioned(
       eByDst.select(col("src").as("node"))
         .union(eByDst.select(col("dst").as("node"))).distinct())
     // every half-step's raw frame is eagerly checkpointed BEFORE the
@@ -360,7 +356,7 @@ object Graph {
           "the graph, or raise maxDegree deliberately after checking the " +
           "bound (SCALE.md).")
       def rescale(raw0: DataFrame): DataFrame = {
-        val raw = checkpointPartitioned(raw0)
+        val raw = NearDup.checkpointPartitioned(raw0)
         halfSteps += raw
         // rescale so the argmax lands at ~R: raw div (max div R), floor at
         // every step (both engines; all values non-negative)

@@ -66,18 +66,10 @@ object Ingest {
   def csvWithCharsetFallback(spark: SparkSession, path: String,
                              charsets: Seq[String] = defaultCharsets): DataFrame = {
     val cs = detectCharset(path, charsets)
-    // Spark 4 restricts CSV charsets to a short allowlist unless the legacy
-    // flag is on — the multi-encoding fallback is the whole point here (S1).
-    // Set ONLY when the winning charset needs it (UTF-8 and friends don't),
-    // so UTF-8-only sessions are untouched. Deliberately NOT restored after:
-    // the returned DataFrame is lazy and its scan re-reads this conf at every
-    // action, so a save/restore here would make later executions fail.
-    // Callers reading non-allowlist charsets must keep it set for the
-    // lifetime of those scans. The flag only re-allows JVM charsets.
-    val nativeAllowlist = Set("US-ASCII", "ISO-8859-1", "UTF-8",
-      "UTF-16BE", "UTF-16LE", "UTF-16", "UTF-32")
-    if (!nativeAllowlist.contains(cs.toUpperCase(java.util.Locale.ROOT)))
-      spark.conf.set("spark.sql.legacy.javaCharsets", "true")
+    // Spark 4 restricts CSV charsets to a short allowlist (UTF-8, UTF-16/32,
+    // ISO-8859-1, US-ASCII) unless `spark.sql.legacy.javaCharsets` is on;
+    // the fallback's cp949/euc-kr need it, so the session must come from
+    // `graft.SessionProfile`, which sets it for every session.
     val df = spark.read
       .option("header", "true")
       .option("charset", cs)

@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   *    hyperplanes; candidates share a signature band; exact cosine reranks
   *    within buckets. Corpus is touched once to sign, then only bucket
   *    collisions are scored — no corpus×query cross join.
+  *  - [[annTopK]] — search over a pre-built inverted-list / PQ index: the
+  *    scorer ([[AnnScore]]: exact cosine or PQ-ADC) and the pruning
+  *    ([[AnnProbe]]: every row or the IVF probe lists) are arguments of one
+  *    probe-score-rank body ([[annTopKPartitioned]] for the on-disk index).
   */
 object Similarity {
 
@@ -51,16 +55,18 @@ object Similarity {
       .toAggregateExpression())
   }
 
-  /** (qid, cid, cos) candidates → per-query top-k as (qid, cid, cos, rn).
+  /** (qid, cid, <score>) candidates → per-query top-k as (qid, cid,
+    * <score>, rn); `score` names the score column (`cos`, or `adc`).
     * Bounded partial aggregation: each task reduces to ≤ k entries per query
     * BEFORE the shuffle, so no single task ever assembles a query's full
     * candidate set (the window-rerank hotspot at corpus scale). Bit-exact vs
     * `row_number().over(orderBy(cos.desc, cid.asc))` — same tie-breaks. */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+  private def topKPerQuery(scored: DataFrame, k: Int,
+                           score: String = "cos"): DataFrame =
     scored.groupBy(col("qid"))
-      .agg(boundedTopK(col("cos"), col("cid"), k).as("_tk"))
+      .agg(boundedTopK(col(score), col("cid"), k).as("_tk"))
       .select(col("qid"), posexplode(col("_tk")).as(Seq("_p", "_s")))
-      .select(col("qid"), col("_s.id").as("cid"), col("_s.score").as("cos"),
+      .select(col("qid"), col("_s.id").as("cid"), col("_s.score").as(score),
         (col("_p") + 1).cast("long").as("rn"))
 
   /** Exact top-k by cosine for each query vector (query ids from the same
@@ -176,8 +182,8 @@ object Similarity {
     *
     * Fails loudly (rather than silently exploding the banded shuffle) when
     * the derived bands exceed 4096 — at that point SRP at this tau/recall
-    * costs more than the IVF/PQ path ([[ivfCosineTopKWith]] /
-    * [[pqAdcTopKWith]]); raise tau or lower targetRecall deliberately. */
+    * costs more than the IVF/PQ path ([[annTopK]]); raise tau or lower
+    * targetRecall deliberately. */
   def srpGeometry(n: Long, tau: Double = 0.4, targetRecall: Double = 0.92,
                   rowsPerBucket: Int = 128): SrpGeometry = {
     require(n > 0, s"srpGeometry: corpus size must be positive: $n")
@@ -195,7 +201,7 @@ object Similarity {
       s"srpGeometry: n=$n at tau=$tau needs $bands bands (> 4096) for " +
         s"recall $targetRecall — SRP-LSH banding would cost more than the " +
         "IVF/PQ ANN path at this scale; raise tau, lower targetRecall, or " +
-        "use ivfCosineTopKWith/pqAdcTopKWith (SCALE.md).")
+        "use the IVF/PQ search annTopK (SCALE.md).")
     SrpGeometry(math.max(256, ((bands * r + 63) / 64) * 64), bands, r)
   }
 
@@ -609,36 +615,127 @@ object Similarity {
     emb.select(id.as("cid"), asDouble(vec).as("cv"))
       .withColumn("cl", element_at(nearestCentroids(col("cv"), cents, 1), 1))
 
-  /** IVF-Flat ANN search with a pre-trained quantizer: each query probes its
-    * `nprobe` nearest inverted lists; candidates are the corpus rows in
-    * those lists (broadcast join on the list id — the corpus never
-    * shuffles); exact cosine reranks to top-k. Scanned fraction ≈
-    * nprobe/nlist of the corpus per query — at scale, sink the assignment
-    * partitioned by `cl` and list pruning becomes partition pruning.
+  /** How an ANN candidate scores against its query — the distance half of
+    * [[annTopK]]. */
+  sealed trait AnnScore
+  object AnnScore {
+    /** Exact cosine: the index carries the vectors (`cv`, as built by
+      * [[ivfAssign]]); the score is `round(cosine(cv, qv), 6)` in column
+      * `cos`. */
+    case object Exact extends AnnScore
+
+    /** PQ asymmetric distance: the index carries PQ `codes` ([[pqEncode]],
+      * [[ivfPqIndex]]); each query computes its m×k inner-product table once
+      * ([[pqAdcTableCol]]) and a candidate costs m table lookups
+      * ([[pqAdcScoreCol]]) — no decode, and the scan reads m ints per row
+      * instead of dim floats. The score, rounded to 6 dp, is column `adc`:
+      * it approximates cosine (queries normalized, codebooks trained
+      * normalized) with error bounded by the per-subspace reconstruction
+      * error. `normalizeQueries` must match how the codebooks were built
+      * (false for externally fixed raw codebooks, e.g. the SQL-expressible
+      * oracle model). */
+    final case class Adc(codebooks: Array[Array[Array[Double]]],
+                         normalizeQueries: Boolean = true) extends AnnScore
+  }
+
+  /** Which index rows a query scores — the pruning half of [[annTopK]]. */
+  sealed trait AnnProbe
+  object AnnProbe {
+    /** Every index row: a cross join against the broadcast query batch
+      * (flat PQ; exact search goes through [[cosineTopK]]). */
+    case object All extends AnnProbe
+
+    /** The `nprobe` inverted lists nearest each query (the index carries
+      * its list id `cl`, as [[ivfAssign]] / [[ivfPqIndex]] build it): the
+      * queries explode to one row per probed list and broadcast-join the
+      * index on `cl`, so the index never shuffles and ~nprobe/nlist of it
+      * is touched. `nprobe = cents.length` probes every list and loses no
+      * candidate. */
+    final case class Ivf(cents: Array[Array[Double]], nprobe: Int = 4)
+      extends AnnProbe
+  }
+
+  /** ANN top-k over a pre-built index: `queries` is (qid, qv:
+    * array<double>); the output is (qid, cid, cos|adc, rn), best first,
+    * ties to the lower cid, a query never matching itself — the shape of
+    * [[cosineTopK]]. Train the models once ([[ivfTrainCentroids]],
+    * [[pqTrain]]), persist the index ([[ivfAssign]], [[pqEncode]],
+    * [[ivfPqIndex]]) and search many times; at scale, sink the index
+    * `partitionBy("cl")` and search it with [[annTopKPartitioned]].
     *
-    * Output matches [[cosineTopK]]: (qid, cid, cos, rn). Recall < 1 by
-    * design (a true neighbor in an unprobed list is missed) and — unlike
-    * [[lshCosineTopK]] — DEPENDS ON CORPUS CLUSTERABILITY: the quantizer
-    * only prunes where direction predicts neighborhood. On a clusterable
-    * corpus (the normal case for trained embeddings), recall ≥ 0.9 at
-    * nprobe/nlist = 4/16 (SimilaritySpec, 20-cluster fixture, measured
-    * 1.0). On an ISOTROPIC corpus, top-k reaches into background
-    * distances and recall degrades to ≈ the scanned fraction
-    * nprobe/nlist (measured on the synthetic testdata: 0.64 at 4/16,
-    * 0.88 at 8/16) — there, prefer [[lshCosineTopK]], whose
-    * Hamming-ranked window handles background-distance neighbors.
-    * SimilaritySpec pins both regimes. */
-  def ivfCosineTopKWith(indexed: DataFrame, cents: Array[Array[Double]],
-                        queryIds: Seq[Long], k: Int,
-                        nprobe: Int = 4): DataFrame = {
-    val queries = indexed.filter(col("cid").isin(queryIds: _*))
-      .select(col("cid").as("qid"), col("cv").as("qv"),
-        explode(nearestCentroids(col("cv"), cents, nprobe)).as("cl"))
-    val scored = indexed.join(broadcast(queries), Seq("cl"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        round(cosine(col("cv"), col("qv")), 6).as("cos"))
-    topKPerQuery(scored, k)
+    * Recall compounds the two arguments' losses (none under `Exact` with
+    * `All`):
+    *  - `AnnProbe.Ivf` misses a true neighbor in an unprobed list, and so
+    *    DEPENDS ON CORPUS CLUSTERABILITY — unlike [[lshCosineTopK]], the
+    *    quantizer only prunes where direction predicts neighborhood. On a
+    *    clusterable corpus (the normal case for trained embeddings) recall
+    *    is ≥ 0.9 at nprobe/nlist = 4/16 (SimilaritySpec, 20-cluster
+    *    fixture, measured 1.0). On an ISOTROPIC corpus top-k reaches into
+    *    background distances and recall degrades to ≈ the scanned
+    *    fraction (measured on the synthetic testdata: 0.64 at 4/16, 0.88
+    *    at 8/16) — there, prefer [[lshCosineTopK]], whose Hamming-ranked
+    *    window handles background-distance neighbors.
+    *  - `AnnScore.Adc` ranks by the quantized score; its recall floor on
+    *    the clusterable fixture is pinned in SimilaritySpec.
+    * Probing every list is lossless: `Ivf(cents, cents.length)` returns
+    * exactly the rows of `All` (and, under `Exact`, of [[cosineTopK]]). */
+  def annTopK(index: DataFrame, queries: DataFrame, k: Int,
+              score: AnnScore, probe: AnnProbe): DataFrame = probe match {
+    case AnnProbe.All => probeScoreRank(index, queries, k, score, None)
+    case AnnProbe.Ivf(cents, nprobe) =>
+      probeScoreRank(index, queries, k, score,
+        Some(explode(nearestCentroids(col("qv"), cents, nprobe)).as("cl")))
+  }
+
+  /** [[annTopK]] over an ON-DISK index sunk with `partitionBy("cl")` — the
+    * 100 TB layout. The query batch is driver-held (model-scale), so its
+    * probe lists are computed up front ([[probeLists]] — same scoring and
+    * tie-break as the executor expression) and the reader gets a LITERAL
+    * `cl IN (...)` predicate: list pruning IS partition pruning. The scan
+    * plans only the probed lists' directories
+    * (`FileSourceScanExec.selectedPartitions` == union of probe lists —
+    * asserted in SimilaritySpec); unprobed lists are never listed, opened,
+    * or read. Results are identical to [[annTopK]] with the same arguments
+    * on the same index (spec'd for both scores). */
+  def annTopKPartitioned(spark: org.apache.spark.sql.SparkSession,
+                         indexPath: String,
+                         queries: Seq[(Long, Array[Double])], k: Int,
+                         score: AnnScore, probe: AnnProbe.Ivf): DataFrame = {
+    import spark.implicits._
+    val probed = queries.map { case (qid, qv) =>
+      (qid, qv, probeLists(probe.cents, qv, probe.nprobe))
+    }
+    val lists = probed.flatMap(_._3).distinct.sorted
+    val qdf = probed
+      .flatMap { case (qid, qv, ls) => ls.map(cl => (qid, qv, cl)) }
+      .toDF("qid", "qv", "cl")
+    val index = spark.read.parquet(indexPath)
+      .filter(col("cl").isin(lists: _*)) // static partition pruning
+    probeScoreRank(index, qdf, k, score, Some(col("cl")))
+  }
+
+  /** The one search body behind [[annTopK]] and [[annTopKPartitioned]]:
+    * the query side (qid, score operand[, cl]) rides a broadcast —
+    * joined to the index on `cl` when `lists` names the probed lists,
+    * crossed with it otherwise — then every candidate scores, self-matches
+    * drop, and the bounded top-k keeps k per query. */
+  private def probeScoreRank(index: DataFrame, queries: DataFrame, k: Int,
+                             score: AnnScore,
+                             lists: Option[Column]): DataFrame = {
+    val (operand, scoreCol, name) = score match {
+      case AnnScore.Exact =>
+        (col("qv"), cosine(col("cv"), col("qv")), "cos")
+      case AnnScore.Adc(codebooks, normalizeQueries) =>
+        val qv = if (normalizeQueries) normalized(col("qv")) else col("qv")
+        (pqAdcTableCol(qv, codebooks).as("tbl"),
+          pqAdcScoreCol(col("codes"), col("tbl")), "adc")
+    }
+    val side = broadcast(queries.select(Seq(col("qid"), operand) ++ lists: _*))
+    val candidates =
+      if (lists.isEmpty) index.crossJoin(side) else index.join(side, Seq("cl"))
+    val scored = candidates.filter(col("cid") =!= col("qid"))
+      .select(col("qid"), col("cid"), round(scoreCol, 6).as(name))
+    topKPerQuery(scored, k, name)
   }
 
   /** Driver-side probe-list computation for ONE query vector — same scoring
@@ -668,55 +765,13 @@ object Similarity {
     }
   }
 
-  /** IVF search over an ON-DISK index sunk with `partitionBy("cl")` — the
-    * 100 TB layout promised in [[ivfAssign]]'s doc, demonstrated: the query
-    * set is driver-held (query batches are model-scale), so its probe lists
-    * are computed up front and the reader gets a LITERAL `cl IN (...)`
-    * predicate — list pruning IS partition pruning. The scan plans only the
-    * probed lists' directories (`FileSourceScanExec.selectedPartitions` ==
-    * union of probe lists — asserted in SimilaritySpec); unprobed lists are
-    * never listed, opened, or read. Rerank is the same bounded top-k
-    * aggregation as the in-memory path; results are identical to
-    * [[ivfCosineTopKWith]] on the same index. */
-  def ivfCosineTopKPartitioned(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String,
-                               cents: Array[Array[Double]],
-                               queries: Seq[(Long, Array[Double])], k: Int,
-                               nprobe: Int = 4): DataFrame = {
-    import spark.implicits._
-    val probed = queries.map { case (qid, qv) =>
-      (qid, qv, probeLists(cents, qv, nprobe))
-    }
-    val lists = probed.flatMap(_._3).distinct.sorted
-    val qdf = probed
-      .flatMap { case (qid, qv, ls) => ls.map(cl => (qid, qv, cl)) }
-      .toDF("qid", "qv", "cl")
-    val scored = spark.read.parquet(indexPath)
-      .filter(col("cl").isin(lists: _*)) // static partition pruning
-      .join(broadcast(qdf), Seq("cl"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        round(cosine(col("cv"), col("qv")), 6).as("cos"))
-    topKPerQuery(scored, k)
-  }
-
-  /** Train + index + search in one call — the small-corpus convenience
-    * entry; at scale, train once ([[ivfTrainCentroids]]), persist the
-    * assignment ([[ivfAssign]]), and search many times
-    * ([[ivfCosineTopKWith]]). */
-  def ivfCosineTopK(emb: DataFrame, id: Column, vec: Column,
-                    queryIds: Seq[Long], k: Int, nlist: Int = 16,
-                    nprobe: Int = 4, iters: Int = 5): DataFrame = {
-    val cents = ivfTrainCentroids(emb, id, vec, nlist, iters)
-    ivfCosineTopKWith(ivfAssign(emb, id, vec, cents), cents, queryIds, k,
-      nprobe)
-  }
-
   /** SemDeDup-style semantic dedup over a PRE-BUILT IVF assignment
-    * (cid, cv, cl): a row is dropped iff a LOWER-id row in the SAME
-    * inverted list is cosine >= `tau` to it — cluster-then-dedup (Abbas
-    * et al. 2023, arXiv:2303.09540) with a deterministic keep rule (min
-    * id per similarity neighborhood), no iteration.
+    * (cid, cv, cl) — train once ([[ivfTrainCentroids]]), persist the
+    * assignment ([[ivfAssign]]), dedup many: a row is dropped iff a
+    * LOWER-id row in the SAME inverted list is cosine >= `tau` to it —
+    * cluster-then-dedup (Abbas et al. 2023, arXiv:2303.09540) with a
+    * deterministic keep rule (min id per similarity neighborhood), no
+    * iteration.
     *
     * Scale shape: the only shuffle is the within-list self-join on `cl`
     * — quadratic INSIDE a list but never across lists, so the quantizer's
@@ -726,15 +781,15 @@ object Similarity {
     * `partitionBy("cl")` so each list dedups from its own partition
     * ([[ivfAssign]] docs). Unlike the LSH/minhash paths this trades
     * recall for the quantizer's view of geometry: a near-dup pair split
-    * across two lists is missed (same regime caveats as
-    * [[ivfCosineTopKWith]] — SimilaritySpec pins twin-collapse on a
-    * clusterable corpus).
+    * across two lists is missed (same regime caveats as [[annTopK]] under
+    * `AnnProbe.Ivf` — SimilaritySpec pins twin-collapse on a clusterable
+    * corpus).
     *
     * Zero-norm vectors have NaN cosine to everything: never dropped,
     * never drop others — the NaN guard is explicit because Spark orders
     * NaN ABOVE every double, so a bare `cos >= tau` would drop them.
     * Output: surviving (cid, cl). */
-  def semDedupWith(indexed: DataFrame, tau: Double): DataFrame = {
+  def semDedup(indexed: DataFrame, tau: Double): DataFrame = {
     val left = indexed.select(col("cl"), col("cid"), col("cv"))
     val right = indexed.select(col("cl"), col("cid").as("cid2"),
       col("cv").as("cv2"))
@@ -744,14 +799,6 @@ object Similarity {
       .select(col("cid")).distinct()
     indexed.join(dominated, Seq("cid"), "left_anti")
       .select(col("cid"), col("cl"))
-  }
-
-  /** Train + assign + dedup in one call — small-corpus convenience; at
-    * scale train once, persist the assignment, [[semDedupWith]] many. */
-  def semDedup(emb: DataFrame, id: Column, vec: Column, tau: Double,
-               nlist: Int = 16, iters: Int = 5): DataFrame = {
-    val cents = ivfTrainCentroids(emb, id, vec, nlist, iters)
-    semDedupWith(ivfAssign(emb, id, vec, cents), tau)
   }
 
   /** Symmetric per-vector int8 quantization of an embedding column — the
@@ -1010,48 +1057,12 @@ object Similarity {
     emb.select(id.as("cid"), pqEncodeCol(nv, codebooks).as("codes"))
   }
 
-  /** PQ-ADC ANN search over a pre-encoded corpus: each query computes its
-    * m×k inner-product table once ([[pqAdcTableCol]]), rides a broadcast,
-    * and every corpus candidate scores with m table lookups — no decode, no
-    * shuffle of the corpus, and the scan reads m ints per row instead of
-    * dim floats (the 100-TB point of PQ: the index is ~dim·8/m× smaller
-    * than the vectors). Output (qid, cid, adc, rn); `adc` approximates
-    * cosine (queries normalized, codebooks trained normalized) with
-    * quantization error bounded by the per-subspace reconstruction error —
-    * recall floor pinned in SimilaritySpec. Compose with [[ivfAssign]]
-    * (encode within lists, probe then ADC) for IVF-PQ. */
-  def pqCosineTopKWith(encoded: DataFrame, codebooks: Array[Array[Array[Double]]],
-                       emb: DataFrame, id: Column, vec: Column,
-                       queryIds: Seq[Long], k: Int,
-                       normalizeQueries: Boolean = true): DataFrame = {
-    val queries = emb.select(id.as("qid"), asDouble(vec).as("qv"))
-      .filter(col("qid").isin(queryIds: _*))
-      .select(col("qid"), pqAdcTableCol(
-        if (normalizeQueries) normalized(col("qv")) else col("qv"),
-        codebooks).as("tbl"))
-    val scored = encoded.crossJoin(broadcast(queries))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        round(pqAdcScoreCol(col("codes"), col("tbl")), 6).as("cos"))
-    topKPerQuery(scored, k).withColumnRenamed("cos", "adc")
-  }
-
-  /** Train + encode + search in one call (small-scale convenience; at scale
-    * train once, persist the encoded corpus, and call
-    * [[pqCosineTopKWith]]). */
-  def pqCosineTopK(emb: DataFrame, id: Column, vec: Column,
-                   queryIds: Seq[Long], k: Int, m: Int = 4,
-                   codesPerSub: Int = 16, iters: Int = 5): DataFrame = {
-    val cb = pqTrain(emb, id, vec, m, codesPerSub, iters)
-    pqCosineTopKWith(pqEncode(emb, id, vec, cb), cb, emb, id, vec, queryIds, k)
-  }
-
   /** The composed IVF-PQ index — (cid, cl, codes), ONE codegen'd map pass,
     * zero shuffle, and the original vectors are gone: per row an int list id
     * plus m small ints. This is the FAISS-style layout for corpus-scale ANN
     * (coarse quantizer prunes which rows are touched; PQ compresses what a
     * touched row costs). Sink it `partitionBy("cl")` and probe pruning
-    * becomes partition pruning exactly as in [[ivfCosineTopKPartitioned]]. */
+    * becomes partition pruning ([[annTopKPartitioned]]). */
   def ivfPqIndex(emb: DataFrame, id: Column, vec: Column,
                  cents: Array[Array[Double]],
                  codebooks: Array[Array[Array[Double]]]): DataFrame = {
@@ -1059,65 +1070,5 @@ object Similarity {
     emb.select(id.as("cid"),
       element_at(nearestCentroids(v, cents, 1), 1).as("cl"),
       pqEncodeCol(normalized(v), codebooks).as("codes"))
-  }
-
-  /** IVF-PQ search over an ON-DISK index sunk with `partitionBy("cl")` —
-    * the FAISS-style 100 TB layout [[ivfPqIndex]] promises, demonstrated
-    * end-to-end (the PQ twin of [[ivfCosineTopKPartitioned]]): the query
-    * batch is driver-held (model-scale), so probe lists are computed up
-    * front ([[probeLists]] — same scoring and tie-break as the executor
-    * expression) and the reader gets a LITERAL `cl IN (...)` predicate;
-    * list pruning IS partition pruning (unprobed lists are never listed,
-    * opened, or read — asserted on `selectedPartitions` in
-    * SimilaritySpec), and a touched row costs m ints + m table lookups
-    * instead of dim floats. Queries are L2-normalized for the ADC table
-    * exactly as in [[ivfPqTopKWith]]; results are identical to it on the
-    * same index (spec'd). Output (qid, cid, adc, rn). */
-  def ivfPqTopKPartitioned(spark: org.apache.spark.sql.SparkSession,
-                           indexPath: String,
-                           cents: Array[Array[Double]],
-                           codebooks: Array[Array[Array[Double]]],
-                           queries: Seq[(Long, Array[Double])], k: Int,
-                           nprobe: Int = 4): DataFrame = {
-    import spark.implicits._
-    val probed = queries.map { case (qid, qv) =>
-      (qid, qv, probeLists(cents, qv, nprobe))
-    }
-    val lists = probed.flatMap(_._3).distinct.sorted
-    val qdf = probed
-      .flatMap { case (qid, qv, ls) => ls.map(cl => (qid, qv, cl)) }
-      .toDF("qid", "qv", "cl")
-      .select(col("qid"),
-        pqAdcTableCol(normalized(col("qv")), codebooks).as("tbl"), col("cl"))
-    val scored = spark.read.parquet(indexPath)
-      .filter(col("cl").isin(lists: _*)) // static partition pruning
-      .join(broadcast(qdf), Seq("cl"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        round(pqAdcScoreCol(col("codes"), col("tbl")), 6).as("cos"))
-    topKPerQuery(scored, k).withColumnRenamed("cos", "adc")
-  }
-
-  /** IVF-PQ search: each query probes its `nprobe` nearest lists and
-    * ADC-scores ONLY the rows in them — candidate count is ~nprobe/nlist of
-    * the corpus, each costing m table lookups instead of a dim-float
-    * cosine. The query side (probe lists + ADC table) rides one broadcast;
-    * the index never shuffles. Output (qid, cid, adc, rn); recall compounds
-    * the IVF clusterability caveat ([[ivfCosineTopKWith]]) with PQ
-    * quantization error ([[pqCosineTopKWith]]) — both regimes spec'd. */
-  def ivfPqTopKWith(indexed: DataFrame, cents: Array[Array[Double]],
-                    codebooks: Array[Array[Array[Double]]],
-                    emb: DataFrame, id: Column, vec: Column,
-                    queryIds: Seq[Long], k: Int, nprobe: Int = 4): DataFrame = {
-    val queries = emb.select(id.as("qid"), asDouble(vec).as("qv"))
-      .filter(col("qid").isin(queryIds: _*))
-      .select(col("qid"),
-        pqAdcTableCol(normalized(col("qv")), codebooks).as("tbl"),
-        explode(nearestCentroids(col("qv"), cents, nprobe)).as("cl"))
-    val scored = indexed.join(broadcast(queries), Seq("cl"))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        round(pqAdcScoreCol(col("codes"), col("tbl")), 6).as("cos"))
-    topKPerQuery(scored, k).withColumnRenamed("cos", "adc")
   }
 }

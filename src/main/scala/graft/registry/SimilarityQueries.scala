@@ -91,6 +91,13 @@ private[graft] object SimilarityQueries {
                     AS cu
                 FROM e WHERE vec_id < 8)"""
 
+  /** The PQ searches' query batch, vec_id 0..2 as (qid, qv: array<double>)
+    * straight from the embeddings. */
+  private def embQueries(s: org.apache.spark.sql.SparkSession, d: String) =
+    embeddings(s, d).select(col("vec_id").as("qid"),
+        Similarity.asDouble(col("embedding")).as("qv"))
+      .filter(col("qid").isin(0L, 1L, 2L))
+
   val defs: Seq[QueryDef] = Seq(
     // ---- Training-data pipeline: similarity search ----
     // brute-force cosine top-k (exact baseline)
@@ -118,7 +125,10 @@ private[graft] object SimilarityQueries {
     // Times steady-state search over the once-per-dir index — see ivfIndex.
     QueryDef("q_ann_ivf_topk", (s, d) => {
       val (cents, assigned) = ivfIndex(s, d)
-      Similarity.ivfCosineTopKWith(assigned, cents, Seq(0L, 1L, 2L), 5)
+      val queries = assigned.filter(col("cid").isin(0L, 1L, 2L))
+        .select(col("cid").as("qid"), col("cv").as("qv"))
+      Similarity.annTopK(assigned, queries, 5, Similarity.AnnScore.Exact,
+        Similarity.AnnProbe.Ivf(cents))
     },
       RowsOnly("graft.SimilaritySpec")),
     // nearest-centroid assignment against a FIXED codebook (vec_id 0..7):
@@ -145,8 +155,8 @@ private[graft] object SimilarityQueries {
     // Times steady-state search over the once-per-dir encoded corpus.
     QueryDef("q_ann_pq_topk", (s, d) => {
       val (cb, encoded) = pqIndex(s, d)
-      Similarity.pqCosineTopKWith(encoded, cb, embeddings(s, d),
-        col("vec_id"), col("embedding"), Seq(0L, 1L, 2L), 5)
+      Similarity.annTopK(encoded, embQueries(s, d), 5,
+        Similarity.AnnScore.Adc(cb), Similarity.AnnProbe.All)
     },
       RowsOnly("graft.SimilaritySpec")),
     // IVF-PQ: probe-pruned ADC over the composed (cl, codes) index — the
@@ -160,8 +170,8 @@ private[graft] object SimilarityQueries {
         Similarity.ivfPqIndex(Tables.embeddings(s, dir), col("vec_id"),
             col("embedding"), cents, cb)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      Similarity.ivfPqTopKWith(indexed, cents, cb, embeddings(s, d),
-        col("vec_id"), col("embedding"), Seq(0L, 1L, 2L), 5, nprobe = 8)
+      Similarity.annTopK(indexed, embQueries(s, d), 5,
+        Similarity.AnnScore.Adc(cb), Similarity.AnnProbe.Ivf(cents, nprobe = 8))
     },
       RowsOnly("graft.SimilaritySpec")),
     // PQ-ADC search against the FIXED codebook (raw, unnormalized on both
@@ -170,11 +180,12 @@ private[graft] object SimilarityQueries {
     // search path end to end (the trained variant stays rows-only)
     QueryDef("q_pq_adc_topk", (s, d) => {
       val cb = fixedPqCodebook(s, d)
-      Similarity.pqCosineTopKWith(
+      Similarity.annTopK(
         Similarity.pqEncode(embeddings(s, d), col("vec_id"),
           col("embedding"), cb, normalize = false),
-        cb, embeddings(s, d), col("vec_id"), col("embedding"),
-        Seq(0L, 1L, 2L), 5, normalizeQueries = false)
+        embQueries(s, d), 5,
+        Similarity.AnnScore.Adc(cb, normalizeQueries = false),
+        Similarity.AnnProbe.All)
     },
       // ADC over the same fixed codebook as q_pq_codes: per-query subspace
       // inner products (the table), summed at the candidate's codes, ranked
@@ -453,7 +464,7 @@ private[graft] object SimilarityQueries {
     // rule spec'd in SimilaritySpec)
     QueryDef("q_semdedup", (s, d) => {
       val (_, assigned) = ivfIndex(s, d)
-      Similarity.semDedupWith(assigned, 0.4)
+      Similarity.semDedup(assigned, 0.4)
         .select(col("cid"), col("cl").cast("long").as("cl"))
     },
       RowsOnly("graft.SimilaritySpec")),
@@ -465,7 +476,7 @@ private[graft] object SimilarityQueries {
     QueryDef("q_semdedup_fixed", (s, d) => {
       val indexed = Similarity.ivfAssign(embeddings(s, d), col("vec_id"),
         col("embedding"), fixedCodebook(s, d))
-      Similarity.semDedupWith(indexed, 0.4)
+      Similarity.semDedup(indexed, 0.4)
         .select(col("cid").cast("long").as("cid"),
           col("cl").cast("long").as("cl"))
     },

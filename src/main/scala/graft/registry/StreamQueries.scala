@@ -224,7 +224,7 @@ private[graft] object StreamQueries {
       Oracle("""WITH t AS (SELECT CAST(user_id AS VARCHAR) AS k,
              epoch_ns(ts)//1000 AS us,
              CAST(floor(value*100) AS BIGINT) AS vc
-           FROM events WHERE value IS NOT NULL),
+           FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
          qq AS (SELECT k, us, vc,
              (vc - (((vc % 5000) + 5000) % 5000)) // 5000 AS q
            FROM t),
@@ -388,7 +388,7 @@ private[graft] object StreamQueries {
       // per cycle, so an all-negative (net-export) month never alarms
       Oracle("""WITH t AS (SELECT CAST(user_id AS VARCHAR) AS grp, ts,
              CAST(floor(value*100) AS BIGINT) AS vc
-           FROM events WHERE value IS NOT NULL),
+           FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
          h AS (SELECT grp, date_trunc('hour', ts) AS hstart,
                CAST(SUM(vc) AS BIGINT) AS hc
              FROM t GROUP BY 1, 2),
@@ -421,7 +421,7 @@ private[graft] object StreamQueries {
     },
       Oracle("""WITH p AS (SELECT event_type AS grp, epoch_ns(ts) // 1000 AS us,
              CAST(floor(value * 100) AS BIGINT) AS vc FROM events
-           WHERE value IS NOT NULL),
+           WHERE value IS NOT NULL AND ts IS NOT NULL),
          w AS (SELECT grp, us, vc,
              CAST(COALESCE(SUM(vc) OVER (PARTITION BY grp ORDER BY us, vc
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
@@ -483,7 +483,8 @@ private[graft] object StreamQueries {
          p AS (SELECT event_type AS grp, epoch_ns(ts)//1000 AS us,
              CAST(floor(value*100) AS BIGINT) AS vc
            FROM events
-           WHERE value IS NOT NULL AND ts >= TIMESTAMP '2024-01-16'),
+           WHERE value IS NOT NULL AND ts IS NOT NULL
+             AND ts >= TIMESTAMP '2024-01-16'),
          w AS (SELECT p.grp, us, vc, mu, mad,
              CAST(SUM(vc - mu - (mad//2)) OVER (PARTITION BY p.grp
                ORDER BY us, vc ROWS BETWEEN UNBOUNDED PRECEDING

@@ -353,15 +353,15 @@ object Streams {
 
   /** The one input of the four alarm streams: readings `(k, us, vc)` —
     * key as a string, event time in epoch micros, value floored to cents —
-    * grouped by key. NULL readings are dropped: a null is a gap, not a
-    * reading (and the typed `Long` projection cannot hold one — it would
-    * fail the query with NOT_NULL_ASSERT_VIOLATION). */
+    * grouped by key. Rows with a NULL value or a NULL `ts` are dropped: a
+    * null is a gap, not a reading (and the typed `Long` projection cannot
+    * hold one — it would fail the query with NOT_NULL_ASSERT_VIOLATION). */
   private def readings(events: DataFrame, ts: String, key: String,
                        value: String)
       : KeyValueGroupedDataset[String, (String, Long, Long)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.where(s"$value IS NOT NULL")
+    events.where(s"$value IS NOT NULL AND $ts IS NOT NULL")
       .selectExpr(s"CAST($key AS STRING) AS k",
         s"unix_micros(CAST($ts AS TIMESTAMP)) AS us",
         s"CAST(floor($value * 100) AS LONG) AS vc")

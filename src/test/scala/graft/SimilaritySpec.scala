@@ -1,6 +1,12 @@
 package graft
 
 import graft.engine.{Similarity, Tables}
+import graft.engine.Similarity.{AnnProbe, AnnScore}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -52,13 +58,56 @@ class SimilaritySpec extends SparkSpec {
     rows.toDF("vec_id", "embedding")
   }
 
+  /** Query batch (qid, qv) read from an IVF index's own `cv` column. */
+  private def indexQueries(indexed: DataFrame, qs: Seq[Long]) =
+    indexed.filter(col("cid").isin(qs: _*))
+      .select(col("cid").as("qid"), col("cv").as("qv"))
+
+  /** Query batch (qid, qv: array<double>) from the raw embeddings. */
+  private def embQueries(emb: DataFrame, qs: Seq[Long]) =
+    emb.select(col("vec_id").as("qid"),
+        Similarity.asDouble(col("embedding")).as("qv"))
+      .filter(col("qid").isin(qs: _*))
+
+  /** Train the IVF quantizer, assign the corpus, search it exactly. */
+  private def ivfSearch(emb: DataFrame, qs: Seq[Long], k: Int,
+                        nprobe: Int = 4): DataFrame = {
+    val cents = Similarity.ivfTrainCentroids(emb, col("vec_id"),
+      col("embedding"))
+    val indexed = Similarity.ivfAssign(emb, col("vec_id"), col("embedding"),
+      cents)
+    Similarity.annTopK(indexed, indexQueries(indexed, qs), k,
+      AnnScore.Exact, AnnProbe.Ivf(cents, nprobe))
+  }
+
+  /** Train the IVF quantizer, assign the corpus, semantic-dedup it. */
+  private def semDedupOf(emb: DataFrame, tau: Double): DataFrame =
+    Similarity.semDedup(Similarity.ivfAssign(emb, col("vec_id"),
+      col("embedding"), Similarity.ivfTrainCentroids(emb, col("vec_id"),
+        col("embedding"))), tau)
+
+  /** Flat PQ over codebooks `cb`: encode the corpus, ADC-search it. */
+  private def pqSearch(emb: DataFrame, qs: Seq[Long], k: Int,
+                       cb: Array[Array[Array[Double]]]): DataFrame =
+    Similarity.annTopK(
+      Similarity.pqEncode(emb, col("vec_id"), col("embedding"), cb),
+      embQueries(emb, qs), k, AnnScore.Adc(cb), AnnProbe.All)
+
+  /** The parquet scans of a (possibly adaptive) physical plan. */
+  private def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+    case q: QueryStageExec => scans(q.plan)
+    case r: ReusedExchangeExec => scans(r.child)
+    case s: FileSourceScanExec => Seq(s)
+    case other => other.children.flatMap(scans)
+  }
+
   test("IVF ANN: recall >= 0.9 on a clusterable corpus at defaults") {
     val emb = clusteredCorpus
     val qs = Seq(0L, 101L, 202L, 303L, 404L) // one per first five clusters
     val exact = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.ivfCosineTopK(emb, col("vec_id"), col("embedding"),
-      qs, 5).select("qid", "cid").collect()
+    val approx = ivfSearch(emb, qs, 5).select("qid", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // deterministic seeds + deterministic ties → deterministic model, so
     // this floor is stable run-to-run (measured: 1.0)
@@ -78,8 +127,8 @@ class SimilaritySpec extends SparkSpec {
     val qs = Seq(0L, 1L, 2L, 3L, 4L)
     val exact = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Similarity.ivfCosineTopK(emb, col("vec_id"), col("embedding"),
-      qs, 5, nprobe = 8).select("qid", "cid").collect()
+    val approx = ivfSearch(emb, qs, 5, nprobe = 8)
+      .select("qid", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     recall should be >= 0.6 // scanned fraction 8/16 = 0.5; measured 0.88
@@ -90,7 +139,8 @@ class SimilaritySpec extends SparkSpec {
     val c2 = Similarity.ivfTrainCentroids(emb, col("vec_id"), col("embedding"))
     c1.flatten.toSeq shouldBe c2.flatten.toSeq
     val indexed = Similarity.ivfAssign(emb, col("vec_id"), col("embedding"), c1)
-    val reused = Similarity.ivfCosineTopKWith(indexed, c1, qs, 5, nprobe = 8)
+    val reused = Similarity.annTopK(indexed, indexQueries(indexed, qs), 5,
+        AnnScore.Exact, AnnProbe.Ivf(c1, nprobe = 8))
       .select("qid", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     reused shouldBe approx
@@ -108,8 +158,8 @@ class SimilaritySpec extends SparkSpec {
       .select(col("tid").as("vec_id"), col("embedding"))
     val zero = Seq((3000L, Array.fill(32)(0.0f))).toDF("vec_id", "embedding")
     val emb = base.unionByName(planted).unionByName(zero)
-    val kept = Similarity.semDedup(emb, col("vec_id"), col("embedding"),
-      tau = 0.99).select("cid").collect().map(_.getLong(0)).toSet
+    val kept = semDedupOf(emb, tau = 0.99).select("cid").collect()
+      .map(_.getLong(0)).toSet
     // exact twins collapse to the LOWER id; in-cluster cos ≈ 0.81 < 0.99 so
     // nothing else pairs; the zero vector has NaN cosine → always kept
     kept should contain(0L)
@@ -130,12 +180,11 @@ class SimilaritySpec extends SparkSpec {
     }.sum + 1
     kept.size shouldBe expected
     // determinism: deterministic seeds + ties → identical second run
-    val kept2 = Similarity.semDedup(emb, col("vec_id"), col("embedding"),
-      tau = 0.99).select("cid").collect().map(_.getLong(0)).toSet
+    val kept2 = semDedupOf(emb, tau = 0.99).select("cid").collect()
+      .map(_.getLong(0)).toSet
     kept2 shouldBe kept
     // identity law: tau above 1 (cosine's max) keeps the whole corpus
-    Similarity.semDedup(emb, col("vec_id"), col("embedding"), tau = 1.1)
-      .count() shouldBe emb.count()
+    semDedupOf(emb, tau = 1.1).count() shouldBe emb.count()
   }
 
   test("boundedTopK aggregate: ordering, ties, null skip, cross-partition merge") {
@@ -204,8 +253,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF partitioned index: list pruning IS partition pruning; " +
     "results match the in-memory path") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val emb = clusteredCorpus
     val cents = Similarity.ivfTrainCentroids(emb, col("vec_id"), col("embedding"))
     val indexed = Similarity.ivfAssign(emb, col("vec_id"), col("embedding"), cents)
@@ -216,22 +263,15 @@ class SimilaritySpec extends SparkSpec {
     val queries = indexed.filter(col("cid").isin(qs: _*))
       .select("cid", "cv").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val res = Similarity.ivfCosineTopKPartitioned(spark, dir, cents, queries, 5)
+    val res = Similarity.annTopKPartitioned(spark, dir, queries, 5,
+      AnnScore.Exact, AnnProbe.Ivf(cents))
     def asSet(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     asSet(res.collect()) shouldBe
-      asSet(Similarity.ivfCosineTopKWith(indexed, cents, qs, 5).collect())
+      asSet(Similarity.annTopK(indexed, indexQueries(indexed, qs), 5,
+        AnnScore.Exact, AnnProbe.Ivf(cents)).collect())
     // the scan plans ONLY the probed lists' partitions — a literal
     // partition filter, visible before any file is read
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        scans(r.child)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(scans)
-    }
     val probedLists = queries.flatMap(q =>
       Similarity.probeLists(cents, q._2, 4)).distinct
     val scan = scans(res.queryExecution.executedPlan).head
@@ -241,8 +281,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF-PQ partitioned index: list pruning IS partition pruning; " +
     "results match the in-memory IVF-PQ path") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val emb = clusteredCorpus
     val cents = Similarity.ivfTrainCentroids(emb, col("vec_id"), col("embedding"))
     val cb = Similarity.pqTrain(emb, col("vec_id"), col("embedding"),
@@ -257,24 +295,15 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), Similarity.asDouble(col("embedding")))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val res = Similarity.ivfPqTopKPartitioned(spark, dir, cents, cb,
-      queries, 5)
+    val res = Similarity.annTopKPartitioned(spark, dir, queries, 5,
+      AnnScore.Adc(cb), AnnProbe.Ivf(cents))
     def asSet(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     asSet(res.collect()) shouldBe
-      asSet(Similarity.ivfPqTopKWith(indexed, cents, cb, emb, col("vec_id"),
-        col("embedding"), qs, 5).collect())
+      asSet(Similarity.annTopK(indexed, embQueries(emb, qs), 5,
+        AnnScore.Adc(cb), AnnProbe.Ivf(cents)).collect())
     // the scan plans ONLY the probed lists' partitions — a literal
     // partition filter, visible before any file is read
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        scans(r.child)
-      case s: FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(scans)
-    }
     val probedLists = queries.flatMap(q =>
       Similarity.probeLists(cents, q._2, 4)).distinct
     val scan = scans(res.queryExecution.executedPlan).head
@@ -451,8 +480,8 @@ class SimilaritySpec extends SparkSpec {
     // per-subspace dot of the normalized query against the candidate's
     // reconstruction, summed in subspace order (the expression's contract)
     val qs = Seq(0L, 101L, 202L)
-    val out = Similarity.pqCosineTopKWith(encoded, cb, emb, col("vec_id"),
-      col("embedding"), qs, 5).collect()
+    val out = Similarity.annTopK(encoded, embQueries(emb, qs), 5,
+      AnnScore.Adc(cb), AnnProbe.All).collect()
     out.length shouldBe 15
     val vecs = emb.select(col("vec_id"), Similarity.asDouble(col("embedding")))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
@@ -487,9 +516,7 @@ class SimilaritySpec extends SparkSpec {
     val zc = Similarity.pqEncode(withZero, col("vec_id"), col("embedding"), cb)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     zc(0L).foreach(c => assert(c >= 0 && c < 16))
-    val zq = Similarity.pqCosineTopKWith(
-      Similarity.pqEncode(withZero, col("vec_id"), col("embedding"), cb), cb,
-      withZero, col("vec_id"), col("embedding"), Seq(0L), 1).collect()
+    val zq = pqSearch(withZero, Seq(0L), 1, cb).collect()
     zq.length shouldBe 1
     zq.head.getDouble(2) shouldBe 0.0
   }
@@ -506,8 +533,8 @@ class SimilaritySpec extends SparkSpec {
     // — the "enough subspaces" regime PQ is deployed in. At m=4 the 8-dim
     // subspaces have 256 patterns per 16 codewords and recall decays to
     // ~0.2: subspace count, not corpus size, sets PQ's resolution.
-    val approx = Similarity.pqCosineTopK(emb, col("vec_id"), col("embedding"),
-      qs, 5, m = 8).select("qid", "cid").collect()
+    val approx = pqSearch(emb, qs, 5, Similarity.pqTrain(emb, col("vec_id"),
+        col("embedding"), m = 8)).select("qid", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // deterministic model → stable floor (measured: see assertion)
     val recall = (exact intersect approx).size.toDouble / exact.size
@@ -540,10 +567,7 @@ class SimilaritySpec extends SparkSpec {
 
     // prebuilt-index search matches the one-shot convenience path
     val cb = Similarity.pqTrain(emb, col("vec_id"), col("embedding"), m = 8)
-    val reused = Similarity.pqCosineTopKWith(
-      Similarity.pqEncode(emb, col("vec_id"), col("embedding"), cb), cb,
-      emb, col("vec_id"), col("embedding"), qs, 5)
-      .select("qid", "cid").collect()
+    val reused = pqSearch(emb, qs, 5, cb).select("qid", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     reused shouldBe approx
   }
@@ -556,8 +580,8 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.pqTrain(emb, col("vec_id"), col("embedding"), m = 8)
     val indexed = Similarity.ivfPqIndex(emb, col("vec_id"), col("embedding"),
       cents, cb)
-    val out = Similarity.ivfPqTopKWith(indexed, cents, cb, emb, col("vec_id"),
-      col("embedding"), qs, 5).collect()
+    val out = Similarity.annTopK(indexed, embQueries(emb, qs), 5,
+      AnnScore.Adc(cb), AnnProbe.Ivf(cents)).collect()
 
     // recall vs exact: on a clusterable corpus the coarse quantizer routes
     // each query to its own cluster's list, so IVF pruning costs nothing on
@@ -584,15 +608,44 @@ class SimilaritySpec extends SparkSpec {
 
     // ADC is the same number flat PQ computes — IVF only prunes candidates,
     // it never changes a surviving pair's score
-    val flat = Similarity.pqCosineTopKWith(
-      Similarity.pqEncode(emb, col("vec_id"), col("embedding"), cb), cb,
-      emb, col("vec_id"), col("embedding"), qs, 5).collect()
+    val flat = pqSearch(emb, qs, 5, cb).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     out.foreach { r =>
       flat.get((r.getLong(0), r.getLong(1))).foreach { s =>
         r.getDouble(2) shouldBe s
       }
     }
+  }
+
+  test("annTopK law: probing every inverted list loses no candidate — " +
+    "Ivf(nprobe = nlist) equals cosineTopK under Exact and All under Adc") {
+    val emb = clusteredCorpus
+    val qs = Seq(0L, 101L, 202L, 303L, 404L)
+    // k above the 50-point cluster size: every query's top-k reaches into
+    // other clusters' lists, which a partial probe can miss
+    val k = 60
+    val nlist = 16
+    val cents = Similarity.ivfTrainCentroids(emb, col("vec_id"),
+      col("embedding"), nlist)
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .toSet
+    val indexed = Similarity.ivfAssign(emb, col("vec_id"), col("embedding"),
+      cents)
+    def ivfExact(nprobe: Int) = rows(Similarity.annTopK(indexed,
+      indexQueries(indexed, qs), k, AnnScore.Exact, AnnProbe.Ivf(cents, nprobe)))
+    val exact = rows(Similarity.cosineTopK(emb, col("vec_id"),
+      col("embedding"), qs, k))
+    exact.size shouldBe qs.size * k
+    ivfExact(nlist) shouldBe exact
+    // the law has teeth: one probed list does lose candidates here
+    ivfExact(1) should not be exact
+
+    val cb = Similarity.pqTrain(emb, col("vec_id"), col("embedding"), m = 8)
+    val ivfPq = Similarity.ivfPqIndex(emb, col("vec_id"), col("embedding"),
+      cents, cb)
+    rows(Similarity.annTopK(ivfPq, embQueries(emb, qs), k, AnnScore.Adc(cb),
+      AnnProbe.Ivf(cents, nprobe = nlist))) shouldBe rows(pqSearch(emb, qs, k, cb))
   }
 
   test("srpGeometry: the measured scale rule, pinned") {

@@ -760,14 +760,18 @@ class StreamsSpec extends SparkSpec {
     (t("2024-01-01 10:01:00"), "a", Some(10.0)),
     (t("2024-01-01 10:01:30"), "a", None), // the gap
     (t("2024-01-01 10:02:00"), "a", Some(10.0)),
-    (t("2024-01-01 10:03:00"), "a", Some(25.0)))
+    (t("2024-01-01 10:03:00"), "a", Some(25.0)),
+    (null, "a", Some(25.0))) // no event time: a gap too
+
+  /** [[withNull]] minus its gaps: the readings the alarm streams keep. */
+  private val gapless = withNull.filter(r => r._1 != null && r._3.isDefined)
 
   test("alertStream: a NULL reading is a gap — the batch emits exactly " +
     "what it emits without it") {
     def run(name: String, rows: Seq[(Timestamp, String, Option[Double])]) =
       oneBatch(name, rows)(Streams.alertStream(_, "ts", "k", "v",
         thresholdCents = 1000L, minHistory = 3))
-    val clean = run("alerts_clean", withNull.filter(_._3.isDefined))
+    val clean = run("alerts_clean", gapless)
     clean should not be empty
     run("alerts_null", withNull) shouldBe clean
   }
@@ -777,7 +781,7 @@ class StreamsSpec extends SparkSpec {
     def run(name: String, rows: Seq[(Timestamp, String, Option[Double])]) =
       oneBatch(name, rows)(Streams.cusumStream(_, "ts", "k", "v",
         Map("a" -> ((1000L, 200L))), hMult = 2))
-    val clean = run("cusum_clean", withNull.filter(_._3.isDefined))
+    val clean = run("cusum_clean", gapless)
     clean should not be empty
     run("cusum_null", withNull) shouldBe clean
   }
