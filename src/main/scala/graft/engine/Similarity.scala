@@ -35,9 +35,13 @@ object Similarity {
     * (and for engines without the extension); HOFs evaluate interpreted. */
   def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Cosine via the native codegen'd expression
-    * ([[graft.engine.expressions.CosineSimilarity]]) — identical semantics,
-    * one fused Java loop inside whole-stage codegen. */
+  /** Cosine via the native expression
+    * ([[graft.engine.expressions.CosineSimilarity]]), one fused loop inside
+    * whole-stage codegen. Equal to [[cosineHof]] on nonzero vectors of one
+    * width; a zero vector gives NaN (which passes every `cos >= tau`
+    * filter) and mismatched widths use the common prefix, where
+    * [[cosineHof]] raises DIVIDE_BY_ZERO (NULL in legacy mode) and
+    * returns NULL. */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.engine.expressions.CosineSimilarity(

@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -18,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * zero-divisor behavior bit-for-bit, which a single fused cosine (NaN on
   * zero norms) cannot. */
 case class ArrayDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -32,35 +31,18 @@ case class ArrayDot(left: Expression, right: Expression)
   override def prettyName: String = "graft_dot"
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
+  def compute(x: ArrayData, y: ArrayData): Double = {
+    if (x.numElements() != y.numElements()) throw NullResult
     var dot = 0.0
     var i = 0
     val n = x.numElements()
     while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      if (x.isNullAt(i) || y.isNullAt(i)) throw NullResult
       dot += x.getDouble(i) * y.getDouble(i)
       i += 1
     }
     dot
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dot", this, classOf[ArrayDot].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |Object $boxed = $ref.nullSafeEvalPublic($a, $b);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Double) $boxed).doubleValue(); }
-       """.stripMargin
-    })
-  }
-
-  /** Codegen entry point (nullSafeEval is protected). */
-  def nullSafeEvalPublic(a: Any, b: Any): Any = nullSafeEval(a, b)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArrayDot =
@@ -70,7 +52,8 @@ case class ArrayDot(left: Expression, right: Expression)
 /** Fused sum-of-squares with EXACTLY the HOF
   * `aggregate(transform(a, x -> x * x), 0.0, +)` semantics (null element →
   * null, null input → null). See [[ArrayDot]] for why this exists. */
-case class ArrayNormSq(child: Expression) extends UnaryExpression {
+case class ArrayNormSq(child: Expression)
+    extends UnaryKernel[ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -83,33 +66,18 @@ case class ArrayNormSq(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_norm_sq"
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  def compute(x: ArrayData): Double = {
     var s = 0.0
     var i = 0
     val n = x.numElements()
     while (i < n) {
-      if (x.isNullAt(i)) return null
+      if (x.isNullAt(i)) throw NullResult
       val v = x.getDouble(i)
       s += v * v
       i += 1
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nsq", this, classOf[ArrayNormSq].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |Object $boxed = $ref.nullSafeEvalPublic($a);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Double) $boxed).doubleValue(); }
-       """.stripMargin
-    })
-  }
-
-  def nullSafeEvalPublic(a: Any): Any = nullSafeEval(a)
 
   override protected def withNewChildInternal(newChild: Expression): ArrayNormSq =
     copy(child = newChild)

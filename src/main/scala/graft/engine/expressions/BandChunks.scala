@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -18,15 +17,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * corpora under [[graft.engine.Similarity.srpGeometry]]) Janino's 64 KB
   * method limit kills compilation of the whole banding projection
   * (measured in r13 at 401 bands / n=200k: `Code grows beyond 64 KB`,
-  * silent interpreted fallback). A loop over a reference object keeps the
-  * generated code O(1) in the geometry — the [[SrpSignature]] pattern.
+  * silent interpreted fallback). As a [[RowKernel]] the generated code is
+  * one `compute` call, O(1) in the geometry.
   *
   * The signature must carry at least ceil(bands·rowsPerBand/64) words
   * (callers validate via their width contracts); a null signature yields
   * null, matching the Column formulation's null propagation.
   */
 case class BandChunks(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData] {
 
   require(bands > 0, s"bands must be positive: $bands")
   require(rowsPerBand >= 1 && rowsPerBand <= 62,
@@ -45,8 +44,7 @@ case class BandChunks(child: Expression, bands: Int, rowsPerBand: Int)
 
   override def nullable: Boolean = true
 
-  /** One loop over the bands — called from both interpreted eval and the
-    * generated code (via a bound reference, keeping codegen tiny). */
+  /** One loop over the bands. */
   def compute(sig: ArrayData): ArrayData = {
     val needed = (bands * rowsPerBand + 63) / 64
     if (sig.numElements() < needed) throw new IllegalArgumentException(
@@ -66,14 +64,6 @@ case class BandChunks(child: Expression, bands: Int, rowsPerBand: Int)
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bch", this, classOf[BandChunks].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BandChunks =

@@ -1,9 +1,9 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Membership probe of a long key against a FIXED Bloom filter — the
@@ -21,7 +21,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * `BloomFilter` object itself is not Java-serializable-stable across
   * versions, its byte form is. */
 case class BloomMightContain(child: Expression, filterBytes: Array[Byte])
-    extends UnaryExpression {
+    extends UnaryKernel[Long, Boolean] {
 
   require(filterBytes.nonEmpty, "empty Bloom filter payload")
 
@@ -42,14 +42,6 @@ case class BloomMightContain(child: Expression, filterBytes: Array[Byte])
   override def nullable: Boolean = true
 
   def compute(v: Long): Boolean = filter.mightContainLong(v)
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bmc", this, classOf[BloomMightContain].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
     copy(child = newChild)
@@ -74,31 +66,30 @@ object WindowHash {
   * n long-mixes per position and zero allocation. Used on the (small)
   * bench side to BUILD the decontamination Bloom filter; the corpus side
   * probes with [[BloomAnyWindow]] (same fold — the two sides must agree). */
-case class WindowHashes(child: Expression, n: Int) extends UnaryExpression {
+case class WindowHashes(child: Expression, n: Int)
+    extends UnaryKernel[ArrayData, ArrayData] {
 
   require(n >= 1, s"window size must be >= 1: $n")
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(LongType, _) =>
+      case ArrayType(LongType, _) =>
         TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(
         s"graft_window_hashes requires array<bigint>, got $t")
     }
 
   override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+    ArrayType(LongType, containsNull = false)
 
   override def prettyName: String = "graft_window_hashes"
 
   override def nullable: Boolean = true
 
-  def compute(a: org.apache.spark.sql.catalyst.util.ArrayData): Any = {
+  def compute(a: ArrayData): ArrayData = {
     val len = a.numElements()
     val m = len - n + 1
-    if (m <= 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        new Array[Long](0))
+    if (m <= 0) return new GenericArrayData(new Array[Long](0))
     val out = new Array[Long](m)
     var i = 0
     while (i < m) {
@@ -112,21 +103,7 @@ case class WindowHashes(child: Expression, n: Int) extends UnaryExpression {
       out(i) = h
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wh", this, classOf[WindowHashes].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression): WindowHashes =
@@ -140,7 +117,7 @@ case class WindowHashes(child: Expression, n: Int) extends UnaryExpression {
   * case, zero allocation, no HOF interpretation and no n-gram strings on
   * the 100 TB side of the scan. */
 case class BloomAnyWindow(child: Expression, n: Int, filterBytes: Array[Byte])
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, Boolean] {
 
   require(n >= 1, s"window size must be >= 1: $n")
   require(filterBytes.nonEmpty, "empty Bloom filter payload")
@@ -150,7 +127,7 @@ case class BloomAnyWindow(child: Expression, n: Int, filterBytes: Array[Byte])
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(LongType, _) =>
+      case ArrayType(LongType, _) =>
         TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(
         s"graft_bloom_any_window requires array<bigint>, got $t")
@@ -162,7 +139,7 @@ case class BloomAnyWindow(child: Expression, n: Int, filterBytes: Array[Byte])
 
   override def nullable: Boolean = true
 
-  def compute(a: org.apache.spark.sql.catalyst.util.ArrayData): Any = {
+  def compute(a: ArrayData): Boolean = {
     val len = a.numElements()
     val m = len - n + 1
     var i = 0
@@ -170,28 +147,14 @@ case class BloomAnyWindow(child: Expression, n: Int, filterBytes: Array[Byte])
       var h = WindowHash.Seed
       var j = 0
       while (j < n) {
-        if (a.isNullAt(i + j)) return null
+        if (a.isNullAt(i + j)) throw NullResult
         h = WindowHash.fold(h, a.getLong(i + j))
         j += 1
       }
-      if (filter.mightContainLong(h)) return java.lang.Boolean.TRUE
+      if (filter.mightContainLong(h)) return true
       i += 1
     }
-    java.lang.Boolean.FALSE
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("baw", this, classOf[BloomAnyWindow].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |Object r = $ref.compute($a);
-         |if (r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Boolean) r).booleanValue(); }
-       """.stripMargin
-    })
+    false
   }
 
   override protected def withNewChildInternal(newChild: Expression): BloomAnyWindow =

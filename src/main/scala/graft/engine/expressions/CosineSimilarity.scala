@@ -1,26 +1,31 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Native codegen'd cosine similarity over two array<double> columns — the
-  * one place a custom Catalyst `Expression` is justified in this engine
-  * (SURVEY.md §7.3 revisited): the ANN/near-dup inner loop runs
-  * corpus × queries times, and the `zip_with`+`aggregate` higher-order
-  * formulation is evaluated INTERPRETED per element (HOFs don't participate
-  * in whole-stage codegen). This expression emits a tight fused Java loop —
-  * one pass computing dot, |a|² and |b|² — inside the enclosing
-  * WholeStageCodegen span.
+/** Native cosine similarity over two array<double> columns — the one place
+  * a custom Catalyst `Expression` is justified in this engine (SURVEY.md
+  * §7.3 revisited): the ANN/near-dup inner loop runs corpus × queries
+  * times, and the `zip_with`+`aggregate` higher-order formulation is
+  * evaluated INTERPRETED per element (HOFs don't participate in
+  * whole-stage codegen). `compute` is one fused pass computing dot, |a|²
+  * and |b|², called from inside the enclosing WholeStageCodegen span
+  * through the [[RowKernel]] scaffold.
   *
-  * Semantics match the HOF formulation exactly: dot/(sqrt(na)*sqrt(nb)),
-  * zero vectors → NaN, null input → null. Mismatched lengths use the common
-  * prefix (embeddings are fixed-dim by construction).
+  * dot/(sqrt(na)*sqrt(nb)); null input or a null element → null, as in the
+  * HOF formulation. Two cases DIFFER from it
+  * ([[graft.engine.Similarity.cosineHof]]; the HOF-shaped tree is what
+  * [[graft.engine.rules.RewriteHofCosine]] keeps exact):
+  *  - a zero-norm side gives NaN, where the HOF form raises DIVIDE_BY_ZERO
+  *    under ANSI and returns NULL in legacy mode. Spark orders NaN above
+  *    every double, so a zero vector passes every `cos >= tau` filter;
+  *  - mismatched lengths use the common prefix, where the HOF form returns
+  *    NULL (embeddings are fixed-dim by construction).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -36,9 +41,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0
     var na = 0.0
@@ -47,7 +50,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     while (i < n) {
       // a null element nulls the result — matching the HOF formulation
       // (zip_with/aggregate propagate null)
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      if (x.isNullAt(i) || y.isNullAt(i)) throw NullResult
       val xi = x.getDouble(i)
       val yi = y.getDouble(i)
       dot += xi * yi
@@ -57,31 +60,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = $a.numElements();
-         |if ($b.numElements() < $n) $n = $b.numElements();
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  double $x = $a.getDouble($i);
-         |  double $y = $b.getDouble($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

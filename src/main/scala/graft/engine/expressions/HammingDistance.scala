@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -11,11 +10,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   *
   * This is the LSH candidate-join's post-match filter — it runs once per
   * bucket collision (millions of times), so it must stay inside whole-stage
-  * codegen as a few xor+popcount instructions, not an interpreted
-  * `aggregate(zip_with(...))` lambda chain.
+  * codegen — one [[RowKernel]] `compute` call, a loop of xor+popcount —
+  * not an interpreted `aggregate(zip_with(...))` lambda chain.
   */
 case class HammingDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData, Int] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -31,9 +30,7 @@ case class HammingDistance(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def compute(x: ArrayData, y: ArrayData): Int = {
     val nx = x.numElements()
     val ny = y.numElements()
     val n = math.max(nx, ny)
@@ -47,29 +44,6 @@ case class HammingDistance(left: Expression, right: Expression)
     }
     d
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val i = ctx.freshName("i")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $nx = $a.numElements();
-         |int $ny = $b.numElements();
-         |int $n = $nx > $ny ? $nx : $ny;
-         |int $d = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $xi = ($i < $nx && !$a.isNullAt($i)) ? $a.getLong($i) : 0L;
-         |  long $yi = ($i < $ny && !$b.isNullAt($i)) ? $b.getLong($i) : 0L;
-         |  $d += java.lang.Long.bitCount($xi ^ $yi);
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HammingDistance =

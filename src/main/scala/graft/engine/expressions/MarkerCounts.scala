@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null text → null.
   */
 case class MarkerCounts(child: Expression, groups: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, ArrayData] {
 
   require(groups.nonEmpty && groups.forall(_.nonEmpty),
     "marker groups must be non-empty")
@@ -74,14 +73,6 @@ case class MarkerCounts(child: Expression, groups: Seq[Seq[String]])
       i += 1
     }
     new GenericArrayData(counts)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mc", this, classOf[MarkerCounts].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MarkerCounts =

@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * null like [[MinHashSignature]], and a null element nulls the row.
   */
 case class Md5MinHashSignature(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData] {
 
   require(k > 0, s"k must be positive: $k")
 
@@ -94,20 +93,6 @@ case class Md5MinHashSignature(child: Expression, k: Int)
     i = 0
     while (i < k) { out(i) = hex(mins(i)); i += 1 }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mmh", this,
-      classOf[Md5MinHashSignature].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(

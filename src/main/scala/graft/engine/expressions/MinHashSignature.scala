@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -27,7 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * pair, matching the explode-based pipeline which emitted no rows for it).
   * Null element → null.
   */
-case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
+case class MinHashSignature(child: Expression, k: Int)
+    extends UnaryKernel[ArrayData, ArrayData] {
 
   require(k > 0, s"k must be positive: $k")
 
@@ -44,8 +44,7 @@ case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
 
   override def nullable: Boolean = true
 
-  /** One pass over (shingles × k) — called from both interpreted eval and the
-    * generated code (via a reference object, keeping codegen tiny). */
+  /** One pass over (shingles × k). */
   def compute(hs: ArrayData): ArrayData = {
     val n = hs.numElements()
     if (n == 0) return null
@@ -63,19 +62,6 @@ case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
       i += 1
     }
     new GenericArrayData(sig)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mh", this, classOf[MinHashSignature].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =

@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   */
 case class NearestCentroids(child: Expression,
                             centroids: Array[Array[Double]], nprobe: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData] {
 
   require(centroids.nonEmpty, "centroids must be non-empty")
   require(nprobe > 0 && nprobe <= centroids.length,
@@ -84,19 +83,6 @@ case class NearestCentroids(child: Expression,
       s += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("nc", this, classOf[NearestCentroids].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =

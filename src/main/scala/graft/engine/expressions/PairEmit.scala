@@ -2,8 +2,7 @@ package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
 
@@ -36,7 +35,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
   * error naming `maxDf`, the knob that caps posting-list length.
   */
 case class PairEmit(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData, ArrayData] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -98,14 +97,6 @@ case class PairEmit(left: Expression, right: Expression)
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pe", this, classOf[PairEmit].getName)
-    nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $ref.compute($l, $r);")
   }
 
   override protected def withNewChildrenInternal(

@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
@@ -19,11 +18,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * per-subspace dot products once, and each corpus candidate scores with m
   * table lookups (asymmetric distance computation, ADC).
   *
-  * All three kernels run inside whole-stage codegen via the same
-  * addReferenceObj pattern as [[NearestCentroids]]: the codebooks ride the
-  * serialized expression into the broadcast task binary — shipped once per
-  * stage, never per row. Model size is m·k·dsub doubles = k·d (a few KB at
-  * k=16, d=64) plus nothing per corpus row but the codes.
+  * All three kernels are [[RowKernel]]s, one `compute` call inside
+  * whole-stage codegen: the codebooks ride the serialized expression into
+  * the broadcast task binary — shipped once per stage, never per row.
+  * Model size is m·k·dsub doubles = k·d (a few KB at k=16, d=64) plus
+  * nothing per corpus row but the codes.
   */
 private[expressions] trait PqCodebooks {
   def codebooks: Array[Array[Array[Double]]] // m × k × dsub
@@ -45,7 +44,7 @@ private[expressions] trait PqCodebooks {
   * downstream ADC score).
   */
 case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression with PqCodebooks {
+    extends UnaryKernel[ArrayData, ArrayData] with PqCodebooks {
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -91,19 +90,6 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqe", this, classOf[PqEncode].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PqEncode =
     copy(child = newChild)
 }
@@ -116,7 +102,7 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
   * summed lookups approximate cosine.
   */
 case class PqAdcTable(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression with PqCodebooks {
+    extends UnaryKernel[ArrayData, ArrayData] with PqCodebooks {
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -158,19 +144,6 @@ case class PqAdcTable(child: Expression, codebooks: Array[Array[Array[Double]]])
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqt", this, classOf[PqAdcTable].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): PqAdcTable =
     copy(child = newChild)
 }
@@ -185,7 +158,7 @@ case class PqAdcTable(child: Expression, codebooks: Array[Array[Array[Double]]])
   * SimilaritySpec). Out-of-range codes fail loudly.
   */
 case class PqAdcScore(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -201,7 +174,7 @@ case class PqAdcScore(left: Expression, right: Expression)
 
   override def nullable: Boolean = true
 
-  def compute(codes: ArrayData, table: ArrayData): Any = {
+  def compute(codes: ArrayData, table: ArrayData): Double = {
     val m = codes.numElements()
     val tn = table.numElements()
     if (m == 0 || tn % m != 0) throw new IllegalArgumentException(
@@ -211,30 +184,16 @@ case class PqAdcScore(left: Expression, right: Expression)
     var sum = 0.0
     var s = 0
     while (s < m) {
-      if (codes.isNullAt(s)) return null
+      if (codes.isNullAt(s)) throw NullResult
       val c = codes.getInt(s)
       if (c < 0 || c >= k) throw new IllegalArgumentException(
         s"graft_pq_adc: code $c at subspace $s out of range [0, $k)")
       val idx = s * k + c
-      if (table.isNullAt(idx)) return null
+      if (table.isNullAt(idx)) throw NullResult
       sum += table.getDouble(idx)
       s += 1
     }
     sum
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqs", this, classOf[PqAdcScore].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |Object r = $ref.compute($a, $b);
-         |if (r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Double) r).doubleValue(); }
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,

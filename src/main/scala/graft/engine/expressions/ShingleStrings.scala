@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * null-skip edge cases).
   */
 case class ShingleStrings(child: Expression, n: Int, dedup: Boolean)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData] {
 
   require(n >= 1, s"shingle width must be >= 1: $n")
 
@@ -72,19 +71,6 @@ case class ShingleStrings(child: Expression, n: Int, dedup: Boolean)
       while (i < m) { arr(i) = window(i); i += 1 }
       new GenericArrayData(arr)
     }
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shs", this, classOf[ShingleStrings].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleStrings =

@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -33,7 +32,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * nulls).
   */
 case class SimhashSignature(child: Expression, md5Family: Boolean)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, Long] {
 
   private val bits = if (md5Family) 32 else 64
 
@@ -54,13 +53,13 @@ case class SimhashSignature(child: Expression, md5Family: Boolean)
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
 
-  def compute(a: ArrayData): Any = {
+  def compute(a: ArrayData): Long = {
     val n = a.numElements()
     val sums = new Array[Int](bits)
     val md = if (md5Family) mdLocal.get() else null
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i)) return null
+      if (a.isNullAt(i)) throw NullResult
       val t = a.getUTF8String(i)
       val h: Long =
         if (md5Family) {
@@ -89,21 +88,6 @@ case class SimhashSignature(child: Expression, md5Family: Boolean)
       bIx += 1
     }
     sig
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ssig", this,
-      classOf[SimhashSignature].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |Object ${ev.value}_o = $ref.compute($a);
-         |if (${ev.value}_o == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((Long) ${ev.value}_o).longValue(); }
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(

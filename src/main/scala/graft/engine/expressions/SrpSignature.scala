@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * `dim` must be >= the actual vector length (extra plane columns are unused).
   */
 case class SrpSignature(child: Expression, bits: Int, dim: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, ArrayData] {
 
   require(bits > 0 && bits % 64 == 0, s"bits must be a multiple of 64: $bits")
 
@@ -46,8 +45,7 @@ case class SrpSignature(child: Expression, bits: Int, dim: Int)
   @transient private lazy val planes: Array[Array[Double]] =
     graft.engine.Similarity.hyperplanes(bits, dim)
 
-  /** One pass over (bits × vector) — called from both interpreted eval and
-    * the generated code (via a bound reference, keeping codegen tiny). */
+  /** One pass over (bits × vector). */
   def compute(v: ArrayData): ArrayData = {
     val n = v.numElements()
     // a vector longer than the plane matrix would silently project onto a
@@ -71,19 +69,6 @@ case class SrpSignature(child: Expression, bits: Int, dim: Int)
       j += 1
     }
     new GenericArrayData(words)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("srp", this, classOf[SrpSignature].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = $ref.compute($a);
-         |if (${ev.value} == null) ${ev.isNull} = true;
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildInternal(newChild: Expression): SrpSignature =

@@ -1,8 +1,7 @@
 package graft.engine.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * same-reference skip removes most set operations.
   */
 case class WinnowMd5Fingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, ArrayData] {
 
   require(k >= 1 && w >= 1, s"bad winnow params: k=$k w=$w")
 
@@ -124,15 +123,6 @@ case class WinnowMd5Fingerprints(child: Expression, k: Int, w: Int)
       p += 1
     }
     new GenericArrayData(seen.toArray)
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    compute(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wmf", this,
-      classOf[WinnowMd5Fingerprints].getName)
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
   }
 
   override protected def withNewChildInternal(

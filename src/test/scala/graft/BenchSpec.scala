@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.matchers.should.Matchers
-
 /** The bench artifact's self-adjudication (VERDICT r7 missing #3): a
   * deliberately slowed entry must surface in the outliers field, computed
   * against the committed envelope. Pure-function tests — no Spark session,
-  * no timing dependence. */
-class BenchSpec extends AnyFunSuite with Matchers {
+  * no timing dependence (the session of [[SparkSpec]] is never built; it
+  * lends only its temp dirs). */
+class BenchSpec extends SparkSpec {
 
   test("adjudicate: a deliberately slowed entry surfaces; in-envelope and " +
     "history-free entries pass") {
@@ -204,7 +202,7 @@ class BenchSpec extends AnyFunSuite with Matchers {
   test("sidecar merge + in-flight-round exclusion (VERDICT r11 #5 + " +
     "ADVICE): a NON-top-3 query's streak builds from BENCH_OUTLIERS_r*, " +
     "and the current round's own artifacts never count as priors") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bench_spec")
+    val dir = tempDir("graft_bench_spec")
     def write(name: String, body: String): Unit =
       java.nio.file.Files.write(dir.resolve(name), body.getBytes)
     def cap3(qs: (String, String)*): String = // driver-shape: capped list
@@ -246,7 +244,7 @@ class BenchSpec extends AnyFunSuite with Matchers {
 
   test("currentRound: env override wins; else 1 + highest committed " +
     "BENCH_r*.json; empty dir starts at 1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_round_spec")
+    val dir = tempDir("graft_round_spec")
     Bench.currentRound(dir.toString) shouldBe 1
     java.nio.file.Files.write(dir.resolve("BENCH_r07.json"), "{}".getBytes)
     Bench.currentRound(dir.toString) shouldBe 8
@@ -254,7 +252,7 @@ class BenchSpec extends AnyFunSuite with Matchers {
 
   test("currentRound: fallback warns on a fresh newest artifact (same-round " +
     "repeat ambiguity, ADVICE r12) and stays silent on an old one") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_round_warn_spec")
+    val dir = tempDir("graft_round_warn_spec")
     val f = dir.resolve("BENCH_r07.json")
     java.nio.file.Files.write(f, "{}".getBytes)
     def capturedErr(body: => Unit): String = {

@@ -2,7 +2,6 @@ package graft
 
 import graft.engine.{Flows, Impute}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** End-to-end flow composition (SURVEY §3 E1–E3). */
@@ -10,7 +9,7 @@ class FlowsSpec extends SparkSpec {
   import spark.implicits._
 
   test("E1 dailyPvFlow: wide payload lands as hourly partitioned rows, idempotent") {
-    val sink = Files.createTempDirectory("graft_e1_").toString + "/pv"
+    val sink = tempDir("graft_e1_").toString + "/pv"
     val wide = Seq(("2024-03-10", "plantA", 5.0, null.asInstanceOf[Any]),
       ("2024-03-11", "plantA", 7.0, 3.0))
       .map { case (d, p, a, b) => (d, p, a, Option(b).map(_.toString.toDouble)) }
@@ -29,7 +28,7 @@ class FlowsSpec extends SparkSpec {
   }
 
   test("E2 weatherFlow: imputes gaps then merges into history keyed (grp, ts)") {
-    val hist = Files.createTempDirectory("graft_e2_").toString + "/weather"
+    val hist = tempDir("graft_e2_").toString + "/weather"
     def t(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
     val batch1 = Seq(("st1", t(0), 0L, Some(10.0)), ("st1", t(1), 1L, Some(12.0)))
       .toDF("grp", "ts", "id", "v")
@@ -96,7 +95,7 @@ class FlowsSpec extends SparkSpec {
 
   test("E3 monthlyBackfillFlow: refetches exactly the month chunks, lands " +
     "through melt + S13, re-run is idempotent, up-to-date table no-ops") {
-    val sink = Files.createTempDirectory("graft_e3_").toString + "/pv"
+    val sink = tempDir("graft_e3_").toString + "/pv"
     def t(d: String, h: Int) = Timestamp.valueOf(f"$d $h%02d:00:00")
     // existing: only Jan 30 complete — window Jan 30 .. Feb 2 with 2
     // required hours ⇒ targets Jan 31 (chunk Jan 30–31), Feb 1–2
@@ -240,7 +239,7 @@ class FlowsSpec extends SparkSpec {
     "advances; a re-offered batch is a no-op commit") {
     import graft.engine.{Sink, TextOps}
     val en = TextOps.langMarkers.toMap.apply("en")
-    val corpusPath = Files.createTempDirectory("graft_vcorpus_").toString +
+    val corpusPath = tempDir("graft_vcorpus_").toString +
       "/corpus"
     val prose = "the quick brown fox jumps over the lazy dog near the river bank"
     // day 0: the initial corpus is version 1

@@ -38,8 +38,7 @@ class JoinsSpec extends SparkSpec {
     // operator vanishes from the physical plan), and the prefilter must
     // actually prune (with fpp=0.01 the survivors are the matching sliver
     // plus FPs, well under the full fact)
-    val factPath = java.nio.file.Files
-      .createTempDirectory("graft_bloom_fact_").toString + "/fact"
+    val factPath = tempDir("graft_bloom_fact_").toString + "/fact"
     fact.write.parquet(factPath)
     val factFile = spark.read.parquet(factPath)
     val tight = Joins.bloomPrefilteredJoin(factFile, col("fk"), dim,
@@ -191,8 +190,7 @@ class JoinsSpec extends SparkSpec {
     // incompressible-ish varied payloads (a constant pad would compress
     // away the skew in the map-output sizes AQE reads); dim keys distinct
     // so the join is 1:1 and the row count is exact
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_skew_").toString
+    val dir = tempDir("graft_skew_").toString
     (1 to 20000).map { i =>
       val k = if (i <= 19000) "hot" else s"k${i % 37}"
       (k, i.toLong, java.lang.Long.toHexString(i * 0x9e3779b97f4a7c15L) * 12)

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions.col
 class LocalFsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): JPath = Files.createTempDirectory("graft_localfs_")
+  private def tmpDir(): JPath = tempDir("graft_localfs_")
 
   private def raw(fs: RawLocalFileSystem): RawLocalFileSystem = {
     fs.initialize(URI.create("file:///"), new Configuration())

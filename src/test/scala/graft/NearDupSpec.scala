@@ -335,7 +335,7 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("dedupClusters: reliable-checkpoint path yields identical clusters") {
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
+    val ckptDir = tempDir("graft_ckpt_")
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
     val ids = (1L to 6L).map(Tuple1(_)).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2")

@@ -256,8 +256,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = clusteredCorpus
     val cents = Similarity.ivfTrainCentroids(emb, col("vec_id"), col("embedding"))
     val indexed = Similarity.ivfAssign(emb, col("vec_id"), col("embedding"), cents)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_idx_").toString + "/idx"
+    val dir = tempDir("graft_ivf_idx_").toString + "/idx"
     indexed.write.partitionBy("cl").parquet(dir)
     val qs = Seq(0L, 101L, 202L)
     val queries = indexed.filter(col("cid").isin(qs: _*))
@@ -287,8 +286,7 @@ class SimilaritySpec extends SparkSpec {
       m = 4, k = 16)
     val indexed = Similarity.ivfPqIndex(emb, col("vec_id"), col("embedding"),
       cents, cb)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_idx_").toString + "/idx"
+    val dir = tempDir("graft_ivfpq_idx_").toString + "/idx"
     indexed.write.partitionBy("cl").parquet(dir)
     val qs = Seq(0L, 101L, 202L)
     val queries = emb.filter(col("vec_id").isin(qs: _*))

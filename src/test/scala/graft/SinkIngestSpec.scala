@@ -9,7 +9,7 @@ class SinkIngestSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft_test_").toString
+    tempDir("graft_test_").toString
 
   test("readVersion time travel: every retained version readable, GC'd " +
     "version fails loudly, pointer read tracks current") {
@@ -97,10 +97,10 @@ class SinkIngestSpec extends SparkSpec {
     // so permission bits can't force the failure; instead give the target a
     // name near NAME_MAX so `<target>._old` exceeds 255 bytes and the
     // stage-aside rename itself fails (ENAMETOOLONG).
-    val parent = Files.createTempDirectory("graft_long_")
+    val parent = tempDir("graft_long_")
     val longTbl = parent.resolve("t" * 252)
     Seq((9L, "z")).toDF("id", "v").write.parquet(longTbl.toString)
-    val staged = Files.createTempDirectory("graft_staged_").toString
+    val staged = tempDir("graft_staged_").toString
     intercept[java.io.IOException] {
       Sink.swapStaged(new java.io.File(staged), longTbl.toFile)
     }
@@ -146,7 +146,7 @@ class SinkIngestSpec extends SparkSpec {
   test("writeShards: row cap honored per shard, manifest accounts for " +
     "every row and every token") {
     val docs = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
-    val dir = Files.createTempDirectory("graft_shards_").toString + "/corpus"
+    val dir = tempDir("graft_shards_").toString + "/corpus"
     val m = Sink.writeShards(docs.repartition(2, col("doc_id")), dir, 20,
       graft.engine.TextOps.tokenCount(col("text")))
     val rows = m.collect()

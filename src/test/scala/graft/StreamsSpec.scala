@@ -259,8 +259,7 @@ class StreamsSpec extends SparkSpec {
     "a file dim's snapshot is PINNED at stream start") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, Long, Double)]
-    val dimDir = java.nio.file.Files
-      .createTempDirectory("graft_enrich_dim_").toString + "/dim"
+    val dimDir = tempDir("graft_enrich_dim_").toString + "/dim"
     Seq((1L, "alpha")).toDF("k", "name").write.parquet(dimDir)
     // read the dim through a path so the per-micro-batch re-plan sees a
     // refreshed dim without restarting the stream
@@ -337,7 +336,7 @@ class StreamsSpec extends SparkSpec {
 
   test("checkpointed restart: per-key mapGroupsWithState state survives — " +
     "run 2 over the SAME checkpoint extends run 1's hour mask") {
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_")
+    val base = tempDir("graft_restart_")
     val src = base.resolve("src"); java.nio.file.Files.createDirectories(src)
     val ckpt = base.resolve("ckpt").toString
     val sink = base.resolve("sink").toString
@@ -376,7 +375,7 @@ class StreamsSpec extends SparkSpec {
   test("checkpointed restart depth: THREE AvailableNow ticks over ONE " +
     "checkpoint — each tick's late rows merge into window state opened by " +
     "the PREVIOUS tick, so state survives repeated cron restarts") {
-    val base = java.nio.file.Files.createTempDirectory("graft_restart3_")
+    val base = tempDir("graft_restart3_")
     val src = base.resolve("src"); java.nio.file.Files.createDirectories(src)
     val ckpt = base.resolve("ckpt").toString
     val sink = base.resolve("sink").toString
@@ -522,7 +521,7 @@ class StreamsSpec extends SparkSpec {
 
   test("upsertSink: keyed merge per tick; last-batch marker makes a " +
     "replayed batchId a no-op") {
-    val base = java.nio.file.Files.createTempDirectory("graft_upsink_")
+    val base = tempDir("graft_upsink_")
     val src = base.resolve("src"); java.nio.file.Files.createDirectories(src)
     val ckpt = base.resolve("ckpt").toString
     val tbl = base.resolve("tbl").toString
@@ -569,7 +568,7 @@ class StreamsSpec extends SparkSpec {
     "partition sink; a corrected re-delivered day REPLACES (not merges) " +
     "its partition, other days untouched; same-content replay idempotent") {
     import graft.engine.{Sink, Unpivot}
-    val base = java.nio.file.Files.createTempDirectory("graft_meltingest_")
+    val base = tempDir("graft_meltingest_")
     val src = base.resolve("src"); java.nio.file.Files.createDirectories(src)
     val ckpt = base.resolve("ckpt").toString
     val tbl = base.resolve("tbl").toString

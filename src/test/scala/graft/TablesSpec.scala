@@ -133,30 +133,28 @@ class TablesSpec extends SparkSpec {
   test("Tables.parquet: a Spark-written single file (row-metadata schema: " +
     "timestamp_ntz, array, struct, short) reads back with the inferred " +
     "schema and the same rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables_spark")
-    try {
-      val stage = dir.resolve("stage").toString
-      spark.range(5).selectExpr(
-          "id",
-          "cast(id as short) as s",
-          "make_timestamp_ntz(2024, 1, 1, cast(id as int), 0, 0) as ts_ntz",
-          "array(id, id * 2) as arr",
-          "named_struct('a', id, 'b', cast(id as string), " +
-            "'c', array(cast(id as double))) as st")
-        .coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val file = dir.resolve("one.parquet")
-      java.nio.file.Files.move(part.toPath, file)
-      val p = file.toString
-      val inferred = spark.read.parquet(p)
-      val got = Tables.parquet(spark, p)
-      got.schema shouldBe inferred.schema
-      got.schema("ts_ntz").dataType shouldBe
-        org.apache.spark.sql.types.TimestampNTZType
-      got.collect().map(_.toString).sorted shouldBe
-        inferred.collect().map(_.toString).sorted
-    } finally graft.engine.Sink.delete(dir.toFile)
+    val dir = tempDir("graft_tables_spark")
+    val stage = dir.resolve("stage").toString
+    spark.range(5).selectExpr(
+        "id",
+        "cast(id as short) as s",
+        "make_timestamp_ntz(2024, 1, 1, cast(id as int), 0, 0) as ts_ntz",
+        "array(id, id * 2) as arr",
+        "named_struct('a', id, 'b', cast(id as string), " +
+          "'c', array(cast(id as double))) as st")
+      .coalesce(1).write.parquet(stage)
+    val part = new java.io.File(stage).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val file = dir.resolve("one.parquet")
+    java.nio.file.Files.move(part.toPath, file)
+    val p = file.toString
+    val inferred = spark.read.parquet(p)
+    val got = Tables.parquet(spark, p)
+    got.schema shouldBe inferred.schema
+    got.schema("ts_ntz").dataType shouldBe
+      org.apache.spark.sql.types.TimestampNTZType
+    got.collect().map(_.toString).sorted shouldBe
+      inferred.collect().map(_.toString).sorted
   }
 
   test("Tables.parquet: a directory (the micros fixture) resolves as " +
