@@ -17,11 +17,6 @@ object Normalize {
     lower(regexp_replace(stripped, "\\s+", ""))
   }
 
-  /** `normalize_columns`: collapse embedded newlines/tabs/space runs in header
-    * names to single spaces + trim (namdong_merge_pv_data.py:13-22). */
-  def normalizeHeader(c: Column): Column =
-    trim(regexp_replace(c, "[\\s\\u00a0]+", " "))
-
   /** `clean_spec`: first numeric token out of free text, as double
     * (initial_db_ingestion.py:57-62, pattern r'(\d+\.?\d*)'). */
   def cleanSpec(c: Column): Column =

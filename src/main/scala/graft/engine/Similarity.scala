@@ -6,10 +6,8 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor search over an embedding column
   * (`embeddings.embedding: array<float>`).
   *
-  *  - [[cosineTopK]] — brute-force exact baseline: broadcast the (small)
-  *    query set against the corpus; cosine via `zip_with` + `aggregate`
-  *    (codegen'd higher-order functions, no UDF). Linear in corpus size —
-  *    correct at any scale when the query set is small.
+  *  - [[cosinePairs]] — near-dup pairs by exact cosine, the candidates
+  *    blocked by a [[PairBlock]] (all pairs, SRP bands, or one IVF list).
   *  - [[lshCosineTopK]] — the scale path: random-hyperplane LSH. Each vector
   *    gets a `bits`-bit sign signature against deterministic pseudo-random
   *    hyperplanes; candidates share a signature band; exact cosine reranks
@@ -18,7 +16,9 @@ import org.apache.spark.sql.functions._
   *  - [[annTopK]] — search over a pre-built inverted-list / PQ index: the
   *    scorer ([[AnnScore]]: exact cosine or PQ-ADC) and the pruning
   *    ([[AnnProbe]]: every row or the IVF probe lists) are arguments of one
-  *    probe-score-rank body ([[annTopKPartitioned]] for the on-disk index).
+  *    probe-score-rank body ([[annTopKPartitioned]] for the on-disk index);
+  *    `annTopK(…, AnnScore.Exact, AnnProbe.All)` is the brute-force exact
+  *    baseline.
   */
 object Similarity {
 
@@ -38,10 +38,10 @@ object Similarity {
   /** Cosine via the native expression
     * ([[graft.engine.expressions.CosineSimilarity]]), one fused loop inside
     * whole-stage codegen. Equal to [[cosineHof]] on nonzero vectors of one
-    * width; a zero vector gives NaN (which passes every `cos >= tau`
-    * filter) and mismatched widths use the common prefix, where
-    * [[cosineHof]] raises DIVIDE_BY_ZERO (NULL in legacy mode) and
-    * returns NULL. */
+    * width; a zero vector gives NULL (where [[cosineHof]] raises
+    * DIVIDE_BY_ZERO under ANSI, NULL in legacy mode), so it never passes a
+    * `cos >= tau` filter or ranks; mismatched widths raise a `[graft]`
+    * error (where [[cosineHof]] returns NULL). */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.engine.expressions.CosineSimilarity(
@@ -73,35 +73,96 @@ object Similarity {
       .select(col("qid"), col("_s.id").as("cid"), col("_s.score").as(score),
         (col("_p") + 1).cast("long").as("rn"))
 
-  /** Exact top-k by cosine for each query vector (query ids from the same
-    * table). Queries are broadcast; one pass over the corpus. */
-  def cosineTopK(emb: DataFrame, id: Column, vec: Column,
-                 queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = emb.select(id.as("cid"), asDouble(vec).as("cv"))
-    val queries = corpus.filter(col("cid").isin(queryIds: _*))
-      .select(col("cid").as("qid"), col("cv").as("qv"))
-    val scored = corpus.crossJoin(broadcast(queries))
-      .filter(col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        round(cosine(col("cv"), col("qv")), 6).as("cos"))
-    topKPerQuery(scored, k)
+  /** How [[cosinePairs]] blocks its candidates — the one part in which
+    * the exact, the LSH and the within-list pair searches differ. */
+  sealed trait PairBlock
+  object PairBlock {
+    /** Every (id1 < id2) pair: the exact, quadratic baseline. The right
+      * side is broadcast (nested-loop join on the inequality), so use it
+      * only when one copy of the corpus fits in memory. */
+    case object All extends PairBlock
+
+    /** SRP-LSH banding, the corpus path — three stages, none quadratic in
+      * materialized rows:
+      *  1. BLOCK: candidates share >= 1 LSH band chunk (shuffle on
+      *     (band, chunk) buckets, ids+signature only — never the vectors).
+      *  2. PREFILTER: Hamming distance over the full bits-bit signature,
+      *     evaluated INSIDE the join as a post-match filter (native
+      *     xor+popcount) — bucket collisions stream through it without
+      *     materializing; survivors are the only rows that ever carry ids
+      *     downstream.
+      *  3. RERANK: exact cosine on the deduped survivors (vectors
+      *     re-attached; at this corpus size Catalyst picks broadcast
+      *     joins), threshold tau.
+      *
+      * `geometry` defaults to [[SrpGeometry.Fixed]] (corpora up to ~10^4
+      * vectors); at scale pass `srpGeometry(corpusSize, tau)`, which grows
+      * rows-per-band with log n so bucket occupancy (and with it the
+      * candidate-pair mass) stays ~linear at `targetRecall` for pairs at
+      * the threshold. Either way [[requireBucketOccupancy]] refuses a
+      * corpus the geometry is too narrow for. Recall < 1 by design. */
+    final case class Srp(geometry: SrpGeometry = SrpGeometry.Fixed,
+                         dim: Int = 64, maxRowsPerBucket: Int = 1024)
+      extends PairBlock
+
+    /** Pairs inside one inverted list of an [[ivfAssign]] frame (its `cl`;
+      * `vec` is its already-double `cv`, read as is): the self-join on `cl`
+      * is quadratic inside a list, never across lists ([[semDedup]]). */
+    case object SameList extends PairBlock
   }
 
-  /** Embedding-cosine near-dup pairs, exact: every (id1 < id2) pair with
-    * cosine >= tau. Quadratic — the small-scale baseline/oracle; the corpus
-    * path is [[lshCosinePairs]]. The right side is broadcast (nested-loop
-    * join on the inequality), so use only when one side fits in memory. */
-  def cosinePairs(emb: DataFrame, id: Column, vec: Column,
-                  tau: Double): DataFrame = {
-    // spread the probe side: a small single-file scan otherwise feeds the
-    // nested-loop join as ONE partition and the whole n²/2 cosine pass
-    // runs on one core (r13 StageProfile: 2.4 s wall = one 2.4 s task) —
-    // no-op at real corpus scale (spreadForCpu's stats cutoff)
-    val a = TextOps.spreadForCpu(emb.select(id.as("id1"),
-      asDouble(vec).as("v1")))
-    val b = emb.select(id.as("id2"), asDouble(vec).as("v2"))
-    a.join(broadcast(b), col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
+  /** Embedding-cosine near-dup pairs: every (id1 < id2) candidate `block`
+    * admits whose round-6 cosine is >= tau, as (id1, id2, cos). A zero
+    * vector (NULL cosine) pairs with nothing under any block. */
+  def cosinePairs(emb: DataFrame, id: Column, vec: Column, tau: Double,
+                  block: PairBlock = PairBlock.All): DataFrame = block match {
+    case PairBlock.All =>
+      // spread the probe side: a small single-file scan otherwise feeds the
+      // nested-loop join as ONE partition and the whole n²/2 cosine pass
+      // runs on one core (r13 StageProfile: 2.4 s wall = one 2.4 s task) —
+      // no-op at real corpus scale (spreadForCpu's stats cutoff)
+      val a = TextOps.spreadForCpu(emb.select(id.as("id1"),
+        asDouble(vec).as("v1")))
+      val b = emb.select(id.as("id2"), asDouble(vec).as("v2"))
+      scorePairs(a.join(broadcast(b), col("id1") < col("id2")), tau)
+    case PairBlock.Srp(geometry, dim, maxRowsPerBucket) =>
+      requireBucketOccupancy("cosinePairs", estimatedRows(emb, dim),
+        geometry, maxRowsPerBucket)
+      val (vecs, banded) = bandedSignatures(emb, id, vec, geometry.bits,
+        geometry.bands, geometry.rowsPerBand, dim)
+      val maxHam = hammingCut(tau, prefilterBits(geometry.bits))
+      val l = banded.select(col("band"), col("chunk"), col("cid").as("id1"),
+        col("sig").as("sig1"))
+      val r = banded.select(col("band"), col("chunk"), col("cid").as("id2"),
+        col("sig").as("sig2"))
+      // bucket keys are few (bands × 2^rowsPerBand) and duplicate-heavy —
+      // a sort-merge join buffers every many-to-many key group; hash join
+      // streams the probe side through it instead (measured at the 10× step)
+      scorePairs(l.join(r.hint("shuffle_hash"), Seq("band", "chunk"))
+        .filter(col("id1") < col("id2") &&
+          hamming(col("sig1"), col("sig2")) <= maxHam)
+        .select(col("id1"), col("id2")), tau, Some(vecs))
+    case PairBlock.SameList =>
+      // only the right side is renamed: a renaming Project over a cached
+      // index would copy every left row before the join
+      val r = emb.select(col("cl"), id.as("id2"), vec.as("v2"))
+      scorePairs(emb.join(r, Seq("cl")).filter(id < col("id2"))
+        .select(id.as("id1"), vec.as("v1"), col("id2"), col("v2")), tau)
+  }
+
+  /** The tail of every cosine pair search: candidates (id1, v1, id2, v2)
+    * scored as (id1, id2, round-6 cos), kept at cos >= tau. Id-only
+    * candidates (the SRP paths ship ids, never vectors) pass `vecs`
+    * (cid, cv): they are deduped and both vectors re-attached first. `ids`
+    * names the id columns ([[crossCosinePairs]] keeps its own). */
+  private def scorePairs(cands: DataFrame, tau: Double,
+                         vecs: Option[DataFrame] = None,
+                         ids: (String, String) = ("id1", "id2")): DataFrame = {
+    val (id1, id2) = ids
+    val withVecs = vecs.fold(cands)(v => cands.dropDuplicates(id1, id2)
+      .join(v.select(col("cid").as(id1), col("cv").as("v1")), id1)
+      .join(v.select(col("cid").as(id2), col("cv").as("v2")), id2))
+    withVecs.select(col(id1), col(id2),
         round(cosine(col("v1"), col("v2")), 6).as("cos"))
       .filter(col("cos") >= tau)
   }
@@ -112,8 +173,8 @@ object Similarity {
     * items that shingle overlap misses). The bench side broadcasts (it is
     * orders of magnitude smaller than the corpus; the corpus never
     * shuffles). At corpus scale with a LARGE bench side, tag both frames
-    * and run [[lshCosinePairs]] over the union instead — banded, never
-    * quadratic. Output: (corpus_id, bench_id, cos). */
+    * and run [[cosinePairs]] under [[PairBlock.Srp]] over the union instead
+    * — banded, never quadratic. Output: (corpus_id, bench_id, cos). */
   def crossCosinePairs(corpus: DataFrame, corpusId: Column, corpusVec: Column,
                        bench: DataFrame, benchId: Column, benchVec: Column,
                        tau: Double): DataFrame = {
@@ -121,12 +182,10 @@ object Similarity {
     // [[cosinePairs]], the per-row work here is one cosine against a SMALL
     // broadcast bench set — cheaper than the shuffle a spread adds
     val c = corpus.select(corpusId.as("corpus_id"),
-      asDouble(corpusVec).as("cv"))
-    val b = bench.select(benchId.as("bench_id"), asDouble(benchVec).as("bv"))
-    c.crossJoin(broadcast(b))
-      .select(col("corpus_id"), col("bench_id"),
-        round(cosine(col("cv"), col("bv")), 6).as("cos"))
-      .filter(col("cos") >= tau)
+      asDouble(corpusVec).as("v1"))
+    val b = bench.select(benchId.as("bench_id"), asDouble(benchVec).as("v2"))
+    scorePairs(c.crossJoin(broadcast(b)), tau,
+      ids = ("corpus_id", "bench_id"))
   }
 
   /** Packed SRP signature (ceil(bits/64) longs) via the native codegen'd
@@ -296,63 +355,17 @@ object Similarity {
         "tau) with the true corpus size, or raise maxRowsPerBucket " +
         "deliberately.")
 
-  /** Embedding-cosine near-dup pairs at scale — three stages, none quadratic
-    * in materialized rows:
-    *  1. BLOCK: candidates share >= 1 LSH band chunk (shuffle on
-    *     (band, chunk) buckets, ids+signature only — never the vectors).
-    *  2. PREFILTER: Hamming distance over the full bits-bit signature,
-    *     evaluated INSIDE the join as a post-match filter (native
-    *     xor+popcount) — bucket collisions stream through it without
-    *     materializing; survivors are the only rows that ever carry ids
-    *     downstream.
-    *  3. RERANK: exact cosine on the deduped survivors (vectors re-attached;
-    *     at this corpus size Catalyst picks broadcast joins), threshold tau.
-    *
-    * `geometry` defaults to [[SrpGeometry.Fixed]] (corpora up to ~10^4
-    * vectors); at scale pass `srpGeometry(corpusSize, tau)`, which grows
-    * rows-per-band with log n so bucket occupancy (and with it the
-    * candidate-pair mass) stays ~linear at `targetRecall` for pairs at the
-    * threshold. Either way the [[requireBucketOccupancy]] guard refuses a
-    * corpus the geometry is too narrow for. Recall < 1 by design; floor
-    * asserted against [[cosinePairs]] in SimilaritySpec. */
-  def lshCosinePairs(emb: DataFrame, id: Column, vec: Column, tau: Double,
-                     geometry: SrpGeometry = SrpGeometry.Fixed,
-                     dim: Int = 64, maxRowsPerBucket: Int = 1024): DataFrame = {
-    requireBucketOccupancy("lshCosinePairs", estimatedRows(emb, dim),
-      geometry, maxRowsPerBucket)
-    val (vecs, banded) = bandedSignatures(emb, id, vec, geometry.bits,
-      geometry.bands, geometry.rowsPerBand, dim)
-    val maxHam = hammingCut(tau, prefilterBits(geometry.bits))
-    val l = banded.select(col("band"), col("chunk"), col("cid").as("id1"),
-      col("sig").as("sig1"))
-    val r = banded.select(col("band"), col("chunk"), col("cid").as("id2"),
-      col("sig").as("sig2"))
-    // bucket keys are few (bands × 2^rowsPerBand) and duplicate-heavy —
-    // a sort-merge join buffers every many-to-many key group; hash join
-    // streams the probe side through it instead (measured at the 10× step)
-    l.join(r.hint("shuffle_hash"), Seq("band", "chunk"))
-      .filter(col("id1") < col("id2") &&
-        hamming(col("sig1"), col("sig2")) <= maxHam)
-      .select(col("id1"), col("id2"))
-      .dropDuplicates("id1", "id2")
-      .join(vecs.select(col("cid").as("id1"), col("cv").as("v1")), "id1")
-      .join(vecs.select(col("cid").as("id2"), col("cv").as("v2")), "id2")
-      .select(col("id1"), col("id2"),
-        round(cosine(col("v1"), col("v2")), 6).as("cos"))
-      .filter(col("cos") >= tau)
-  }
-
-  /** Incremental twin of [[lshCosinePairs]] for the daily-batch regime:
-    * only the INCOMING batch's banded signatures PROBE the union buckets —
-    * existing↔existing pairs never re-form, so a daily embedding-dedup run
-    * costs O(batch × bucket occupancy), not a full-corpus self-join
-    * re-formed every day (the
+  /** Incremental twin of [[cosinePairs]] under [[PairBlock.Srp]] for the
+    * daily-batch regime: only the INCOMING batch's banded signatures PROBE
+    * the union buckets — existing↔existing pairs never re-form, so a daily
+    * embedding-dedup run costs O(batch × bucket occupancy), not a
+    * full-corpus self-join re-formed every day (the
     * [[graft.engine.NearDup.minhashLshPairsIncremental]] shape on the
     * banded SRP join). Because the SRP signature, the Hamming prefilter,
     * and the exact-cosine rerank are all pure per-row / per-pair
-    * functions, the result EQUALS the full [[lshCosinePairs]] run over
-    * (existing ∪ incoming) at the same `geometry`, restricted to pairs
-    * touching the batch — SimilaritySpec asserts that law at both
+    * functions, the result EQUALS the full [[cosinePairs]] run over
+    * (existing ∪ incoming) under `PairBlock.Srp(geometry)`, restricted to
+    * pairs touching the batch — SimilaritySpec asserts that law at both
     * geometries, and the fixed-geometry oracle twin (`q_srp_incr_fixed`)
     * replays it in SQL as the full-twin query plus a batch-membership
     * predicate. The occupancy guard reads the UNION's estimated size, and
@@ -490,7 +503,6 @@ object Similarity {
     // exists). Build side stays the batch-sized probe (hint below).
     val probe = all.filter(col("_new")).select(col("band"), col("chunk"),
       col("cid").as("in_id"), col("sig").as("in_sig"))
-    val vecs = exVecs.unionByName(inVecs)
     // batch probes union buckets: new↔existing forms exactly once (the
     // probe side is new-only), new↔new dedups by id order. Bucket keys
     // stay few and duplicate-heavy, so this must be a hash join (an SMJ
@@ -499,18 +511,13 @@ object Similarity {
     // side here must be the BATCH-sized probe: building the corpus side's
     // banded rows OOMs the per-partition hash map exactly when the
     // incremental path matters (measured r13 at the 100× step).
-    probe.hint("shuffle_hash").join(all, Seq("band", "chunk"))
+    scorePairs(probe.hint("shuffle_hash").join(all, Seq("band", "chunk"))
       .filter(col("in_id") =!= col("cid") &&
         (!col("_new") || col("in_id") < col("cid")) &&
         hamming(col("in_sig"), col("sig")) <= maxHam)
       .select(least(col("in_id"), col("cid")).as("id1"),
-        greatest(col("in_id"), col("cid")).as("id2"))
-      .dropDuplicates("id1", "id2")
-      .join(vecs.select(col("cid").as("id1"), col("cv").as("v1")), "id1")
-      .join(vecs.select(col("cid").as("id2"), col("cv").as("v2")), "id2")
-      .select(col("id1"), col("id2"),
-        round(cosine(col("v1"), col("v2")), 6).as("cos"))
-      .filter(col("cos") >= tau)
+        greatest(col("in_id"), col("cid")).as("id2")), tau,
+      Some(exVecs.unionByName(inVecs)))
   }
 
   /** Top-`nprobe` nearest centroid indices by dot product (== cosine when
@@ -646,7 +653,7 @@ object Similarity {
   sealed trait AnnProbe
   object AnnProbe {
     /** Every index row: a cross join against the broadcast query batch
-      * (flat PQ; exact search goes through [[cosineTopK]]). */
+      * (flat PQ; under `Exact`, the brute-force exact search). */
     case object All extends AnnProbe
 
     /** The `nprobe` inverted lists nearest each query (the index carries
@@ -661,9 +668,10 @@ object Similarity {
 
   /** ANN top-k over a pre-built index: `queries` is (qid, qv:
     * array<double>); the output is (qid, cid, cos|adc, rn), best first,
-    * ties to the lower cid, a query never matching itself — the shape of
-    * [[cosineTopK]]. Train the models once ([[ivfTrainCentroids]],
-    * [[pqTrain]]), persist the index ([[ivfAssign]], [[pqEncode]],
+    * ties to the lower cid, a query never matching itself; a NULL score
+    * (a zero vector under `Exact`) never ranks, so a zero query gets no
+    * rows. Train the models once ([[ivfTrainCentroids]], [[pqTrain]]),
+    * persist the index ([[ivfAssign]], [[pqEncode]],
     * [[ivfPqIndex]]) and search many times; at scale, sink the index
     * `partitionBy("cl")` and search it with [[annTopKPartitioned]].
     *
@@ -682,7 +690,7 @@ object Similarity {
     *  - `AnnScore.Adc` ranks by the quantized score; its recall floor on
     *    the clusterable fixture is pinned in SimilaritySpec.
     * Probing every list is lossless: `Ivf(cents, cents.length)` returns
-    * exactly the rows of `All` (and, under `Exact`, of [[cosineTopK]]). */
+    * exactly the rows of `All`. */
   def annTopK(index: DataFrame, queries: DataFrame, k: Int,
               score: AnnScore, probe: AnnProbe): DataFrame = probe match {
     case AnnProbe.All => probeScoreRank(index, queries, k, score, None)
@@ -775,33 +783,24 @@ object Similarity {
     * LOWER-id row in the SAME inverted list is cosine >= `tau` to it —
     * cluster-then-dedup (Abbas et al. 2023, arXiv:2303.09540) with a
     * deterministic keep rule (min id per similarity neighborhood), no
-    * iteration.
+    * iteration. The dropped rows are the `id2`s of [[cosinePairs]] under
+    * [[PairBlock.SameList]].
     *
-    * Scale shape: the only shuffle is the within-list self-join on `cl`
-    * — quadratic INSIDE a list but never across lists, so the quantizer's
-    * `nlist` bounds the blocking exactly like LSH bands do for
-    * [[lshCosinePairs]]. At corpus scale pick `nlist` ∝ corpus/target-
-    * list-size (e.g. ~100k lists for web scale) and sink the assignment
-    * `partitionBy("cl")` so each list dedups from its own partition
-    * ([[ivfAssign]] docs). Unlike the LSH/minhash paths this trades
-    * recall for the quantizer's view of geometry: a near-dup pair split
-    * across two lists is missed (same regime caveats as [[annTopK]] under
-    * `AnnProbe.Ivf` — SimilaritySpec pins twin-collapse on a clusterable
-    * corpus).
+    * Scale shape: the only shuffle is the within-list self-join on `cl`.
+    * At corpus scale pick `nlist` ∝ corpus/target-list-size (e.g. ~100k
+    * lists for web scale) and sink the assignment `partitionBy("cl")` so
+    * each list dedups from its own partition ([[ivfAssign]] docs). Unlike
+    * the LSH/minhash paths this trades recall for the quantizer's view of
+    * geometry: a near-dup pair split across two lists is missed (same
+    * regime caveats as [[annTopK]] under `AnnProbe.Ivf` — SimilaritySpec
+    * pins twin-collapse on a clusterable corpus).
     *
-    * Zero-norm vectors have NaN cosine to everything: never dropped,
-    * never drop others — the NaN guard is explicit because Spark orders
-    * NaN ABOVE every double, so a bare `cos >= tau` would drop them.
-    * Output: surviving (cid, cl). */
+    * A zero-norm vector has a NULL cosine to everything: it is never
+    * dropped and never drops another. Output: surviving (cid, cl). */
   def semDedup(indexed: DataFrame, tau: Double): DataFrame = {
-    val left = indexed.select(col("cl"), col("cid"), col("cv"))
-    val right = indexed.select(col("cl"), col("cid").as("cid2"),
-      col("cv").as("cv2"))
-    val cos = round(cosine(col("cv"), col("cv2")), 6)
-    val dominated = left.join(right, Seq("cl"))
-      .filter(col("cid2") < col("cid") && !isnan(cos) && cos >= tau)
-      .select(col("cid")).distinct()
-    indexed.join(dominated, Seq("cid"), "left_anti")
+    val dominated = cosinePairs(indexed, col("cid"), col("cv"), tau,
+      PairBlock.SameList).select(col("id2")).distinct()
+    indexed.join(dominated, col("cid") === col("id2"), "left_anti")
       .select(col("cid"), col("cl"))
   }
 
@@ -870,20 +869,20 @@ object Similarity {
     * cut — so shrinking it cannot rescue small-corpus latency; see the
     * crossover note below for when to use brute force instead.
     *
-    * CROSSOVER vs [[cosineTopK]]: brute force is one linear corpus pass per
-    * query batch — at n = 2 000 (sf0.1) it wins and LSH's signing + banded
-    * join overhead is pure loss. LSH amortizes the one-off signing and scores
-    * only bucket collisions (~n^0.65 per query at these parameters), so it
-    * overtakes once n reaches the high 10^4s and is the only viable path at
-    * corpus scale (10^8+, where a linear pass per query batch is a full-table
-    * scan). Below that, call [[cosineTopK]].
+    * CROSSOVER vs brute force (`annTopK(…, AnnScore.Exact, AnnProbe.All)`,
+    * one linear corpus pass per query batch): at n = 2 000 (sf0.1) brute
+    * force wins and LSH's signing + banded join overhead is pure loss. LSH
+    * amortizes the one-off signing and scores only bucket collisions
+    * (~n^0.65 per query at these parameters), so it overtakes once n
+    * reaches the high 10^4s and is the only viable path at corpus scale
+    * (10^8+, where a linear pass per query batch is a full-table scan).
     *
-    * `geometry` and the occupancy guard work as in [[lshCosinePairs]]. For
+    * `geometry` and the occupancy guard work as in [[PairBlock.Srp]]. For
     * a derived geometry pass `srpGeometry(corpusSize, 0.4)`: top-k has no
     * tau, and 0.4 is the weakest — hence most conservative — threshold the
     * engine tunes for.
     *
-    * Returns (qid, cid, cos, rn) like [[cosineTopK]] — recall < 1 by design;
+    * Returns (qid, cid, cos, rn) like [[annTopK]] — recall < 1 by design;
     * see SimilaritySpec for the measured recall floor. */
   def lshCosineTopK(emb: DataFrame, id: Column, vec: Column,
                     queryIds: Seq[Long], k: Int,

@@ -167,10 +167,6 @@ object Sink {
     delete(bak)
   }
 
-  /** S15/S16: full replace. */
-  def replaceTable(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   // ---- Pointer-file commit (object-store-safe table rewrites) ----
   //
   // Layout: <table>/_v<N>/ immutable version directories plus ONE small

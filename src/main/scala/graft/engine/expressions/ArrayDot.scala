@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Exists (with [[ArrayNormSq]]) so [[graft.engine.rules.RewriteHofCosine]]
   * can swap fused kernels into the HOF cosine tree while leaving the
   * DIVISION to Spark's own `Divide` — preserving ANSI error / legacy null
-  * zero-divisor behavior bit-for-bit, which a single fused cosine (NaN on
-  * zero norms) cannot. */
+  * zero-divisor behavior bit-for-bit, which a single fused cosine (NULL on
+  * zero norms in both modes) cannot. */
 case class ArrayDot(left: Expression, right: Expression)
     extends BinaryKernel[ArrayData, ArrayData, Double] {
 

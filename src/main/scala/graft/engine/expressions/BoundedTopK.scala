@@ -52,12 +52,11 @@ final class TopKBuffer(val k: Int) {
   * wrong" #3). Here the per-group shuffle volume is ≤ k×tasks rows and no
   * sort ever materializes.
   *
-  * Null or NaN score rows and null id rows are skipped (a null/NaN cosine —
-  * e.g. from a zero-norm embedding — never ranks). NOTE this is the one
-  * deliberate divergence from the window idiom: Spark's double ordering
-  * sorts NaN ABOVE every value, so `row_number().orderBy(desc)` would rank
-  * NaN rows FIRST; here they are excluded, matching the explicit
-  * `!isnan` pre-filters the cosine paths apply.
+  * Null or NaN score rows and null id rows are skipped: a NULL cosine (a
+  * zero-norm embedding) never ranks, nor a NaN score, which a caller's own
+  * score or an ADC over NaN data can still be. NOTE this is the one
+  * deliberate divergence from the window idiom, which ranks NaN rows FIRST
+  * (Spark orders NaN above every double) and still numbers NULL rows.
   */
 case class BoundedTopK(score: Expression, id: Expression, k: Int,
                        mutableAggBufferOffset: Int = 0,

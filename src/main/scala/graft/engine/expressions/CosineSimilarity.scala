@@ -14,15 +14,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * and |b|², called from inside the enclosing WholeStageCodegen span
   * through the [[RowKernel]] scaffold.
   *
-  * dot/(sqrt(na)*sqrt(nb)); null input or a null element → null, as in the
-  * HOF formulation. Two cases DIFFER from it
-  * ([[graft.engine.Similarity.cosineHof]]; the HOF-shaped tree is what
-  * [[graft.engine.rules.RewriteHofCosine]] keeps exact):
-  *  - a zero-norm side gives NaN, where the HOF form raises DIVIDE_BY_ZERO
-  *    under ANSI and returns NULL in legacy mode. Spark orders NaN above
-  *    every double, so a zero vector passes every `cos >= tau` filter;
-  *  - mismatched lengths use the common prefix, where the HOF form returns
-  *    NULL (embeddings are fixed-dim by construction).
+  * dot/(sqrt(na)*sqrt(nb)), one contract for every search on it and for
+  * the SQL function `graft_cosine`:
+  *  - null input or a null element → NULL, as in the HOF formulation;
+  *  - a zero-norm side → NULL, the HOF form's legacy-mode result (under
+  *    ANSI it raises DIVIDE_BY_ZERO). No `cos >= tau` filter and no
+  *    [[BoundedTopK]] keeps a NULL, so a zero vector never pairs or ranks;
+  *  - unequal widths fail loudly, naming both, as the oracle engine does.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryKernel[ArrayData, ArrayData, Double] {
@@ -42,7 +40,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   def compute(x: ArrayData, y: ArrayData): Double = {
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) throw new IllegalArgumentException(
+      s"[graft] graft_cosine: vectors have $n and ${y.numElements()} dims — " +
+        "cosine needs one embedding width on both sides")
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
@@ -58,7 +59,10 @@ case class CosineSimilarity(left: Expression, right: Expression)
       nb += yi * yi
       i += 1
     }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+    // zero iff a norm is zero (or their product underflows)
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) throw NullResult
+    dot / denom
   }
 
   override protected def withNewChildrenInternal(

@@ -23,8 +23,9 @@ import graft.engine.expressions.{ArrayDot, ArrayNormSq}
   * along. That last point is what makes the rewrite exactly semantics-
   * preserving: a zero-norm vector makes the HOF form raise DIVIDE_BY_ZERO
   * under ANSI (the Spark 4 default) or return null under legacy, and only
-  * Spark's own `Divide` reproduces that — a fully fused cosine would return
-  * NaN, which sorts ABOVE every threshold in a `cos >= tau` filter.
+  * Spark's own `Divide` reproduces that — the fully fused
+  * [[graft.engine.expressions.CosineSimilarity]] returns NULL in both
+  * modes, never ANSI's DIVIDE_BY_ZERO.
   * [[ArrayDot]] itself matches zip_with's null-padding on mismatched
   * lengths (→ null), so no extra guard is needed.
   *

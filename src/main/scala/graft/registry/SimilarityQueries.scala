@@ -102,8 +102,10 @@ private[graft] object SimilarityQueries {
     // ---- Training-data pipeline: similarity search ----
     // brute-force cosine top-k (exact baseline)
     QueryDef("q_ann_cosine_topk", (s, d) =>
-      Similarity.cosineTopK(embeddings(s, d), col("vec_id"), col("embedding"),
-        Seq(0L, 1L, 2L), 5),
+      Similarity.annTopK(embeddings(s, d).select(col("vec_id").as("cid"),
+          Similarity.asDouble(col("embedding")).as("cv")),
+        embQueries(s, d), 5, Similarity.AnnScore.Exact,
+        Similarity.AnnProbe.All),
       Oracle("""WITH e AS (SELECT vec_id,
                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
                     FROM embeddings),
@@ -388,8 +390,8 @@ private[graft] object SimilarityQueries {
          SELECT id1, id2, cos FROM p WHERE cos >= 0.4""")),
     // embedding-cosine near-dup at scale: LSH buckets + rerank (rows-only)
     QueryDef("q_embed_dedup_lsh", (s, d) =>
-      Similarity.lshCosinePairs(embeddings(s, d), col("vec_id"),
-        col("embedding"), 0.4),
+      Similarity.cosinePairs(embeddings(s, d), col("vec_id"),
+        col("embedding"), 0.4, Similarity.PairBlock.Srp()),
       RowsOnly("graft.SimilaritySpec")),
     // same kernel with the banding geometry DERIVED from the corpus size
     // (srpGeometry: rows-per-band grows with log n so bucket occupancy —
@@ -401,8 +403,8 @@ private[graft] object SimilarityQueries {
     // SimilaritySpec.
     QueryDef("q_embed_dedup_lsh_auto", (s, d) => {
       val emb = embeddings(s, d)
-      Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"), 0.4,
-        Similarity.srpGeometry(emb.count(), 0.4))
+      Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.4,
+        Similarity.PairBlock.Srp(Similarity.srpGeometry(emb.count(), 0.4)))
     },
       RowsOnly("graft.SimilaritySpec")),
     // SRP (random-hyperplane) cosine-LSH MECHANISM, oracled: the SAME
@@ -415,8 +417,9 @@ private[graft] object SimilarityQueries {
     // SimilaritySpec pins word-0 bit-parity between the two widths, so
     // this oracle transitively cross-checks the production signature.
     QueryDef("q_srp_fixed", (s, d) =>
-      Similarity.lshCosinePairs(embeddings(s, d), col("vec_id"),
-        col("embedding"), 0.4, Similarity.SrpGeometry(64, 8, 8)),
+      Similarity.cosinePairs(embeddings(s, d), col("vec_id"),
+        col("embedding"), 0.4,
+        Similarity.PairBlock.Srp(Similarity.SrpGeometry(64, 8, 8))),
       // SRP-LSH mechanism replay: the 64 MurmurHash3 ±1 hyperplanes as
       // literal sign folds — bit j = (±e1 ± e2 ... ± e64 >= 0), the same
       // left-fold IEEE order as the SrpSignature kernel loop (±1 products

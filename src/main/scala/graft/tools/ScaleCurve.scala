@@ -183,10 +183,10 @@ object ScaleCurve {
     // with a fixed band/row geometry, per-bucket occupancy grows with n and
     // candidate pairs with n². Since r12 the engine closes this itself:
     // srpGeometry(n, tau) derives the banding (rows-per-band ~ log n) and
-    // lshCosinePairs takes it as its geometry — the q_embed_dedup_lsh_auto
-    // row above measures that path across scales. Keep the fixed-geometry
-    // A/B here (maxRowsPerBucket raised DELIBERATELY to measure the cliff
-    // the guard now fails loudly on).
+    // cosinePairs' PairBlock.Srp takes it as its geometry — the
+    // q_embed_dedup_lsh_auto row above measures that path across scales.
+    // Keep the fixed-geometry A/B here (maxRowsPerBucket raised
+    // DELIBERATELY to measure the cliff the guard now fails loudly on).
     def lshOnce(dir: String, run: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): Double = {
       val emb = Tables.embeddings(spark, dir)
@@ -195,11 +195,12 @@ object ScaleCurve {
     val nSf1 = Tables.embeddings(spark, synthDir).count()
     val g = graft.engine.Similarity.srpGeometry(nSf1, 0.4)
     val fixed = lshOnce(synthDir, emb =>
-      graft.engine.Similarity.lshCosinePairs(emb, col("vec_id"),
-        col("embedding"), 0.4, maxRowsPerBucket = Int.MaxValue))
+      graft.engine.Similarity.cosinePairs(emb, col("vec_id"),
+        col("embedding"), 0.4, graft.engine.Similarity.PairBlock.Srp(
+          maxRowsPerBucket = Int.MaxValue)))
     val derived = lshOnce(synthDir, emb =>
-      graft.engine.Similarity.lshCosinePairs(emb, col("vec_id"),
-        col("embedding"), 0.4, g))
+      graft.engine.Similarity.cosinePairs(emb, col("vec_id"),
+        col("embedding"), 0.4, graft.engine.Similarity.PairBlock.Srp(g)))
     println(f"[scale] q_embed_dedup_lsh at sf1 (n=$nSf1): fixed geometry " +
       f"(24x4/256) $fixed%.3f s vs derived (${g.bands}x${g.rowsPerBand}/" +
       f"${g.bits}) $derived%.3f s")

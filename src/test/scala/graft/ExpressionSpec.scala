@@ -29,9 +29,9 @@ class ExpressionSpec extends SparkSpec {
     val out = df.select(Similarity.cosine(col("a"), col("b")).as("c")).collect()
     out(0).getDouble(0) shouldBe (1.0 +- 1e-12)
     out(1).isNullAt(0) shouldBe true
-    // 0/0 is NaN here; the HOF path raises DIVIDE_BY_ZERO (NULL in legacy
-    // mode), as the RewriteHofCosine test below pins
-    out(2).getDouble(0).isNaN shouldBe true
+    // a zero norm is NULL here, the HOF path's legacy-mode result (under
+    // ANSI it raises DIVIDE_BY_ZERO, as the RewriteHofCosine test below pins)
+    out(2).isNullAt(0) shouldBe true
   }
 
   test("null ELEMENT nulls the result (matches HOF propagation)") {
@@ -118,9 +118,9 @@ class ExpressionSpec extends SparkSpec {
       out(1).isNullAt(0) shouldBe true
       out(2).isNullAt(0) shouldBe true
 
-      // ZERO-NORM parity — the case a fully fused cosine gets wrong (NaN,
-      // which passes any >= tau filter). Rewritten form must match the HOF
-      // form in BOTH modes: ANSI (session default) raises DIVIDE_BY_ZERO...
+      // ZERO-NORM parity — the case the fused graft_cosine answers NULL in
+      // both modes. Rewritten form must match the HOF form in BOTH modes:
+      // ANSI (session default) raises DIVIDE_BY_ZERO...
       def zeroCase = Seq((Seq(0.0, 0.0), Seq(1.0, 2.0))).toDF("a", "b")
         .select(Similarity.cosineHof(col("a"), col("b")).as("c"))
       val ansiErr = intercept[Exception] { zeroCase.collect() }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.engine.{Similarity, Tables}
-import graft.engine.Similarity.{AnnProbe, AnnScore}
+import graft.engine.Similarity.{AnnProbe, AnnScore, PairBlock}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -12,15 +12,14 @@ import org.apache.spark.sql.functions._
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
-  test("cosineTopK: exact ranking on a known tiny corpus") {
+  test("annTopK(Exact, All): exact ranking on a known tiny corpus") {
     val vecs = Seq(
       (0L, Array(1.0f, 0.0f, 0.0f)),
       (1L, Array(0.9f, 0.1f, 0.0f)), // closest to 0
       (2L, Array(0.0f, 1.0f, 0.0f)), // orthogonal to 0
       (3L, Array(0.5f, 0.5f, 0.0f))
     ).toDF("vec_id", "embedding")
-    val top = Similarity.cosineTopK(vecs, col("vec_id"), col("embedding"),
-      Seq(0L), 2).orderBy("rn").collect()
+    val top = exactTopK(vecs, Seq(0L), 2).orderBy("rn").collect()
     top.map(_.getLong(1)) shouldBe Array(1L, 3L)
     top(0).getDouble(2) should be > 0.99
   }
@@ -28,7 +27,7 @@ class SimilaritySpec extends SparkSpec {
   test("LSH ANN: recall vs brute force on testdata sf0.001") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val qs = Seq(0L, 1L, 2L)
-    val exact = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
+    val exact = exactTopK(emb, qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val approx = Similarity.lshCosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -69,6 +68,12 @@ class SimilaritySpec extends SparkSpec {
         Similarity.asDouble(col("embedding")).as("qv"))
       .filter(col("qid").isin(qs: _*))
 
+  /** Brute-force exact top-k: every raw embedding scored against `qs`. */
+  private def exactTopK(emb: DataFrame, qs: Seq[Long], k: Int): DataFrame =
+    Similarity.annTopK(emb.select(col("vec_id").as("cid"),
+        Similarity.asDouble(col("embedding")).as("cv")),
+      embQueries(emb, qs), k, AnnScore.Exact, AnnProbe.All)
+
   /** Train the IVF quantizer, assign the corpus, search it exactly. */
   private def ivfSearch(emb: DataFrame, qs: Seq[Long], k: Int,
                         nprobe: Int = 4): DataFrame = {
@@ -105,7 +110,7 @@ class SimilaritySpec extends SparkSpec {
   test("IVF ANN: recall >= 0.9 on a clusterable corpus at defaults") {
     val emb = clusteredCorpus
     val qs = Seq(0L, 101L, 202L, 303L, 404L) // one per first five clusters
-    val exact = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
+    val exact = exactTopK(emb, qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val approx = ivfSearch(emb, qs, 5).select("qid", "cid").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -125,7 +130,7 @@ class SimilaritySpec extends SparkSpec {
     // comfortably above the scanned fraction, not near 1.
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val qs = Seq(0L, 1L, 2L, 3L, 4L)
-    val exact = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
+    val exact = exactTopK(emb, qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val approx = ivfSearch(emb, qs, 5, nprobe = 8)
       .select("qid", "cid").collect()
@@ -161,7 +166,7 @@ class SimilaritySpec extends SparkSpec {
     val kept = semDedupOf(emb, tau = 0.99).select("cid").collect()
       .map(_.getLong(0)).toSet
     // exact twins collapse to the LOWER id; in-cluster cos ≈ 0.81 < 0.99 so
-    // nothing else pairs; the zero vector has NaN cosine → always kept
+    // nothing else pairs; the zero vector has NULL cosine → always kept
     kept should contain(0L)
     kept should contain(101L)
     (kept should not).contain(2000L)
@@ -208,7 +213,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.1")
     val qs = Seq(0L, 1L, 2L)
-    val res = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
+    val res = exactTopK(emb, qs, 5)
     // the window formulation this rerank replaced, over the same candidates
     val corpus = emb.select(col("vec_id").as("cid"),
       Similarity.asDouble(col("embedding")).as("cv"))
@@ -355,7 +360,8 @@ class SimilaritySpec extends SparkSpec {
     val exact = pairs(
       Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.4))
     val lsh = pairs(
-      Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"), 0.4))
+      Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.4,
+        PairBlock.Srp()))
     val recall = (exact intersect lsh).size.toDouble / exact.size
     recall should be >= 0.9
     // exact-cosine rerank means NO false positives, ever
@@ -523,7 +529,7 @@ class SimilaritySpec extends SparkSpec {
     "error shrinks as k grows; reuse path = one-shot path") {
     val emb = clusteredCorpus
     val qs = Seq(0L, 101L, 202L, 303L, 404L)
-    val exact = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
+    val exact = exactTopK(emb, qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // m=8 → 4-dim subspaces: the fixture's ±1/√32 subvectors take only
     // 2⁴ = 16 sign patterns, so k=16 codewords nearly resolve the corpus
@@ -584,7 +590,7 @@ class SimilaritySpec extends SparkSpec {
     // recall vs exact: on a clusterable corpus the coarse quantizer routes
     // each query to its own cluster's list, so IVF pruning costs nothing on
     // top of PQ quantization (flat-PQ measured 0.84 here)
-    val exact = Similarity.cosineTopK(emb, col("vec_id"), col("embedding"), qs, 5)
+    val exact = exactTopK(emb, qs, 5)
       .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val approx = out.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
@@ -615,8 +621,8 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("annTopK law: probing every inverted list loses no candidate — " +
-    "Ivf(nprobe = nlist) equals cosineTopK under Exact and All under Adc") {
+  test("annTopK law: Ivf(nprobe = nlist) equals All") {
+    // probing every inverted list loses no candidate, under Exact and Adc
     val emb = clusteredCorpus
     val qs = Seq(0L, 101L, 202L, 303L, 404L)
     // k above the 50-point cluster size: every query's top-k reaches into
@@ -632,8 +638,7 @@ class SimilaritySpec extends SparkSpec {
       cents)
     def ivfExact(nprobe: Int) = rows(Similarity.annTopK(indexed,
       indexQueries(indexed, qs), k, AnnScore.Exact, AnnProbe.Ivf(cents, nprobe)))
-    val exact = rows(Similarity.cosineTopK(emb, col("vec_id"),
-      col("embedding"), qs, k))
+    val exact = rows(exactTopK(emb, qs, k))
     exact.size shouldBe qs.size * k
     ivfExact(nlist) shouldBe exact
     // the law has teeth: one probed list does lose candidates here
@@ -685,8 +690,8 @@ class SimilaritySpec extends SparkSpec {
     val emb = spark.range(200000).select(col("id").as("vec_id"),
       array(lit(1.0f)).as("embedding"))
     val e = intercept[IllegalArgumentException] {
-      Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"), 0.4,
-        dim = 1)
+      Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.4,
+        PairBlock.Srp(dim = 1))
     }
     e.getMessage should include("srpGeometry")
     val e2 = intercept[IllegalArgumentException] {
@@ -695,17 +700,17 @@ class SimilaritySpec extends SparkSpec {
     }
     e2.getMessage should include("srpGeometry")
     // raising the cap deliberately (the maxDays pattern) is the escape
-    noException should be thrownBy Similarity.lshCosinePairs(emb,
-      col("vec_id"), col("embedding"), 0.4, dim = 1,
-      maxRowsPerBucket = Int.MaxValue)
+    noException should be thrownBy Similarity.cosinePairs(emb,
+      col("vec_id"), col("embedding"), 0.4,
+      PairBlock.Srp(dim = 1, maxRowsPerBucket = Int.MaxValue))
     // the same guard runs for a DERIVED geometry: every SRP entry refuses
     // an understated corpus size (srpGeometry(2000): 16 buckets/band, cap
     // 16k rows) and accepts the true one (2048 buckets/band, cap 2M)
     val sigs = Similarity.srpSignatureTable(emb, col("vec_id"),
       col("embedding"), bits = 256, dim = 1)
     def entries(g: Similarity.SrpGeometry): Seq[() => Any] = Seq(
-      () => Similarity.lshCosinePairs(emb, col("vec_id"), col("embedding"),
-        0.4, g, dim = 1),
+      () => Similarity.cosinePairs(emb, col("vec_id"), col("embedding"),
+        0.4, PairBlock.Srp(g, dim = 1)),
       () => Similarity.lshCosinePairsIncremental(emb, emb.limit(1),
         col("vec_id"), col("embedding"), 0.4, g, dim = 1),
       () => Similarity.lshCosineTopK(emb, col("vec_id"), col("embedding"),
@@ -753,8 +758,8 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(
       Similarity.cosinePairs(emb, col("vec_id"), col("embedding"), 0.4))
-    val auto = pairs(Similarity.lshCosinePairs(emb, col("vec_id"),
-      col("embedding"), 0.4, Similarity.srpGeometry(2000, 0.4)))
+    val auto = pairs(Similarity.cosinePairs(emb, col("vec_id"),
+      col("embedding"), 0.4, PairBlock.Srp(Similarity.srpGeometry(2000, 0.4))))
     val recall = (exact intersect auto).size.toDouble / exact.size
     recall should be >= 0.9
     (auto diff exact) shouldBe empty // exact rerank: no false positives
@@ -769,8 +774,8 @@ class SimilaritySpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2))).toSet
     // fixed 64-bit geometry — the oracle twin's exact layout
-    val full64 = rows(Similarity.lshCosinePairs(emb, col("vec_id"),
-        col("embedding"), 0.4, Similarity.SrpGeometry(64, 8, 8)))
+    val full64 = rows(Similarity.cosinePairs(emb, col("vec_id"),
+        col("embedding"), 0.4, PairBlock.Srp(Similarity.SrpGeometry(64, 8, 8))))
       .filter(p => p._1 % 5 == 0 || p._2 % 5 == 0)
     val incr64 = rows(Similarity.lshCosinePairsIncremental(existing,
       incoming, col("vec_id"), col("embedding"), 0.4,
@@ -779,8 +784,8 @@ class SimilaritySpec extends SparkSpec {
     full64 should not be empty // the law must not hold vacuously
     // derived geometry — the at-scale daily-batch entry point
     val g = Similarity.srpGeometry(emb.count(), 0.4)
-    val fullAuto = rows(Similarity.lshCosinePairs(emb, col("vec_id"),
-        col("embedding"), 0.4, g))
+    val fullAuto = rows(Similarity.cosinePairs(emb, col("vec_id"),
+        col("embedding"), 0.4, PairBlock.Srp(g)))
       .filter(p => p._1 % 5 == 0 || p._2 % 5 == 0)
     val incrAuto = rows(Similarity.lshCosinePairsIncremental(existing,
       incoming, col("vec_id"), col("embedding"), 0.4, g))

@@ -31,13 +31,13 @@ class WinnowSpec extends SparkSpec {
     pairs.exists(p => p._1 == 3L || p._2 == 3L) shouldBe false
   }
 
-  test("embedding cosinePairs vs lshCosinePairs on sf0.001: subset + recall") {
+  test("embedding cosinePairs All vs Srp on sf0.001: subset + recall") {
     val emb = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val exact = graft.engine.Similarity.cosinePairs(emb, col("vec_id"),
         col("embedding"), 0.35)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = graft.engine.Similarity.lshCosinePairs(emb, col("vec_id"),
-        col("embedding"), 0.35)
+    val lsh = graft.engine.Similarity.cosinePairs(emb, col("vec_id"),
+        col("embedding"), 0.35, graft.engine.Similarity.PairBlock.Srp())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     lsh.subsetOf(exact) shouldBe true // rerank removes false positives
     if (exact.nonEmpty) {
