@@ -111,11 +111,11 @@ object SparkEntry {
   private[graft] val ivfPqIndexes =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** Bench-side Bloom filters (serialized sketch bytes), built once per
-    * dataset dir — the bench suite is fixed state like the IVF centroids;
-    * only the corpus-side prefilter+verify runs per query. */
+  /** Bench-side Bloom filters, built once per dataset dir — the bench
+    * suite is fixed state like the IVF centroids; only the corpus-side
+    * prefilter+verify runs per query. */
   private[graft] val benchBlooms =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
+    new java.util.concurrent.ConcurrentHashMap[String, NearDup.ShingleBloom]()
 
   /** Fixed 4-dim Mahalanobis model for `q_mahalanobis` — the fixed-model
     * oracle pattern (literal constants on both engine and SQL sides; a

@@ -129,24 +129,6 @@ object Flows {
     }
   }
 
-  /** LLM corpus cleaning, end to end — the composition the training-data
-    * operators exist for:
-    *
-    *  1. EXACT dedup: one shuffle on the content hash, keeper = min id.
-    *  2. NEAR-dup: `nearDupPairs` (MinHash+LSH by default; inject
-    *     [[NearDup.jaccardPairs]] for the exact small-scale variant or
-    *     a SimHash/embedding detector) → connected components → keep each
-    *     cluster's canonical member.
-    *  3. QUALITY floor: integer [[TextOps.qualityScore]] >= `minQuality`.
-    *
-    * Returns surviving rows of `docs` with `quality` attached. The result is
-    * backed by the clustering's checkpoint blocks — in a long-lived session
-    * call [[NearDup.releaseCheckpoint]] on the RETURNED frame once it is
-    * materialized (it finds the checkpoint leaf through the joins).
-    *
-    * Scale shape: stages 1–2 shuffle ids/hashes only (the text rides a
-    * left-semi join back in, never through the pair pipeline); stage 3 is a
-    * map-side filter. No stage is quadratic in the corpus. */
   /** Daily corpus increment — the steady-state production composition: admit
     * an incoming batch against an existing corpus WITHOUT re-processing
     * existing↔existing pairs (a naive full [[corpusClean]] re-run re-pairs
@@ -210,15 +192,34 @@ object Flows {
       .filter(col("quality") >= minQuality)
   }
 
+  /** LLM corpus cleaning, end to end — the composition the training-data
+    * operators exist for:
+    *
+    *  1. EXACT dedup: one shuffle on the content hash, keeper = min id.
+    *  2. NEAR-dup: [[NearDup.jaccardPairs]] at `tau` under `block`
+    *     ([[NearDup.ShingleBlock.MinhashLsh]] by default, the scale path;
+    *     [[NearDup.ShingleBlock.Postings]] for the exact small-scale
+    *     variant) → connected components → keep each cluster's canonical
+    *     member.
+    *  3. QUALITY floor: integer [[TextOps.qualityScore]] >= `minQuality`.
+    *
+    * Returns surviving rows of `docs` with `quality` attached. The result is
+    * backed by the clustering's checkpoint blocks — in a long-lived session
+    * call [[NearDup.releaseCheckpoint]] on the RETURNED frame once it is
+    * materialized (it finds the checkpoint leaf through the joins).
+    *
+    * Scale shape: stages 1–2 shuffle ids/hashes only (the text rides a
+    * left-semi join back in, never through the pair pipeline); stage 3 is a
+    * map-side filter. No stage is quadratic in the corpus. */
   def corpusClean(docs: DataFrame, id: Column, text: Column,
                   stopwords: Seq[String], tau: Double = 0.1,
                   minQuality: Long = 300L,
-                  nearDupPairs: (DataFrame, Column, Column, Double) => DataFrame =
-                    NearDup.minhashLshPairs(_, _, _, _)): DataFrame = {
+                  block: NearDup.ShingleBlock =
+                    NearDup.ShingleBlock.MinhashLsh()): DataFrame = {
     val exactKeep = NearDup.exactDuplicates(docs, id, text)
       .select(col("keeper").as("_keep_id"))
     val exact = docs.join(exactKeep, id === col("_keep_id"), "left_semi")
-    val pairs = nearDupPairs(exact, id, text, tau)
+    val pairs = NearDup.jaccardPairs(exact, id, text, tau, block = block)
     val canon = NearDup.canonicalByCluster(NearDup.dedupClusters(pairs, exact, id))
       .select(col("doc_id").as("_canon_id"))
     exact.join(canon, id === col("_canon_id"), "left_semi")
@@ -230,15 +231,15 @@ object Flows {
     * consumes, composed from this engine's individually-oracled stages:
     * [[corpusClean]] (exact dedup → near-dup cluster canonicals → quality
     * floor) → Bloom-prefiltered long-n-gram benchmark decontamination
-    * ([[NearDup.bloomContaminationPairs]], the GPT-3/Llama 13-gram recipe)
-    * → [[Sampling.assignSplit]] → per-split [[Order.seededShuffle]]
-    * (train-order position + round-robin shard, contiguous within each
-    * split so every split ships as its own shard set). Every stage is a
-    * deterministic pure function of (content, ids, seed): re-releasing the
-    * same inputs is bit-identical — FlowsSpec pins exact parity with the
-    * hand-composed stage chain plus the release invariants. The caller
-    * sinks each split via [[Sink.writeShards]] for size-bounded shard
-    * files + manifest.
+    * ([[NearDup.contaminationPairs]] behind its `prefilter`, the
+    * GPT-3/Llama 13-gram recipe) → [[Sampling.assignSplit]] → per-split
+    * [[Order.seededShuffle]] (train-order position + round-robin shard,
+    * contiguous within each split so every split ships as its own shard
+    * set). Every stage is a deterministic pure function of (content, ids,
+    * seed): re-releasing the same inputs is bit-identical — FlowsSpec pins
+    * exact parity with the hand-composed stage chain plus the release
+    * invariants. The caller sinks each split via [[Sink.writeShards]] for
+    * size-bounded shard files + manifest.
     *
     * Scale: linear composition — no stage adds shuffles beyond its own
     * documented ones, and the shuffle/shard sort runs on the already-
@@ -250,23 +251,24 @@ object Flows {
                     seed: Long, numShards: Int, numParts: Int = 32,
                     tau: Double = 0.1, minQuality: Long = 300L,
                     contamTau: Double = 0.8, contamN: Int = 13,
-                    nearDupPairs: (DataFrame, Column, Column, Double) => DataFrame =
-                      NearDup.minhashLshPairs(_, _, _, _),
-                    benchBloom: Option[Array[Byte]] = None): DataFrame = {
+                    block: NearDup.ShingleBlock =
+                      NearDup.ShingleBlock.MinhashLsh(),
+                    benchBloom: Option[NearDup.ShingleBloom] = None)
+      : DataFrame = {
     // each checkpoint materializes a reused stage once: `cleaned` feeds the
     // Bloom probe, the exact-verify pairs AND the anti-join (3 consumers),
     // `released` feeds one sort per split — without them every consumer
     // re-runs the whole upstream chain (measured 9.1 → 3.6 s at sf0.1)
     val cleaned = corpusClean(docs, id, text, stopwords, tau, minQuality,
-      nearDupPairs).localCheckpoint()
+      block).localCheckpoint()
     // the bench bloom is a pure function of the bench suite — callers
     // releasing repeatedly against one suite pass it prebuilt
     // (benchShingleBloom's build-once contract) instead of re-aggregating
     // the bench shingles every release
     val bloom = benchBloom.getOrElse(
       NearDup.benchShingleBloom(bench, benchId, benchText, contamN))
-    val dirty = NearDup.bloomContaminationPairsWith(cleaned, id, text, bench,
-        benchId, benchText, contamTau, bloom, contamN)
+    val dirty = NearDup.contaminationPairs(cleaned, id, text, bench,
+        benchId, benchText, contamTau, contamN, prefilter = Some(bloom))
       .select(col("corpus_id")).distinct()
     val released = Sampling.assignSplit(
       cleaned.join(dirty, id === col("corpus_id"), "left_anti"), id, splits)

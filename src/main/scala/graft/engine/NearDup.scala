@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Deduplication operators for a training-data pipeline, on the `documents`
   * table: exact (hash group-by), exact n-gram Jaccard, MinHash+LSH, SimHash.
@@ -174,7 +175,7 @@ object NearDup {
     * count). Docs with zero shingles get no sizes row — they cannot share
     * a shingle, so they never appear in a candidate pair and the
     * difference is join-invisible (every consumer is a pair-side join).
-    * Not used by [[jaccardPairs]]: its posting aggregate needs
+    * Not used under [[ShingleBlock.Postings]]: its posting aggregate needs
     * hash(shingle), a doc-keyed exchange would just add a full re-shuffle. */
   private def hashedShinglesByDoc(docs: DataFrame, id: Column, text: Column,
                                   n: Int): (DataFrame, DataFrame) = {
@@ -198,52 +199,127 @@ object NearDup {
       .filter(col("jaccard") >= tau)
       .select(col("id1"), col("id2"), col("jaccard"))
 
+  /** (id1, id2, n_inter) from each posting row's lists `a` and `b`:
+    * a-choose-2 then a×b pairs, counted per pair. Native pair emission
+    * (r14; same values and order as the HOF transform/slice forms it
+    * replaced, parity pinned in NearDupSpec — HOFs evaluate interpreted
+    * and this reduce stage was q_jaccard_pairs' hottest at 22.6 s task
+    * time). */
+  private def postingPairCounts(post: DataFrame, a: Column,
+                                b: Column): DataFrame =
+    post.select(explode(ColumnBridge.column(expressions.PairEmit(
+        ColumnBridge.expression(a), ColumnBridge.expression(b)))).as("p"))
+      .select(col("p.id1"), col("p.id2"))
+      .groupBy(col("id1"), col("id2"))
+      .agg(count(lit(1)).as("n_inter"))
+
+  /** Exact verify of `(id1, id2)` candidates over a (postings, sizes) pair
+    * from [[hashedShinglesAndSizes]] or [[hashedShinglesByDoc]]: both
+    * sides' shingles join in, the shared ones count as `n_inter`, and
+    * [[jaccardFromInter]] keeps the pairs >= tau. The caller picks the
+    * shingle source — the choice is measured per path (r13). */
+  private def verifyCandidates(candidates: DataFrame,
+                               shingles: (DataFrame, DataFrame),
+                               tau: Double): DataFrame = {
+    val (sh, sizes) = shingles
+    val inter = candidates
+      .join(sh.withColumnRenamed("doc_id", "id1")
+        .withColumnRenamed("shingle", "s1"), "id1")
+      .join(sh.withColumnRenamed("doc_id", "id2")
+        .withColumnRenamed("shingle", "s2"), "id2")
+      .filter(col("s1") === col("s2"))
+      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("n_inter"))
+    jaccardFromInter(inter, sizes, tau)
+  }
+
   /** Observation names must be unique per query plan — two jaccardPairs
     * results combined into ONE plan (e.g. a union over two corpora) would
     * fail analysis with duplicated observed metrics under a fixed name. */
   private val observeCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Exact n-gram (shingle) Jaccard pairs with similarity >= tau.
-    * Pairs only form between docs sharing >= 1 shingle (the shingle join is
-    * the blocker). `maxDf` caps the document frequency of a shingle: a
-    * shingle shared by m docs emits m(m-1)/2 pairs, so ONE stop-shingle in a
-    * real corpus makes this quadratic. Posting lists longer than maxDf are
-    * dropped (hot shingles carry no near-dup signal — they're corpus
-    * boilerplate); the drop count is published as the observable metric
-    * `jaccard_df_cap_<n>.n_dropped_shingles` (suffix unique per call; read it
-    * via a QueryExecutionListener or `Observation`). With the cap this is
-    * corpus-safe; results stay EXACT whenever maxDf exceeds the corpus's
-    * true max shingle df (the testdata oracle case). */
+  /** How [[jaccardPairs]] and [[jaccardPairsIncremental]] block their
+    * candidates — the one part in which the exact and the MinHash+LSH
+    * shingle-set pair searches differ. Every candidate is verified by
+    * exact shingle Jaccard, so neither block has a false positive. */
+  sealed trait ShingleBlock
+  object ShingleBlock {
+    /** Docs sharing >= 1 shingle, found through posting lists (the shingle
+      * join is the blocker). `maxDf` caps the document frequency of a
+      * shingle: a shingle shared by m docs emits m(m-1)/2 pairs, so ONE
+      * stop-shingle in a real corpus makes this quadratic. Posting lists
+      * longer than maxDf are dropped (hot shingles carry no near-dup
+      * signal — they're corpus boilerplate); the drop count is published
+      * as the observable metric `jaccard_df_cap_<n>.n_dropped_shingles`
+      * (`incdedup_df_cap_<n>` on the incremental path; suffix unique per
+      * call; read it via a QueryExecutionListener or `Observation`). With
+      * the cap this is corpus-safe; results stay EXACT whenever maxDf
+      * exceeds the corpus's true max shingle df (the testdata oracle
+      * case). */
+    final case class Postings(maxDf: Int = 100000) extends ShingleBlock
+
+    /** MinHash+LSH, the scale path: docs landing in the same (band,
+      * hash-of-band-slice) bucket of their `bands` × `rowsPerBand` minhash
+      * signature under `family` become candidates. Only (tunable) false
+      * negatives, the standard LSH trade: under either [[HashFamily]] the
+      * output is a subset of the [[Postings]] result by construction;
+      * [[HashFamily.Md5]] makes the whole pipeline DuckDB-replayable (the
+      * `q_minhash_fixed` oracle). */
+    final case class MinhashLsh(bands: Int = 8, rowsPerBand: Int = 4,
+                                family: HashFamily = HashFamily.Production)
+      extends ShingleBlock
+  }
+
+  /** N-gram (shingle) Jaccard near-dup pairs: every (id1 < id2) candidate
+    * `block` admits whose exact shingle Jaccard is >= tau.
+    * Output: (id1, id2, jaccard). */
   def jaccardPairs(docs: DataFrame, id: Column, text: Column, tau: Double,
-                   n: Int = 3, maxDf: Int = 100000): DataFrame = {
-    // join/shuffle on the 8-byte shingle hash, not the shingle string — the
-    // intersection count is unchanged (per-doc shingles are pre-distinct;
-    // cross-shingle 64-bit collisions are ~1e-7 at corpus scale) and the
-    // self-join shuffle moves ~3× fewer bytes.
-    val (sh, sizes) = hashedShinglesAndSizes(docs, id, text, n)
-    // ONE shuffle on the shingle hash, then emit ordered doc pairs per
-    // posting list (lists are short — a shingle shared by m docs emits
-    // m(m-1)/2 pairs) — cheaper than the equivalent two-sided self-join
-    val inter = sh.groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .observe(s"jaccard_df_cap_${observeCounter.incrementAndGet()}",
-        sum(when(size(col("ids")) > maxDf, 1L).otherwise(0L))
-          .as("n_dropped_shingles"))
-      .filter(size(col("ids")) <= maxDf)
-      // native pair emission (r14; parity with the HOF transform/slice
-      // formulation pinned in NearDupSpec — HOFs evaluate interpreted and
-      // this reduce stage was the query's hottest at 22.6 s task time);
-      // the empty same-typed second arg keeps the kernel id-type-generic
-      .select(explode(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        expressions.PairEmit(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("ids")),
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-            slice(col("ids"), lit(1), lit(0)))))).as("p"))
-      .select(col("p.id1"), col("p.id2"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("n_inter"))
-    jaccardFromInter(inter, sizes, tau)
+                   n: Int = 3,
+                   block: ShingleBlock = ShingleBlock.Postings())
+      : DataFrame = block match {
+    case ShingleBlock.Postings(maxDf) =>
+      // join/shuffle on the 8-byte shingle hash, not the shingle string —
+      // the intersection count is unchanged (per-doc shingles are
+      // pre-distinct; cross-shingle 64-bit collisions are ~1e-7 at corpus
+      // scale) and the self-join shuffle moves ~3× fewer bytes.
+      val (sh, sizes) = hashedShinglesAndSizes(docs, id, text, n)
+      // ONE shuffle on the shingle hash, then emit ordered doc pairs per
+      // posting list (lists are short — a shingle shared by m docs emits
+      // m(m-1)/2 pairs) — cheaper than the equivalent two-sided self-join
+      val post = sh.groupBy(col("shingle"))
+        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+        .filter(size(col("ids")) > 1)
+        .observe(s"jaccard_df_cap_${observeCounter.incrementAndGet()}",
+          sum(when(size(col("ids")) > maxDf, 1L).otherwise(0L))
+            .as("n_dropped_shingles"))
+        .filter(size(col("ids")) <= maxDf)
+      // the empty same-typed second list keeps the kernel id-type-generic
+      jaccardFromInter(postingPairCounts(post, col("ids"),
+        slice(col("ids"), lit(1), lit(0))), sizes, tau)
+    case ShingleBlock.MinhashLsh(bands, rowsPerBand, family) =>
+      // bucket self-join on (band, band_hash). The explicit exchange on the
+      // join keys matters: the signature pipeline has no shuffle of its
+      // own, so without it the self-join would plan two exchanges whose
+      // map sides EACH recompute every signature; pre-partitioning makes
+      // both sides the same exchange (ReuseExchange) — signatures are
+      // computed once — and the join needs no further shuffle.
+      val banded = bandedMinhash(docs, id, text, bands, rowsPerBand, n,
+        family).repartition(col("band"), col("band_hash"))
+      val l = banded.as("l")
+      val r = banded.as("r")
+      val candidates = l.join(r,
+          col("l.band") === col("r.band") &&
+          col("l.band_hash") === col("r.band_hash") &&
+          col("l.doc_id") < col("r.doc_id"))
+        .select(col("l.doc_id").as("id1"), col("r.doc_id").as("id2"))
+        .distinct()
+      // Deliberately NOT hashedShinglesByDoc (r13 measured): here the
+      // verify set is the WHOLE corpus, and one doc-keyed exchange of every
+      // shingle row costs more than recomputing the spread-out shingle pass
+      // per consumer (q_minhash_pairs 1.10 -> 1.60 s isolated A/B); the
+      // ByDoc shape pays only where the verify set is collision-sized (the
+      // incremental path).
+      verifyCandidates(candidates,
+        hashedShinglesAndSizes(docs, id, text, n), tau)
   }
 
   /** INCREMENTAL near-dup detection — the production daily-increment shape:
@@ -251,150 +327,157 @@ object NearDup {
     * corpus AND itself, without ever re-forming existing↔existing pairs
     * (which a naive full re-run recomputes every day; at corpus scale that
     * re-pairing dominates the whole job while producing nothing new).
+    * Output: (id1 < id2, jaccard ≥ tau), exactly the full-corpus
+    * [[jaccardPairs]] result under the same `block` RESTRICTED to pairs
+    * touching an incoming doc (spec'd equal under both blocks — which is
+    * what lets the DuckDB oracles replay it as the full-run SQL plus a
+    * batch-membership predicate). Id spaces must be disjoint.
     *
-    * Blocking discipline follows [[contaminationPairs]]: ONE shuffle builds
-    * df-capped posting lists of the UNION's hashed shingles, tagged with an
-    * is-new flag; only the (small) incoming side's shingles probe them, so
-    * a shared shingle with e existing and i incoming occurrences emits
-    * i·e + i·(i−1)/2 candidate rows — never e². Survivors are exact-verified
-    * (same [[jaccardFromInter]] as the batch paths). Id spaces must be
-    * disjoint. Output: (id1 < id2, jaccard ≥ tau), exactly the full-corpus
-    * [[jaccardPairs]] result RESTRICTED to pairs touching an incoming doc
-    * (spec'd equal). */
+    *  - [[ShingleBlock.Postings]]: blocking follows [[contaminationPairs]]:
+    *    ONE shuffle builds df-capped posting lists of the UNION's hashed
+    *    shingles, tagged with an is-new flag; only the (small) incoming
+    *    side's shingles probe them, so a shared shingle with e existing and
+    *    i incoming occurrences emits i·e + i·(i−1)/2 candidate rows — never
+    *    e².
+    *  - [[ShingleBlock.MinhashLsh]]: the incoming batch's banded
+    *    signatures probe the union's buckets, so candidates only form where
+    *    a batch doc collides — existing↔existing buckets are never
+    *    expanded. In production the existing side is a PERSISTED signature
+    *    table (sink `minhashSignatures` banded, like the IVF assignment;
+    *    signatures are pure functions of the row, so the table appends as
+    *    the corpus grows). Exact verification runs over the candidate ids
+    *    only (semi-joined before any shingling — the verify cost scales
+    *    with collisions, not the corpus). */
   def jaccardPairsIncremental(existing: DataFrame, incoming: DataFrame,
                               id: Column, text: Column, tau: Double,
-                              n: Int = 3, maxDf: Int = 100000): DataFrame = {
-    val union = existing.select(id.as("doc_id"), text.as("_t"),
-        lit(false).as("_new"))
-      .unionByName(incoming.select(id.as("doc_id"), text.as("_t"),
-        lit(true).as("_new")))
-    // the is-new flag rides the explode (a join back onto the shingle stream
-    // would shuffle every shingle row a second time for one boolean); each
-    // posting row splits into new/existing id lists, lists with NO incoming
-    // doc are dropped before any pair work (the common case — increments are
-    // small), and pairs are emitted per grouped row exactly like
-    // [[jaccardPairs]]: new×existing plus new-choose-2, i·e + i(i−1)/2 rows,
-    // never e². (A join-then-explode first cut replicated each posting array
-    // per matching incoming shingle row — 4.4 s vs 1.5 s at sf0.1.)
-    // ONE spread source shared by the posting and sizes subtrees (same
-    // exchange → ReuseExchange computes it once, as in hashedShinglesAndSizes)
-    val u = TextOps.spreadForCpu(union)
-    val post = u
-      .select(col("doc_id"), col("_new"),
-        explode(TextOps.shingleArray(col("_t"), n)).as("shingle"))
-      .select(xxhash64(col("shingle")).as("sh"), col("doc_id"), col("_new"))
-      .groupBy(col("sh"))
-      .agg(sort_array(collect_list(when(col("_new"), col("doc_id"))))
-          .as("nids"),
-        sort_array(collect_list(when(!col("_new"), col("doc_id"))))
-          .as("oids"))
-      .filter(size(col("nids")) > 0)
-      .observe(s"incdedup_df_cap_${observeCounter.incrementAndGet()}",
-        sum(when(size(col("nids")) + size(col("oids")) > maxDf, 1L)
-          .otherwise(0L)).as("n_dropped_shingles"))
-      .filter(size(col("nids")) + size(col("oids")) <= maxDf)
-    // native pair emission (r14): new-choose-2 then new×existing in one
-    // kernel call — same values and order as the HOF concat-of-transforms
-    // it replaces (parity pinned in NearDupSpec)
-    val inter = post.select(explode(
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(
-          expressions.PairEmit(
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-              col("nids")),
-            org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-              col("oids"))))).as("p"))
-      .select(col("p.id1"), col("p.id2"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("n_inter"))
-    val sizes = u.select(col("doc_id"),
-      size(TextOps.shingleArray(col("_t"), n)).as("n_sh"))
-    jaccardFromInter(inter, sizes, tau)
+                              n: Int = 3,
+                              block: ShingleBlock = ShingleBlock.Postings())
+      : DataFrame = block match {
+    case ShingleBlock.Postings(maxDf) =>
+      val union = existing.select(id.as("doc_id"), text.as("_t"),
+          lit(false).as("_new"))
+        .unionByName(incoming.select(id.as("doc_id"), text.as("_t"),
+          lit(true).as("_new")))
+      // the is-new flag rides the explode (a join back onto the shingle
+      // stream would shuffle every shingle row a second time for one
+      // boolean); each posting row splits into new/existing id lists, lists
+      // with NO incoming doc are dropped before any pair work (the common
+      // case — increments are small), and pairs are emitted per grouped row
+      // exactly like [[jaccardPairs]]: new×existing plus new-choose-2,
+      // i·e + i(i−1)/2 rows, never e². (A join-then-explode first cut
+      // replicated each posting array per matching incoming shingle row —
+      // 4.4 s vs 1.5 s at sf0.1.)
+      // ONE spread source shared by the posting and sizes subtrees (same
+      // exchange → ReuseExchange computes it once, as in
+      // hashedShinglesAndSizes)
+      val u = TextOps.spreadForCpu(union)
+      val post = u
+        .select(col("doc_id"), col("_new"),
+          explode(TextOps.shingleArray(col("_t"), n)).as("shingle"))
+        .select(xxhash64(col("shingle")).as("sh"), col("doc_id"), col("_new"))
+        .groupBy(col("sh"))
+        .agg(sort_array(collect_list(when(col("_new"), col("doc_id"))))
+            .as("nids"),
+          sort_array(collect_list(when(!col("_new"), col("doc_id"))))
+            .as("oids"))
+        .filter(size(col("nids")) > 0)
+        .observe(s"incdedup_df_cap_${observeCounter.incrementAndGet()}",
+          sum(when(size(col("nids")) + size(col("oids")) > maxDf, 1L)
+            .otherwise(0L)).as("n_dropped_shingles"))
+        .filter(size(col("nids")) + size(col("oids")) <= maxDf)
+      val sizes = u.select(col("doc_id"),
+        size(TextOps.shingleArray(col("_t"), n)).as("n_sh"))
+      jaccardFromInter(postingPairCounts(post, col("nids"), col("oids")),
+        sizes, tau)
+    case ShingleBlock.MinhashLsh(bands, rowsPerBand, family) =>
+      val exB = bandedMinhash(existing, id, text, bands, rowsPerBand, n,
+        family).withColumn("_new", lit(false))
+      val inB = bandedMinhash(incoming, id, text, bands, rowsPerBand, n,
+        family).withColumn("_new", lit(true))
+      val all = exB.unionByName(inB)
+        .repartition(col("band"), col("band_hash"))
+      // the probe is the batch's slice OF THE SAME EXCHANGE (filter on the
+      // rider flag) — before (r13), probe derived from inB directly, so the
+      // batch's whole banding pass (md5 under the Md5 family) planned
+      // and ran a second time; now ReuseExchange computes the union banding
+      // once and both join sides arrive co-partitioned. Build side = the
+      // batch-sized probe (shuffle_hash — the asymmetric-join rule: never
+      // build the corpus side), which also keeps the few-key duplicate-heavy
+      // bucket join out of SMJ's many-to-many buffering.
+      val probe = all.filter(col("_new")).select(col("band"),
+        col("band_hash"), col("doc_id").as("in_id"))
+      // MATERIALIZED (eager localCheckpoint): candidates are collision-sized
+      // (pairs of ids), and the verify tail references this subtree from
+      // four branches — un-materialized, the analyzer/optimizer/Janino
+      // re-process the whole LSH probe-join subtree per branch (409 static
+      // ops; measured r13: a 15.7 s cold rep and ~7.4 s in-suite vs 3.3 s
+      // steady — the suite evicts the generated classes between warm-up and
+      // measured pass, so the giant plan pays re-compilation every time).
+      // Checkpointing cuts the static plan roughly in half and the runtime
+      // graph reads the tiny block set. Release in long-lived sessions via
+      // [[releaseCheckpoint]] on the returned frame (the LogicalRDD is a
+      // leaf of it).
+      val candidates = probe.hint("shuffle_hash").join(all,
+          Seq("band", "band_hash"))
+        .filter(col("doc_id") =!= col("in_id") &&
+          (!col("_new") || col("in_id") < col("doc_id")))
+        .select(least(col("in_id"), col("doc_id")).as("id1"),
+          greatest(col("in_id"), col("doc_id")).as("id2"))
+        .distinct()
+        .localCheckpoint(true)
+      // exact verification over the candidate ids ONLY: shingle just those
+      // docs (at corpus scale this is collision-sized, not corpus-sized)
+      val union = existing.select(id.as("_vid"), text.as("_vt"))
+        .unionByName(incoming.select(id.as("_vid"), text.as("_vt")))
+      // one explode, ONE reference to the candidate subtree (a union of two
+      // selects planned the whole LSH probe join twice; with the semi-join
+      // and the two sh joins downstream the replication compounded — r13
+      // counted the candidate subtree 7x in the static plan, 4x after)
+      val cids = candidates
+        .select(explode(array(col("id1"), col("id2"))).as("_cid")).distinct()
+      // collision-sized build side (shuffle_hash): the static planner has no
+      // stats for the LSH-join-derived cids and planned a sort-merge semi —
+      // sorting the corpus-sized union to prune it by a small id set
+      val docsToVerify = union.join(cids.hint("shuffle_hash"),
+        col("_vid") === col("_cid"), "left_semi")
+      verifyCandidates(candidates,
+        hashedShinglesByDoc(docsToVerify, col("_vid"), col("_vt"), n), tau)
   }
 
-  /** [[contaminationPairs]] behind a Bloom-filter prefilter — the 100 TB
-    * decontamination shape. The bench side's hashed shingles condense into
-    * a few-MB Bloom filter (one distributed aggregate; the driver holds
-    * only the bits, never the shingles), which rides the serialized
-    * [[graft.engine.expressions.BloomMightContain]] expression into every
-    * task. The corpus then drops — in a MAP-ONLY pass, before any shingle
-    * explode or shuffle — every document none of whose shingles might be in
-    * the bench. On a typical corpus (contamination is rare) that is almost
-    * every document: the expensive posting-list shuffle runs over the
-    * contaminated sliver plus a fpp-rate of false positives, instead of the
-    * whole corpus.
-    *
-    * EXACT, not approximate: Bloom filters have no false negatives, so
-    * every true pair's corpus doc survives the prefilter, and false
-    * positives die in the exact containment join downstream —
-    * bit-identical output to [[contaminationPairs]] at the same `n` (same
-    * oracle), the prefilter is pure plan surgery. (Sole caveat: `maxDf` is
-    * measured on the surviving sub-corpus, so an over-`maxDf` shingle could
-    * in principle re-enter; the cap exists to bound boilerplate blowup and
-    * boilerplate is exactly what the prefilter removes — at the default
-    * cap nothing binds on any testdata SF, asserted bit-equal in
-    * NearDupSpec.)
-    *
-    * The prefilter's selectivity is governed by `n`, and it only pays when
-    * incidental shingle sharing is rare: at n=3 ANY two documents over a
-    * shared vocabulary collide ("in the of") and the prefilter keeps
-    * 99.96% of the testdata corpus — pure overhead (measured 6.0 s vs
-    * 1.1 s unfiltered at sf0.1); at n=13 it keeps 0.5% and the posting
-    * stage all but vanishes. That is WHY published decontamination recipes
-    * (GPT-3 appendix C, Llama) use 10-13-gram overlap — the default here. */
-  def bloomContaminationPairs(corpus: DataFrame, corpusId: Column,
-                              corpusText: Column, bench: DataFrame,
-                              benchId: Column, benchText: Column, tau: Double,
-                              n: Int = 13, maxDf: Int = 100000,
-                              fpp: Double = 0.01): DataFrame =
-    bloomContaminationPairsWith(corpus, corpusId, corpusText, bench, benchId,
-      benchText, tau,
-      benchShingleBloom(bench, benchId, benchText, n, fpp), n, maxDf)
+  /** A bench-side Bloom filter over hashed `n`-token windows, as
+    * [[benchShingleBloom]] builds it: `bytes` are the Spark sketch bits,
+    * the filter's ONLY state. `n` travels with the bits because a probe
+    * over windows of another length finds none that were inserted and
+    * drops true pairs silently — [[contaminationPairs]] checks it. */
+  final case class ShingleBloom(n: Int, bytes: Array[Byte])
 
-  /** The bench-side Bloom build for [[bloomContaminationPairsWith]] — one
-    * distributed aggregate over the hashed bench shingles; the returned
-    * bytes (Spark sketch format) are the ONLY state, ~1.2 bytes per
-    * distinct shingle at fpp=1%. Build once per bench suite and reuse
-    * across corpus snapshots/batches — the filter is a pure function of
-    * the bench side. */
+  /** The bench-side Bloom build for [[contaminationPairs]]' `prefilter` —
+    * one distributed aggregate over the hashed bench windows; the driver
+    * holds only the bits, never the shingles, ~1.2 bytes per distinct
+    * shingle at fpp=1%. Build once per bench suite and reuse across corpus
+    * snapshots/batches — the filter is a pure function of the bench
+    * side. */
   def benchShingleBloom(bench: DataFrame, benchId: Column, benchText: Column,
-                        n: Int = 13, fpp: Double = 0.01): Array[Byte] = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+                        n: Int = 13, fpp: Double = 0.01): ShingleBloom = {
     // window hashes, not n-gram strings: the corpus-side probe
     // (BloomAnyWindow) folds per-token hashes — the build side must use the
     // IDENTICAL fold (WindowHashes) or false negatives appear
-    val wh = ColumnBridge.column(graft.engine.expressions.WindowHashes(
+    val wh = ColumnBridge.column(expressions.WindowHashes(
       ColumnBridge.expression(
         transform(TextOps.tokens(benchText), t => xxhash64(t))), n))
     val bSh = bench.select(explode(wh).as("sh"))
     // distinct count calibrates the filter's bit budget; duplicates only
-    // lower the realized fpp (idempotent bit sets), never raise it
-    val expected = math.max(bSh.distinct().count(), 1L)
-    val bloom = bSh.stat.bloomFilter("sh", expected, fpp)
+    // lower the realized fpp (idempotent bit sets), never raise it. A bench
+    // with no n-token window gets an empty filter: `stat.bloomFilter`
+    // NPEs on an empty input
+    val expected = bSh.distinct().count()
+    val bloom =
+      if (expected == 0L)
+        org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
+      else bSh.stat.bloomFilter("sh", expected, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    bos.toByteArray
-  }
-
-  /** [[bloomContaminationPairs]] against a PRE-BUILT bench filter
-    * ([[benchShingleBloom]]) — the steady-state shape: the bench suite
-    * changes rarely, corpus snapshots arrive daily; only this pass runs
-    * per snapshot. */
-  def bloomContaminationPairsWith(corpus: DataFrame, corpusId: Column,
-                                  corpusText: Column, bench: DataFrame,
-                                  benchId: Column, benchText: Column,
-                                  tau: Double, filterBytes: Array[Byte],
-                                  n: Int = 13,
-                                  maxDf: Int = 100000): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // fused codegen'd probe: fold-and-test each n-token window with early
-    // exit — never builds an n-gram string on the corpus side (the string
-    // form via exists(shingleArray(...)) measured 9× slower at sf0.1)
-    val anyHit = ColumnBridge.column(graft.engine.expressions.BloomAnyWindow(
-      ColumnBridge.expression(
-        transform(TextOps.tokens(corpusText), t => xxhash64(t))),
-      n, filterBytes))
-    contaminationPairs(corpus.filter(anyHit), corpusId, corpusText, bench,
-      benchId, benchText, tau, n, maxDf)
+    ShingleBloom(n, bos.toByteArray)
   }
 
   /** Cross-corpus contamination scan (benchmark decontamination): for each
@@ -411,12 +494,48 @@ object NearDup {
     * metric). The bench side is typically orders of magnitude smaller than
     * the corpus and rides the join broadcast-style under AQE. Pairs form
     * only where a shingle is actually shared — no cross product.
+    *
+    * `prefilter` (a [[benchShingleBloom]] over the same `n`, or a
+    * `[graft]` error naming both values) is the 100 TB decontamination
+    * shape: the filter rides the serialized
+    * [[graft.engine.expressions.BloomAnyWindow]] expression into every
+    * task, and the corpus drops — in a MAP-ONLY pass, before any shingle
+    * explode or shuffle — every document none of whose shingles might be
+    * in the bench. On a typical corpus (contamination is rare) that is
+    * almost every document: the posting-list shuffle runs over the
+    * contaminated sliver plus a fpp-rate of false positives. EXACT, not
+    * approximate: Bloom filters have no false negatives, and false
+    * positives die in the exact containment join — bit-identical output
+    * with and without it (same oracle). (Sole caveat: `maxDf` is measured
+    * on the surviving sub-corpus, so an over-`maxDf` shingle could in
+    * principle re-enter; boilerplate is exactly what the prefilter removes
+    * — at the default cap nothing binds on any testdata SF, asserted
+    * bit-equal in NearDupSpec.) Its selectivity is governed by `n`: at n=3
+    * ANY two documents over a shared vocabulary collide ("in the of") and
+    * it keeps 99.96% of the testdata corpus — pure overhead (measured
+    * 6.0 s vs 1.1 s unfiltered at sf0.1); at n=13 it keeps 0.5% and the
+    * posting stage all but vanishes. That is WHY published decontamination
+    * recipes (GPT-3 appendix C, Llama) use 10-13-gram overlap.
     * Output: (corpus_id, bench_id, containment >= tau). */
   def contaminationPairs(corpus: DataFrame, corpusId: Column,
                          corpusText: Column, bench: DataFrame, benchId: Column,
                          benchText: Column, tau: Double, n: Int = 3,
-                         maxDf: Int = 100000): DataFrame = {
-    val cPost = TextOps.shingles(TextOps.spreadForCpu(corpus), corpusId,
+                         maxDf: Int = 100000,
+                         prefilter: Option[ShingleBloom] = None): DataFrame = {
+    val scanned = prefilter.fold(corpus) { bloom =>
+      if (bloom.n != n) throw new IllegalArgumentException(
+        s"[graft] contaminationPairs: the Bloom prefilter holds " +
+          s"${bloom.n}-token windows but the scan shingles n = $n — build " +
+          s"it with benchShingleBloom(..., n = $n) or scan with n = ${bloom.n}")
+      // fused codegen'd probe: fold-and-test each n-token window with early
+      // exit — never builds an n-gram string on the corpus side (the string
+      // form via exists(shingleArray(...)) measured 9× slower at sf0.1)
+      corpus.filter(ColumnBridge.column(expressions.BloomAnyWindow(
+        ColumnBridge.expression(
+          transform(TextOps.tokens(corpusText), t => xxhash64(t))),
+        n, bloom.bytes)))
+    }
+    val cPost = TextOps.shingles(TextOps.spreadForCpu(scanned), corpusId,
         corpusText, n)
       .select(col("doc_id").as("corpus_id"), xxhash64(col("shingle")).as("sh"))
       .groupBy(col("sh"))
@@ -475,7 +594,6 @@ object NearDup {
   }
 
   object HashFamily {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
 
     case object Production extends HashFamily {
       private[engine] def minhash(text: Column, n: Int, k: Int): Column =
@@ -513,7 +631,7 @@ object NearDup {
           ColumnBridge.expression(tokens), md5Family = true))
       // pre-partition on the join key so both self-join sides are the SAME
       // exchange (ReuseExchange — the fingerprint kernel runs once, and the
-      // join adds no further shuffle; the lshVerifiedPairs pattern)
+      // join adds no further shuffle; the MinhashLsh bucket-join pattern)
       private[engine] def winnowFingerprints(docs: DataFrame, id: Column,
                                              text: Column, k: Int,
                                              w: Int): DataFrame =
@@ -545,58 +663,6 @@ object NearDup {
     TextOps.spreadForCpu(docs.filter(size(TextOps.tokens(text)) >= n))
       .select(id.as("doc_id"), family.minhash(text, n, k).as("sig"))
 
-  /** MinHash+LSH candidate pairs, verified by exact shingle Jaccard.
-    * bands × rowsPerBand must equal the signature length. Docs landing in the
-    * same (band, hash-of-band-slice) bucket become candidates; candidates are
-    * then verified exactly, so the output has no false positives — only
-    * (tunable) false negatives, the standard LSH trade. Under either
-    * [[HashFamily]] the output is a subset of [[jaccardPairs]] by
-    * construction; [[HashFamily.Md5]] makes the whole pipeline
-    * DuckDB-replayable (the `q_minhash_fixed` oracle).
-    * Output: (id1, id2, jaccard) with jaccard >= tau. */
-  def minhashLshPairs(docs: DataFrame, id: Column, text: Column, tau: Double,
-                      bands: Int = 8, rowsPerBand: Int = 4, n: Int = 3,
-                      family: HashFamily = HashFamily.Production): DataFrame =
-    lshVerifiedPairs(bandedMinhash(docs, id, text, bands, rowsPerBand, n,
-      family), docs, id, text, tau, n)
-
-  /** Shared LSH tail: bucket self-join on (band, band_hash) + exact shingle
-    * verification. The explicit exchange on the join keys matters: the
-    * signature pipeline has no shuffle of its own, so without it the
-    * self-join would plan two exchanges whose map sides EACH recompute
-    * every signature; pre-partitioning makes both sides the same exchange
-    * (ReuseExchange) — signatures are computed once — and the join needs no
-    * further shuffle. */
-  private def lshVerifiedPairs(bandedRaw: DataFrame, docs: DataFrame,
-                               id: Column, text: Column, tau: Double,
-                               n: Int): DataFrame = {
-    val banded = bandedRaw.repartition(col("band"), col("band_hash"))
-    val l = banded.as("l")
-    val r = banded.as("r")
-    val candidates = l.join(r,
-        col("l.band") === col("r.band") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id1"), col("r.doc_id").as("id2"))
-      .distinct()
-    // exact verification of candidates only (hashed shingles, as above).
-    // Deliberately NOT hashedShinglesByDoc (r13 measured): here the verify
-    // set is the WHOLE corpus, and one doc-keyed exchange of every shingle
-    // row costs more than recomputing the spread-out shingle pass per
-    // consumer (q_minhash_pairs 1.10 -> 1.60 s isolated A/B); the ByDoc
-    // shape pays only where the verify set is collision-sized (the
-    // incremental path).
-    val (sh, sizes) = hashedShinglesAndSizes(docs, id, text, n)
-    val inter = candidates
-      .join(sh.withColumnRenamed("doc_id", "id1")
-        .withColumnRenamed("shingle", "s1"), "id1")
-      .join(sh.withColumnRenamed("doc_id", "id2")
-        .withColumnRenamed("shingle", "s2"), "id2")
-      .filter(col("s1") === col("s2"))
-      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("n_inter"))
-    jaccardFromInter(inter, sizes, tau)
-  }
-
   /** Banded minhash signatures: (doc_id, band, band_hash) — the LSH bucket
     * keys. Factored out so the incremental path can bucket a batch against
     * a (persisted, in production) existing-signature table. The signature
@@ -611,88 +677,6 @@ object NearDup {
           family.bandHash((j * rowsPerBand until (j + 1) * rowsPerBand)
             .map(i => element_at(col("sig"), i + 1)))
         }: _*)).as(Seq("band", "band_hash")))
-
-  /** Incremental MinHash+LSH pairs — the SCALE twin of
-    * [[jaccardPairsIncremental]] (which is its exact verifier/oracle): the
-    * incoming batch's banded signatures probe the union's buckets, so
-    * candidates only form where a batch doc collides — existing↔existing
-    * buckets are never expanded. In production the existing side is a
-    * PERSISTED signature table (sink `minhashSignatures` banded, like the
-    * IVF assignment; signatures are pure functions of the row, so the table
-    * appends as the corpus grows). Exact shingle verification runs over the
-    * candidate ids only (semi-joined before any shingling — the verify cost
-    * scales with collisions, not the corpus). Identical output to the full
-    * [[minhashLshPairs]] run (same `family`) restricted to pairs touching
-    * the batch (signatures don't depend on the split; spec'd) — which is
-    * what lets the DuckDB oracle replay the [[HashFamily.Md5]] run as the
-    * full-run SQL plus a batch-membership predicate. Id spaces must be
-    * disjoint. */
-  def minhashLshPairsIncremental(existing: DataFrame, incoming: DataFrame,
-                                 id: Column, text: Column, tau: Double,
-                                 bands: Int = 8, rowsPerBand: Int = 4,
-                                 n: Int = 3,
-                                 family: HashFamily = HashFamily.Production)
-      : DataFrame = {
-    val exB = bandedMinhash(existing, id, text, bands, rowsPerBand, n,
-      family).withColumn("_new", lit(false))
-    val inB = bandedMinhash(incoming, id, text, bands, rowsPerBand, n,
-      family).withColumn("_new", lit(true))
-    val all = exB.unionByName(inB)
-      .repartition(col("band"), col("band_hash"))
-    // the probe is the batch's slice OF THE SAME EXCHANGE (filter on the
-    // rider flag) — before (r13), probe derived from inB directly, so the
-    // batch's whole banding pass (md5 under the Md5 family) planned
-    // and ran a second time; now ReuseExchange computes the union banding
-    // once and both join sides arrive co-partitioned. Build side = the
-    // batch-sized probe (shuffle_hash — the asymmetric-join rule: never
-    // build the corpus side), which also keeps the few-key duplicate-heavy
-    // bucket join out of SMJ's many-to-many buffering.
-    val probe = all.filter(col("_new")).select(col("band"), col("band_hash"),
-      col("doc_id").as("in_id"))
-    // MATERIALIZED (eager localCheckpoint): candidates are collision-sized
-    // (pairs of ids), and the verify tail references this subtree from four
-    // branches — un-materialized, the analyzer/optimizer/Janino re-process
-    // the whole LSH probe-join subtree per branch (409 static ops; measured
-    // r13: a 15.7 s cold rep and ~7.4 s in-suite vs 3.3 s steady — the
-    // suite evicts the generated classes between warm-up and measured pass,
-    // so the giant plan pays re-compilation every time). Checkpointing cuts
-    // the static plan roughly in half and the runtime graph reads the tiny
-    // block set. Release in long-lived sessions via [[releaseCheckpoint]]
-    // on the returned frame (the LogicalRDD is a leaf of it).
-    val candidates = probe.hint("shuffle_hash").join(all,
-        Seq("band", "band_hash"))
-      .filter(col("doc_id") =!= col("in_id") &&
-        (!col("_new") || col("in_id") < col("doc_id")))
-      .select(least(col("in_id"), col("doc_id")).as("id1"),
-        greatest(col("in_id"), col("doc_id")).as("id2"))
-      .distinct()
-      .localCheckpoint(true)
-    // exact verification over the candidate ids ONLY: shingle just those
-    // docs (at corpus scale this is collision-sized, not corpus-sized)
-    val union = existing.select(id.as("_vid"), text.as("_vt"))
-      .unionByName(incoming.select(id.as("_vid"), text.as("_vt")))
-    // one explode, ONE reference to the candidate subtree (a union of two
-    // selects planned the whole LSH probe join twice; with the semi-join
-    // and the two sh joins downstream the replication compounded — r13
-    // counted the candidate subtree 7x in the static plan, 4x after)
-    val cids = candidates
-      .select(explode(array(col("id1"), col("id2"))).as("_cid")).distinct()
-    // collision-sized build side (shuffle_hash): the static planner has no
-    // stats for the LSH-join-derived cids and planned a sort-merge semi —
-    // sorting the corpus-sized union to prune it by a small id set
-    val docsToVerify = union.join(cids.hint("shuffle_hash"),
-      col("_vid") === col("_cid"), "left_semi")
-    val (sh, sizes) = hashedShinglesByDoc(docsToVerify, col("_vid"),
-      col("_vt"), n)
-    val inter = candidates
-      .join(sh.withColumnRenamed("doc_id", "id1")
-        .withColumnRenamed("shingle", "s1"), "id1")
-      .join(sh.withColumnRenamed("doc_id", "id2")
-        .withColumnRenamed("shingle", "s2"), "id2")
-      .filter(col("s1") === col("s2"))
-      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("n_inter"))
-    jaccardFromInter(inter, sizes, tau)
-  }
 
   /** Duplicate-cluster assignment: connected components over the near-dup
     * pair graph (any of jaccard/minhash/simhash/embedding pairs), by
@@ -1010,7 +994,6 @@ object NearDup {
   def winnowFingerprintsMd5(docs: DataFrame, id: Column, text: Column,
                             k: Int = 24, w: Int = 8): DataFrame = {
     require(k >= 1 && w >= 1, s"bad winnow params: k=$k w=$w")
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     // Native one-pass kernel (r14; bit-parity with the previous SQL-window
     // formulation pinned in NearDupSpec): the declarative form exploded one
     // row per char position and shuffled (doc_id, p, md5-hex, pmax) rows

@@ -360,8 +360,8 @@ object Similarity {
     * the union buckets — existing↔existing pairs never re-form, so a daily
     * embedding-dedup run costs O(batch × bucket occupancy), not a
     * full-corpus self-join re-formed every day (the
-    * [[graft.engine.NearDup.minhashLshPairsIncremental]] shape on the
-    * banded SRP join). Because the SRP signature, the Hamming prefilter,
+    * [[graft.engine.NearDup.jaccardPairsIncremental]] shape under
+    * `ShingleBlock.MinhashLsh`, on the banded SRP join). Because the SRP signature, the Hamming prefilter,
     * and the exact-cosine rerank are all pure per-row / per-pair
     * functions, the result EQUALS the full [[cosinePairs]] run over
     * (existing ∪ incoming) under `PairBlock.Srp(geometry)`, restricted to

@@ -1,6 +1,7 @@
 package graft
 package registry
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.registry.QueryDef._
@@ -10,6 +11,14 @@ import graft.registry.QueryDef._
 private[graft] object NearDupQueries {
   import SparkEntry._
   import Tables._
+  import NearDup.ShingleBlock
+
+  /** The 13-gram Bloom filter of the src0 "bench" slice, built once per
+    * dataset dir. */
+  private def src0Bloom(s: SparkSession, d: String): NearDup.ShingleBloom =
+    benchBlooms.computeIfAbsent(d, dir => NearDup.benchShingleBloom(
+      documents(s, dir).filter(col("source") === "src0"), col("doc_id"),
+      col("text")))
 
   /** Distinct word 3-gram shingles `sh(doc_id, s)` of `src`'s text (the
     * NearDup shingle law), through the `toks` and `idx` CTEs. */
@@ -314,14 +323,10 @@ private[graft] object NearDupQueries {
     // join — hash-green oracled.
     QueryDef("q_bloom_contamination", (s, d) => {
       val docs = documents(s, d)
-      val bloom = benchBlooms.computeIfAbsent(d, dir =>
-        NearDup.benchShingleBloom(
-          documents(s, dir).filter(col("source") === "src0"),
-          col("doc_id"), col("text")))
-      NearDup.bloomContaminationPairsWith(
+      NearDup.contaminationPairs(
         docs.filter(col("source") =!= "src0"), col("doc_id"), col("text"),
         docs.filter(col("source") === "src0"), col("doc_id"), col("text"),
-        0.5, bloom)
+        0.5, n = 13, prefilter = Some(src0Bloom(s, d)))
     },
       // same shape as q_contamination at n=13 (the long-n-gram recipe): the
       // Bloom prefilter is plan surgery, not a result change — the oracle is
@@ -330,7 +335,8 @@ private[graft] object NearDupQueries {
         "list_aggregate(t[i:i+12], 'string_agg', ' ')"))),
     // MinHash+LSH near-dup pairs (xxhash64 signatures → rows-only + ScalaTest)
     QueryDef("q_minhash_pairs", (s, d) =>
-      NearDup.minhashLshPairs(documents(s, d), col("doc_id"), col("text"), 0.1),
+      NearDup.jaccardPairs(documents(s, d), col("doc_id"), col("text"), 0.1,
+        block = ShingleBlock.MinhashLsh()),
       RowsOnly("graft.NearDupSpec")),
     // MinHash MECHANISM over the FIXED md5 family: per-(doc, seed)
     // min(md5(shingle||':'||seed)), band = md5 of the band's mins,
@@ -340,8 +346,9 @@ private[graft] object NearDupQueries {
     // production kernel above stays the scale path — bit-parity with this
     // twin spec'd at sf0.001 in NearDupSpec)
     QueryDef("q_minhash_fixed", (s, d) =>
-      NearDup.minhashLshPairs(documents(s, d), col("doc_id"), col("text"),
-        0.1, family = NearDup.HashFamily.Md5),
+      NearDup.jaccardPairs(documents(s, d), col("doc_id"), col("text"),
+        0.1,
+        block = ShingleBlock.MinhashLsh(family = NearDup.HashFamily.Md5)),
       // the fixed-md5-family MinHash mechanism: 32 seeds, 8 bands x 4 rows;
       // signature entry = min md5(shingle||':'||seed) (lexicographic hex min
       // — binary collation in both engines), band hash = md5 of the band's
@@ -353,10 +360,11 @@ private[graft] object NearDupQueries {
     // twin SQL + membership predicate — signatures are split-independent)
     QueryDef("q_minhash_incr_fixed", (s, d) => {
       val docs = documents(s, d)
-      NearDup.minhashLshPairsIncremental(
+      NearDup.jaccardPairsIncremental(
         docs.filter(col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") % 10 === 0),
-        col("doc_id"), col("text"), 0.1, family = NearDup.HashFamily.Md5)
+        col("doc_id"), col("text"), 0.1,
+        block = ShingleBlock.MinhashLsh(family = NearDup.HashFamily.Md5))
     },
       // incremental twin = the full fixed-family result restricted to pairs
       // touching the doc_id % 10 = 0 batch (signatures are pure functions of
@@ -368,10 +376,10 @@ private[graft] object NearDupQueries {
     // equality to the restricted full run is spec'd)
     QueryDef("q_incremental_minhash", (s, d) => {
       val docs = documents(s, d)
-      NearDup.minhashLshPairsIncremental(
+      NearDup.jaccardPairsIncremental(
         docs.filter(col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") % 10 === 0),
-        col("doc_id"), col("text"), 0.1)
+        col("doc_id"), col("text"), 0.1, block = ShingleBlock.MinhashLsh())
     },
       RowsOnly("graft.NearDupSpec")),
     // SimHash signatures + banded Hamming pairs (rows-only + ScalaTest)
@@ -420,7 +428,7 @@ private[graft] object NearDupQueries {
     // member per cluster (the corpus-dedup endgame). Edges come from the
     // EXACT jaccard detector so the whole composition is oracle-checkable
     // (DuckDB recursive-CTE min-label reachability over the same edge set);
-    // the minhash scale detector feeds the same clustering in q_corpus_clean.
+    // the minhash scale block feeds the same clustering in q_corpus_release.
     QueryDef("q_dedup_clusters", (s, d) => {
       val docs = documents(s, d)
       val pairs = NearDup.jaccardPairs(docs, col("doc_id"), col("text"), 0.1)
@@ -519,14 +527,14 @@ private[graft] object NearDupQueries {
 
     // ---- Training-data pipeline: composed corpus flows ----
     // end-to-end corpus clean: exact dedup → near-dup clusters → quality
-    // floor. The EXACT jaccard detector is injected so the whole flagship
+    // floor. The EXACT Postings block is passed so the whole flagship
     // composition is oracle-checkable (recursive-CTE clustering, as in
-    // q_dedup_clusters / q_daily_increment); the minhash scale detector
-    // drives the same flow in FlowsSpec and the corpus-increment path.
+    // q_dedup_clusters / q_daily_increment); the default minhash block
+    // drives the same flow in q_corpus_release and FlowsSpec.
     QueryDef("q_corpus_clean", (s, d) => {
       val en = TextOps.langMarkers.toMap.apply("en")
       Flows.corpusClean(documents(s, d), col("doc_id"), col("text"), en,
-          nearDupPairs = NearDup.jaccardPairs(_, _, _, _))
+          block = ShingleBlock.Postings())
         .select(col("doc_id"), col("source"), col("quality"))
     },
       // the flagship corpus-clean composition in SQL: exact-dedup keepers,
@@ -559,16 +567,12 @@ private[graft] object NearDupQueries {
     QueryDef("q_corpus_release", (s, d) => {
       val docs = documents(s, d)
       val en = TextOps.langMarkers.toMap.apply("en")
-      val bloom = benchBlooms.computeIfAbsent(d, dir =>
-        NearDup.benchShingleBloom(
-          documents(s, dir).filter(col("source") === "src0"),
-          col("doc_id"), col("text")))
       Flows.corpusRelease(docs.filter(col("source") =!= "src0"),
           col("doc_id"), col("text"),
           docs.filter(col("source") === "src0"), col("doc_id"), col("text"),
           en, Seq(("train", 0.9), ("val", 0.05), ("test", 0.05)),
           seed = 42L, numShards = 4, contamTau = 0.5,
-          benchBloom = Some(bloom))
+          benchBloom = Some(src0Bloom(s, d)))
         .select(col("doc_id"), col("quality"), col("split"), col("pos"),
           col("shard"))
     },

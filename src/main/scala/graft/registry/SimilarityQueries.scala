@@ -459,7 +459,7 @@ private[graft] object SimilarityQueries {
       // the incremental run equals the full fixed-geometry run restricted
       // to pairs touching the batch (signatures and rerank are pure per-row
       // functions) — so its oracle IS the full twin plus the
-      // batch-membership predicate, the minhashLshPairsIncremental law
+      // batch-membership predicate, the jaccardPairsIncremental law
       Oracle(srpFixedSql(" AND (id1 % 5 = 0 OR id2 % 5 = 0)"))),
     // SemDeDup: cluster-then-dedup semantic near-dup over the memoized IVF
     // assignment — within-list blocking, min-id keep rule (rows-only:

@@ -15,6 +15,25 @@ private[graft] object SqlSurfaceQueries {
   import SparkEntry._
   import Tables._
 
+  /** q_sql_cosine_topk's statement: the top-5 (qid, cid, cos, rn) of the
+    * `qids` rows of a (vec_id, embedding) `view`, under its twin
+    * `annTopK`'s contract — broadcast queries, round(., 6), (cos DESC, cid)
+    * ties, and a NULL cosine (a zero vector) is never ranked. */
+  private[graft] def cosineTopKSql(view: String, qids: Seq[Long]): String =
+    s"""WITH e AS (SELECT vec_id,
+                     transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+                   FROM $view),
+        q AS (SELECT vec_id AS qid, v AS qv FROM e
+              WHERE vec_id IN (${qids.mkString(", ")})),
+        sc AS (SELECT /*+ BROADCAST(q) */ q.qid, e.vec_id AS cid,
+                 round(graft_cosine(e.v, q.qv), 6) AS cos
+               FROM e JOIN q ON e.vec_id != q.qid)
+        SELECT qid, cid, cos, rn FROM (
+          SELECT qid, cid, cos,
+            CAST(row_number() OVER (PARTITION BY qid
+              ORDER BY cos DESC, cid) AS BIGINT) AS rn
+          FROM sc WHERE cos IS NOT NULL) WHERE rn <= 5"""
+
   val defs: Seq[QueryDef] = Seq(
     // SQL surface parity: the A9 top-K via spark.sql over a temp view
     QueryDef("q_sql_topk", (s, d) => {
@@ -45,24 +64,11 @@ private[graft] object SqlSurfaceQueries {
     },
       SameAs("q_dedup_keep_last")),
     // brute-force cosine top-k through SQL via the registered native
-    // graft_cosine expression (twin: q_ann_cosine_topk) — same broadcast
-    // query side, same round(.,6), same (cos DESC, cid) tie-break
+    // graft_cosine expression (twin: q_ann_cosine_topk)
     QueryDef("q_sql_cosine_topk", (s, d) => {
       GraftExtensions.registerOn(s)
       embeddings(s, d).createOrReplaceTempView("embeddings_v")
-      s.sql("""WITH e AS (SELECT vec_id,
-                            transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                          FROM embeddings_v),
-               q AS (SELECT vec_id AS qid, v AS qv FROM e
-                     WHERE vec_id IN (0, 1, 2)),
-               sc AS (SELECT /*+ BROADCAST(q) */ q.qid, e.vec_id AS cid,
-                        round(graft_cosine(e.v, q.qv), 6) AS cos
-                      FROM e JOIN q ON e.vec_id != q.qid)
-               SELECT qid, cid, cos, rn FROM (
-                 SELECT qid, cid, cos,
-                   CAST(row_number() OVER (PARTITION BY qid
-                     ORDER BY cos DESC, cid) AS BIGINT) AS rn
-                 FROM sc) WHERE rn <= 5""")
+      s.sql(cosineTopKSql("embeddings_v", Seq(0L, 1L, 2L)))
     },
       SameAs("q_ann_cosine_topk")),
     // A7 range-sum through SQL (twin: q_sum_over_range): the view wraps

@@ -102,26 +102,18 @@ class CosineContractSpec extends SparkSpec {
   }
 
   test("a SQL graft_cosine top-k never ranks a zero corpus vector") {
+    // q_sql_cosine_topk's own statement, with the zero vector as a query
     GraftExtensions.registerOn(spark)
     withZero.createOrReplaceTempView("cosine_contract_v")
-    val top = spark.sql("""WITH e AS (SELECT vec_id,
-                            transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                          FROM cosine_contract_v),
-               q AS (SELECT vec_id AS qid, v AS qv FROM e
-                     WHERE vec_id IN (0, 1, 2)),
-               sc AS (SELECT q.qid, e.vec_id AS cid,
-                        round(graft_cosine(e.v, q.qv), 6) AS cos
-                      FROM e JOIN q ON e.vec_id != q.qid)
-               SELECT qid, cid, cos FROM (
-                 SELECT qid, cid, cos, row_number() OVER (PARTITION BY qid
-                     ORDER BY cos DESC, cid) AS rn
-                 FROM sc) WHERE rn <= 5""")
+    val top = spark.sql(registry.SqlSurfaceQueries.cosineTopKSql(
+      "cosine_contract_v", Seq(0L, 1L, 2L, Zero)))
     topKWithoutZero(top)
-    // ...and scores every other candidate as the engine's top-k does
-    top.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet shouldBe Similarity.annTopK(indexed, queries(0L, 1L, 2L), 5,
-        AnnScore.Exact, AnnProbe.All).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // ...and ranks every other query as its twin, the engine's top-k, does
+    top.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+        r.getLong(3))).toSet shouldBe Similarity.annTopK(indexed,
+        queries(0L, 1L, 2L, Zero), 5, AnnScore.Exact, AnnProbe.All).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      .toSet
   }
 
   test("a width mismatch fails the exhaustive entries loudly") {

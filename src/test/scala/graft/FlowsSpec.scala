@@ -162,11 +162,11 @@ class FlowsSpec extends SparkSpec {
       (4L, "completely different words about spark catalyst optimizer plans here today"),
       (5L, "zzz qqq xxx vvv kkk mmm nnn ppp rrr ttt") // no stopwords → low quality
     ).toDF("doc_id", "text")
-    // jaccard as the injected detector: deterministic on a 5-doc fixture
+    // exact posting-list blocking: deterministic on a 5-doc fixture
     // (minhash band collisions are probabilistic at jaccard ≈ 0.45)
     val cleaned = Flows.corpusClean(docs, col("doc_id"), col("text"), en,
       tau = 0.3, minQuality = Long.MinValue,
-      nearDupPairs = NearDup.jaccardPairs(_, _, _, _))
+      block = NearDup.ShingleBlock.Postings())
     val q = cleaned.select("doc_id", "quality").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // 2 fell to exact dedup, 3 to 1's near-dup cluster (canonical = min id)
@@ -178,7 +178,7 @@ class FlowsSpec extends SparkSpec {
     expected should not be empty // the score separates prose from junk
     val floored = Flows.corpusClean(docs, col("doc_id"), col("text"), en,
         tau = 0.3, minQuality = floor,
-        nearDupPairs = NearDup.jaccardPairs(_, _, _, _))
+        block = NearDup.ShingleBlock.Postings())
       .select("doc_id").collect().map(_.getLong(0)).toSet
     floored shouldBe expected
   }
@@ -290,8 +290,10 @@ class FlowsSpec extends SparkSpec {
 
     // hand-composed chain from the individually-oracled stages
     val cleaned = Flows.corpusClean(docs, col("doc_id"), col("text"), en)
-    val dirty = NearDup.bloomContaminationPairs(cleaned, col("doc_id"),
-        col("text"), bench, col("doc_id"), col("text"), 0.5)
+    val dirty = NearDup.contaminationPairs(cleaned, col("doc_id"),
+        col("text"), bench, col("doc_id"), col("text"), 0.5, n = 13,
+        prefilter = Some(NearDup.benchShingleBloom(bench, col("doc_id"),
+          col("text"))))
       .select(col("corpus_id")).distinct()
     val assigned = Sampling.assignSplit(
       cleaned.join(dirty, col("doc_id") === col("corpus_id"), "left_anti"),

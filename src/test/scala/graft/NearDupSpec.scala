@@ -1,6 +1,7 @@
 package graft
 
-import graft.engine.{NearDup, TextOps}
+import graft.engine.{NearDup, Similarity, TextOps}
+import graft.engine.NearDup.{HashFamily, ShingleBlock}
 import org.apache.spark.sql.functions._
 
 class NearDupSpec extends SparkSpec {
@@ -178,8 +179,10 @@ class NearDupSpec extends SparkSpec {
     for (n <- Seq(3, 13)) {
       val exact = key(NearDup.contaminationPairs(corpus, col("doc_id"),
         col("text"), bench, col("doc_id"), col("text"), 0.5, n = n))
-      val bloomed = key(NearDup.bloomContaminationPairs(corpus, col("doc_id"),
-        col("text"), bench, col("doc_id"), col("text"), 0.5, n = n))
+      val bloomed = key(NearDup.contaminationPairs(corpus, col("doc_id"),
+        col("text"), bench, col("doc_id"), col("text"), 0.5, n = n,
+        prefilter = Some(NearDup.benchShingleBloom(bench, col("doc_id"),
+          col("text"), n))))
       bloomed shouldBe exact
       exact should not be empty // the parity assertion must bite
     }
@@ -192,19 +195,52 @@ class NearDupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val b2 = Seq((100L, "totally different benchmark question text here"))
       .toDF("doc_id", "text")
-    NearDup.bloomContaminationPairs(clean, col("doc_id"), col("text"),
-      b2, col("doc_id"), col("text"), 0.1, n = 3).collect() shouldBe empty
+    val b2Bloom = Some(NearDup.benchShingleBloom(b2, col("doc_id"),
+      col("text"), 3))
+    NearDup.contaminationPairs(clean, col("doc_id"), col("text"),
+      b2, col("doc_id"), col("text"), 0.1, n = 3, prefilter = b2Bloom)
+      .collect() shouldBe empty
 
     // planted quote: the one contaminated doc survives the prefilter and
     // scores containment 1.0 — no false negative
     val planted = clean.unionByName(Seq(
       (3L, "padding words totally different benchmark question text here " +
         "and trailing filler")).toDF("doc_id", "text"))
-    val out = NearDup.bloomContaminationPairs(planted, col("doc_id"),
-        col("text"), b2, col("doc_id"), col("text"), 0.5, n = 3)
+    val out = NearDup.contaminationPairs(planted, col("doc_id"),
+        col("text"), b2, col("doc_id"), col("text"), 0.5, n = 3,
+        prefilter = b2Bloom)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     out.keySet shouldBe Set((3L, 100L))
     out((3L, 100L)) shouldBe 1.0
+  }
+
+  test("contaminationPairs refuses a Bloom prefilter built over another n") {
+    val bench = Seq((100L, "totally different benchmark question text here"))
+      .toDF("doc_id", "text")
+    val corpus = Seq((3L, "padding words totally different benchmark " +
+      "question text here and trailing filler")).toDF("doc_id", "text")
+    // the 6-token bench has no 13-token window: an empty filter, no error
+    val bloom13 = NearDup.benchShingleBloom(bench, col("doc_id"), col("text"))
+    bloom13.n shouldBe 13
+    NearDup.contaminationPairs(corpus, col("doc_id"), col("text"), bench,
+        col("doc_id"), col("text"), 0.5, n = 13, prefilter = Some(bloom13))
+      .collect() shouldBe empty
+    // raised while the plan is built, before any job: a 13-gram filter
+    // probed with 3-token windows would drop the planted quote silently
+    val e = intercept[IllegalArgumentException] {
+      NearDup.contaminationPairs(corpus, col("doc_id"), col("text"), bench,
+        col("doc_id"), col("text"), 0.5, n = 3, prefilter = Some(bloom13))
+    }
+    e.getMessage should include("[graft] contaminationPairs")
+    e.getMessage should include("13-token windows")
+    e.getMessage should include("n = 3")
+    // the matching n finds the quote
+    NearDup.contaminationPairs(corpus, col("doc_id"), col("text"), bench,
+        col("doc_id"), col("text"), 0.5, n = 3,
+        prefilter = Some(NearDup.benchShingleBloom(bench, col("doc_id"),
+          col("text"), 3)))
+      .collect().map(r => (r.getLong(0), r.getLong(1))) shouldBe
+      Array((3L, 100L))
   }
 
   test("jaccardPairs finds exact and near dups with correct similarity") {
@@ -242,12 +278,32 @@ class NearDupSpec extends SparkSpec {
     val incoming = d.filter(col("doc_id") % 10 === 0)
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val inc = asMap(NearDup.minhashLshPairsIncremental(existing, incoming,
-      col("doc_id"), col("text"), 0.1))
-    val full = asMap(NearDup.minhashLshPairs(d, col("doc_id"), col("text"),
-      0.1))
+    val inc = asMap(NearDup.jaccardPairsIncremental(existing, incoming,
+      col("doc_id"), col("text"), 0.1, block = ShingleBlock.MinhashLsh()))
+    val full = asMap(NearDup.jaccardPairs(d, col("doc_id"), col("text"),
+      0.1, block = ShingleBlock.MinhashLsh()))
     inc shouldBe full.filter { case ((a, b), _) =>
       a % 10 == 0 || b % 10 == 0 }
+  }
+
+  test("an empty incoming batch yields no pairs from every incremental " +
+    "entry (both ShingleBlocks, both incremental SRP entries)") {
+    val d = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
+    val none = d.limit(0)
+    for (block <- Seq(ShingleBlock.Postings(), ShingleBlock.MinhashLsh(),
+        ShingleBlock.MinhashLsh(family = HashFamily.Md5)))
+      withClue(block) {
+        NearDup.jaccardPairsIncremental(d, none, col("doc_id"), col("text"),
+          0.1, block = block).count() shouldBe 0L
+      }
+    val emb = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    Similarity.lshCosinePairsIncremental(emb, emb.limit(0), col("vec_id"),
+      col("embedding"), 0.4).count() shouldBe 0L
+    val sigs = Similarity.srpSignatureTable(emb, col("vec_id"),
+      col("embedding"), bits = 256)
+    Similarity.lshCosinePairsIncrementalPresigned(sigs, 256, emb,
+      emb.limit(0), col("vec_id"), col("embedding"), 0.4)
+      .count() shouldBe 0L
   }
 
   test("minhash LSH pairs: no false positives; finds planted dups (recall)") {
@@ -257,8 +313,8 @@ class NearDupSpec extends SparkSpec {
     // ≈ 0.2% — parameter-appropriate for asserting it IS found (8×4 banding
     // only catches such a pair ~59% of the time; whether it does is hash-
     // family luck, which is what corpus-level recall floors are for)
-    val lsh = NearDup.minhashLshPairs(docs, col("doc_id"), col("text"), 0.1,
-        bands = 16, rowsPerBand = 2)
+    val lsh = NearDup.jaccardPairs(docs, col("doc_id"), col("text"), 0.1,
+        block = ShingleBlock.MinhashLsh(bands = 16, rowsPerBand = 2))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     lsh.subsetOf(exact) shouldBe true // verification step kills false positives
     lsh should contain((1L, 3L))      // identical sigs always collide
@@ -269,7 +325,8 @@ class NearDupSpec extends SparkSpec {
     val d = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
     val exact = NearDup.jaccardPairs(d, col("doc_id"), col("text"), 0.1)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = NearDup.minhashLshPairs(d, col("doc_id"), col("text"), 0.1)
+    val lsh = NearDup.jaccardPairs(d, col("doc_id"), col("text"), 0.1,
+        block = ShingleBlock.MinhashLsh())
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     lsh shouldBe exact
   }
@@ -280,10 +337,11 @@ class NearDupSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val exact = pairs(NearDup.jaccardPairs(d, col("doc_id"), col("text"), 0.1))
-    val md5Twin = pairs(NearDup.minhashLshPairs(d, col("doc_id"),
-      col("text"), 0.1, family = NearDup.HashFamily.Md5))
-    val prod = pairs(NearDup.minhashLshPairs(d, col("doc_id"), col("text"),
-      0.1))
+    val md5Twin = pairs(NearDup.jaccardPairs(d, col("doc_id"),
+      col("text"), 0.1,
+      block = ShingleBlock.MinhashLsh(family = HashFamily.Md5)))
+    val prod = pairs(NearDup.jaccardPairs(d, col("doc_id"), col("text"),
+      0.1, block = ShingleBlock.MinhashLsh()))
     exact should not be empty
     md5Twin shouldBe exact // precision 1.0 by exact verify; recall 1.0 here
     md5Twin shouldBe prod  // both families catch the full planted-dup set
@@ -296,13 +354,15 @@ class NearDupSpec extends SparkSpec {
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val full = asMap(NearDup.minhashLshPairs(d, col("doc_id"),
-      col("text"), 0.1, family = NearDup.HashFamily.Md5))
+    val full = asMap(NearDup.jaccardPairs(d, col("doc_id"),
+      col("text"), 0.1,
+      block = ShingleBlock.MinhashLsh(family = HashFamily.Md5)))
     full.keySet.subsetOf(exact) shouldBe true // precision == 1.0
     full.size.toDouble / exact.size should be >= 0.95
-    val inc = asMap(NearDup.minhashLshPairsIncremental(
+    val inc = asMap(NearDup.jaccardPairsIncremental(
       d.filter(col("doc_id") % 10 =!= 0), d.filter(col("doc_id") % 10 === 0),
-      col("doc_id"), col("text"), 0.1, family = NearDup.HashFamily.Md5))
+      col("doc_id"), col("text"), 0.1,
+      block = ShingleBlock.MinhashLsh(family = HashFamily.Md5)))
     inc shouldBe full.filter { case ((a, b), _) =>
       a % 10 == 0 || b % 10 == 0 }
   }
@@ -314,7 +374,8 @@ class NearDupSpec extends SparkSpec {
     val d = graft.engine.Tables.documents(spark, "/root/testdata/sf0.01")
     val exact = NearDup.jaccardPairs(d, col("doc_id"), col("text"), 0.1)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = NearDup.minhashLshPairs(d, col("doc_id"), col("text"), 0.1)
+    val lsh = NearDup.jaccardPairs(d, col("doc_id"), col("text"), 0.1,
+        block = ShingleBlock.MinhashLsh())
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     exact should not be empty
     lsh.subsetOf(exact) shouldBe true // precision == 1.0
